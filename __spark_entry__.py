@@ -673,7 +673,7 @@ def _q_roundtrip_pruned(spark, sf):
     from clj_orc_spark.pipeline import decode
 
     out = _roundtrip_store(spark, sf, "pruned")
-    return _roundtrip_agg(decode(spark, out, doc_id_range=("1", "4")))
+    return _roundtrip_agg(decode(spark, out, ranges={"doc_id": ("1", "4")}))
 
 
 def _q_roundtrip_sorted(spark, sf):
@@ -702,7 +702,7 @@ def _q_roundtrip_sorted(spark, sf):
     shutil.rmtree(out, ignore_errors=True)
     encode(spark, df=toks, out_dir=out, n_partitions=4, resume=False,
            chunk_bytes=256 << 10, sort_by="n_tok")
-    return _roundtrip_agg(decode(spark, out, n_tok_range=(40, 55)))
+    return _roundtrip_agg(decode(spark, out, ranges={"n_tok": (40, 55)}))
 
 
 def _q_roundtrip_source_pruned(spark, sf):
@@ -712,7 +712,9 @@ def _q_roundtrip_source_pruned(spark, sf):
     from clj_orc_spark.pipeline import decode
 
     out = _roundtrip_store(spark, sf, "srcp")
-    return _roundtrip_agg(decode(spark, out, source_in=["src3", "src7"]))
+    return _roundtrip_agg(decode(
+        spark, out, isin={"source": ["src3", "src7"]}
+    ))
 
 
 def _q_roundtrip_token_pruned(spark, sf):
@@ -724,7 +726,7 @@ def _q_roundtrip_token_pruned(spark, sf):
     from clj_orc_spark.pipeline import decode
 
     out = _roundtrip_store(spark, sf, "tokp")
-    return _roundtrip_agg(decode(spark, out, token_range=(8, None)))
+    return _roundtrip_agg(decode(spark, out, ranges={"tokens": (8, None)}))
 
 
 def _q_roundtrip_orc_input(spark, sf):

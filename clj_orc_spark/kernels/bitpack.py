@@ -230,9 +230,11 @@ def _fold_bitlen(value_counts: np.ndarray, full: int) -> np.ndarray:
         value_counts,
     )
     # entries above ``full`` are zero by construction (full covers the max
-    # actual value); the assert catches an inconsistent caller histogram
-    # before it could silently change a width decision
-    assert int(hist[full + 1:].sum()) == 0, "value_counts exceed 2^full"
+    # actual value); the check catches an inconsistent caller histogram
+    # before it could silently change a width decision (a raise, not an
+    # assert, so it survives ``python -O``)
+    if int(hist[full + 1:].sum()) != 0:
+        raise ValueError("value_counts exceed 2^full")
     return hist[: full + 1]
 
 
@@ -380,6 +382,9 @@ class PatchedFor:
         if value_counts is not None and ref >= 0:
             # residual value x occurs vc[x] times (shift by the reference)
             vc = value_counts[ref:] if ref else value_counts
+            # trailing zero bins past the max residual would size the
+            # derived hi/base histograms from len(vc) instead of 2^full
+            vc = vc[: int(res.max()) + 1]
         counts = _fold_bitlen(vc, full) if vc is not None else None
         if width_hint is not None and width_hint <= full:
             w = width_hint  # selector-sampled choice; cost deviation is tiny

@@ -14,6 +14,7 @@ CRC of every payload is checked against the value recorded at encode time.
 from __future__ import annotations
 
 import json
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -129,8 +130,8 @@ def _bound_types(kind: str) -> tuple[tuple, str]:
 
 def _zone_cast(kind: str) -> str:
     """Spark cast type for comparing a column kind's zone-map stats (the
-    manifest records them as JSON strings).  One shared helper for decode()
-    and decode_plan_report() — the two predicate paths must never drift."""
+    manifest records them as JSON strings); used by the one predicate
+    compiler, :func:`_compile_predicates`."""
     if kind.startswith("list<"):  # generic list: dispatch on value kind
         kind = list_value_kind(kind)
     if kind == "str":
@@ -443,24 +444,6 @@ def _manifest_files(spark, out_dir: str, part_ids: list[int] | None) -> list[str
     return [_strip_file_scheme(u) for u in uris]
 
 
-def _stat_pruned_work(spark, out_dir: str, part_ids, doc_id_range,
-                      n_tok_range, source_in=None, token_range=None):
-    """Legacy token-table wrapper over :func:`_stat_pruned_specs`."""
-    range_specs = []
-    if doc_id_range is not None:
-        range_specs.append(("doc_id", doc_id_range[0], doc_id_range[1], "string"))
-    if n_tok_range is not None:
-        range_specs.append(("n_tok", n_tok_range[0], n_tok_range[1], "int"))
-    if token_range is not None:
-        range_specs.append(
-            ("token_values", token_range[0], token_range[1], "long")
-        )
-    isin_specs = (
-        [("source", list(source_in), "string")] if source_in is not None else []
-    )
-    return _stat_pruned_specs(spark, out_dir, part_ids, range_specs, isin_specs)
-
-
 def _stat_pruned_specs(spark, out_dir: str, part_ids, range_specs,
                        isin_specs):
     """Zone-map pruning: (file, [chunk_ids]) for chunks whose recorded
@@ -529,189 +512,30 @@ def _stat_pruned_specs(spark, out_dir: str, part_ids, range_specs,
     return [(_strip_file_scheme(r["file"]), sorted(r["cids"])) for r in pairs]
 
 
-def decode_plan_report(spark, out_dir: str,
-                       ranges: dict | None = None,
-                       isin: dict | None = None) -> dict:
-    """Observability for zone-map pruning: how many chunks/files would a
-    predicated decode touch?  Answers entirely from the payload-pruned
-    manifest (no chunk data read) — the engine-format analog of EXPLAIN's
-    partition/row-group pruning counts.
+class _Predicates(NamedTuple):
+    """A compiled ``ranges``/``isin`` predicate set (see
+    :func:`_compile_predicates`)."""
 
-    Returns ``{"chunks_total", "chunks_kept", "files_total", "files_kept"}``.
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .encode import _has_parquet
-
-    schema = store_schema(spark, out_dir)
-    kinds = dict(schema)
-    mdir = os.path.join(out_dir, "manifest", "chunks")
-    if not _has_parquet(spark, mdir):
-        raise ValueError(f"no manifest under {out_dir!r}")
-    m = spark.read.parquet(mdir)
-    totals = m.agg(
-        F.countDistinct("chunk_id").alias("c"),
-        F.countDistinct("file").alias("f"),
-    ).first()
+    ranges: dict  # key → (lo, hi), bool bounds as 0/1 storage ints
+    isin: dict  # key → [values], bool values as 0/1 storage ints
+    kinds: dict  # key → effective kind (struct fields resolved)
+    range_specs: list  # (phys col, lo, hi, cast) for _stat_pruned_specs
+    isin_specs: list  # (phys col, values, cast) for _stat_pruned_specs
+    columns: list | None  # validated projection in schema order
 
 
-    def _report_target(colname, what):
-        # same plan-time rules as decode(): a struct/map logical column has
-        # no stat rows of its own — without this guard the report would
-        # silently claim full pruning (0 chunks kept) instead of raising
-        if colname in kinds and kinds[colname].startswith(("struct", "map")):
-            raise ValueError(
-                f"predicates on struct/map column {colname!r} are not "
-                f"supported; use a shredded struct field "
-                f"('{colname}.<field>')"
-            )
-        tgt = _pred_target(colname, kinds)
-        if tgt is None:
-            raise ValueError(
-                f"{what} column {colname!r} not in store schema"
-            )
-        return tgt
-
-    def _norm(kind, v):
-        # bool bounds normalize to the 0/1 storage ints the zone maps hold
-        # (decode() does the same at plan time)
-        return int(v) if kind == "bool" and v is not None else v
-
-    range_specs, isin_specs = [], []
-    for colname, (lo, hi) in (ranges or {}).items():
-        kind, phys = _report_target(colname, "ranges")
-        range_specs.append(
-            (phys, _norm(kind, lo), _norm(kind, hi), _zone_cast(kind))
-        )
-    for colname, v in (isin or {}).items():
-        kind, phys = _report_target(colname, "isin")
-        isin_specs.append(
-            (phys, [_norm(kind, x) for x in v], _zone_cast(kind))
-        )
-    pruned = _stat_pruned_specs(spark, out_dir, None, range_specs, isin_specs)
-    if pruned is None:  # no predicates or stat-less store: everything kept
-        kept_c, kept_f = totals["c"], totals["f"]
-    else:
-        kept_c = sum(len(cids) for _, cids in pruned)
-        kept_f = len(pruned)
-    return {"chunks_total": totals["c"], "chunks_kept": kept_c,
-            "files_total": totals["f"], "files_kept": kept_f}
-
-
-def decode(spark, out_dir: str, part_ids: list[int] | None = None,
-           mode: str = "files", columns: list[str] | None = None,
-           doc_id_range: tuple | None = None,
-           n_tok_range: tuple | None = None,
-           source_in: list[str] | None = None,
-           token_range: tuple | None = None,
-           ranges: dict | None = None,
-           isin: dict | None = None,
-           prefetch: bool | None = None):
-    """Distributed decode: chunk rows → token-table DataFrame.
-
-    ``mode="files"`` (default, the scale path): one task per encoded chunk
-    file, read with pyarrow inside ``mapInArrow``.  The encoder writes every
-    chunk's five column rows contiguously into one file, so **no shuffle is
-    needed at all** — at 100 TB the alternative reshuffles the entire encoded
-    dataset.  (pyarrow's parquet reader also measured ~1.5x faster than the
-    JVM scan on these payload-heavy rows.)
-
-    ``mode="shuffle"``: groupBy(chunk_id).applyInArrow — keeps all logic in
-    Spark's scan (predicate pushdown on part_id etc.); the fallback when the
-    chunk store is not file-addressable.
-
-    ``columns`` prunes the decode to the requested logical columns (any of
-    doc_id/tokens/n_tok/source) — the engine-format analog of parquet
-    column pruning: unneeded payloads are never CRC'd or decoded, so e.g.
-    a doc_id+n_tok scan skips the token kernels (~97% of decode CPU).
-
-    ``doc_id_range`` / ``n_tok_range`` (inclusive ``(lo, hi)``, either end
-    None) are exact row predicates that ALSO prune I/O through the
-    manifest's per-chunk min/max stats (zone maps — the ORC
-    column-statistics analog): chunks that cannot match are never read or
-    decoded, and the surviving rows are filtered exactly.
-
-    ``source_in`` is a membership predicate on ``source`` (a list of wanted
-    values), pruned the same way: a chunk whose recorded [min, max] source
-    range contains no wanted value is never read.
-
-    ``token_range`` (inclusive ``(lo, hi)``, either end None) is a
-    CONTAINMENT predicate over token VALUES: keep rows whose ``tokens``
-    array holds at least one value in the range (a vocabulary-range scan —
-    "find sequences containing token ids ≥ 100k").  Pruned through the
-    per-chunk token_values min/max zone maps, then filtered exactly with
-    ``exists(tokens, ...)``.
-
-    ``ranges`` / ``isin`` (round 4) are the GENERIC forms for any column of
-    the store's schema: ``ranges={"year": (2010, 2019), "lang": ("de",
-    "en")}``, ``isin={"lang": ["en", "fr"]}``.  Scalar columns filter by
-    value; list columns get the containment semantics over their flattened
-    values.  Every predicate both prunes chunks through the recorded zone
-    maps and filters the surviving rows exactly.  The token-table named
-    parameters above are sugar for these.
-    """
-    import json as _json
-    import os
-
-    from pyspark.sql import functions as F
-
-    schema = store_schema(spark, out_dir)
+def _compile_predicates(schema, ranges: dict | None, isin: dict | None,
+                        columns: list[str] | None = None) -> _Predicates:
+    """THE plan-time predicate compiler, shared by :func:`decode` and
+    :func:`decode_plan_report` so the two can never drift: validates every
+    predicate key, bound type and projection against the store schema and
+    normalises bool bounds to the 0/1 ints the zone maps hold.  Raises
+    ``TypeError`` for a wrongly typed bound and ``ValueError`` for any other
+    unsupported predicate."""
     kinds = dict(schema)
     order = [name for name, _ in schema]
-    # predicate columns are the engine's token-table specials — a store
-    # encoded with another schema must reject them at plan time
-    for pred_val, pred, colname in (
-        (doc_id_range, "doc_id_range", "doc_id"),
-        (n_tok_range, "n_tok_range", "n_tok"),
-        (source_in, "source_in", "source"),
-        (token_range, "token_range", "tokens"),
-    ):
-        if pred_val is not None and colname not in kinds:
-            raise ValueError(
-                f"{pred} requires a {colname!r} column; this store's schema "
-                f"is {order}"
-            )
-    # bound TYPES are validated at plan time: the recorded doc_id stats are
-    # lexicographic strings — numeric bounds would make Spark coerce the
-    # stats to numbers and silently prune chunks that actually match.
-    # These legacy-wording checks apply only when the store column has the
-    # token-table kind; otherwise the kind-aware validation below governs
-    # (a general store may hold numeric doc ids or sources).
-    if (doc_id_range is not None and kinds.get("doc_id") == "str" and any(
-        b is not None and not isinstance(b, str) for b in doc_id_range
-    )):
-        raise TypeError("doc_id_range bounds must be strings (or None)")
-    if n_tok_range is not None and any(
-        b is not None and not isinstance(b, int) for b in n_tok_range
-    ):
-        raise TypeError("n_tok_range bounds must be ints (or None)")
-    if source_in is not None and kinds.get("source") == "str":
-        if not source_in or any(not isinstance(v, str) for v in source_in):
-            raise TypeError("source_in must be a non-empty list of strings")
-    if token_range is not None:
-        if any(b is not None and not isinstance(b, int) for b in token_range):
-            raise TypeError("token_range bounds must be ints (or None)")
-        if all(b is None for b in token_range):
-            raise ValueError("token_range needs at least one bound")
-    # generic dict predicates plus the legacy token-table named parameters
-    # merged in as sugar; kind-aware validation runs AFTER the merge so the
-    # legacy sugar is held to the same store-schema typing — e.g.
-    # doc_id_range on a general store whose doc_id is int32 must raise, not
-    # coerce the stats to null and silently prune everything
     ranges = dict(ranges or {})
     isin = dict(isin or {})
-    for colname, rng in (("doc_id", doc_id_range), ("n_tok", n_tok_range),
-                         ("tokens", token_range)):
-        if rng is not None:
-            if colname in ranges:
-                raise ValueError(f"duplicate predicate on {colname!r}")
-            ranges[colname] = (rng[0], rng[1])
-    if source_in is not None:
-        if "source" in isin:
-            raise ValueError("duplicate predicate on 'source'")
-        isin["source"] = list(source_in)
     pred_kind: dict[str, str] = {}
     pred_phys: dict[str, str] = {}
     for colname, rng in ranges.items():
@@ -785,14 +609,6 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
         bad = set(columns) - set(order)
         if bad:
             raise ValueError(f"unknown columns: {sorted(bad)}")
-        if doc_id_range is not None and "doc_id" not in columns:
-            raise ValueError("doc_id_range requires 'doc_id' in columns")
-        if n_tok_range is not None and "n_tok" not in columns:
-            raise ValueError("n_tok_range requires 'n_tok' in columns")
-        if source_in is not None and "source" not in columns:
-            raise ValueError("source_in requires 'source' in columns")
-        if token_range is not None and "tokens" not in columns:
-            raise ValueError("token_range requires 'tokens' in columns")
         for colname in set(ranges) | set(isin):
             base = colname.split(".", 1)[0]
             if base not in columns:
@@ -801,6 +617,94 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
                     f"predicate on {colname!r} requires {what} in columns"
                 )
         columns = [c for c in order if c in set(columns)]
+    range_specs = [
+        (pred_phys[c], lo, hi, _zone_cast(pred_kind[c]))
+        for c, (lo, hi) in ranges.items()
+    ]
+    isin_specs = [
+        (pred_phys[c], list(v), _zone_cast(pred_kind[c]))
+        for c, v in isin.items()
+    ]
+    return _Predicates(ranges, isin, pred_kind, range_specs, isin_specs,
+                       columns)
+
+
+def decode_plan_report(spark, out_dir: str,
+                       ranges: dict | None = None,
+                       isin: dict | None = None) -> dict:
+    """Observability for zone-map pruning: how many chunks/files would a
+    predicated decode touch?  Answers entirely from the payload-pruned
+    manifest (no chunk data read) — the engine-format analog of EXPLAIN's
+    partition/row-group pruning counts.  Predicates compile exactly as in
+    :func:`decode`, so a predicate decode() rejects is rejected here too.
+
+    Returns ``{"chunks_total", "chunks_kept", "files_total", "files_kept"}``.
+    """
+    import os
+
+    from pyspark.sql import functions as F
+
+    from .encode import _has_parquet
+
+    preds = _compile_predicates(store_schema(spark, out_dir), ranges, isin)
+    mdir = os.path.join(out_dir, "manifest", "chunks")
+    if not _has_parquet(spark, mdir):
+        raise ValueError(f"no manifest under {out_dir!r}")
+    m = spark.read.parquet(mdir)
+    totals = m.agg(
+        F.countDistinct("chunk_id").alias("c"),
+        F.countDistinct("file").alias("f"),
+    ).first()
+    pruned = _stat_pruned_specs(spark, out_dir, None, preds.range_specs,
+                                preds.isin_specs)
+    if pruned is None:  # no predicates or stat-less store: everything kept
+        kept_c, kept_f = totals["c"], totals["f"]
+    else:
+        kept_c = sum(len(cids) for _, cids in pruned)
+        kept_f = len(pruned)
+    return {"chunks_total": totals["c"], "chunks_kept": kept_c,
+            "files_total": totals["f"], "files_kept": kept_f}
+
+
+def decode(spark, out_dir: str, part_ids: list[int] | None = None,
+           columns: list[str] | None = None,
+           ranges: dict | None = None,
+           isin: dict | None = None):
+    """Distributed decode: chunk rows → source-table DataFrame.
+
+    One task per encoded chunk file, read with pyarrow inside
+    ``mapInArrow``.  The encoder writes every chunk's column rows
+    contiguously into one file, so **no shuffle is needed at all** — at
+    100 TB a groupBy(chunk_id) would reshuffle the entire encoded dataset.
+    (pyarrow's parquet reader also measured ~1.5x faster than the JVM scan
+    on these payload-heavy rows.)
+
+    ``columns`` prunes the decode to the requested logical columns — the
+    engine-format analog of parquet column pruning: unneeded payloads are
+    never CRC'd or decoded, so e.g. a doc_id+n_tok scan of the token table
+    skips the token kernels (~97% of decode CPU).
+
+    ``ranges`` / ``isin`` are predicates on any column of the store's
+    schema: ``ranges={"year": (2010, 2019), "lang": ("de", "en")}``
+    (inclusive ``(lo, hi)``, either end None), ``isin={"lang": ["en",
+    "fr"]}``.  Scalar columns filter by value; list columns take ``ranges``
+    only, as a CONTAINMENT predicate over their flattened values (keep rows
+    holding at least one value in range: ``ranges={"tokens": (100_000,
+    None)}``); ``col.field`` keys reach into shredded struct fields.  Every
+    predicate both prunes chunks through the manifest's per-chunk min/max
+    stats (zone maps — the ORC column-statistics analog), so chunks that
+    cannot match are never read, and filters the surviving rows exactly.
+    """
+    import json as _json
+    import os
+
+    from pyspark.sql import functions as F
+
+    schema = store_schema(spark, out_dir)
+    order = [name for name, _ in schema]
+    ranges, isin, pred_kind, range_specs, isin_specs, columns = (
+        _compile_predicates(schema, ranges, isin, columns)
+    )
     ddl = _select_ddl(columns if columns is not None else order, schema)
 
     def _containment(lo, hi):
@@ -877,36 +781,12 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     if not _has_parquet(spark, chunks_dir):  # empty run wrote no chunks
         return spark.createDataFrame([], ddl)
 
-    if mode == "shuffle":
-        chunks = spark.read.parquet(chunks_dir)
-        if part_ids is not None:
-            chunks = chunks.where(F.col("part_id").isin(list(part_ids)))
-
-        def decode_group(tbl: pa.Table) -> pa.Table:
-            pafs.clamp_arrow_threads()
-            return decode_chunk_table(tbl, columns, schema)
-
-        return exact_filter(
-            chunks.groupBy("chunk_id").applyInArrow(decode_group, ddl)
-        )
-
-
-    range_specs = [
-        (pred_phys[c], lo, hi, _zone_cast(pred_kind[c]))
-        for c, (lo, hi) in ranges.items()
-    ]
-    isin_specs = [
-        (pred_phys[c], list(v), _zone_cast(pred_kind[c]))
-        for c, v in isin.items()
-    ]
-    work_rows = None
-    if range_specs or isin_specs:
-        pruned = _stat_pruned_specs(
-            spark, out_dir, part_ids, range_specs, isin_specs
-        )
-        if pruned is not None:
-            work_rows = [(f, _json.dumps(cids)) for f, cids in pruned]
-    if work_rows is None:
+    pruned = _stat_pruned_specs(
+        spark, out_dir, part_ids, range_specs, isin_specs
+    )
+    if pruned is not None:
+        work_rows = [(f, _json.dumps(cids)) for f, cids in pruned]
+    else:
         files = _manifest_files(spark, out_dir, part_ids)
         if files is None:
             files = _chunk_files(chunks_dir, part_ids)
@@ -924,13 +804,11 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     # read/decode overlap pays where reads are REAL (object store / cold
     # disk: +11.5% single-task, BENCH.md); on a saturated local box the
     # extra reader thread per task is pure contention (62 tasks / 32 cores:
-    # 3.4 s serial vs 3.7–6.1 s overlapped).  Auto: overlap iff the store
-    # is scheme-qualified (remote I/O latency to hide), override with
-    # ``prefetch=``.
-    if prefetch is None:
-        prefetch = "://" in out_dir
+    # 3.4 s serial vs 3.7–6.1 s overlapped).  So overlap iff the store is
+    # scheme-qualified (remote I/O latency to hide).
     decode_files = make_files_decoder(columns, schema, needed_cols,
-                                      prune_cols, prefetch=prefetch)
+                                      prune_cols,
+                                      prefetch="://" in out_dir)
 
     # each task receives its OWN file path as data — a closure over the full
     # file list would ship every task a copy of all paths (millions at 100 TB)

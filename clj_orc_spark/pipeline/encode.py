@@ -22,9 +22,9 @@ Physical strategy (round 2): the default "rowgroup" mode plans ``part_id``
 from parquet footers (byte-balanced LPT bins of row groups) and fuses scan +
 chunk + encode into ONE ``mapInArrow`` stage — ZERO shuffles, so at 100 TB
 the token bytes go parquet → Arrow → kernels → chunk write and the only
-cluster-shared resource is the object store.  The salted n_tok-quantile
-repartition (skew.py) remains as ``scan="salted"`` / the ``df=`` path for
-inputs whose row groups are themselves pathological.
+cluster-shared resource is the object store.  The "jvm" mode — a Catalyst
+scan feeding the salted n_tok-quantile repartition (skew.py) — serves
+``df=`` inputs and locations pyarrow cannot reach.
 
 Layout under ``out_dir``::
 
@@ -790,10 +790,6 @@ def make_encoder(chunk_bytes: int = DEFAULT_CHUNK_BYTES,
     return encode_partition
 
 
-#: scan-stage output: the token table plus the plan-assigned partition id
-SCAN_DDL = "doc_id string, tokens array<int>, n_tok int, source string, part_id int"
-
-
 def _pyarrow_source(
     input_path: str | None, filesystem=None
 ) -> tuple[object | None, list[str] | None, str, str | None]:
@@ -879,24 +875,6 @@ def _lpt_pack(units: list[tuple], n_bins: int) -> list[list]:
         bins[j].append(list(unit[1:]))
         heapq.heappush(heap, (load + float(unit[0]), j))
     return bins
-
-
-def _row_group_assignments(
-    files: list[str], n_tasks: int, fs=None
-) -> list[list[tuple[str, int]]]:
-    """Greedy-balance (file, row_group) units across scan tasks by byte size
-    — row groups are the parquet read unit, so this is the scan's skew
-    control (footer metadata only, no data read)."""
-    import pyarrow.parquet as pq
-
-    rgs = []
-    for f in files:
-        md = pq.read_metadata(f, filesystem=fs)
-        for i in range(md.num_row_groups):
-            rgs.append((md.row_group(i).total_byte_size, f, i))
-    if not rgs:
-        return []
-    return _lpt_pack(rgs, max(1, min(n_tasks, len(rgs))))
 
 
 def _rowgroup_plan(files: list[str], n_partitions: int,
@@ -1200,66 +1178,6 @@ def make_rowgroup_encoder(chunk_bytes: int, fs=None, policy: str = "size",
     return run
 
 
-def scan_work_df(spark, assignments: list[list[tuple[str, int]]]):
-    """One row per scan task: ``(tid, units_json)`` — assignments travel as
-    data, not closure (same reasoning as :func:`rowgroup_work_df`)."""
-    rows = [(i, json.dumps(a)) for i, a in enumerate(assignments)]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, len(rows)),
-        "tid int, units string",
-    )
-
-
-def make_arrow_scanner(plan: dict, pending: set[int] | None, fs=None):
-    """Fused pyarrow scan + plan assignment for ``mapInArrow`` over
-    :func:`scan_work_df`.
-
-    Replaces the JVM parquet scan feeding the salted repartition: each task
-    reads its row groups with pyarrow (measured ~1.5x the JVM nested-list
-    scan on ``array<int32>`` token columns) and computes ``part_id``
-    vectorized in numpy — bucket by the plan's n_tok bounds, salt by a
-    vectorized FNV-1a of doc_id.  Resume filtering happens here too, so
-    skipped partitions' token bytes never cross into the JVM.
-    """
-    bounds = np.asarray(plan["bounds"], dtype=np.float64)
-    offs = np.asarray(plan["offsets"], dtype=np.int64)
-    allocs = np.asarray(plan["allocs"], dtype=np.uint64)
-    pend = None if pending is None else np.asarray(sorted(pending), dtype=np.int64)
-
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..operators.dedup import fnv1a_slices
-
-        pafs.clamp_arrow_threads()
-        for batch in batches:
-            for units_json in batch.column(1).to_pylist():
-                for path, rg in json.loads(units_json):
-                    tbl = pafs.open_parquet(path, fs).read_row_group(
-                        int(rg), columns=["doc_id", "tokens", "n_tok", "source"]
-                    )
-                    n_tok = np.asarray(
-                        tbl.column("n_tok").combine_chunks(), dtype=np.int64
-                    )
-                    bucket = np.searchsorted(bounds, n_tok, side="left")
-                    ids = StringCol.from_arrow(tbl.column("doc_id").combine_chunks())
-                    h = fnv1a_slices(
-                        np.frombuffer(ids.data, dtype=np.uint8),
-                        ids.offsets[:-1],
-                        np.diff(ids.offsets),
-                    )
-                    part = offs[bucket] + (h % allocs[bucket]).astype(np.int64)
-                    out = tbl.append_column(
-                        "part_id", pa.array(part.astype(np.int32))
-                    )
-                    if pend is not None:
-                        mask = np.isin(part, pend)
-                        if not mask.all():
-                            out = out.filter(pa.array(mask))
-                    if out.num_rows:
-                        yield from out.to_batches(max_chunksize=8192)
-
-    return scan
-
-
 def _read_input_df(spark, input_path: str, fmt: str):
     """JVM DataFrame scan of the input location, format-aware (Spark reads
     ORC natively — the reference's format, `src/orc/read.clj`)."""
@@ -1309,22 +1227,17 @@ def _input_row_count(files: list[str] | None, fs=None) -> int | None:
 
 def _load_or_compute_plan(spark, df, out_dir: str, n_partitions: int,
                           files: list[str] | None, fs=None,
-                          assign_hash: str = "xxhash64",
                           degraded_from: str | None = None,
                           sort_by: list[str] | None = None) -> dict:
     """Plan once, persist, reuse — resumed runs must assign identical
-    part_ids or per-partition lineage is meaningless.  ``assign_hash``
-    records which salting hash the run uses (fnv1a for the fused pyarrow
-    scan, xxhash64 for the JVM DataFrame path); a resume must keep it.
-    ``degraded_from`` records that this plan exists only because the
-    zero-shuffle scan was unavailable at plan time — the record makes the
-    pinning inspectable (a transient store error would otherwise lock the
+    part_ids or per-partition lineage is meaningless.  ``degraded_from``
+    records that this plan exists only because the zero-shuffle scan was
+    unavailable at plan time — the record makes the pinning inspectable (a transient store error would otherwise lock the
     store onto the full-shuffle path with no trace)."""
     plan_path = os.path.join(out_dir, "plan.json")
     if fsio.exists(spark, plan_path):
         return json.loads(fsio.read_text(spark, plan_path))
     plan = compute_plan(df, n_partitions, total_rows=_input_row_count(files, fs))
-    plan["assign_hash"] = assign_hash
     if sort_by:
         plan["sort_by"] = list(sort_by)
     if degraded_from:
@@ -1590,18 +1503,16 @@ def encode(
       part_id = a footer-planned, byte-balanced bin of row groups
       (:func:`_rowgroup_plan`).  The 100 TB shape: token bytes go parquet →
       Arrow → kernels → chunk write, never through a shuffle.
-    * "salted": fused pyarrow scan feeding the n_tok-quantile salted
-      repartition (skew.py) — the shape for inputs whose row groups are
-      themselves pathologically skewed or oversized.
-    * "jvm": Catalyst DataFrame scan + salted repartition (always used for
-      ``df=`` inputs and filesystems pyarrow cannot serve).
+    * "jvm": Catalyst DataFrame scan + the n_tok-quantile salted
+      repartition (skew.py) — always used for ``df=`` inputs and
+      filesystems pyarrow cannot serve.
     """
     from pyspark.sql import functions as F
 
     assert out_dir, "out_dir required"
     if selection not in ("size", "speed"):
         raise ValueError(f"unknown selection policy {selection!r}")
-    if scan not in ("auto", "rowgroup", "salted", "jvm"):
+    if scan not in ("auto", "rowgroup", "jvm"):
         # a typo'd mode must never silently run (and pin) a different path
         raise ValueError(f"unknown scan mode {scan!r}")
     if df is not None and input_path is not None:
@@ -1630,18 +1541,8 @@ def encode(
     if fs is None and filesystem is not None:
         fs = filesystem  # plan= with input_path=None: the caller's
         # credential-configured filesystem must still reach executor reads
-    if fmt == "orc" and scan == "salted":
-        # the salted arrow scanner plans by parquet row-group footers; for
-        # ORC the stripe-planned zero-shuffle path (default) or the JVM
-        # scan (spark.read.orc) are the supported shapes
-        raise ValueError(
-            'scan="salted" reads parquet; ORC input runs zero-shuffle '
-            'stripe-planned (scan="auto"/"rowgroup") or via scan="jvm"'
-        )
     if df is None and scan == "jvm" and input_path is not None:
         df = _read_input_df(spark, input_path, fmt)
-    elif df is None and scan == "salted":
-        df = spark.read.parquet(input_path)
     if n_partitions is None:
         n_partitions = _default_n_partitions(spark, df, input_path, filesystem)
     scan_files = None if scan == "jvm" else files
@@ -1652,7 +1553,7 @@ def encode(
             "zero-shuffle rowgroup scan unavailable, degrading to the JVM "
             f"scan + salted repartition: {degraded_reason}"
         )
-    if scan in ("salted", "rowgroup") and not scan_files and plan is None:
+    if scan == "rowgroup" and not scan_files and plan is None:
         # never silently degrade an explicit mode request — the chosen mode
         # is persisted in plan.json and would pin every future resume
         raise ValueError(
@@ -1677,11 +1578,10 @@ def encode(
             df = _read_input_df(spark, input_path, fmt)
         plan = _load_or_compute_plan(
             spark, df, out_dir, n_partitions, files, fs,
-            assign_hash="fnv1a" if scan_files else "xxhash64",
             degraded_from=degraded_reason if scan == "auto" else None,
             sort_by=sort_by,
         )
-    mode = plan.get("mode", "salted")
+    mode = plan.get("mode", "jvm")
     schema = [tuple(t) for t in plan.get("schema", [])] or list(DEFAULT_SCHEMA)
     # sort_by is part of the persisted layout contract (chunk boundaries and
     # zone maps depend on it): a resume adopts the recorded order, and a
@@ -1712,7 +1612,7 @@ def encode(
         # units carry their own paths; fs=None → per-task re-resolve
     else:
         if user_plan is not None:
-            # a caller-supplied plan= against a store persisted in salted/JVM
+            # a caller-supplied plan= against a store persisted in JVM
             # mode would fall through to the DataFrame path and crash in
             # spark.read.parquet(None) — name the mismatch instead
             raise ValueError(
@@ -1732,15 +1632,15 @@ def encode(
                 "scan IS available now — re-encode into a fresh out_dir to "
                 "regain it"
             )
-        if plan.get("assign_hash", "xxhash64") == "xxhash64":
-            scan_files = None  # prior run salted with the JVM hash — stay
-            # consistent
-        elif not scan_files:
+        if plan.get("assign_hash", "xxhash64") != "xxhash64":
+            # stores from releases with the fused pyarrow salted scan
+            # (fnv1a part assignment) cannot be resumed by the JVM scan
             raise ValueError(
-                "out_dir was encoded with the fused pyarrow scan (fnv1a part "
-                "assignment); resume it with the same input_path, not df="
+                f"out_dir was planned with assign_hash="
+                f"{plan['assign_hash']!r}, which this release no longer "
+                "runs; re-encode into a fresh out_dir"
             )
-        # the salted/JVM scanners and chunk splitter are written against the
+        # the JVM scan and its chunk splitter are written against the
         # fixed token-table columns; general schemas go through the
         # schema-driven rowgroup scan
         if df is not None:
@@ -1771,20 +1671,11 @@ def encode(
                                   sort_by=eff_sort), OUT_DDL
         )
     else:
-        pending_set = set(pending) if (done or limit_parts is not None) else None
-        if scan_files:
-            assignments = _row_group_assignments(
-                scan_files, spark.sparkContext.defaultParallelism * 2, fs
-            )
-            work = scan_work_df(spark, assignments).mapInArrow(
-                make_arrow_scanner(plan, pending_set, fs), SCAN_DDL
-            )
-        else:
-            if df is None:
-                df = _read_input_df(spark, input_path, fmt)
-            work = apply_plan(df, plan)
-            if pending_set is not None:
-                work = work.where(F.col("part_id").isin(pending))
+        if df is None:
+            df = _read_input_df(spark, input_path, fmt)
+        work = apply_plan(df, plan)
+        if done or limit_parts is not None:
+            work = work.where(F.col("part_id").isin(pending))
         work = work.repartition(len(pending), "part_id")
         if eff_sort:
             # part_id leads the sort so each part's rows stay contiguous for
@@ -1816,8 +1707,7 @@ def encode(
         "pending": len(pending),
         "skipped": len(done),
         "chunk_bytes": chunk_bytes,
-        "scan": mode if mode == "rowgroup" else (
-            "arrow-salted" if scan_files else "jvm"),
+        "scan": mode if mode == "rowgroup" else "jvm",
         "selection": selection,
         **({"sort_by": eff_sort} if eff_sort else {}),
         "wall_sec": wall,

@@ -85,8 +85,8 @@ def stream_decode(
     plans the batch — driver-side metadata, no job; ``inputFiles()`` is
     empty inside foreachBatch because the batch DataFrame is an
     ExistingRDD wrapper).  One task per chunk file, same as batch
-    ``decode(mode="files")``; the old ``groupBy(chunk_id).applyInArrow``
-    reshuffled every payload byte once per micro-batch.  The encoder writes
+    ``decode()``; a ``groupBy(chunk_id).applyInArrow`` would reshuffle
+    every payload byte once per micro-batch.  The encoder writes
     a chunk's column rows contiguously into one file and the file source
     assigns whole files to micro-batches, so per-file decode is complete.
     Output is partitioned by ``_batch_id`` and each batch overwrites its own

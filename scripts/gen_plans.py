@@ -63,7 +63,7 @@ def main() -> None:
         "hot path sits in ≥1 WholeStageCodegen span — counted from the",
         "EXECUTED (AQE-final) plan, since the pre-execution adaptive plan",
         "shows no `*(n)` markers at all. The default (rowgroup) encode",
-        "pipeline has ZERO shuffles; the salted fallback has exactly one;",
+        "pipeline has ZERO shuffles; the jvm fallback has exactly one;",
         "files-mode decode and digest verify have none.",
         "",
     ]
@@ -106,18 +106,18 @@ def main() -> None:
         "so token bytes NEVER cross a shuffle: on a 1000-executor cluster the",
         "job's only shared resource is the object store.",
         "",
-        "## encode — salted fallback (scan='salted' / df= inputs)",
+        "## encode — jvm fallback (`df=` inputs)",
         "",
         "```",
-        "range (scan-task ids)",
-        " +- mapInArrow: pyarrow row-group read + numpy part_id assignment",
+        "Catalyst scan (FileScan parquet/orc, or the caller's df)",
+        " +- Project: part_id = n_tok bucket offset + pmod(xxhash64(doc_id))",
         "     +- Exchange hashpartitioning(part_id)   <- the ONLY shuffle",
         "         +- mapInArrow: byte-budget chunking + codec kernels",
         "             +- dynamic-partition parquet write (chunks/part_id=N)",
         "```",
         "",
         "- Python stages are Arrow-vectorized; no per-row Python anywhere.",
-        "- decode (files mode): one task per chunk file, zero shuffles;",
+        "- decode: one task per chunk file, zero shuffles;",
         "  file list comes from the committed manifest, not a filesystem walk.",
         "",
     ]

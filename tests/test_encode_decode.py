@@ -80,17 +80,41 @@ def test_empty_table(spark, tmp_dir):
     assert decode(spark, out).count() == 0
 
 
-def test_decode_modes_agree(spark, token_table_dir, tmp_dir):
-    """files-mode (no-shuffle scale path) ≡ shuffle-mode (groupBy fallback)."""
+def test_decode_part_ids_prune(spark, token_table_dir, tmp_dir):
+    """part_ids decodes exactly the requested partitions: each part is a
+    strict subset and the parts together are the full decode."""
     out = os.path.join(tmp_dir, "enc")
     encode(spark, os.path.join(token_table_dir, "tokens.parquet"), out,
            n_partitions=4)
-    a = decode(spark, out, mode="files")
-    b = decode(spark, out, mode="shuffle")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # part_id pruning decodes only the requested partitions
-    part = decode(spark, out, part_ids=[0], mode="files")
-    assert 0 < part.count() < a.count()
+    full = decode(spark, out)
+    parts = [decode(spark, out, part_ids=[p]) for p in range(4)]
+    assert all(0 < p.count() < full.count() for p in parts)
+    union = parts[0].unionAll(parts[1]).unionAll(parts[2]).unionAll(parts[3])
+    assert union.exceptAll(full).count() == 0
+    assert full.exceptAll(union).count() == 0
+
+
+def test_report_and_decode_reject_the_same_predicates(spark, token_table_dir,
+                                                     tmp_dir):
+    """decode_plan_report compiles predicates exactly as decode(): a
+    predicate one rejects, the other rejects with the same error type —
+    never a chunk count for a read that cannot run."""
+    from clj_orc_spark.pipeline import decode_plan_report
+
+    out = os.path.join(tmp_dir, "enc")
+    encode(spark, os.path.join(token_table_dir, "tokens.parquet"), out,
+           n_partitions=2)
+    for pred, err in (
+        ({"isin": {"tokens": [5]}}, ValueError),
+        ({"ranges": {"n_tok": ("5", None)}}, TypeError),
+        ({"ranges": {"n_tok": (None, None)}}, ValueError),
+    ):
+        with pytest.raises(err) as from_decode:
+            decode(spark, out, **pred)
+        with pytest.raises(err) as from_report:
+            decode_plan_report(spark, out, **pred)
+        assert type(from_decode.value) is type(from_report.value), pred
+        assert str(from_decode.value) == str(from_report.value), pred
 
 
 def test_manifest_records_selections(spark, token_table_dir, tmp_dir):
@@ -110,19 +134,18 @@ def test_manifest_records_selections(spark, token_table_dir, tmp_dir):
 
 
 def test_decode_column_pruning(spark, token_table_dir, tmp_dir):
-    """decode(columns=...) returns exactly the requested projection in both
-    modes, equal to projecting the full decode — the engine-format analog of
-    parquet column pruning (token payloads never decoded)."""
+    """decode(columns=...) returns exactly the requested projection, equal
+    to projecting the full decode — the engine-format analog of parquet
+    column pruning (token payloads never decoded)."""
     out = os.path.join(tmp_dir, "enc")
     src = os.path.join(token_table_dir, "tokens.parquet")
     encode(spark, src, out, n_partitions=4)
 
     full = decode(spark, out).select("doc_id", "n_tok")
-    for mode in ("files", "shuffle"):
-        pruned = decode(spark, out, mode=mode, columns=["doc_id", "n_tok"])
-        assert pruned.columns == ["doc_id", "n_tok"]
-        assert pruned.exceptAll(full).count() == 0
-        assert full.exceptAll(pruned).count() == 0
+    pruned = decode(spark, out, columns=["doc_id", "n_tok"])
+    assert pruned.columns == ["doc_id", "n_tok"]
+    assert pruned.exceptAll(full).count() == 0
+    assert full.exceptAll(pruned).count() == 0
 
     # tokens-only projection still reassembles the list column correctly
     toks = decode(spark, out, columns=["tokens"])
@@ -181,7 +204,7 @@ def test_zone_map_pruned_decode(spark, token_table_dir, tmp_dir):
 
     from pyspark.sql import functions as F
 
-    from clj_orc_spark.pipeline.decode import _stat_pruned_work
+    from clj_orc_spark.pipeline import decode_plan_report
 
     # zone maps prune CLUSTERED data — encode a doc_id-sorted copy (the
     # shape a real ingest sorted/bucketed by key produces)
@@ -206,27 +229,27 @@ def test_zone_map_pruned_decode(spark, token_table_dir, tmp_dir):
                  spark.read.parquet(src).select("doc_id").collect())
     lo, hi = ids[0], ids[len(ids) // 10]  # first ~10% of the id space
 
-    pruned = _stat_pruned_work(spark, out, None, (lo, hi), None)
-    kept_chunks = sum(len(c) for _, c in pruned)
-    assert 0 < kept_chunks < n_chunks, (kept_chunks, n_chunks)
+    rep = decode_plan_report(spark, out, ranges={"doc_id": (lo, hi)})
+    assert rep["chunks_total"] == n_chunks
+    assert 0 < rep["chunks_kept"] < n_chunks, (rep, n_chunks)
 
     expect = (
         decode(spark, out)
         .where((F.col("doc_id") >= lo) & (F.col("doc_id") <= hi))
     )
-    got = decode(spark, out, doc_id_range=(lo, hi))
+    got = decode(spark, out, ranges={"doc_id": (lo, hi)})
     assert got.exceptAll(expect).count() == 0
     assert expect.exceptAll(got).count() == 0
     assert got.count() == len(ids) // 10 + 1
 
     # n_tok predicate: exact even when zone maps cannot prune (random n_tok
     # spans every chunk)
-    nt = decode(spark, out, n_tok_range=(None, 50))
+    nt = decode(spark, out, ranges={"n_tok": (None, 50)})
     base = decode(spark, out).where(F.col("n_tok") <= 50)
     assert nt.count() == base.count()
 
     # range on a pruned-out column is a plan-time error
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="doc_id_range requires"):
-        decode(spark, out, columns=["n_tok"], doc_id_range=(lo, hi))
+    with _pytest.raises(ValueError, match="'doc_id' requires it in columns"):
+        decode(spark, out, columns=["n_tok"], ranges={"doc_id": (lo, hi)})

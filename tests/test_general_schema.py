@@ -238,50 +238,6 @@ def test_generic_predicate_validation(spark, store):
         decode(spark, out, isin={"lang": []})
 
 
-def test_generic_equals_legacy_sugar(spark, tmp_path):
-    """ranges={'tokens': ...} must equal token_range=... (and prune)."""
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    src = str(tmp_path / "t.parquet")
-    tbl = pa.table({
-        "doc_id": [f"d{i:03d}" for i in range(60)],
-        "tokens": pa.array(
-            [[(1000 if i >= 30 else 1) + i] * 2 for i in range(60)],
-            type=pa.list_(pa.int32()),
-        ),
-        "n_tok": pa.array([2] * 60, type=pa.int32()),
-        "source": ["s"] * 60,
-    })
-    pq.write_table(tbl, src)
-    out = str(tmp_path / "store")
-    encode(spark, src, out, n_partitions=2)
-    a = sorted(r["doc_id"] for r in
-               decode(spark, out, token_range=(900, None)).collect())
-    b = sorted(r["doc_id"] for r in
-               decode(spark, out, ranges={"tokens": (900, None)}).collect())
-    assert a == b == [f"d{i:03d}" for i in range(30, 60)]
-    with pytest.raises(ValueError, match="duplicate predicate"):
-        decode(spark, out, token_range=(1, None), ranges={"tokens": (1, None)})
-
-
-def test_shuffle_mode_decode_general_schema(spark, store):
-    """mode="shuffle" (the non-file-addressable fallback) must honor the
-    store schema and the generic predicates too."""
-    _, out, tbl = store
-    years = tbl["year"].to_pylist()
-    got = decode(
-        spark, out, mode="shuffle", ranges={"year": (2010, 2012)}
-    ).collect()
-    assert sorted(r["doc_id"] for r in got) == sorted(
-        f"doc-{i:05d}" for i in range(N) if 2010 <= years[i] <= 2012
-    )
-    assert [f.name for f in
-            decode(spark, out, mode="shuffle").schema.fields] == [
-        "doc_id", "tokens", "n_tok", "source", "lang", "year", "uid", "spans",
-    ]
-
-
 def test_plan_hook_derives_schema_from_unit_paths(spark, tmp_path):
     """encode(plan=...) with input_path=None (the Iceberg-manifest hook)
     must derive the schema from the first unit's own file footer."""

@@ -328,3 +328,33 @@ def test_patched_for_value_counts_identical_payload():
         assert m_vc == m_plain, name
         out = PatchedFor.decode(p_vc, m_vc)
         assert np.array_equal(out, arr), name
+
+
+def test_patched_for_value_counts_trailing_zero_bins():
+    """A value histogram longer than ``max + 1`` (trailing zero bins) must
+    not size the derived hi-stream histogram past ``2^hi_full``: the
+    payload equals the histogram-free encode and round-trips."""
+    from clj_orc_spark.kernels.bitpack import PatchedFor
+
+    hi = np.minimum(np.random.default_rng(0).zipf(1.3, 30000), 1024)
+    hi[0] = 1024
+    p_vc, m_vc = PatchedFor.encode(
+        hi, value_counts=np.bincount(hi, minlength=2048)
+    )
+    p_plain, m_plain = PatchedFor.encode(hi)
+    assert p_vc == p_plain
+    assert m_vc == m_plain
+    assert np.array_equal(PatchedFor.decode(p_vc, m_vc), hi)
+
+
+def test_fold_bitlen_rejects_inconsistent_histogram():
+    """A value histogram with mass above ``2^full`` raises ValueError (not
+    an assert, which ``python -O`` strips)."""
+    from clj_orc_spark.kernels.bitpack import _fold_bitlen
+
+    vc = np.zeros(32, dtype=np.int64)
+    vc[3] = 5
+    vc[31] = 1  # bit length 5 > full=2
+    with pytest.raises(ValueError, match="exceed"):
+        _fold_bitlen(vc, 2)
+    assert _fold_bitlen(vc[:4], 2).tolist() == [0, 0, 5]

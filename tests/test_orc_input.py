@@ -135,7 +135,7 @@ def test_mixed_parquet_orc_dir_prefers_parquet(spark, tmp_dir):
 
 
 def test_orc_salted_scan_raises_jvm_scan_works(spark, orc_dir, tmp_dir):
-    with pytest.raises(ValueError, match="salted"):
+    with pytest.raises(ValueError, match="unknown scan mode 'salted'"):
         encode(spark, orc_dir, os.path.join(tmp_dir, "enc0"), scan="salted")
     out = os.path.join(tmp_dir, "enc")
     rep = encode(spark, orc_dir, out, scan="jvm", n_partitions=2)
@@ -151,7 +151,7 @@ def test_orc_pruned_decode(spark, orc_dir, tmp_dir):
 
     out = os.path.join(tmp_dir, "enc")
     encode(spark, orc_dir, out, n_partitions=3)
-    got = decode(spark, out, n_tok_range=(50, None))
+    got = decode(spark, out, ranges={"n_tok": (50, None)})
     want = spark.read.orc(orc_dir).where(F.col("n_tok") >= 50)
     v = verify_roundtrip(want, got)
     assert v["bit_identical"] and v["total"] == want.count()

@@ -18,10 +18,10 @@ def test_zone_map_bounds_are_type_checked(spark, token_table_dir, tmp_dir):
     src = os.path.join(token_table_dir, "tokens.parquet")
     out = os.path.join(tmp_dir, "enc")
     encode(spark, src, out, n_partitions=2)
-    with pytest.raises(TypeError, match="doc_id_range"):
-        decode(spark, out, doc_id_range=(9, 10))
-    with pytest.raises(TypeError, match="n_tok_range"):
-        decode(spark, out, n_tok_range=(1.5, None))
+    with pytest.raises(TypeError, match="bounds must be str"):
+        decode(spark, out, ranges={"doc_id": (9, 10)})
+    with pytest.raises(TypeError, match="bounds must be int"):
+        decode(spark, out, ranges={"n_tok": (1.5, None)})
 
 
 def test_explicit_rowgroup_scan_never_degrades(spark, token_table_dir, tmp_dir):

@@ -122,41 +122,40 @@ def test_decode_rejects_empty_columns(spark, tmp_dir):
         decode(spark, tmp_dir, columns=[])
 
 
-def test_decode_source_in_validation(spark, tmp_dir):
+def test_decode_source_isin_validation(spark, tmp_dir):
     from clj_orc_spark.pipeline import decode
 
-    with pytest.raises(TypeError, match="source_in"):
-        decode(spark, tmp_dir, source_in=[])
-    with pytest.raises(TypeError, match="source_in"):
-        decode(spark, tmp_dir, source_in=[3])
-    with pytest.raises(ValueError, match="source"):
-        decode(spark, tmp_dir, columns=["doc_id"], source_in=["a"])
+    with pytest.raises(TypeError, match="non-empty list of str"):
+        decode(spark, tmp_dir, isin={"source": []})
+    with pytest.raises(TypeError, match="non-empty list of str"):
+        decode(spark, tmp_dir, isin={"source": [3]})
+    with pytest.raises(ValueError, match="'source' requires it"):
+        decode(spark, tmp_dir, columns=["doc_id"], isin={"source": ["a"]})
 
 
-def test_decode_source_in_prunes_and_filters(spark, token_table_dir, tmp_dir):
-    """source_in must return exactly the matching rows (bit-identical) and
-    prune non-matching chunks from I/O via the source zone maps."""
+def test_decode_source_isin_prunes_and_filters(spark, token_table_dir,
+                                               tmp_dir):
+    """isin on source must return exactly the matching rows (bit-identical)
+    and prune non-matching chunks from I/O via the source zone maps."""
     from pyspark.sql import functions as F
 
-    from clj_orc_spark.pipeline import decode, encode
-    from clj_orc_spark.pipeline.decode import _stat_pruned_work
+    from clj_orc_spark.pipeline import decode, decode_plan_report, encode
 
     src = os.path.join(token_table_dir, "tokens.parquet")
     out = os.path.join(tmp_dir, "enc")
     encode(spark, src, out, n_partitions=4)
     full = spark.read.parquet(src)
     want = [r["source"] for r in full.select("source").distinct().collect()][:1]
-    got = decode(spark, out, source_in=want)
+    got = decode(spark, out, isin={"source": want})
     exp = full.where(F.col("source").isin(want))
     assert got.count() == exp.count()
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
     # pruning engages: chunks surviving the stats filter <= all chunks
-    pruned = _stat_pruned_work(spark, out, None, None, None, want)
-    assert pruned is not None
-    n_pruned = sum(len(cids) for _, cids in pruned)
+    rep = decode_plan_report(spark, out, isin={"source": want})
     m = spark.read.parquet(os.path.join(out, "manifest", "chunks"))
     n_all = m.select("chunk_id").distinct().count()
-    assert n_pruned <= n_all
+    assert rep["chunks_total"] == n_all
+    assert 0 < rep["chunks_kept"] <= n_all
 
 
 def test_decode_image_png_without_pillow_raises_declared_stub():

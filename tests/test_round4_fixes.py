@@ -19,7 +19,7 @@ def _tiny_df(spark, n=40):
 
 
 def test_plan_resume_mode_mismatch_raises(spark, tmp_path):
-    """encode(plan=...) against a store persisted in salted/JVM mode must
+    """encode(plan=...) against a store persisted in JVM mode must
     raise a clear error naming the persisted mode, not crash in
     spark.read.parquet(None) (round-3 advice)."""
     out = str(tmp_path / "store")
@@ -119,7 +119,7 @@ def test_exact_near_dup_guard_raises_at_scale(spark):
         cosine_near_dups(big, threshold=0.9)
 
 
-def test_token_range_zone_map_prunes_and_filters(spark, tmp_path):
+def test_tokens_containment_zone_map_prunes_and_filters(spark, tmp_path):
     """Token-VALUE zone maps (recorded since round 2, queryable since round
     4): a vocabulary-range decode must skip chunks whose token_values
     [min,max] cannot intersect the range, and exactly filter the survivors."""
@@ -146,36 +146,35 @@ def test_token_range_zone_map_prunes_and_filters(spark, tmp_path):
     out = str(tmp_path / "store")
     encode(spark, str(src), out, n_partitions=2)
 
-    from clj_orc_spark.pipeline.decode import _stat_pruned_work
+    from clj_orc_spark.pipeline import decode_plan_report
 
-    pruned = _stat_pruned_work(spark, out, None, None, None, None, (900, None))
-    assert pruned is not None
-    kept = {cid for _, cids in pruned for cid in cids}
+    rep = decode_plan_report(spark, out, ranges={"tokens": (900, None)})
     total = (
         spark.read.parquet(out + "/manifest/chunks")
         .select("chunk_id").distinct().count()
     )
-    assert 0 < len(kept) < total, (len(kept), total)  # real chunk skipping
+    assert rep["chunks_total"] == total
+    assert 0 < rep["chunks_kept"] < total, rep  # real chunk skipping
 
     got = sorted(
         r.doc_id
-        for r in decode(spark, out, token_range=(900, None)).collect()
+        for r in decode(spark, out, ranges={"tokens": (900, None)}).collect()
     )
     assert got == [f"high{i:03d}" for i in range(50)]
 
     # two-sided range and row-exactness: only the row CONTAINING token 1001
     two = sorted(
         r.doc_id
-        for r in decode(spark, out, token_range=(1001, 1001)).collect()
+        for r in decode(spark, out, ranges={"tokens": (1001, 1001)}).collect()
     )
     assert two == ["high001"]
 
     with pytest.raises(ValueError, match="at least one bound"):
-        decode(spark, out, token_range=(None, None))
-    with pytest.raises(TypeError, match="ints"):
-        decode(spark, out, token_range=("1", None))
-    with pytest.raises(ValueError, match="requires 'tokens'"):
-        decode(spark, out, columns=["doc_id"], token_range=(1, None))
+        decode(spark, out, ranges={"tokens": (None, None)})
+    with pytest.raises(TypeError, match="must be int"):
+        decode(spark, out, ranges={"tokens": ("1", None)})
+    with pytest.raises(ValueError, match="'tokens' requires it"):
+        decode(spark, out, columns=["doc_id"], ranges={"tokens": (1, None)})
 
 
 def test_batch_minhash_bit_identical_to_scalar():
@@ -420,8 +419,10 @@ def test_null_columns_roundtrip_exactly(spark, tmp_path):
 
 
 def test_legacy_predicate_sugar_is_kind_checked(spark, tmp_path):
-    """Legacy named predicates on a general store whose column kinds differ
-    from the token table must raise, not silently prune (review finding #2)."""
+    """Predicates on a general store whose doc_id/source kinds differ from
+    the token table's are checked against the store kinds: wrongly typed
+    bounds raise instead of silently pruning (review finding #2, first
+    seen through the former token-table named predicates)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -436,9 +437,9 @@ def test_legacy_predicate_sugar_is_kind_checked(spark, tmp_path):
     out = str(tmp_path / "store")
     encode(spark, src, out, n_partitions=1)
     with pytest.raises(TypeError, match="must be int"):
-        decode(spark, out, doc_id_range=("a", "z"))
+        decode(spark, out, ranges={"doc_id": ("a", "z")})
     with pytest.raises(TypeError, match="non-empty list of int"):
-        decode(spark, out, source_in=["x"])
+        decode(spark, out, isin={"source": ["x"]})
     # correctly-typed predicates on the same columns work
     assert decode(spark, out, ranges={"doc_id": (2, None)}).count() == 2
     assert decode(spark, out, isin={"source": [7, 9]}).count() == 2

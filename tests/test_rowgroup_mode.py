@@ -1,9 +1,9 @@
 """Zero-shuffle rowgroup encode mode (round 2): part_id = a footer-planned,
 byte-balanced bin of parquet row groups; scan + encode fuse into ONE
-``mapInArrow`` stage so token bytes never cross a shuffle.  The salted
-n_tok-quantile repartition (skew.py) remains the path for ``df=`` inputs and
-row-group-skewed sources — both modes must round-trip bit-identically and
-resume from the same lineage contract."""
+``mapInArrow`` stage so token bytes never cross a shuffle.  The JVM scan
+feeding the salted n_tok-quantile repartition (skew.py) remains the path for
+``df=`` inputs — both modes must round-trip bit-identically and resume from
+the same lineage contract."""
 
 import json
 import os
@@ -116,17 +116,33 @@ def test_rowgroup_resume_rejects_df_input(spark, token_table_dir, tmp_dir):
         encode(spark, out_dir=out, df=spark.read.parquet(src), n_partitions=4)
 
 
-def test_salted_mode_still_roundtrips(spark, token_table_dir, tmp_dir):
-    """scan='salted' keeps the n_tok-quantile salted repartition exercised
-    end-to-end (the fallback for row-group-skewed inputs)."""
+def test_salted_scan_mode_rejected(spark, token_table_dir, tmp_dir):
+    """scan accepts exactly auto|rowgroup|jvm: the former fused pyarrow
+    salted scan is an unknown mode, rejected before anything is written."""
     src = os.path.join(token_table_dir, "tokens.parquet")
     out = os.path.join(tmp_dir, "enc")
-    rep = encode(spark, src, out, n_partitions=4, scan="salted")
-    assert rep["scan"] == "arrow-salted"
-    plan = _plan(out)
-    assert "bounds" in plan and plan.get("assign_hash") == "fnv1a"
-    v = verify_roundtrip(spark.read.parquet(src), decode(spark, out))
-    assert v["bit_identical"]
+    with pytest.raises(ValueError, match="unknown scan mode 'salted'"):
+        encode(spark, src, out, n_partitions=4, scan="salted")
+    assert not os.path.exists(out)
+
+
+def test_resume_of_fnv1a_plan_asks_for_reencode(spark, token_table_dir,
+                                                tmp_dir):
+    """A plan.json recorded by the former fused salted scan (assign_hash
+    fnv1a) cannot be resumed by the JVM scan's xxhash64 assignment: every
+    scan mode raises the re-encode ValueError instead of mixing part_id
+    assignments in one store."""
+    src = os.path.join(token_table_dir, "tokens.parquet")
+    out = os.path.join(tmp_dir, "enc")
+    os.makedirs(out)
+    with open(os.path.join(out, "plan.json"), "w") as f:
+        json.dump({"bounds": [10.0], "offsets": [0, 2], "allocs": [2, 2],
+                   "n_total": 4, "assign_hash": "fnv1a"}, f)
+    for kw in ({"input_path": src}, {"input_path": src, "scan": "jvm"},
+               {"df": spark.read.parquet(src)}):
+        with pytest.raises(ValueError, match="fresh out_dir"):
+            encode(spark, out_dir=out, n_partitions=4, **kw)
+    assert not os.path.exists(os.path.join(out, "chunks"))
 
 
 def test_rowgroup_encode_plan_has_zero_shuffles(spark, token_table_dir):

@@ -1,6 +1,6 @@
 """Round 5: zone-map clustering — ``encode(sort_by=...)``.
 
-Sorting each row group (rowgroup mode) / each partition (salted mode) by
+Sorting each row group (rowgroup mode) / each partition (jvm mode) by
 the caller's keys before chunk slicing gives every chunk a narrow key
 min/max, so range predicates prune most chunks from the manifest alone.
 No shuffle is added anywhere: this is clustering WITHOUT the cluster-wide
@@ -97,12 +97,12 @@ def test_sort_by_is_pinned_on_resume(spark, stores, tmp_path):
         encode(spark, src, out, sort_by="tokens")
 
 
-def test_sort_by_salted_path(spark, stores, tmp_path):
-    """df= callers go through the salted scan; sortWithinPartitions leads
-    with part_id so the per-part chunk splitter still sees contiguous
-    parts."""
+def test_sort_by_jvm_path(spark, stores, tmp_path):
+    """df= callers go through the jvm scan + salted repartition;
+    sortWithinPartitions leads with part_id so the per-part chunk splitter
+    still sees contiguous parts."""
     src, _, _, tbl = stores
-    out = str(tmp_path / "salted")
+    out = str(tmp_path / "jvm")
     df = spark.read.parquet(src)
     rep = encode(spark, df=df, out_dir=out, n_partitions=2,
                  chunk_bytes=16 << 10, sort_by="n_tok")
