@@ -13,6 +13,7 @@ CRC of every payload is checked against the value recorded at encode time.
 
 from __future__ import annotations
 
+import functools
 import json
 from typing import NamedTuple
 
@@ -128,19 +129,19 @@ def _bound_types(kind: str) -> tuple[tuple, str]:
     return (int,), "int"
 
 
-def _zone_cast(kind: str) -> str:
-    """Spark cast type for comparing a column kind's zone-map stats (the
-    manifest records them as JSON strings); used by the one predicate
+def _zone_type(kind: str) -> pa.DataType:
+    """Arrow type a column kind's zone-map stats parse to (the manifest
+    records them as JSON strings) — the compare type of the one predicate
     compiler, :func:`_compile_predicates`."""
     if kind.startswith("list<"):  # generic list: dispatch on value kind
         kind = list_value_kind(kind)
     if kind == "str":
-        return "string"
+        return pa.string()
     if kind == "binary":
-        return "binary"
+        return pa.binary()
     if kind in ("float32", "float64", "listf32", "listf64"):
-        return "double"
-    return "long" if kind in ("int64", "list32", "list64", "ts_us", "ts_us_utc") else "int"
+        return pa.float64()
+    return pa.int64()
 
 
 def _ddl_type(kind: str) -> str:
@@ -400,116 +401,193 @@ def _chunk_files(chunks_dir: str, part_ids: list[int] | None) -> list[str]:
     return sorted(files)
 
 
-def _manifest_files(spark, out_dir: str, part_ids: list[int] | None) -> list[str] | None:
-    """Chunk file list from the manifest (the scale path: no filesystem walk
-    — on an object store, enumeration comes from committed lineage, and
-    uncommitted partial files from a crashed wave are never decoded).
-    Returns None when this run predates file recording (walk fallback).
+def _read_manifest(spark, out_dir: str, columns: list[str],
+                   part_ids=None, cols=None) -> pa.Table | None:
+    """THE manifest reader of decode planning (file listing, zone-map
+    pruning, plan report): ``columns`` of the committed chunk records, rows
+    restricted to ``part_id IN part_ids`` and ``col IN cols`` (None = all).
 
-    The manifest is KBs-to-MBs of metadata; reading it with pyarrow on the
-    driver skips a whole Spark job (scheduling + shuffle for distinct) per
-    decode plan — measured 0.3-4 s of per-decode latency at sf0.1.  Falls
-    back to the Spark read when pyarrow cannot serve the store (e.g. JVM-
-    only credentials)."""
+    The manifest is payload-pruned metadata (KBs-to-MBs), so it is read with
+    pyarrow on the driver — planning starts no Spark job.  ``file`` reads
+    dictionary-encoded: it repeats once per chunk column.  When pyarrow
+    cannot serve the store (e.g. JVM-only credentials), or sees no fragment
+    in a manifest Spark can list, Spark reads the same columns and rows and
+    they come back through ``toArrow()``.  Returns None when there is no
+    manifest or it predates one of ``columns`` (stores written before
+    file/stats recording)."""
     import os
+
+    import pyarrow.dataset as ds
 
     from .encode import _has_parquet
 
     mdir = os.path.join(out_dir, "manifest", "chunks")
     if not _has_parquet(spark, mdir):
         return None
+    wheres = [(f, v) for f, v in (
+        ("part_id", None if part_ids is None else [int(p) for p in part_ids]),
+        ("col", cols)) if v is not None]
     try:
-        import pyarrow.dataset as ds
-
         fs, path = pafs.resolve(mdir)
-        dataset = ds.dataset(path, filesystem=fs, format="parquet",
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(dictionary_columns={"file"}))
+        dataset = ds.dataset(path, filesystem=fs, format=fmt,
                              partitioning="hive")
-        if "file" not in dataset.schema.names:
-            return None
-        flt = (
-            ds.field("part_id").isin([int(p) for p in part_ids])
-            if part_ids is not None else None
-        )
-        col = dataset.to_table(columns=["file"], filter=flt).column("file")
-        uris = sorted(set(col.to_pylist()))
-    except Exception:
-        from pyspark.sql import functions as F
+        if dataset.files:
+            if not set(columns) <= set(dataset.schema.names):
+                return None
+            flt = None
+            for f, v in wheres:
+                e = ds.field(f).isin(v)
+                flt = e if flt is None else flt & e
+            return dataset.to_table(columns=columns, filter=flt)
+    except (pa.ArrowException, OSError):
+        pass
+    from pyspark.sql import functions as F
 
-        m = spark.read.parquet(mdir)
-        if "file" not in m.columns:
-            return None
-        if part_ids is not None:
-            m = m.where(F.col("part_id").isin([int(p) for p in part_ids]))
-        uris = sorted(r["file"] for r in m.select("file").distinct().collect())
-    return [_strip_file_scheme(u) for u in uris]
+    m = spark.read.parquet(mdir)
+    if not set(columns) <= set(m.columns):
+        return None
+    for f, v in wheres:
+        m = m.where(F.col(f).isin(v))
+    return m.select(*columns).toArrow()
+
+
+def _manifest_files(spark, out_dir: str, part_ids: list[int] | None) -> list[str] | None:
+    """Chunk file list from the manifest (the scale path: no filesystem walk
+    — on an object store, enumeration comes from committed lineage, and
+    uncommitted partial files from a crashed wave are never decoded).
+    Returns None when this run predates file recording (walk fallback)."""
+    tbl = _read_manifest(spark, out_dir, ["file"], part_ids)
+    if tbl is None:
+        return None
+    uris = {u for u in pc.unique(tbl.column("file")).to_pylist() if u}
+    return [_strip_file_scheme(u) for u in sorted(uris)]
+
+
+def _zone_stats(stats, typ: pa.DataType) -> tuple[pa.Array, pa.Array]:
+    """(min, max) arrays parsed from manifest ``stats`` JSON strings under
+    an explicit ``typ`` schema — one vectorised pass, where a ``json.loads``
+    loop costs ~20x more at millions of chunks.  A null or key-less stats
+    string parses to null min/max (a stat-less chunk)."""
+    import pyarrow.json as pj
+
+    s = pc.fill_null(stats, "{}")
+    if isinstance(s, pa.ChunkedArray):
+        s = s.combine_chunks()
+    if len(s) == 0:
+        empty = pa.array([], type=typ)
+        return empty, empty
+    longest = pc.max(pc.binary_length(s)).as_py()
+    lines = pc.binary_join(
+        pa.ListArray.from_arrays(pa.array([0, len(s)], pa.int32()), s), "\n"
+    )[0].as_buffer()
+    t = pj.read_json(
+        pa.BufferReader(lines),
+        read_options=pj.ReadOptions(block_size=max(1 << 20, 2 * longest + 2)),
+        parse_options=pj.ParseOptions(
+            explicit_schema=pa.schema([("min", typ), ("max", typ)]),
+            unexpected_field_behavior="ignore",
+        ),
+    )
+    return (t.column("min").combine_chunks(),
+            t.column("max").combine_chunks())
+
+
+def _cmp(op: str, a: pa.Array, v) -> pa.Array:
+    """``a >= v`` (op "ge") or ``a <= v`` (op "le") under Spark's ordering,
+    which the exact row filter uses: NaN sorts above every value, so
+    ``x <= NaN`` holds where IEEE says false (stats are never NaN — encode
+    records non-finite chunks as stat-less).  An int bound past int64 sorts
+    past every stat the same way."""
+    typ = a.type
+    beyond = 0
+    if pa.types.is_floating(typ):
+        v = float(v)
+        beyond = 1 if v != v else 0
+    elif pa.types.is_integer(typ):
+        v = int(v)
+        beyond = (v > np.iinfo(np.int64).max) - (v < np.iinfo(np.int64).min)
+    if beyond:
+        holds = (op == "le") == (beyond > 0)
+        return pc.is_valid(a) if holds else pa.array(np.zeros(len(a), bool))
+    b = pa.scalar(v, typ)
+    return pc.greater_equal(a, b) if op == "ge" else pc.less_equal(a, b)
+
+
+def _overlaps(mn: pa.Array, mx: pa.Array, lo, hi) -> pa.Array:
+    """Kleene mask: zone ``[mn, mx]`` meets ``[lo, hi]`` (either bound
+    None)."""
+    cond = pa.array(np.ones(len(mn), dtype=bool))
+    if lo is not None:
+        cond = pc.and_kleene(cond, _cmp("ge", mx, lo))
+    if hi is not None:
+        cond = pc.and_kleene(cond, _cmp("le", mn, hi))
+    return cond
+
+
+def _file_groups(files, cids) -> list[tuple[str, list[int]]]:
+    """(file, sorted distinct chunk_ids) per file for aligned file / chunk_id
+    columns, grouped on the dictionary indices with numpy."""
+    t = pa.table({"f": files if pa.types.is_dictionary(files.type)
+                  else pc.dictionary_encode(files),
+                  "c": cids}).unify_dictionaries().combine_chunks()
+    if t.num_rows == 0:
+        return []
+    farr = t.column("f").chunk(0)
+    idx = farr.indices.to_numpy(zero_copy_only=False)
+    ids = t.column("c").chunk(0).to_numpy(zero_copy_only=False)
+    order = np.lexsort((ids, idx))
+    idx, ids = idx[order], ids[order]
+    new = np.ones(len(ids), dtype=bool)
+    new[1:] = (idx[1:] != idx[:-1]) | (ids[1:] != ids[:-1])
+    idx, ids = idx[new], ids[new]
+    cuts = np.flatnonzero(np.diff(idx)) + 1
+    names = farr.dictionary.to_pylist()
+    return sorted(
+        (_strip_file_scheme(names[g[0]]), c.tolist())
+        for g, c in zip(np.split(idx, cuts), np.split(ids, cuts))
+    )
 
 
 def _stat_pruned_specs(spark, out_dir: str, part_ids, range_specs,
                        isin_specs):
     """Zone-map pruning: (file, [chunk_ids]) for chunks whose recorded
     per-column min/max intersects the predicates — the ORC column-statistics
-    analog, answered entirely from the payload-pruned manifest, for ANY
-    physical stat column (round 4: generic over the store schema, not just
-    the token-table specials).
+    analog, answered on the driver from the payload-pruned manifest (no
+    Spark job), for ANY physical stat column.
 
-    ``range_specs``: (phys_col, lo, hi, cast) — chunk survives when its
+    ``range_specs``: (phys_col, lo, hi, type) — chunk survives when its
     [min, max] intersects [lo, hi] (either bound None).  ``isin_specs``:
-    (phys_col, values, cast) — chunk survives when some wanted value lies
-    within its range.  Returns None when there are no specs or the store
-    predates stats recording (decode everything)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .encode import _has_parquet
-
+    (phys_col, values, type) — chunk survives when some wanted value lies
+    within its range.  Predicates intersect; a chunk with no record for a
+    predicate's column is dropped, a stat-less one (null min) kept.  Returns
+    None when there are no specs or the store predates stats recording
+    (decode everything)."""
     if not range_specs and not isin_specs:
         return None
-    mdir = os.path.join(out_dir, "manifest", "chunks")
-    if not _has_parquet(spark, mdir):
+    phys = sorted({s[0] for s in range_specs} | {s[0] for s in isin_specs})
+    m = _read_manifest(spark, out_dir, ["chunk_id", "col", "stats", "file"],
+                       part_ids, phys)
+    if m is None:
         return None
-    m = spark.read.parquet(mdir)
-    if "stats" not in m.columns or "file" not in m.columns:
-        return None
-    if part_ids is not None:
-        m = m.where(F.col("part_id").isin([int(p) for p in part_ids]))
 
-    def stat_rows(col_name, cast):
-        return m.where(F.col("col") == col_name).select(
-            "chunk_id",
-            F.get_json_object("stats", "$.min").cast(cast).alias("mn"),
-            F.get_json_object("stats", "$.max").cast(cast).alias("mx"),
-        )
-
-    kept = None
-    for col_name, lo, hi, cast in range_specs:
-        rows = stat_rows(col_name, cast)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (F.col("mx") >= F.lit(lo))
-        if hi is not None:
-            cond = cond & (F.col("mn") <= F.lit(hi))
-        # stat-less chunk (NULL min): conservative keep
-        s = rows.where(F.col("mn").isNull() | cond).select("chunk_id")
-        kept = s if kept is None else kept.intersect(s)
-    for col_name, values, cast in isin_specs:
-        # membership against a [min,max] zone map: a chunk can only hold a
-        # wanted value if some v ∈ values lies within its range
-        rows = stat_rows(col_name, cast)
-        cond = F.lit(False)
-        for v in values:
-            cond = cond | ((F.col("mn") <= F.lit(v)) & (F.col("mx") >= F.lit(v)))
-        s = rows.where(F.col("mn").isNull() | cond).select("chunk_id")
-        kept = s if kept is None else kept.intersect(s)
-    pairs = (
-        m.join(kept, "chunk_id")
-        .select("file", "chunk_id")
-        .distinct()
-        .groupBy("file")
-        .agg(F.collect_set("chunk_id").alias("cids"))
-        .collect()
-    )
-    return [(_strip_file_scheme(r["file"]), sorted(r["cids"])) for r in pairs]
+    # an isin value v is the window [v, v]: a chunk can only hold a wanted
+    # value if some v ∈ values lies within its range
+    tests = [(c, t, [(lo, hi)]) for c, lo, hi, t in range_specs]
+    tests += [(c, t, [(v, v) for v in vals]) for c, vals, t in isin_specs]
+    hit = None  # (file, chunk_id) rows of chunks passing every test so far
+    for name, typ, windows in tests:
+        rows = m.filter(pc.equal(m.column("col"), name))
+        mn, mx = _zone_stats(rows.column("stats"), typ)
+        meets = functools.reduce(pc.or_kleene, (
+            _overlaps(mn, mx, lo, hi) for lo, hi in windows))
+        # stat-less chunk (null min): conservative keep
+        keep = pc.or_kleene(pc.is_null(mn), meets)
+        got = rows.select(["file", "chunk_id"]).filter(keep)
+        hit = got if hit is None else hit.filter(
+            pc.is_in(hit.column("chunk_id"), got.column("chunk_id")))
+    return _file_groups(hit.column("file"), hit.column("chunk_id"))
 
 
 class _Predicates(NamedTuple):
@@ -519,8 +597,8 @@ class _Predicates(NamedTuple):
     ranges: dict  # key → (lo, hi), bool bounds as 0/1 storage ints
     isin: dict  # key → [values], bool values as 0/1 storage ints
     kinds: dict  # key → effective kind (struct fields resolved)
-    range_specs: list  # (phys col, lo, hi, cast) for _stat_pruned_specs
-    isin_specs: list  # (phys col, values, cast) for _stat_pruned_specs
+    range_specs: list  # (phys col, lo, hi, type) for _stat_pruned_specs
+    isin_specs: list  # (phys col, values, type) for _stat_pruned_specs
     columns: list | None  # validated projection in schema order
 
 
@@ -618,11 +696,11 @@ def _compile_predicates(schema, ranges: dict | None, isin: dict | None,
                 )
         columns = [c for c in order if c in set(columns)]
     range_specs = [
-        (pred_phys[c], lo, hi, _zone_cast(pred_kind[c]))
+        (pred_phys[c], lo, hi, _zone_type(pred_kind[c]))
         for c, (lo, hi) in ranges.items()
     ]
     isin_specs = [
-        (pred_phys[c], list(v), _zone_cast(pred_kind[c]))
+        (pred_phys[c], list(v), _zone_type(pred_kind[c]))
         for c, v in isin.items()
     ]
     return _Predicates(ranges, isin, pred_kind, range_specs, isin_specs,
@@ -634,36 +712,28 @@ def decode_plan_report(spark, out_dir: str,
                        isin: dict | None = None) -> dict:
     """Observability for zone-map pruning: how many chunks/files would a
     predicated decode touch?  Answers entirely from the payload-pruned
-    manifest (no chunk data read) — the engine-format analog of EXPLAIN's
-    partition/row-group pruning counts.  Predicates compile exactly as in
-    :func:`decode`, so a predicate decode() rejects is rejected here too.
+    manifest on the driver (no chunk data read, no Spark job) — the
+    engine-format analog of EXPLAIN's partition/row-group pruning counts.
+    Predicates compile and prune exactly as in :func:`decode`, so a
+    predicate decode() rejects is rejected here too.
 
     Returns ``{"chunks_total", "chunks_kept", "files_total", "files_kept"}``.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .encode import _has_parquet
-
     preds = _compile_predicates(store_schema(spark, out_dir), ranges, isin)
-    mdir = os.path.join(out_dir, "manifest", "chunks")
-    if not _has_parquet(spark, mdir):
-        raise ValueError(f"no manifest under {out_dir!r}")
-    m = spark.read.parquet(mdir)
-    totals = m.agg(
-        F.countDistinct("chunk_id").alias("c"),
-        F.countDistinct("file").alias("f"),
-    ).first()
+    m = _read_manifest(spark, out_dir, ["chunk_id", "file"])
+    if m is None:
+        raise ValueError(f"no manifest with file records under {out_dir!r}")
+    chunks = len(pc.unique(m.column("chunk_id")).drop_null())
+    files = len(pc.unique(m.column("file")).drop_null())
     pruned = _stat_pruned_specs(spark, out_dir, None, preds.range_specs,
                                 preds.isin_specs)
     if pruned is None:  # no predicates or stat-less store: everything kept
-        kept_c, kept_f = totals["c"], totals["f"]
+        kept_c, kept_f = chunks, files
     else:
         kept_c = sum(len(cids) for _, cids in pruned)
         kept_f = len(pruned)
-    return {"chunks_total": totals["c"], "chunks_kept": kept_c,
-            "files_total": totals["f"], "files_kept": kept_f}
+    return {"chunks_total": chunks, "chunks_kept": kept_c,
+            "files_total": files, "files_kept": kept_f}
 
 
 def decode(spark, out_dir: str, part_ids: list[int] | None = None,

@@ -1372,7 +1372,7 @@ def _manifest_rollup(manifest_dir: str, pending: list[int],
                 "raw_bytes": int(gb.column("raw_bytes_sum")[i].as_py() or 0),
             }
         return out
-    except Exception:
+    except (pa.ArrowException, OSError):
         return None
 
 
