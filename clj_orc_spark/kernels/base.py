@@ -164,18 +164,28 @@ def _ref_u64(ref: int) -> np.uint64:
     return np.uint64(int(ref) & 0xFFFFFFFFFFFFFFFF)
 
 
+def _readonly(a: np.ndarray) -> np.ndarray:
+    """A non-writable view of ``a``.  The zero-reference fast paths return
+    their input reinterpreted, not a copy: a caller writing to the result
+    would silently change the source array, so such a write raises."""
+    v = a.view()
+    v.flags.writeable = False
+    return v
+
+
 def as_unsigned_residuals(arr: np.ndarray, ref: int) -> np.ndarray:
     """``(arr - ref) mod 2**64`` as uint64 — exact for any 64-bit range.
 
     Wraparound subtraction keeps frame-of-reference exact even when
     ``max - min`` overflows int64 (full-range int64 or uint64 columns).
+    With ``ref == 0`` the result may alias ``arr`` and is read-only.
     """
     if arr.dtype == np.uint64:
         a = arr
     else:
         a = arr.astype(np.int64, copy=False).view(np.uint64)
     if ref == 0:
-        return a  # view, no copy — every caller treats residuals read-only
+        return _readonly(a)  # no copy
     return a - _ref_u64(ref)  # uint64 wraps mod 2**64
 
 
@@ -188,14 +198,15 @@ def narrow_residuals(arr: np.ndarray, ref: int) -> np.ndarray:
     the true residual of a ≤32-bit column always fits 32 bits), uint64
     otherwise.  The int32 token-column hot path does half the memory
     traffic this way; every downstream op (mask/compare/shift/pack) yields
-    byte-identical payloads, pinned by tests/test_kernels.py."""
+    byte-identical payloads, pinned by tests/test_kernels.py.  With
+    ``ref == 0`` the result may alias ``arr`` and is read-only."""
     if arr.dtype in _NARROW_DTYPES:
         if arr.dtype == np.uint32:
             a = arr
         else:
             a = arr.astype(np.int32, copy=False).view(np.uint32)
         if ref == 0:
-            return a  # view, no copy — residuals are read-only downstream
+            return _readonly(a)  # no copy
         return a - np.uint32(int(ref) & 0xFFFFFFFF)
     return as_unsigned_residuals(arr, ref)
 
@@ -205,19 +216,21 @@ def from_unsigned_residuals(res: np.ndarray, ref: int, dtype: str) -> np.ndarray
 
     A uint32 ``res`` (the narrow decode path, 32-bit dtypes only) adds the
     reference mod 2**32 — exact because a ≤32-bit column's values equal
-    their value mod 2**32 under the target dtype's view."""
+    their value mod 2**32 under the target dtype's view.  With a zero
+    reference the result may alias ``res`` and is read-only."""
     if res.dtype == np.uint32:
         r32 = int(ref) & 0xFFFFFFFF
         # zero reference: no addition pass — the residuals ARE the values
-        # (a view; decode outputs are freshly allocated per call)
-        base32 = res if r32 == 0 else res + np.uint32(r32)  # wraps mod 2**32
+        base32 = (_readonly(res) if r32 == 0
+                  else res + np.uint32(r32))  # wraps mod 2**32
         if dtype == "uint32":
             return base32
         if dtype == "int32":
             return base32.view(np.int32)
         res = base32.astype(np.uint64)  # non-32-bit dtype: widen, ref done
         ref = 0
-    base = res if int(ref) & 0xFFFFFFFFFFFFFFFF == 0 else res + _ref_u64(ref)
+    base = (_readonly(res) if int(ref) & 0xFFFFFFFFFFFFFFFF == 0
+            else res + _ref_u64(ref))
     np_dtype = INT_DTYPES[dtype]
     if dtype == "bool":
         return base.view(np.int64).astype(np.bool_)

@@ -510,7 +510,12 @@ class PatchedFor:
         )
         if meta.get("base"):
             dec = decode_int_sub(base_b, meta["base"])
-            res = dec.astype(np.uint32 if narrow else np.uint64, copy=False)
+            # exceptions are OR-ed into res in place, and a zero-reference
+            # sub-decode comes back as a read-only view: copy only then
+            res = dec.astype(
+                np.uint32 if narrow else np.uint64,
+                copy=bool(meta["n_exc"]) and not dec.flags.writeable,
+            )
         else:
             res = unpack_bits(base_b, meta["width"], n, narrow=narrow)
         n_exc = meta["n_exc"]

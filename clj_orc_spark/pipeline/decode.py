@@ -35,6 +35,9 @@ from .encode import (
 )
 
 TOKEN_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
+#: decode work list: one row per chunk file, ``cids`` the JSON list of the
+#: chunk_ids to keep (null = every chunk of the file)
+WORK_DDL = "path string, cids string"
 
 _DDL_TYPE = {"str": "string", "int32": "int", "int64": "bigint",
              "float32": "float", "float64": "double",
@@ -742,12 +745,15 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
            isin: dict | None = None):
     """Distributed decode: chunk rows → source-table DataFrame.
 
-    One task per encoded chunk file, read with pyarrow inside
-    ``mapInArrow``.  The encoder writes every chunk's column rows
-    contiguously into one file, so **no shuffle is needed at all** — at
-    100 TB a groupBy(chunk_id) would reshuffle the entire encoded dataset.
-    (pyarrow's parquet reader also measured ~1.5x faster than the JVM scan
-    on these payload-heavy rows.)
+    The work list (one ``(path, cids)`` row per chunk file to read) enters
+    Spark as a driver-local relation, so its scan runs in the JVM; at most
+    ``defaultParallelism`` ``mapInArrow`` tasks each read a run of
+    consecutive files with pyarrow.  The encoder writes every chunk's
+    column rows contiguously into one file, so **no shuffle is needed at
+    all** — at 100 TB a groupBy(chunk_id) would reshuffle the entire
+    encoded dataset.  (pyarrow's parquet reader also measured ~1.5x faster
+    than the JVM scan on these payload-heavy rows.)  A decode that reads
+    no file returns a zero-partition frame.
 
     ``columns`` prunes the decode to the requested logical columns — the
     engine-format analog of parquet column pruning: unneeded payloads are
@@ -846,10 +852,12 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
         return df
 
     chunks_dir = os.path.join(out_dir, "chunks")
-    from .encode import _has_parquet
+    from .encode import _has_parquet, local_frame
 
+    # an empty result is a zero-partition frame: actions over it start no
+    # task
     if not _has_parquet(spark, chunks_dir):  # empty run wrote no chunks
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, [], ddl)
 
     pruned = _stat_pruned_specs(
         spark, out_dir, part_ids, range_specs, isin_specs
@@ -862,7 +870,7 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
             files = _chunk_files(chunks_dir, part_ids)
         work_rows = [(f, None) for f in files]
     if not work_rows:
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, [], ddl)
 
     phys = _physical_map(schema)
     needed_cols = sorted({p for c in (columns or order) for p in phys[c]})
@@ -880,12 +888,9 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
                                       prune_cols,
                                       prefetch="://" in out_dir)
 
-    # each task receives its OWN file path as data — a closure over the full
-    # file list would ship every task a copy of all paths (millions at 100 TB)
-    work = spark.createDataFrame(
-        spark.sparkContext.parallelize(work_rows, len(work_rows)),
-        "path string, cids string",
-    )
+    # the file paths travel as DATA — a closure over the full file list
+    # would ship every task a copy of all paths (millions at 100 TB)
+    work = local_frame(spark, work_rows, WORK_DDL)
     return exact_filter(work.mapInArrow(decode_files, ddl))
 
 
@@ -934,6 +939,9 @@ class _Inline:
 def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
                        prefetch: bool = True):
     """mapInArrow kernel over ``(path, cids_json)`` rows → decoded batches.
+
+    A task decodes every file row it receives, one file after another, so
+    it serves any number of files per task.
 
     Round 5: row groups are read with a ONE-IN-FLIGHT background prefetch —
     while the codec kernels decode the chunks completed by group i, a

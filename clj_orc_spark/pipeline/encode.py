@@ -979,7 +979,12 @@ def rowgroup_work_df(spark, parts: list[list[list]], pending: list[int]):
     copy of ALL assignments (at 10^12 scale: ~10^6 row-group units ≈ 100 MB
     per task).  ``parallelize(rows, len(rows))`` puts exactly one row in
     each slice, keeping task→partition 1:1.  (Past ~10^6 parts the plan
-    belongs in a parquet sidecar rather than plan.json.)"""
+    belongs in a parquet sidecar rather than plan.json.)
+
+    This is the one driver-held frame that stays a Python RDD rather than a
+    :func:`local_frame`: a ``LocalTableScan`` packs consecutive rows into at
+    most ``defaultParallelism`` tasks, so several parts would share one
+    write task, and the move measured only ~0.1 s on a store build."""
     rows = [(int(p), json.dumps(parts[p])) for p in pending]
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, len(rows)),
@@ -1303,6 +1308,33 @@ def _has_parquet(spark, path: str) -> bool:
     return fsio.has_parquet(spark, path)
 
 
+def local_frame(spark, rows: list[tuple], ddl: str):
+    """DataFrame over rows the driver already holds, typed by ``ddl``.
+
+    The rows enter Spark as an Arrow table, i.e. a JVM ``LocalRelation``:
+    its ``LocalTableScan`` runs in the JVM, so building the frame starts no
+    Python worker (a ``createDataFrame(list)`` frame is a Python RDD whose
+    every task starts one).  The scan splits the rows into at most
+    ``defaultParallelism`` tasks of consecutive rows, and an empty frame
+    has zero partitions, so actions over it start no task."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(ddl)
+    schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
+#: per-part completion markers (the resume unit) under manifest/parts
+PARTS_DDL = ("part_id int, n_chunks long, n_rows long, enc_bytes long,"
+             " raw_bytes long, status string, completed_at double")
+
+
 def _write_per_part(df, path: str) -> None:
     """Write manifest records partitioned by part_id with dynamic overwrite —
     re-running a partition replaces its records (idempotent lineage) instead
@@ -1344,7 +1376,9 @@ def _manifest_rollup(manifest_dir: str, pending: list[int],
     scheduling overhead.  Returns ``{part_id: {n_chunks, n_rows, enc_bytes,
     raw_bytes}}`` matching the Spark aggregation exactly (same double-sum
     then truncate for n_rows), or None when pyarrow cannot serve the store
-    (the caller falls back to the Spark job)."""
+    or reads no row of the wave (the caller falls back to the Spark job):
+    an empty view of the manifest just written is not a wave of 0-chunk
+    parts."""
     try:
         import pyarrow.dataset as ds
 
@@ -1356,6 +1390,8 @@ def _manifest_rollup(manifest_dir: str, pending: list[int],
                      "raw_bytes"],
             filter=ds.field("part_id").isin([int(p) for p in pending]),
         )
+        if t.num_rows == 0:
+            return None
         gb = t.group_by("part_id").aggregate([
             ("chunk_id", "count_distinct"), ("n_rows", "sum"),
             ("enc_bytes", "sum"), ("raw_bytes", "sum"),
@@ -1412,7 +1448,7 @@ def _commit_manifest(spark, out_dir: str, chunks_dir: str,
     # chunk rows (millions at 100 TB) — pinned by
     # tests/test_round4_fixes.py::test_commit_manifest_collects_only_part_ids
     by_pid = _manifest_rollup(manifest_dir, pending, n_phys)
-    if by_pid is None:  # pyarrow cannot serve the store: Spark fallback
+    if by_pid is None:  # pyarrow cannot serve or sees no row: Spark fallback
         agg_rows = (
             spark.read.parquet(manifest_dir)
             .where(F.col("part_id").isin(pending))
@@ -1440,22 +1476,25 @@ def _commit_manifest(spark, out_dir: str, chunks_dir: str,
             int(r["raw_bytes"] or 0) if r else 0,
             "complete", now,
         ))
-    parts = spark.createDataFrame(
-        rows,
-        "part_id int, n_chunks long, n_rows long, enc_bytes long,"
-        " raw_bytes long, status string, completed_at double",
-    )
-    _write_per_part(parts, os.path.join(out_dir, "manifest", "parts"))
+    _write_per_part(local_frame(spark, rows, PARTS_DDL),
+                    os.path.join(out_dir, "manifest", "parts"))
 
 
 def completed_part_ids(spark, out_dir: str) -> set[int]:
+    """part_ids with a completion marker under ``manifest/parts``.
+
+    A store with no marker yet (missing or marker-less directory) has none
+    complete.  Any other read error raises, naming the parts directory: an
+    empty answer would silently re-encode every part."""
     parts_dir = os.path.join(out_dir, "manifest", "parts")
-    if fsio.is_local(parts_dir) and not os.path.isdir(parts_dir):
+    if not _has_parquet(spark, parts_dir):
         return set()
     try:
         rows = spark.read.parquet(parts_dir).select("part_id").distinct().collect()
-    except Exception:
-        return set()
+    except Exception as e:
+        raise RuntimeError(
+            f"cannot read the parts markers under {parts_dir!r}: {e}"
+        ) from e
     return {r["part_id"] for r in rows}
 
 
@@ -1688,12 +1727,11 @@ def encode(
 
     if not _has_parquet(spark, chunks_dir):
         # zero rows pending (empty input): mark parts complete, no chunks
-        parts = spark.createDataFrame(
-            [(p, 0, 0, 0, 0, "complete", time.time()) for p in pending],
-            "part_id int, n_chunks long, n_rows long, enc_bytes long,"
-            " raw_bytes long, status string, completed_at double",
+        _write_per_part(
+            local_frame(spark, [(p, 0, 0, 0, 0, "complete", time.time())
+                                for p in pending], PARTS_DDL),
+            os.path.join(out_dir, "manifest", "parts"),
         )
-        _write_per_part(parts, os.path.join(out_dir, "manifest", "parts"))
         return {"n_partitions": n_total, "pending": len(pending),
                 "skipped": len(done), "chunk_bytes": chunk_bytes,
                 "wall_sec": time.time() - t0}

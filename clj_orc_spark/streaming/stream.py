@@ -84,9 +84,10 @@ def stream_decode(
     (``<checkpoint>/sources/0/<batch_id>``, written by the source when it
     plans the batch — driver-side metadata, no job; ``inputFiles()`` is
     empty inside foreachBatch because the batch DataFrame is an
-    ExistingRDD wrapper).  One task per chunk file, same as batch
-    ``decode()``; a ``groupBy(chunk_id).applyInArrow`` would reshuffle
-    every payload byte once per micro-batch.  The encoder writes
+    ExistingRDD wrapper).  The file list enters Spark as a driver-local
+    relation and feeds the same files decoder as batch ``decode()``; a
+    ``groupBy(chunk_id).applyInArrow`` would reshuffle every payload byte
+    once per micro-batch.  The encoder writes
     a chunk's column rows contiguously into one file and the file source
     assigns whole files to micro-batches, so per-file decode is complete.
     Output is partitioned by ``_batch_id`` and each batch overwrites its own
@@ -94,12 +95,14 @@ def stream_decode(
     """
     from ..pipeline import pafs
     from ..pipeline.decode import (
+        WORK_DDL,
         _physical_map,
         _select_ddl,
         decode_chunk_table,
         make_files_decoder,
         store_schema,
     )
+    from ..pipeline.encode import local_frame
 
     chunks_dir = os.path.join(out_dir, "chunks")
     static_schema = spark.read.parquet(chunks_dir).schema
@@ -130,12 +133,7 @@ def stream_decode(
         sess = batch_df.sparkSession
         files = _source_log_files(sess, checkpoint, batch_id)
         if files:
-            work = sess.createDataFrame(
-                sess.sparkContext.parallelize(
-                    [(f, None) for f in files], len(files)
-                ),
-                "path string, cids string",
-            )
+            work = local_frame(sess, [(f, None) for f in files], WORK_DDL)
             decoded = work.mapInArrow(decoder, ddl)
         else:
             if not batch_df.take(1):

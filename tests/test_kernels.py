@@ -177,6 +177,35 @@ def test_narrow_decode_path_roundtrips_extremes():
             assert np.array_equal(out, arr), (codec.name, str(arr.dtype))
 
 
+def test_zero_reference_residuals_are_read_only():
+    """The zero-reference fast paths return their input reinterpreted, not
+    a copy; a write to the result must raise instead of silently changing
+    the source array."""
+    from clj_orc_spark.kernels.base import (
+        as_unsigned_residuals,
+        from_unsigned_residuals,
+        narrow_residuals,
+    )
+
+    src = np.arange(8, dtype=np.int64)
+    views = [
+        as_unsigned_residuals(src, 0),
+        as_unsigned_residuals(src.view(np.uint64), 0),
+        narrow_residuals(src.astype(np.int32), 0),
+        narrow_residuals(src.astype(np.uint32), 0),
+        from_unsigned_residuals(src.astype(np.uint32), 0, "uint32"),
+        from_unsigned_residuals(src.astype(np.uint32), 0, "int32"),
+        from_unsigned_residuals(src.view(np.uint64), 0, "uint64"),
+    ]
+    for v in views:
+        with pytest.raises(ValueError, match="read-only"):
+            v[0] = 1
+    assert np.array_equal(src, np.arange(8))
+    # a nonzero reference allocates a fresh, writable result
+    assert as_unsigned_residuals(src, 3).flags.writeable
+    assert narrow_residuals(src.astype(np.int32), 3).flags.writeable
+
+
 def test_ranked_dict_wide_range_index_branch(monkeypatch):
     """The int64 index branch of ranked_value_counts (ranges beyond int32)
     must produce correct rank codes — forced via the testable threshold."""

@@ -17,7 +17,9 @@ def test_stream_decode_plan_has_no_exchange(spark, token_table_dir, tmp_dir):
     """VERDICT r4 item 8: each micro-batch must decode through the
     zero-shuffle files-mode kernel — no Exchange anywhere in the executed
     plan (the old groupBy(chunk_id).applyInArrow reshuffled every payload
-    byte once per micro-batch)."""
+    byte once per micro-batch) — and its file list must be a JVM-local
+    relation (LocalTableScan), not a Python RDD whose tasks each start a
+    Python worker."""
     from clj_orc_spark.streaming import stream_decode
 
     src = os.path.join(token_table_dir, "tokens.parquet")
@@ -33,6 +35,7 @@ def test_stream_decode_plan_has_no_exchange(spark, token_table_dir, tmp_dir):
     assert plans, "no micro-batch plans captured"
     for p in plans:
         assert "Exchange" not in p, p
+        assert "LocalTableScan" in p and "ExistingRDD" not in p, p
     # and the zero-shuffle path still produces bit-identical output
     v = verify_roundtrip(spark.read.parquet(src), spark.read.parquet(sink))
     assert v["bit_identical"] and v["total"] == 5_000, v
