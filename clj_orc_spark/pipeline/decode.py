@@ -854,8 +854,7 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     chunks_dir = os.path.join(out_dir, "chunks")
     from .encode import _has_parquet, local_frame
 
-    # an empty result is a zero-partition frame: actions over it start no
-    # task
+    # empty results are zero-partition frames: actions over them start no task
     if not _has_parquet(spark, chunks_dir):  # empty run wrote no chunks
         return local_frame(spark, [], ddl)
 
