@@ -745,15 +745,19 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
            isin: dict | None = None):
     """Distributed decode: chunk rows → source-table DataFrame.
 
-    The work list (one ``(path, cids)`` row per chunk file to read) enters
-    Spark as a driver-local relation, so its scan runs in the JVM; at most
-    ``defaultParallelism`` ``mapInArrow`` tasks each read a run of
-    consecutive files with pyarrow.  The encoder writes every chunk's
-    column rows contiguously into one file, so **no shuffle is needed at
-    all** — at 100 TB a groupBy(chunk_id) would reshuffle the entire
-    encoded dataset.  (pyarrow's parquet reader also measured ~1.5x faster
-    than the JVM scan on these payload-heavy rows.)  A decode that reads
-    no file returns a zero-partition frame.
+    One task per encoded chunk file, read with pyarrow inside
+    ``mapInArrow``.  The encoder writes every chunk's column rows
+    contiguously into one file, so **no shuffle is needed at all** — at
+    100 TB a groupBy(chunk_id) would reshuffle the entire encoded dataset.
+    (pyarrow's parquet reader also measured ~1.5x faster than the JVM scan
+    on these payload-heavy rows.)  A decode that reads no file returns a
+    zero-partition frame.
+
+    The work list stays a Python RDD, not a driver-local relation: Spark
+    sizes a ``LocalRelation`` from its rows (~50 B per path) and
+    ``mapInArrow`` inherits that estimate, so a join would broadcast the
+    whole decoded frame.  An RDD scan has Spark's default "unknown, huge"
+    size and is never broadcast.
 
     ``columns`` prunes the decode to the requested logical columns — the
     engine-format analog of parquet column pruning: unneeded payloads are
@@ -887,9 +891,11 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
                                       prune_cols,
                                       prefetch="://" in out_dir)
 
-    # the file paths travel as DATA — a closure over the full file list
-    # would ship every task a copy of all paths (millions at 100 TB)
-    work = local_frame(spark, work_rows, WORK_DDL)
+    # each task receives its OWN file path as data — a closure over the full
+    # file list would ship every task a copy of all paths (millions at 100 TB)
+    work = spark.createDataFrame(
+        spark.sparkContext.parallelize(work_rows, len(work_rows)), WORK_DDL
+    )
     return exact_filter(work.mapInArrow(decode_files, ddl))
 
 
@@ -938,9 +944,6 @@ class _Inline:
 def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
                        prefetch: bool = True):
     """mapInArrow kernel over ``(path, cids_json)`` rows → decoded batches.
-
-    A task decodes every file row it receives, one file after another, so
-    it serves any number of files per task.
 
     Round 5: row groups are read with a ONE-IN-FLIGHT background prefetch —
     while the codec kernels decode the chunks completed by group i, a

@@ -1312,12 +1312,19 @@ def _has_parquet(spark, path: str) -> bool:
 def local_frame(spark, rows: list[tuple], ddl: str):
     """DataFrame over rows the driver already holds, typed by ``ddl``.
 
-    The rows enter Spark as an Arrow table, i.e. a JVM ``LocalRelation``:
-    its ``LocalTableScan`` runs in the JVM, so building the frame starts no
-    Python worker (a ``createDataFrame(list)`` frame is a Python RDD whose
-    every task starts one).  The scan splits the rows into at most
-    ``defaultParallelism`` tasks of consecutive rows, and an empty frame
-    has zero partitions, so actions over it start no task."""
+    The rows enter Spark as an Arrow table, which the JVM decodes, so
+    scanning the frame starts no Python worker (a ``createDataFrame(list)``
+    frame is a Python RDD whose every task starts one).  Up to
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB of Arrow
+    data by default) the frame is a ``LocalRelation``: its
+    ``LocalTableScan`` splits the rows into at most ``defaultParallelism``
+    tasks of consecutive rows, and an empty frame has zero partitions, so
+    actions over it start no task.  Above the threshold Spark builds a
+    JVM RDD with one partition per Arrow batch instead.
+
+    Spark sizes a ``LocalRelation`` from its rows, and plans above it
+    inherit that estimate: use this only for frames that are written, or
+    are as small as their rows, never for a frame a caller may join."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
 
@@ -1488,9 +1495,9 @@ def completed_part_ids(spark, out_dir: str) -> set[int]:
     complete.  Any other read error raises, naming the parts directory: an
     empty answer would silently re-encode every part."""
     parts_dir = os.path.join(out_dir, "manifest", "parts")
-    if not _has_parquet(spark, parts_dir):
-        return set()
     try:
+        if not _has_parquet(spark, parts_dir):
+            return set()
         rows = spark.read.parquet(parts_dir).select("part_id").distinct().collect()
     except Exception as e:
         raise RuntimeError(

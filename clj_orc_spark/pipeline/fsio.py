@@ -56,24 +56,30 @@ def write_text(spark, path: str, text: str) -> None:
     out.close()
 
 
+def _raise_unless_missing(err: OSError) -> None:
+    if not isinstance(err, FileNotFoundError):
+        raise err
+
+
 def has_parquet(spark, path: str) -> bool:
     """True when any .parquet file exists under ``path`` (recursive; stops at
     the first hit — on an object store this is one bounded LIST, not a walk
-    of the whole prefix)."""
+    of the whole prefix).  A missing path holds none; any other listing
+    error (permission, network, credentials) raises, since callers read
+    False as "nothing written yet"."""
     if is_local(path):
-        for _, _, files in os.walk(path):
+        for _, _, files in os.walk(path, onerror=_raise_unless_missing):
             if any(f.endswith(".parquet") for f in files):
                 return True
         return False
-    try:
-        fs, jpath = _fs(spark, path)
-        it = fs.listFiles(jpath, True)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                return True
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
         return False
-    except Exception:  # missing prefix → no parquet
-        return False
+    it = fs.listFiles(jpath, True)
+    while it.hasNext():
+        if it.next().getPath().getName().endswith(".parquet"):
+            return True
+    return False
 
 
 def dir_bytes(spark, path: str) -> int:

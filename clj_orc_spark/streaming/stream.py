@@ -87,7 +87,11 @@ def stream_decode(
     ExistingRDD wrapper).  The file list enters Spark as a driver-local
     relation and feeds the same files decoder as batch ``decode()``; a
     ``groupBy(chunk_id).applyInArrow`` would reshuffle every payload byte
-    once per micro-batch.  The encoder writes
+    once per micro-batch.  (Batch ``decode()`` keeps a Python-RDD work list
+    because its result may be joined, and a local relation's tiny size
+    estimate would make Spark broadcast it; a micro-batch's decoded frame
+    is only written to the sink, so its estimate steers no join.)  The
+    encoder writes
     a chunk's column rows contiguously into one file and the file source
     assigns whole files to micro-batches, so per-file decode is complete.
     Output is partitioned by ``_batch_id`` and each batch overwrites its own

@@ -1,10 +1,12 @@
-"""Driver-held rows enter Spark as JVM-local relations.
+"""Driver-held rows enter Spark as JVM-local relations where that is safe.
 
-The parts markers of a commit and the decode work list are rows the driver
-already holds.  They must plan as a ``LocalTableScan`` (the scan runs in the
-JVM) and never as a ``Scan ExistingRDD`` over a Python RDD, whose every task
-starts a Python worker.  Also pinned here: empty decode results start no
-task, the commit rollup never mistakes an empty pyarrow view for zero
+The parts markers of a commit are rows the driver already holds and only
+writes.  They must plan as a ``LocalTableScan`` (the scan runs in the JVM)
+and never as a ``Scan ExistingRDD`` over a Python RDD, whose every task
+starts a Python worker.  The decode work list stays a Python RDD: Spark
+sizes a local relation from its rows, so a decoded frame built on one
+would be broadcast in joins.  Also pinned here: empty decode results start
+no task, the commit rollup never mistakes an empty pyarrow view for zero
 chunks, and the resume reader fails loudly on an unreadable parts marker.
 """
 
@@ -19,8 +21,12 @@ import pyarrow.fs as pyfs
 import pyarrow.parquet as pq
 import pytest
 
-from clj_orc_spark.pipeline import decode, encode, pafs
-from clj_orc_spark.pipeline.encode import PARTS_DDL, completed_part_ids
+from clj_orc_spark.pipeline import decode, encode, fsio, pafs
+from clj_orc_spark.pipeline.encode import (
+    PARTS_DDL,
+    completed_part_ids,
+    local_frame,
+)
 from clj_orc_spark.plans.explain import explain_str
 
 # the package re-exports the encode() function under the module's name
@@ -87,22 +93,58 @@ def test_parts_marker_frame_plans_local_scan(spark, source, tmp_path,
     assert completed_part_ids(spark, out) == {0, 1}
 
 
-def test_decode_work_frame_plans_local_scan(spark, source, store):
-    """Unpredicated and pruned decodes plan their work list as a
-    LocalTableScan; with more files than cores one task reads several
-    files, and the result is still the whole source."""
-    assert len(_chunk_files(store)) > spark.sparkContext.defaultParallelism
+def _nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def _broadcasts_map_in_arrow(df) -> bool:
+    """True when the physical plan broadcasts a join side that runs a
+    ``mapInArrow`` — the decoded side of a join with a decode() frame."""
+    for node in _nodes(df._jdf.queryExecution().sparkPlan()):
+        if node.nodeName().startswith("Broadcast"):
+            side = 0 if "Left" in node.buildSide().toString() else 1
+            build = node.children().apply(side)
+            if any("MapInArrow" in n.nodeName() for n in _nodes(build)):
+                return True
+    return False
+
+
+def _size_in_bytes(df) -> int:
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(stats.sizeInBytes())
+
+
+def test_decoded_frame_is_never_broadcast(spark, source, store):
+    """A decode() frame carries Spark's default "unknown, huge" size, so
+    joining it with a small table never broadcasts the decoded payloads;
+    its work list keeps one task per chunk file, and the result is still
+    the whole source."""
+    threshold = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    other = spark.range(10 * N)  # well below the broadcast threshold
+
+    # control: a mapInArrow over a local relation IS sized from its rows
+    small = local_frame(spark, [(i,) for i in range(10)], "id long") \
+        .mapInArrow(lambda batches: batches, "id long")
+    assert _size_in_bytes(small) < threshold
+    assert _broadcasts_map_in_arrow(other.join(small, "id", "left"))
+
     full = decode(spark, store)
-    _assert_local_scan(full)
-    assert full.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    pruned = decode(spark, store, ranges={"id": (0, 49)})
+    for df in (full, pruned):
+        assert _size_in_bytes(df) > threshold
+        assert not _broadcasts_map_in_arrow(df.join(other, "id"))
+        assert not _broadcasts_map_in_arrow(other.join(df, "id", "left"))
+
+    assert full.rdd.getNumPartitions() == len(_chunk_files(store))
     got = sorted((r["id"], r["name"], list(r["vals"])) for r in full.collect())
     src = pq.read_table(source)
     assert got == list(zip(src.column("id").to_pylist(),
                            src.column("name").to_pylist(),
                            src.column("vals").to_pylist()))
-
-    pruned = decode(spark, store, ranges={"id": (0, 49)})
-    _assert_local_scan(pruned)
     assert sorted(r["id"] for r in pruned.select("id").collect()) == list(
         range(50))
 
@@ -159,8 +201,32 @@ def test_empty_pyarrow_view_rollup_reads_through_spark(spark, source, store,
 
 def test_completed_part_ids_missing_dir_is_empty(spark, tmp_path):
     assert completed_part_ids(spark, str(tmp_path / "no-store")) == set()
+    assert completed_part_ids(spark, "file://" + str(tmp_path / "no-store")) \
+        == set()
     os.makedirs(tmp_path / "bare" / "manifest" / "parts")
     assert completed_part_ids(spark, str(tmp_path / "bare")) == set()
+    assert completed_part_ids(spark, "file://" + str(tmp_path / "bare")) \
+        == set()
+
+
+def test_completed_part_ids_remote_listing_error_raises(spark, tmp_path,
+                                                        monkeypatch):
+    """On a scheme-qualified store a listing error other than a missing
+    path (permission, network, credentials) raises, naming the parts
+    directory, instead of reading as "nothing complete"."""
+
+    class DeniedFS:
+        def exists(self, path):
+            return True
+
+        def listFiles(self, path, recursive):
+            raise OSError("Permission denied")
+
+    monkeypatch.setattr(fsio, "_fs", lambda spark, path: (DeniedFS(), path))
+    out = "file://" + str(tmp_path / "store")
+    with pytest.raises(RuntimeError, match="parts markers under") as err:
+        completed_part_ids(spark, out)
+    assert os.path.join(out, "manifest", "parts") in str(err.value)
 
 
 def test_completed_part_ids_corrupt_marker_raises(spark, source, tmp_path):
