@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import functools
 import json
+import re
 from typing import NamedTuple
 
 import numpy as np
@@ -941,6 +942,13 @@ class _Inline:
         pass
 
 
+def _part_label(path: str) -> str:
+    """``part_id=P`` of a chunk file path (``part_id=?`` when the path
+    carries no hive part directory)."""
+    m = re.search(r"part_id=(\d+)", path)
+    return m.group(0) if m else "part_id=?"
+
+
 def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
                        prefetch: bool = True):
     """mapInArrow kernel over ``(path, cids_json)`` rows → decoded batches.
@@ -958,10 +966,64 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
     machinery entirely: one whole-file read + per-chunk grouping, the
     cheapest plan when there is nothing to skip and nothing to overlap."""
 
+    def decode_file(path, cids, pool):
+        import pyarrow.parquet as pq
+
+        # manifest-recorded URIs may be scheme-qualified (object store) —
+        # resolve per path; plain local paths hit LocalFileSystem
+        fs, p = pafs.resolve(path)
+        if not prefetch and cids is None and not prune_cols:
+            tbl = pq.read_table(p, filesystem=fs)
+            for cid in np.unique(tbl.column("chunk_id").to_numpy()):
+                group = tbl.filter(pc.equal(tbl.column("chunk_id"), cid))
+                yield from decode_chunk_table(group, columns, schema).to_batches()
+            return
+        pf = pq.ParquetFile(p, filesystem=fs)
+        keep = _rg_keep(pf.metadata, cids, needed_cols, prune_cols)
+        if not keep:
+            return
+
+        def _filtered(g):
+            t = pf.read_row_group(g)
+            if cids is not None:
+                t = t.filter(pc.is_in(
+                    t.column("chunk_id"),
+                    value_set=pa.array(sorted(cids), type=pa.int64()),
+                ))
+            if prune_cols:
+                t = t.filter(pc.is_in(
+                    t.column("col"),
+                    value_set=pa.array(needed_cols, type=pa.string()),
+                ))
+            return t
+
+        fut = pool.submit(_filtered, keep[0])
+        carry = None
+        for j in range(len(keep)):
+            tbl = fut.result()
+            fut = (
+                pool.submit(_filtered, keep[j + 1])
+                if j + 1 < len(keep) else None
+            )
+            if carry is not None:
+                tbl = pa.concat_tables([carry, tbl])
+            if tbl.num_rows == 0:
+                carry = None
+                continue
+            ids = tbl.column("chunk_id").to_numpy()
+            last = ids[-1]
+            if fut is not None:
+                done_mask = ids != last
+                carry = tbl.filter(pc.equal(tbl.column("chunk_id"), last))
+                tbl = tbl.filter(pa.array(done_mask))
+            else:
+                carry = None
+            for cid in np.unique(tbl.column("chunk_id").to_numpy()):
+                group = tbl.filter(pc.equal(tbl.column("chunk_id"), cid))
+                yield from decode_chunk_table(group, columns, schema).to_batches()
+
     def decode_files(batches):
         from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow.parquet as pq
 
         pafs.clamp_arrow_threads()
         pool = ThreadPoolExecutor(max_workers=1) if prefetch else _Inline()
@@ -974,74 +1036,14 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
                         set(json.loads(cids_json))
                         if cids_json is not None else None
                     )
-                    # manifest-recorded URIs may be scheme-qualified (object
-                    # store) — resolve per path; plain local paths hit
-                    # LocalFileSystem, same as before
-                    fs, p = pafs.resolve(path)
-                    if not prefetch and cids is None and not prune_cols:
-                        tbl = pq.read_table(p, filesystem=fs)
-                        for cid in np.unique(
-                            tbl.column("chunk_id").to_numpy()
-                        ):
-                            group = tbl.filter(
-                                pc.equal(tbl.column("chunk_id"), cid)
-                            )
-                            yield from decode_chunk_table(
-                                group, columns, schema
-                            ).to_batches()
-                        continue
-                    pf = pq.ParquetFile(p, filesystem=fs)
-                    keep = _rg_keep(pf.metadata, cids, needed_cols, prune_cols)
-                    if not keep:
-                        continue
-
-                    def _filtered(g):
-                        t = pf.read_row_group(g)
-                        if cids is not None:
-                            t = t.filter(pc.is_in(
-                                t.column("chunk_id"),
-                                value_set=pa.array(
-                                    sorted(cids), type=pa.int64()),
-                            ))
-                        if prune_cols:
-                            t = t.filter(pc.is_in(
-                                t.column("col"),
-                                value_set=pa.array(
-                                    needed_cols, type=pa.string()),
-                            ))
-                        return t
-
-                    fut = pool.submit(_filtered, keep[0])
-                    carry = None
-                    for j in range(len(keep)):
-                        tbl = fut.result()
-                        fut = (
-                            pool.submit(_filtered, keep[j + 1])
-                            if j + 1 < len(keep) else None
-                        )
-                        if carry is not None:
-                            tbl = pa.concat_tables([carry, tbl])
-                        if tbl.num_rows == 0:
-                            carry = None
-                            continue
-                        ids = tbl.column("chunk_id").to_numpy()
-                        last = ids[-1]
-                        if fut is not None:
-                            done_mask = ids != last
-                            carry = tbl.filter(pc.equal(
-                                tbl.column("chunk_id"), last))
-                            tbl = tbl.filter(pa.array(done_mask))
-                        else:
-                            carry = None
-                        for cid in np.unique(
-                            tbl.column("chunk_id").to_numpy()
-                        ):
-                            group = tbl.filter(
-                                pc.equal(tbl.column("chunk_id"), cid)
-                            )
-                            yield from decode_chunk_table(
-                                group, columns, schema
-                            ).to_batches()
+                    try:
+                        yield from decode_file(path, cids, pool)
+                    except (OSError, pa.ArrowException) as e:
+                        # a CRC mismatch or an unreadable file names the
+                        # chunk file and its part, not just a chunk_id
+                        raise IOError(
+                            f"chunk file {path} ({_part_label(path)}): {e}"
+                        ) from e
         finally:
             pool.shutdown(wait=False)
 

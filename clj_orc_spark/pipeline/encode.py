@@ -28,10 +28,22 @@ scan feeding the salted n_tok-quantile repartition (skew.py) — serves
 
 Layout under ``out_dir``::
 
-    chunks/part_id=N/*.parquet    encoded payload rows (one row per chunk×column)
+    chunks/part_id=N/part-NNNNN-<run_id>.parquet
+                                  encoded payload rows (one row per
+                                  chunk×column), one file per part
     manifest/chunks/*.parquet     chunk records (everything but the payload)
     manifest/parts/*.parquet      partition completion markers (resume unit)
     run_meta.json                 run metadata (stream-metadata analog)
+
+Commit protocol (one Spark job per encode, the per-file records of Delta
+Lake's writers): the encode task writes its part's chunk file with pyarrow
+under a ``.``-prefixed temp name, renames it into place, deletes every
+other entry of the part's directory, and only then yields the part's
+manifest records (:func:`write_chunk_files`).  The job writes those records
+to ``manifest/chunks``; the driver rolls them up with pyarrow and writes the
+parts markers with pyarrow, starting no job (:func:`_commit_manifest`).  A
+crash after a rename and before the markers leaves a part without a marker,
+and its resume rewrites the part's file and records.
 """
 
 from __future__ import annotations
@@ -40,12 +52,14 @@ import heapq
 import json
 import os
 import time
+import uuid
 import warnings
 from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyarrow.fs import FileSelector, FileType
 
 from ..kernels import StringCol, crc32
 from ..selector import encode_column
@@ -85,6 +99,22 @@ OUT_DDL = (
     "payload binary, n_rows int, raw_bytes long, enc_bytes long, crc long, "
     "selection string, stats string, part_id int"
 )
+
+#: columns of a chunk file: the encoder's rows minus the hive partition column
+CHUNK_FILE_SCHEMA = OUT_SCHEMA.remove(OUT_SCHEMA.get_field_index("part_id"))
+
+#: one manifest record per chunk column: the chunk row without its payload,
+#: plus the URI of the chunk file holding it
+MANIFEST_SCHEMA = OUT_SCHEMA.remove(
+    OUT_SCHEMA.get_field_index("payload")
+).append(pa.field("file", pa.string()))
+MANIFEST_DDL = OUT_DDL.replace("payload binary, ", "") + ", file string"
+
+#: row-group target of a chunk file: chunk rows are opaque pre-packed
+#: payloads, so a larger group buys nothing, and ~4 payload rows per group
+#: give the pruned decode's chunk_id filters real row-group skipping
+#: (decode ``_rg_keep``)
+CHUNK_BLOCK_BYTES = 16 << 20
 
 #: physical columns of one encoded chunk; ``offsets`` is the int64 index that
 #: flattens ``tokens`` (list layout = `src/orc/col.clj:114-116`)
@@ -1184,6 +1214,145 @@ def make_rowgroup_encoder(chunk_bytes: int, fs=None, policy: str = "size",
     return run
 
 
+def _temp_path(part_dir: str, name: str) -> str:
+    """Attempt-unique temp name for ``name`` in ``part_dir``: ``.``-prefixed
+    and not ending in ``.parquet``, so file sources, ``pyarrow.dataset``,
+    ``fsio.has_parquet`` and decode's directory walk never see a
+    half-written file."""
+    return f"{part_dir}/.{name}.{uuid.uuid4().hex[:12]}.tmp"
+
+
+def _publish(fs, temp: str, path: str) -> None:
+    """Rename ``temp`` to ``path``, then delete every other entry of its
+    directory: older files and the temps of killed attempts.  One writer
+    owns a part directory, so this is the per-part dynamic overwrite that
+    resume and task retry rely on."""
+    fs.move(temp, path)
+    for info in fs.get_file_info(FileSelector(path.rsplit("/", 1)[0])):
+        if info.path == path:
+            continue
+        if info.type == FileType.Directory:
+            fs.delete_dir(info.path)
+        else:
+            fs.delete_file(info.path)
+
+
+#: chunk-file columns worth dictionaries and footer statistics: every one
+#: but the payload, whose multi-MB values would only be hashed and dropped
+_SMALL_COLS = [f.name for f in CHUNK_FILE_SCHEMA if f.name != "payload"]
+
+
+class _ChunkFile:
+    """One part's chunk file while its encode task writes it.
+
+    Rows buffer into row groups of ~:data:`CHUNK_BLOCK_BYTES`, uncompressed
+    (payloads are already kernel-encoded), in a :func:`_temp_path` file.
+    The manifest rows wait until :meth:`commit` has published the file."""
+
+    def __init__(self, fs, chunks_dir: str, chunks_uri: str, pid: int,
+                 run_id: str):
+        import pyarrow.parquet as pq
+
+        name = f"part-{pid:05d}-{run_id}.parquet"
+        self.fs = fs
+        self.dir = f"{chunks_dir}/part_id={pid}"
+        self.path = f"{self.dir}/{name}"
+        self.temp = _temp_path(self.dir, name)
+        self.uri = f"{chunks_uri}/part_id={pid}/{name}"
+        self.rows: list[pa.RecordBatch] = []
+        self.nbytes = 0
+        self.manifest: list[pa.RecordBatch] = []
+        fs.create_dir(self.dir, recursive=True)
+        self.writer = pq.ParquetWriter(
+            self.temp, CHUNK_FILE_SCHEMA, filesystem=fs, compression="none",
+            use_dictionary=_SMALL_COLS, write_statistics=_SMALL_COLS,
+        )
+
+    def add(self, batch: pa.RecordBatch) -> None:
+        n = batch.num_rows
+        self.manifest.append(pa.RecordBatch.from_arrays(
+            [batch.column(f.name) for f in MANIFEST_SCHEMA if f.name != "file"]
+            + [pa.array([self.uri] * n, type=pa.string())],
+            schema=MANIFEST_SCHEMA,
+        ))
+        self.rows.append(pa.RecordBatch.from_arrays(
+            [batch.column(f.name) for f in CHUNK_FILE_SCHEMA],
+            schema=CHUNK_FILE_SCHEMA,
+        ))
+        self.nbytes += batch.nbytes
+        if self.nbytes >= CHUNK_BLOCK_BYTES:
+            self._flush()
+
+    def _flush(self) -> None:
+        if self.rows:  # one write_table = one row group
+            self.writer.write_table(pa.Table.from_batches(self.rows))
+            self.rows, self.nbytes = [], 0
+
+    def commit(self) -> list[pa.RecordBatch]:
+        self._flush()
+        self.writer.close()
+        _publish(self.fs, self.temp, self.path)
+        return self.manifest
+
+    def abort(self) -> None:
+        """Best-effort removal of the temp file of a failed attempt (a
+        killed attempt's temp is removed by the next commit instead)."""
+        try:
+            self.writer.close()
+        except (OSError, pa.ArrowException):
+            pass
+        try:
+            self.fs.delete_file(self.temp)
+        except (OSError, pa.ArrowException):
+            pass
+
+
+def write_chunk_files(encoder, out_dir: str):
+    """Wrap a ``mapInArrow`` encoder (:func:`make_rowgroup_encoder`,
+    :func:`make_encoder`) so its task writes the chunk files itself and
+    yields manifest rows (:data:`MANIFEST_DDL`) instead of chunk rows.
+
+    Each batch an encoder yields is one chunk of one part.  Every part the
+    task sees gets one :class:`_ChunkFile` named
+    ``out_dir/chunks/part_id=P/part-PPPPP-<run_id>.parquet``; ``run_id`` is
+    drawn here, once per encode, so a retried or speculative attempt lands
+    on the same name.  The manifest rows are yielded only after every file
+    of the task is renamed into place: a recorded ``file`` always exists.
+    ``file`` is the URI form Spark's ``input_file_name()`` gives
+    (``file:///abs/...`` for a local store, made absolute here because
+    tasks need not share the driver's working directory).  The tasks
+    resolve the chunks directory with pyarrow, as decode resolves the
+    recorded URIs."""
+    chunks_dir = os.path.join(out_dir, "chunks")
+    chunks_uri = chunks_dir
+    if fsio.is_local(chunks_dir):
+        chunks_dir = os.path.abspath(chunks_dir)
+        chunks_uri = "file://" + chunks_dir
+    run_id = uuid.uuid4().hex
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        fs, root = pafs.resolve(chunks_dir)
+        files: dict[int, _ChunkFile] = {}
+        committed = None
+        try:
+            for batch in encoder(batches):
+                if not batch.num_rows:
+                    continue
+                pid = int(batch.column("part_id")[0].as_py())
+                if pid not in files:
+                    files[pid] = _ChunkFile(fs, root, chunks_uri, pid, run_id)
+                files[pid].add(batch)
+            committed = [f.commit() for f in files.values()]
+        finally:
+            if committed is None:
+                for f in files.values():
+                    f.abort()
+        for manifest in committed:
+            yield from manifest
+
+    return run
+
+
 def _read_input_df(spark, input_path: str, fmt: str):
     """JVM DataFrame scan of the input location, format-aware (Spark reads
     ORC natively — the reference's format, `src/orc/read.clj`)."""
@@ -1289,15 +1458,24 @@ def _load_or_compute_rowgroup_plan(spark, out_dir: str, files: list[str],
         schema = _schema_from_files(files, fs)
         if schema is None:
             # plan= hook with input_path=None: derive from the first unit's
-            # own path (Iceberg units carry their URIs); default otherwise
+            # own path (Iceberg units carry their URIs).  Only a plan with
+            # no unit takes the default; an unreadable unit raises before
+            # plan.json would pin a schema the data does not have
             try:
                 first = next(
                     u[0] for part in plan.get("parts", []) for u in part
                 )
-                ufs, upath = pafs.resolve(first, fs)
-                schema = _schema_from_files([upath], ufs)
-            except Exception:
+            except StopIteration:
                 schema = [list(t) for t in DEFAULT_SCHEMA]
+            else:
+                try:
+                    ufs, upath = pafs.resolve(first, fs)
+                    schema = _schema_from_files([upath], ufs)
+                except (OSError, pa.ArrowException) as e:
+                    raise ValueError(
+                        f"cannot derive the store schema from plan unit "
+                        f"{first!r}: {e}"
+                    ) from e
         plan["schema"] = [list(t) for t in schema]
     if sort_by:
         plan["sort_by"] = list(sort_by)
@@ -1324,7 +1502,11 @@ def local_frame(spark, rows: list[tuple], ddl: str):
 
     Spark sizes a ``LocalRelation`` from its rows, and plans above it
     inherit that estimate: use this only for frames that are written, or
-    are as small as their rows, never for a frame a caller may join."""
+    are as small as their rows, never for a frame a caller may join.  It
+    builds the stream decode work list and the empty decode results; rows
+    that only need to land in a file, such as the parts markers, are
+    written with pyarrow instead (:func:`_write_parts_markers`), which
+    starts no job at all."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
 
@@ -1341,12 +1523,20 @@ def local_frame(spark, rows: list[tuple], ddl: str):
 #: per-part completion markers (the resume unit) under manifest/parts
 PARTS_DDL = ("part_id int, n_chunks long, n_rows long, enc_bytes long,"
              " raw_bytes long, status string, completed_at double")
+#: the columns of a marker file (``part_id`` is its hive directory)
+PARTS_SCHEMA = pa.schema([
+    ("n_chunks", pa.int64()), ("n_rows", pa.int64()),
+    ("enc_bytes", pa.int64()), ("raw_bytes", pa.int64()),
+    ("status", pa.string()), ("completed_at", pa.float64()),
+])
 
 
 def _write_per_part(df, path: str) -> None:
     """Write manifest records partitioned by part_id with dynamic overwrite —
     re-running a partition replaces its records (idempotent lineage) instead
-    of appending duplicates."""
+    of appending duplicates.  The overwrite mode is set on the writer, not
+    the session: a caller-owned session in static mode would otherwise wipe
+    the records of completed partitions on resume."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -1355,25 +1545,41 @@ def _write_per_part(df, path: str) -> None:
     )
 
 
-def _write_chunks(encoded, chunks_dir: str) -> None:
-    """THE chunk writer — batch and streaming encode must stay byte-layout
-    identical, so every writer option lives here once.
+def _write_parts_markers(out_dir: str, rows: list[tuple]) -> None:
+    """Write the parts markers (:data:`PARTS_SCHEMA` rows) with pyarrow on
+    the driver: a few rows per wave, so a Spark job here is pure scheduling
+    overhead.  Each part gets one marker file that replaces its directory's
+    entries (:func:`_publish`), the per-part overwrite of
+    :func:`_write_per_part`; until the rename a part keeps its old marker.
+    The markers count towards the store size, so the one-row files are
+    written lean: no Arrow schema blob (~0.5 KB), no dictionary pages, no
+    compression."""
+    import pyarrow.parquet as pq
 
-    * writer-level dynamic overwrite (NOT session conf): a caller-owned
-      session without the conf would static-overwrite and silently destroy
-      completed partitions on resume;
-    * 16 MB parquet blocks: chunk rows are opaque pre-packed payloads — a
-      128 MB block buys nothing, and N concurrent writers x 128 MB buffers
-      OOM a default-1g spark-submit driver (found by verify surface 4);
-      ~4 payload rows per row group also gives the pruned decode's
-      chunk_id filters real row-group skipping."""
-    (
-        encoded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("parquet.block.size", str(16 << 20))
-        .partitionBy("part_id")
-        .parquet(chunks_dir)
-    )
+    parts_dir = os.path.join(out_dir, "manifest", "parts")
+    if fsio.is_local(parts_dir):
+        parts_dir = os.path.abspath(parts_dir)
+    fs, root = pafs.resolve(parts_dir)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+
+    def write(row: tuple) -> None:
+        table = pa.Table.from_arrays(
+            [pa.array([v], type=f.type) for v, f in zip(row[1:], PARTS_SCHEMA)],
+            schema=PARTS_SCHEMA,
+        )
+        part_dir = f"{root}/part_id={int(row[0])}"
+        fs.create_dir(part_dir, recursive=True)
+        temp = _temp_path(part_dir, name)
+        pq.write_table(table, temp, filesystem=fs, compression="none",
+                       use_dictionary=False, store_schema=False)
+        _publish(fs, temp, f"{part_dir}/{name}")
+
+    # a few latency-bound requests per marker on an object store: thousands
+    # of parts would be minutes of driver time serially
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max(1, min(16, len(rows)))) as pool:
+        list(pool.map(write, rows))
 
 
 def _manifest_rollup(manifest_dir: str, pending: list[int],
@@ -1420,42 +1626,33 @@ def _manifest_rollup(manifest_dir: str, pending: list[int],
         return None
 
 
-def _commit_manifest(spark, out_dir: str, chunks_dir: str,
-                     pending: list[int], n_phys: int = len(CHUNK_COLS)) -> None:
-    """Manifest commit for a wave of partitions: chunk records (payload
-    pruned — parquet column pruning makes this read cheap, and ``file``
-    records each chunk's physical path so decode/resume never need a
-    filesystem walk) + per-partition completion markers.  Both are written
-    with per-part_id dynamic overwrite, never blind append: a crash between
-    the two writes leaves chunk records for an incomplete part, and the
-    resumed run *replaces* them instead of appending duplicates that would
-    double-count size rollups.  The parts rollup reads the manifest just
-    written (KBs), not a second chunks-dir scan — at 100 TB that second
-    scan is a full metadata pass."""
+def _commit_manifest(spark, out_dir: str, manifest, pending: list[int],
+                     n_phys: int = len(CHUNK_COLS)) -> None:
+    """Manifest commit for a wave of partitions.
+
+    ``manifest`` is the encode frame of :func:`write_chunk_files`: its
+    tasks write the chunk files and yield the chunk records (payload
+    dropped, ``file`` = the chunk file's URI, so decode and resume never
+    need a filesystem walk).  Writing those records to ``manifest/chunks``
+    is the encode's one Spark job.  The driver then rolls the wave up from
+    the records just written (KBs, with pyarrow; a Spark aggregation only
+    when pyarrow cannot serve the store) and writes the per-part completion
+    markers with pyarrow.  Records and markers are both written with
+    per-part_id overwrite, never blind append: a crash between the two
+    writes leaves records for a part without a marker, and the resumed run
+    *replaces* them instead of appending duplicates that would
+    double-count size rollups."""
     from pyspark.sql import functions as F
 
-    # explicit schema, never inference: a store half-encoded by an older
-    # release may mix chunk schemas (pre-stats files) and sampling one old
-    # footer would silently drop newer columns — and mergeSchema would sweep
-    # EVERY footer (10^6 files at scale).  Missing columns read as null.
-    written = (
-        spark.read.schema(OUT_DDL).parquet(chunks_dir)
-        .where(F.col("part_id").isin(pending))
-    )
-    manifest = written.drop("payload").withColumn("file", F.input_file_name())
     manifest_dir = os.path.join(out_dir, "manifest", "chunks")
     _write_per_part(manifest, manifest_dir)
-    # ONE aggregation job: collect the per-part rollup (bounded by the
-    # PARTITION count — thousands — never chunk rows) and write the parts
-    # markers from a driver-local frame.  The previous shape ran the same
-    # manifest read + groupBy TWICE (once for the part_id collect, once
-    # re-executed lazily by the write) — a whole redundant Spark job per
-    # encode wave.
-    # SCALE GUARD: this is the encode pipeline's only driver-side collect of
-    # job output, and it must stay bounded by the PARTITION count, never
-    # chunk rows (millions at 100 TB) — pinned by
+    # SCALE GUARD: the rollup is the encode pipeline's only driver-side
+    # collect of job output, and it must stay bounded by the PARTITION
+    # count, never chunk rows (millions at 100 TB) — pinned by
     # tests/test_round4_fixes.py::test_commit_manifest_collects_only_part_ids
-    by_pid = _manifest_rollup(manifest_dir, pending, n_phys)
+    by_pid = {}
+    if _has_parquet(spark, manifest_dir):
+        by_pid = _manifest_rollup(manifest_dir, pending, n_phys)
     if by_pid is None:  # pyarrow cannot serve or sees no row: Spark fallback
         agg_rows = (
             spark.read.parquet(manifest_dir)
@@ -1484,8 +1681,7 @@ def _commit_manifest(spark, out_dir: str, chunks_dir: str,
             int(r["raw_bytes"] or 0) if r else 0,
             "complete", now,
         ))
-    _write_per_part(local_frame(spark, rows, PARTS_DDL),
-                    os.path.join(out_dir, "manifest", "parts"))
+    _write_parts_markers(out_dir, rows)
 
 
 def completed_part_ids(spark, out_dir: str) -> set[int]:
@@ -1713,10 +1909,9 @@ def encode(
                 "wall_sec": 0.0}
 
     if mode == "rowgroup":
-        encoded = rowgroup_work_df(spark, plan["parts"], pending).mapInArrow(
-            make_rowgroup_encoder(chunk_bytes, fs, selection, schema,
-                                  sort_by=eff_sort), OUT_DDL
-        )
+        work = rowgroup_work_df(spark, plan["parts"], pending)
+        encoder = make_rowgroup_encoder(chunk_bytes, fs, selection, schema,
+                                        sort_by=eff_sort)
     else:
         if df is None:
             df = _read_input_df(spark, input_path, fmt)
@@ -1729,22 +1924,10 @@ def encode(
             # the per-part chunk splitter; zone-map clustering happens on
             # the trailing keys — still zero extra shuffles
             work = work.sortWithinPartitions("part_id", *eff_sort)
-        encoded = work.mapInArrow(make_encoder(chunk_bytes, selection), OUT_DDL)
-    chunks_dir = os.path.join(out_dir, "chunks")
-    _write_chunks(encoded, chunks_dir)
-
-    if not _has_parquet(spark, chunks_dir):
-        # zero rows pending (empty input): mark parts complete, no chunks
-        _write_per_part(
-            local_frame(spark, [(p, 0, 0, 0, 0, "complete", time.time())
-                                for p in pending], PARTS_DDL),
-            os.path.join(out_dir, "manifest", "parts"),
-        )
-        return {"n_partitions": n_total, "pending": len(pending),
-                "skipped": len(done), "chunk_bytes": chunk_bytes,
-                "wall_sec": time.time() - t0}
-
-    _commit_manifest(spark, out_dir, chunks_dir, pending,
+        encoder = make_encoder(chunk_bytes, selection)
+    manifest = work.mapInArrow(write_chunk_files(encoder, out_dir),
+                               MANIFEST_DDL)
+    _commit_manifest(spark, out_dir, manifest, pending,
                      n_phys=len(physical_cols(schema)))
 
     wall = time.time() - t0

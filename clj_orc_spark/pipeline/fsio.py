@@ -1,7 +1,8 @@
 """Filesystem-agnostic sidecar I/O via the JVM Hadoop FileSystem.
 
-The chunk/manifest datasets already go through Spark's readers/writers, which
-speak any configured filesystem (s3a://, gs://, hdfs://, file://).  What used
+The manifest records go through Spark's writer, which speaks any configured
+filesystem (s3a://, gs://, hdfs://, file://); chunk files and parts markers
+are written with pyarrow (pafs.py).  What used
 to break on an object store was the engine's OWN small-file I/O — plan.json,
 run_meta.json, "does this directory hold parquet yet" probes — all plain
 POSIX calls.  These helpers route scheme-qualified paths through the Hadoop

@@ -1,9 +1,11 @@
 """pyarrow.fs resolution for the zero-shuffle scan paths.
 
 The rowgroup encode mode plans from parquet footers and reads row groups with
-pyarrow inside ``mapInArrow`` — both need a *Python-side* filesystem, unlike
-the chunk/manifest datasets (Spark's JVM writers) and the tiny sidecar files
-(fsio.py → Hadoop FS).  This module maps any input location onto a
+pyarrow inside ``mapInArrow`` — both need a *Python-side* filesystem, as do
+the encode tasks writing their chunk files, the driver writing the parts
+markers and the decode tasks reading chunk files; the manifest records go
+through Spark's JVM writer and the tiny sidecar files through fsio.py
+(Hadoop FS).  This module maps any input location onto a
 ``pyarrow.fs.FileSystem`` so the fast path engages on object stores, not just
 local disk — the reference's headline remote flow is S3A
 (`/root/reference/src/orc/read.clj:27-49`, `README.md:87-107`):

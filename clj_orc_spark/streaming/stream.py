@@ -11,7 +11,8 @@ equivalents:
   `src/orc/read.clj:16`); ordering = ``chunk_id`` (the ``{:i n}`` payload
   index analog, `src/orc/read.clj:94`).  Chunk atomicity: a chunk's five
   column rows are always written inside one parquet file by the encoder task,
-  and the file-source assigns whole files to micro-batches.
+  the file appears by a rename from a ``.``-prefixed temp name the file
+  source ignores, and the file-source assigns whole files to micro-batches.
 * :func:`windowed_event_counts` — event-time tumbling-window aggregation with
   a watermark for late data: the standard streaming-analytics surface the
   reference lacks entirely (SURVEY.md §2.3).
@@ -191,20 +192,22 @@ def stream_encode(
     Each micro-batch salts rows across ``parts_per_batch`` partitions inside
     a batch-scoped part_id namespace (``batch_id * K + xxhash64(doc_id) % K``)
     — deterministic given batch content, so a replayed batch (foreachBatch
-    at-least-once) rewrites the SAME partitions via dynamic partition
-    overwrite instead of duplicating them: the streaming analog of the batch
-    pipeline's per-partition lineage.  Output layout, manifest, decode and
-    verify are identical to the batch path.
+    at-least-once) rewrites the SAME partitions instead of duplicating
+    them: its encode tasks replace each part's chunk file and the commit
+    overwrites each part's records, the streaming analog of the batch
+    pipeline's per-partition lineage.  Each micro-batch runs the batch
+    encode's writer and commit (one Spark job), so output layout, manifest,
+    decode and verify are identical to the batch path.
     """
     import json
 
     from ..pipeline import fsio
     from ..pipeline.encode import (
         DEFAULT_CHUNK_BYTES,
-        OUT_DDL,
+        MANIFEST_DDL,
         _commit_manifest,
-        _write_chunks,
         make_encoder,
+        write_chunk_files,
     )
 
     cb = chunk_bytes or DEFAULT_CHUNK_BYTES
@@ -224,7 +227,6 @@ def stream_encode(
     else:
         k = parts_per_batch or spark.sparkContext.defaultParallelism
         fsio.write_text(spark, meta_path, json.dumps({"parts_per_batch": k}))
-    chunks_dir = os.path.join(out_dir, "chunks")
     # the landing dir's schema is the token-table contract — never inferred
     # (inference crashes on the EMPTY landing dir a fresh ingest starts with)
     stream = (
@@ -245,13 +247,13 @@ def stream_encode(
                 + F.pmod(F.xxhash64(F.col("doc_id")), F.lit(k))
             ).cast("int"),
         )
-        encoded = work.repartition(k, "part_id").mapInArrow(
-            make_encoder(cb, selection), OUT_DDL
+        # a replay draws a new run_id: its files replace the batch's parts
+        manifest = work.repartition(k, "part_id").mapInArrow(
+            write_chunk_files(make_encoder(cb, selection), out_dir),
+            MANIFEST_DDL,
         )
-        _write_chunks(encoded, chunks_dir)
-        spark_session = batch_df.sparkSession
         pending = list(range(int(batch_id) * k, int(batch_id) * k + k))
-        _commit_manifest(spark_session, out_dir, chunks_dir, pending)
+        _commit_manifest(batch_df.sparkSession, out_dir, manifest, pending)
 
     writer = stream.writeStream.foreachBatch(handle_batch).option(
         "checkpointLocation", os.path.join(out_dir, "_checkpoint")

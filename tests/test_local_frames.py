@@ -1,13 +1,12 @@
-"""Driver-held rows enter Spark as JVM-local relations where that is safe.
+"""Driver-held rows never cost a Spark job or a Python worker needlessly.
 
-The parts markers of a commit are rows the driver already holds and only
-writes.  They must plan as a ``LocalTableScan`` (the scan runs in the JVM)
-and never as a ``Scan ExistingRDD`` over a Python RDD, whose every task
-starts a Python worker.  The decode work list stays a Python RDD: Spark
-sizes a local relation from its rows, so a decoded frame built on one
-would be broadcast in joins.  Also pinned here: empty decode results start
-no task, the commit rollup never mistakes an empty pyarrow view for zero
-chunks, and the resume reader fails loudly on an unreadable parts marker.
+An encode runs one Spark job: the parts markers of its commit are rows the
+driver already holds and only writes, so the driver writes them with
+pyarrow.  The decode work list stays a Python RDD: Spark sizes a local
+relation from its rows, so a decoded frame built on one would be broadcast
+in joins.  Also pinned here: empty decode results start no task, the commit
+rollup never mistakes an empty pyarrow view for zero chunks, and the resume
+reader fails loudly on an unreadable parts marker.
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ from clj_orc_spark.pipeline.encode import (
     completed_part_ids,
     local_frame,
 )
-from clj_orc_spark.plans.explain import explain_str
 
 # the package re-exports the encode() function under the module's name
 encode_mod = importlib.import_module("clj_orc_spark.pipeline.encode")
@@ -59,37 +57,31 @@ def store(spark, source, tmp_path_factory):
     return out
 
 
-def _assert_local_scan(df) -> None:
-    plan = explain_str(df, "formatted")
-    assert "LocalTableScan" in plan, plan
-    assert "Scan ExistingRDD" not in plan, plan
-
-
 def _chunk_files(out: str) -> list[str]:
     return [os.path.join(r, f)
             for r, _, fs in os.walk(os.path.join(out, "chunks"))
             for f in fs if f.endswith(".parquet")]
 
 
-def test_parts_marker_frame_plans_local_scan(spark, source, tmp_path,
-                                             monkeypatch):
-    """The commit's parts markers are written from a LocalTableScan frame
-    with the marker schema unchanged."""
-    written = []
-    real = encode_mod._write_per_part
-
-    def spy(df, path):
-        written.append((df, path))
-        real(df, path)
-
-    monkeypatch.setattr(encode_mod, "_write_per_part", spy)
+def test_one_encode_starts_one_spark_job(spark, source, tmp_path):
+    """An encode runs exactly one Spark job: its tasks write the chunk
+    files and yield the manifest records, which the job writes.  The
+    rollup and the parts markers happen on the driver with pyarrow, and the
+    markers read back through Spark with the marker schema unchanged."""
+    sc = spark.sparkContext
+    group = "one-job-encode"
     out = str(tmp_path / "store")
-    encode(spark, source, out, n_partitions=2, chunk_bytes=2 << 10)
-    parts = [df for df, path in written
-             if path == os.path.join(out, "manifest", "parts")]
-    assert len(parts) == 1
-    _assert_local_scan(parts[0])
-    assert parts[0].schema == spark.createDataFrame([], PARTS_DDL).schema
+    sc.setJobGroup(group, "one encode")
+    try:
+        encode(spark, source, out, n_partitions=2, chunk_bytes=2 << 10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    parts = spark.read.parquet(os.path.join(out, "manifest", "parts"))
+    want = spark.createDataFrame([], PARTS_DDL).schema
+    assert sorted((f.name, f.dataType) for f in parts.schema) == sorted(
+        (f.name, f.dataType) for f in want)
     assert completed_part_ids(spark, out) == {0, 1}
 
 
@@ -175,7 +167,7 @@ def test_empty_pyarrow_view_rollup_reads_through_spark(spark, source, store,
     real = pafs.resolve
 
     def resolve(path, filesystem=None):
-        if os.path.join("store", "manifest") in path:
+        if os.path.join("store", "manifest", "chunks") in path:
             return pyfs.LocalFileSystem(), empty
         return real(path, filesystem)
 

@@ -130,12 +130,16 @@ def test_degradation_is_recorded_not_silent(
 
     enc_mod = importlib.import_module("clj_orc_spark.pipeline.encode")
 
-    def broken_resolve(path, filesystem=None):
-        raise OSError("scheme not supported in sandbox")
-
-    monkeypatch.setattr(enc_mod.pafs, "resolve", broken_resolve)
     src = os.path.join(token_table_dir, "tokens.parquet")
     out = os.path.join(tmp_dir, "enc")
+    real_resolve = enc_mod.pafs.resolve
+
+    def broken_resolve(path, filesystem=None):
+        if path == src:  # only the input is unservable, not the store
+            raise OSError("scheme not supported in sandbox")
+        return real_resolve(path, filesystem)
+
+    monkeypatch.setattr(enc_mod.pafs, "resolve", broken_resolve)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         rep = encode(spark, src, out, n_partitions=4)

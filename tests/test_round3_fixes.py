@@ -251,10 +251,13 @@ def test_degraded_store_resume_warns_when_fast_scan_recovers(
     out = os.path.join(tmp_dir, "enc")
 
     real_resolve = enc_mod.pafs.resolve
-    monkeypatch.setattr(
-        enc_mod.pafs, "resolve",
-        lambda *a, **k: (_ for _ in ()).throw(OSError("store down")),
-    )
+
+    def down_resolve(path, filesystem=None):
+        if path == src:  # only the input store is down, not out_dir
+            raise OSError("store down")
+        return real_resolve(path, filesystem)
+
+    monkeypatch.setattr(enc_mod.pafs, "resolve", down_resolve)
     rep = encode(spark, src, out, n_partitions=2, limit_parts=1)
     assert "degraded_reason" in rep and rep["scan"] == "jvm"
     monkeypatch.setattr(enc_mod.pafs, "resolve", real_resolve)
