@@ -355,7 +355,7 @@ def extract_features(
 def media_partition_plan(df: DataFrame, bytes_per_task: int = 256 << 20) -> DataFrame:
     """Partition media rows by (kind, size-bucket) so one task never holds a
     pathological mix of 4 GB videos — same explicit-skew philosophy as the
-    token-table encode plan (pipeline/skew.py)."""
+    token-table encode plan (pipeline/encode.py:_rowgroup_plan)."""
     size = F.octet_length("payload")
     bucket = F.floor(F.log2(F.greatest(size, F.lit(1)))).cast("int")
     return df.withColumn("size_bucket", bucket).repartition(

@@ -2,7 +2,6 @@
 
 from .decode import decode, decode_plan_report  # noqa: F401
 from .encode import encode  # noqa: F401
-from .skew import partition_balance_report, plan_partitions  # noqa: F401
 from .verify import (  # noqa: F401
     encoded_size_bytes,
     size_gate,

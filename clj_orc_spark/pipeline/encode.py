@@ -18,13 +18,14 @@ Everything stays columnar: Arrow record batches in, numpy kernels, Arrow out —
 no per-row Python anywhere (the reference's per-cell dispatch,
 `src/orc/core.clj:34-43`, is the anti-pattern this engine exists to fix).
 
-Physical strategy (round 2): the default "rowgroup" mode plans ``part_id``
-from parquet footers (byte-balanced LPT bins of row groups) and fuses scan +
-chunk + encode into ONE ``mapInArrow`` stage — ZERO shuffles, so at 100 TB
-the token bytes go parquet → Arrow → kernels → chunk write and the only
-cluster-shared resource is the object store.  The "jvm" mode — a Catalyst
-scan feeding the salted n_tok-quantile repartition (skew.py) — serves
-``df=`` inputs and locations pyarrow cannot reach.
+Physical strategy: ``part_id`` is planned from parquet/ORC footers
+(byte-balanced LPT bins of row groups) and scan + chunk + encode fuse into
+ONE ``mapInArrow`` stage — ZERO shuffles, so at 100 TB the token bytes go
+parquet → Arrow → kernels → chunk write and the only cluster-shared
+resource is the object store.  It is the engine's only encode path: a
+``df=`` frame is first written once to ``_staging/`` and planned like any
+input, and ``stream_encode`` plans each micro-batch from the files its
+source log names.
 
 Layout under ``out_dir``::
 
@@ -33,7 +34,9 @@ Layout under ``out_dir``::
                                   chunk×column), one file per part
     manifest/chunks/*.parquet     chunk records (everything but the payload)
     manifest/parts/*.parquet      partition completion markers (resume unit)
+    plan.json                     the part → row-group plan and schema
     run_meta.json                 run metadata (stream-metadata analog)
+    _staging/*.parquet            a ``df=`` input, written once by Spark
 
 Commit protocol (one Spark job per encode, the per-file records of Delta
 Lake's writers): the encode task writes its part's chunk file with pyarrow
@@ -64,7 +67,6 @@ from pyarrow.fs import FileSelector, FileType
 from ..kernels import StringCol, crc32
 from ..selector import encode_column
 from . import fsio, pafs
-from .skew import apply_plan, compute_plan
 
 #: raw token bytes per chunk (the reference's byte-limit analog).  Round 4:
 #: 8 MB → 32 MB after a sweep (8/16/32/64/128 MB at sf0.1): each 2× fewer
@@ -747,149 +749,46 @@ def _encode_chunk_rows(tbl: pa.Table, part_id: int, seq: int,
     return rows
 
 
-def _iter_part_slices(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[tuple[int, pa.RecordBatch]]:
-    """Split incoming batches at part_id boundaries (input is sorted by
-    part_id within the Spark partition, so boundaries are contiguous)."""
-    for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        part_ids = np.asarray(batch.column(batch.schema.get_field_index("part_id")))
-        cuts = np.flatnonzero(np.diff(part_ids) != 0) + 1
-        edges = np.concatenate([[0], cuts, [batch.num_rows]])
-        for lo, hi in zip(edges[:-1], edges[1:]):
-            yield int(part_ids[lo]), batch.slice(lo, hi - lo)
-
-
-def make_encoder(chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-                 policy: str = "size"):
-    """Build the mapInArrow function: batches → encoded chunk rows.
-
-    Accumulates batches until the raw token-byte budget is hit, then flushes a
-    chunk — the reference's byte-limited governor (`src/orc/json.clj:87-91`).
-    Buffers are kept **per part_id** (a task may receive several part_ids when
-    the hash repartition collides), so no within-partition sort is needed —
-    the sort cost a third of the shuffle wall time and bought nothing.
-    Chunks never span a part_id (the resume/lineage unit).
-    """
-
-    def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pafs.clamp_arrow_threads()
-        bufs: dict[int, list[pa.RecordBatch]] = {}
-        buf_bytes: dict[int, int] = {}
-        seqs: dict[int, int] = {}
-        caches: dict[int, dict] = {}
-
-        def flush(part_id: int) -> Iterator[pa.RecordBatch]:
-            buf = bufs.get(part_id)
-            if not buf:
-                return
-            tbl = pa.Table.from_batches(buf)
-            rows = _encode_chunk_rows(
-                tbl, part_id, seqs.get(part_id, 0),
-                caches.setdefault(part_id, {}), policy,
-            )
-            seqs[part_id] = seqs.get(part_id, 0) + 1
-            bufs[part_id], buf_bytes[part_id] = [], 0
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(rows[f.name], type=f.type) for f in OUT_SCHEMA],
-                schema=OUT_SCHEMA,
-            )
-
-        for part_id, batch in _iter_part_slices(batches):
-            # split oversized slices on the token-byte budget
-            n_tok = np.asarray(batch.column(batch.schema.get_field_index("n_tok")))
-            tok_bytes = n_tok.astype(np.int64) * 4
-            lo = 0
-            while lo < batch.num_rows:
-                csum = np.cumsum(tok_bytes[lo:])
-                room = chunk_bytes - buf_bytes.get(part_id, 0)
-                hi = lo + max(1, int(np.searchsorted(csum, room, side="right")))
-                hi = min(hi, batch.num_rows)
-                bufs.setdefault(part_id, []).append(batch.slice(lo, hi - lo))
-                buf_bytes[part_id] = buf_bytes.get(part_id, 0) + int(
-                    tok_bytes[lo:hi].sum()
-                )
-                if buf_bytes[part_id] >= chunk_bytes:
-                    yield from flush(part_id)
-                lo = hi
-        for part_id in list(bufs):
-            yield from flush(part_id)
-
-    return encode_partition
-
-
 def _pyarrow_source(
-    input_path: str | None, filesystem=None
-) -> tuple[object | None, list[str] | None, str, str | None]:
-    """``(pyarrow_fs, files, fmt, degraded_reason)`` for an input location.
+    input_path: str, filesystem=None
+) -> tuple[object, list[str], str, int]:
+    """``(pyarrow_fs, files, fmt, nbytes)`` for an input location.
 
-    The fused-scan fast path engages whenever pyarrow can serve the location
-    — local paths, ``file://``/``s3://``/``s3a://``/``gs://``/``hdfs://``
-    URIs (pafs.resolve), or an explicit ``filesystem=`` object.  ``fmt`` is
-    ``"parquet"`` or ``"orc"`` (the reference's own on-disk format — parity
-    with its S3A ORC flow, `/root/reference/src/orc/read.clj:27-49`); a
-    location holding BOTH takes the parquet files and WARNS — fixture dirs
-    keep an ORC reference copy next to the parquet data (datagen's
-    ``with_orc_reference``), and silently raising here would reject inputs
-    every prior round accepted.  Returns ``(None, None, fmt, reason)`` when
-    pyarrow can't serve it
-    (unknown scheme, unreachable store, no parquet/orc files): the caller
-    falls back to the JVM scan and RECORDS the reason — at 100 TB a silent
-    fallback moves every token byte through a shuffle the operator never
-    asked for."""
-    if input_path is None:
-        return None, None, "parquet", None
+    pyarrow serves local paths, ``file://``/``s3://``/``s3a://``/``gs://``/
+    ``hdfs://`` URIs (pafs.resolve) and an explicit ``filesystem=`` object,
+    all with one recursive listing.  ``fmt`` is ``"parquet"`` or ``"orc"``
+    (the reference's own on-disk format — parity with its S3A ORC flow,
+    `src/orc/read.clj:27-49`); ``nbytes`` sums the sizes of
+    ``files``.  A location holding BOTH formats takes the parquet files and
+    WARNS — fixture dirs keep an ORC reference copy next to the parquet data
+    (datagen's ``with_orc_reference``).  A location pyarrow cannot serve,
+    or one with no parquet/ORC file, raises a ``ValueError`` pointing at
+    ``df=``: Spark can read it, and encode stages the frame."""
+    hint = (f"read it with Spark and pass df=spark.read.parquet({input_path!r})"
+            f" (or .orc) to encode the staged frame")
     try:
         fs, path = pafs.resolve(input_path, filesystem)
-        files = pafs.list_parquet(fs, path)
-        orc_files = pafs.list_orc(fs, path)
-    except Exception as e:
-        return None, None, "parquet", (
-            f"pyarrow.fs cannot serve {input_path!r}: {e}")
-    if files and orc_files:
-        import warnings
-
+        infos = pafs.file_infos(fs, path)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(
+            f"pyarrow cannot serve input_path {input_path!r} ({e}); {hint}"
+        ) from e
+    parquet = [i for i in infos if i.path.endswith(".parquet")]
+    orc = [i for i in infos if i.path.endswith(".orc")]
+    if parquet and orc:
         warnings.warn(
             f"{input_path!r} holds both .parquet and .orc files; encoding "
-            f"the {len(files)} parquet file(s) and ignoring the "
-            f"{len(orc_files)} .orc file(s) — pass the format's "
+            f"the {len(parquet)} parquet file(s) and ignoring the "
+            f"{len(orc)} .orc file(s) — pass the format's "
             "subdirectory to encode the ORC copy instead"
         )
-        return fs, files, "parquet", None
-    if orc_files:
-        return fs, orc_files, "orc", None
-    if not files:
-        return None, None, "parquet", (
-            f"no .parquet or .orc files under {input_path!r}")
-    return fs, files, "parquet", None
-
-
-def _jvm_fmt_sniff(spark, path: str, default: str = "parquet") -> str:
-    """Input format for the DEGRADED path (pyarrow cannot serve the store,
-    so the pyarrow listing never ran): ask the JVM Hadoop FS — it CAN reach
-    the store, or the JVM scan wouldn't work either.  Without this,
-    scan="jvm" over an ORC location pyarrow can't reach would run
-    spark.read.parquet and fail with an unrelated schema error."""
-    try:
-        if path.endswith(".orc"):
-            return "orc"
-        from . import fsio
-
-        fs, jpath = fsio._fs(spark, path)
-        it = fs.listFiles(jpath, True)
-        for _ in range(1000):  # bounded: one format decides it
-            if not it.hasNext():
-                break
-            name = it.next().getPath().getName()
-            if name.endswith(".orc"):
-                return "orc"
-            if name.endswith(".parquet"):
-                return "parquet"
-    except Exception:
-        pass
-    return default
+    chosen, fmt = (parquet, "parquet") if parquet or not orc else (orc, "orc")
+    if not chosen:
+        raise ValueError(
+            f"no .parquet or .orc files under input_path {input_path!r}; "
+            f"{hint}")
+    return (fs, [i.path for i in chosen], fmt,
+            sum(int(i.size or 0) for i in chosen))
 
 
 def _lpt_pack(units: list[tuple], n_bins: int) -> list[list]:
@@ -913,7 +812,7 @@ def _rowgroup_plan(files: list[str], n_partitions: int,
     parquet row groups, so scan + encode run in ONE ``mapInArrow`` stage
     with no repartition — at 100 TB the token bytes never touch the shuffle.
 
-    Skew control happens here instead of the salted repartition: units are
+    Skew control happens here, from footers alone: units are
     (file, row_group, row_lo, row_hi) weighted by the footer's uncompressed
     byte size and LPT-packed into ``min(n_partitions, n_units)`` bins, so no
     task receives a pathological long-sequence hot partition (footer
@@ -1001,8 +900,11 @@ def _rowgroup_plan(files: list[str], n_partitions: int,
     return {"mode": "rowgroup", "n_total": n_bins, "parts": bins}
 
 
-def rowgroup_work_df(spark, parts: list[list[list]], pending: list[int]):
-    """One row per pending partition: ``(pid, units_json)``.
+def rowgroup_work_df(spark, parts, pending: list[int]):
+    """One row per pending partition: ``(pid, units_json)``, the units of
+    ``parts[pid]`` — a plan's list of parts, or a mapping from part id to
+    units when the ids do not start at 0 (a micro-batch's,
+    :func:`~clj_orc_spark.streaming.stream.stream_encode`).
 
     Each task's row-group assignment travels as DATA, not as a function
     closure — a closure over the full plan would ship EVERY task a pickled
@@ -1109,10 +1011,9 @@ def make_rowgroup_encoder(chunk_bytes: int, fs=None, policy: str = "size",
     Each task owns one ``part_id`` (a planned bin of row groups): it reads
     its row groups with pyarrow, feeds them straight into the byte-budget
     chunk encoder, and emits encoded chunk rows — zero shuffle, zero
-    JVM-row materialization of token bytes.  This is the 100 TB default
-    (measured: the salted-repartition path moves every token byte through
-    shuffle write+read, which caps single-box scaling and is network-bound
-    on a real cluster).
+    JVM-row materialization of token bytes.  It is the only encode path:
+    ``df=`` frames are staged to parquet first and streams plan from their
+    source log, so no token byte ever crosses a shuffle.
 
     ``fs`` is the planner's pyarrow filesystem, shipped in the closure
     (pyarrow filesystems pickle); ``fs=None`` re-resolves per file path —
@@ -1142,7 +1043,7 @@ def make_rowgroup_encoder(chunk_bytes: int, fs=None, policy: str = "size",
                     for h in handles.values():
                         try:
                             h.close()
-                        except Exception:
+                        except (OSError, pa.ArrowException):
                             pass
 
     def encode_units(pid, units, handles, seq, sel_cache):
@@ -1308,9 +1209,9 @@ class _ChunkFile:
 
 
 def write_chunk_files(encoder, out_dir: str):
-    """Wrap a ``mapInArrow`` encoder (:func:`make_rowgroup_encoder`,
-    :func:`make_encoder`) so its task writes the chunk files itself and
-    yields manifest rows (:data:`MANIFEST_DDL`) instead of chunk rows.
+    """Wrap a ``mapInArrow`` encoder (:func:`make_rowgroup_encoder`) so its
+    task writes the chunk files itself and yields manifest rows
+    (:data:`MANIFEST_DDL`) instead of chunk rows.
 
     Each batch an encoder yields is one chunk of one part.  Every part the
     task sees gets one :class:`_ChunkFile` named
@@ -1353,74 +1254,6 @@ def write_chunk_files(encoder, out_dir: str):
     return run
 
 
-def _read_input_df(spark, input_path: str, fmt: str):
-    """JVM DataFrame scan of the input location, format-aware (Spark reads
-    ORC natively — the reference's format, `src/orc/read.clj`)."""
-    return (spark.read.orc(input_path) if fmt == "orc"
-            else spark.read.parquet(input_path))
-
-
-def _default_n_partitions(spark, df, input_path: str | None, fs=None) -> int:
-    if input_path is not None:
-        try:
-            rfs, path = pafs.resolve(input_path, fs)
-            total = pafs.total_bytes(rfs, path)
-        except Exception:
-            total = 0
-        if total:
-            # parquet is ~2x lighter than raw token bytes on this data
-            return max(1, int(total * 2 // TARGET_PART_BYTES))
-    return spark.sparkContext.defaultParallelism * 2
-
-
-def _input_row_count(files: list[str] | None, fs=None) -> int | None:
-    """Row count from parquet/ORC footers — no Spark job."""
-    if not files:
-        return None
-
-    def count(f: str) -> int:
-        if f.endswith(".orc"):
-            h = pafs.open_orc(f, fs)
-            try:
-                return int(h.nrows)
-            finally:
-                h.close()
-        import pyarrow.parquet as pq
-
-        return pq.read_metadata(f, filesystem=fs).num_rows
-
-    try:
-        if len(files) > 4:  # latency-bound metadata GETs: fetch concurrently
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(min(16, len(files))) as pool:
-                return sum(pool.map(count, files)) or None
-        return sum(count(f) for f in files) or None
-    except Exception:
-        return None
-
-
-def _load_or_compute_plan(spark, df, out_dir: str, n_partitions: int,
-                          files: list[str] | None, fs=None,
-                          degraded_from: str | None = None,
-                          sort_by: list[str] | None = None) -> dict:
-    """Plan once, persist, reuse — resumed runs must assign identical
-    part_ids or per-partition lineage is meaningless.  ``degraded_from``
-    records that this plan exists only because the zero-shuffle scan was
-    unavailable at plan time — the record makes the pinning inspectable (a transient store error would otherwise lock the
-    store onto the full-shuffle path with no trace)."""
-    plan_path = os.path.join(out_dir, "plan.json")
-    if fsio.exists(spark, plan_path):
-        return json.loads(fsio.read_text(spark, plan_path))
-    plan = compute_plan(df, n_partitions, total_rows=_input_row_count(files, fs))
-    if sort_by:
-        plan["sort_by"] = list(sort_by)
-    if degraded_from:
-        plan["degraded_from"] = degraded_from
-    fsio.write_text(spark, plan_path, json.dumps(plan))
-    return plan
-
-
 def _schema_from_files(files: list[str] | None, fs=None):
     """Derive the schema descriptor from the first input file's footer
     (plan-time; schemas are homogeneous across a dataset's files)."""
@@ -1437,30 +1270,84 @@ def _schema_from_files(files: list[str] | None, fs=None):
     return derive_schema(pq.read_schema(files[0], filesystem=fs))
 
 
-def _load_or_compute_rowgroup_plan(spark, out_dir: str, files: list[str],
-                                   n_partitions: int, explicit: bool,
-                                   fs=None, plan: dict | None = None,
+def _default_n_partitions(spark, nbytes: int) -> int:
+    """Parts for ``nbytes`` of input files: one per
+    :data:`TARGET_PART_BYTES` of raw data (parquet is ~2x lighter than raw
+    token bytes on this data), and since a part is a task, never fewer
+    than two per core even when the byte count under-splits a small
+    input."""
+    return max(int(nbytes * 2 // TARGET_PART_BYTES),
+               spark.sparkContext.defaultParallelism * 2)
+
+
+def _stage(df, out_dir: str) -> str:
+    """Write a ``df=`` frame once to ``out_dir/_staging`` as parquet and
+    return that location: the rowgroup planner reads footers, and Spark's
+    writer reaches every location Spark can read.  The staged files stay
+    for the store's life, so a resume re-reads them without ``df``."""
+    path = os.path.join(out_dir, "_staging")
+    if fsio.is_local(path):
+        path = os.path.abspath(path)  # tasks need not share the cwd
+    df.write.mode("overwrite").parquet(path)
+    return path
+
+
+def _load_or_compute_rowgroup_plan(spark, out_dir: str, input_path, df,
+                                   n_partitions: int | None, filesystem=None,
+                                   plan: dict | None = None,
                                    sort_by: list[str] | None = None) -> dict:
-    """Rowgroup-mode twin of :func:`_load_or_compute_plan` — the persisted
-    plan IS the part→row-group assignment, so a resume re-encodes exactly
-    the pending bins regardless of file-listing order or bin-packing ties.
-    A caller-supplied ``plan`` (e.g. the Iceberg-manifest planner,
-    sources/iceberg_plan.py) is persisted the same way.  The plan also
-    pins the SCHEMA descriptor: decode and resumed encodes read it from
-    plan.json, so a store's layout never depends on what happens to be at
-    input_path later."""
+    """The store's plan: ``out_dir/plan.json`` when it exists, else planned
+    once and persisted.  The persisted plan IS the part→row-group
+    assignment, so a resume re-encodes exactly the pending bins regardless
+    of file-listing order or bin-packing ties, and needs neither ``df`` nor
+    ``input_path``.
+
+    A new plan comes from a caller-supplied ``plan`` (e.g. the
+    Iceberg-manifest planner, sources/iceberg_plan.py), or from the footers
+    of ``input_path``'s files, or of ``df`` staged by :func:`_stage`.  It
+    pins the SCHEMA descriptor, so a store's layout never depends on what
+    happens to be at input_path later, and records the planned location as
+    ``input`` (unless an explicit ``filesystem`` served it) so a resume
+    re-resolves the filesystem its fs-native paths belong to."""
     plan_path = os.path.join(out_dir, "plan.json")
     if fsio.exists(spark, plan_path):
-        return json.loads(fsio.read_text(spark, plan_path))
+        persisted = json.loads(fsio.read_text(spark, plan_path))
+        if persisted.get("mode") != "rowgroup":
+            raise ValueError(
+                f"{plan_path!r} holds a "
+                f"{persisted.get('mode', 'jvm')!r}-mode plan from a release "
+                "whose scan no longer exists; re-encode into a fresh out_dir"
+            )
+        if df is not None:
+            raise ValueError(
+                f"{out_dir!r} already holds a plan.json; resume it with "
+                "encode(spark, out_dir=...) — its input was staged or "
+                "planned when the store was created"
+            )
+        return persisted
+    files = fs = None
+    if plan is None and df is None and input_path is None:
+        raise ValueError(
+            f"{out_dir!r} holds no plan.json to resume; pass input_path=, "
+            "df= or plan= to start the store"
+        )
     if plan is None:
+        if df is not None:  # staged next to the store, not on filesystem
+            input_path, filesystem = _stage(df, out_dir), None
+        fs, files, _, nbytes = _pyarrow_source(input_path, filesystem)
+        explicit = n_partitions is not None
+        if not explicit:
+            n_partitions = _default_n_partitions(spark, nbytes)
         plan = _rowgroup_plan(files, n_partitions, explicit, fs)
+        if filesystem is None:
+            plan["input"] = input_path
     if "schema" not in plan:
         schema = _schema_from_files(files, fs)
         if schema is None:
-            # plan= hook with input_path=None: derive from the first unit's
-            # own path (Iceberg units carry their URIs).  Only a plan with
-            # no unit takes the default; an unreadable unit raises before
-            # plan.json would pin a schema the data does not have
+            # plan= hook: derive from the first unit's own path (Iceberg
+            # units carry their URIs).  Only a plan with no unit takes the
+            # default; an unreadable unit raises before plan.json would pin
+            # a schema the data does not have
             try:
                 first = next(
                     u[0] for part in plan.get("parts", []) for u in part
@@ -1469,7 +1356,7 @@ def _load_or_compute_rowgroup_plan(spark, out_dir: str, files: list[str],
                 schema = [list(t) for t in DEFAULT_SCHEMA]
             else:
                 try:
-                    ufs, upath = pafs.resolve(first, fs)
+                    ufs, upath = pafs.resolve(first, filesystem)
                     schema = _schema_from_files([upath], ufs)
                 except (OSError, pa.ArrowException) as e:
                     raise ValueError(
@@ -1711,7 +1598,6 @@ def encode(
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
     resume: bool = True,
     limit_parts: int | None = None,
-    scan: str = "auto",
     filesystem=None,
     plan: dict | None = None,
     selection: str = "size",
@@ -1719,112 +1605,63 @@ def encode(
 ) -> dict:
     """Run the encode job; resumable via the parts manifest.
 
+    One path: ZERO-SHUFFLE scan+encode in one ``mapInArrow`` stage whose
+    part_id is a footer-planned, byte-balanced bin of row groups
+    (:func:`_rowgroup_plan`) — token bytes go parquet/ORC → Arrow →
+    kernels → chunk write, never through a shuffle.  The plan is loaded
+    from ``out_dir/plan.json`` when it exists, so a resume needs only
+    ``encode(spark, out_dir=...)``; otherwise it is computed from one of:
+
+    * ``input_path``: parquet or ORC files pyarrow can serve (local or
+      object store, pafs.resolve).  A location pyarrow cannot serve raises
+      a ``ValueError`` suggesting ``df=spark.read.parquet(path)``.
+    * ``df``: any DataFrame of supported column kinds.  Spark writes it
+      once to ``out_dir/_staging/`` as parquet and the plan covers those
+      files, so the store decodes to what Spark's parquet writer kept
+      (e.g. an INT96 ``TIMESTAMP`` decodes as ``TIMESTAMP_NTZ``).
+    * ``plan``: a precomputed rowgroup plan dict (``{"mode": "rowgroup",
+      "n_total": N, "parts": [[[path, rg, lo, hi], ...], ...]}``) — the
+      hook the Iceberg-manifest planner uses (sources/iceberg_plan.py),
+      whose units carry their own path URIs (resolved per task).
+
     ``limit_parts`` encodes only the first K pending partitions — used by the
     resume tests to simulate a killed run (SURVEY.md §5 engine-test 5).
 
     ``filesystem``: an explicit ``pyarrow.fs.FileSystem`` serving
-    ``input_path`` (e.g. a credential-configured ``S3FileSystem``); by
-    default the filesystem is resolved from the path's scheme (pafs.resolve
-    — local, ``file://``, ``s3://``/``s3a://``, ``gs://``, ``hdfs://``).
-    A resume must pass the same filesystem/input_path: the persisted plan's
-    file paths are fs-native.
-
-    ``plan``: a precomputed rowgroup plan dict (``{"mode": "rowgroup",
-    "n_total": N, "parts": [[[path, rg, lo, hi], ...], ...]}``) — the hook
-    the Iceberg-manifest planner uses (sources/iceberg_plan.py), whose units
-    carry their own path URIs (resolved per task).  Ignored when out_dir
-    already holds a persisted plan.
-
-    ``scan`` picks the physical strategy (recorded in plan.json and pinned on
-    resume — each mode assigns part_id differently, and per-partition lineage
-    is only sound if a resume reproduces the assignment exactly):
-
-    * "auto" (default) → "rowgroup" whenever pyarrow can serve ``input_path``
-      (local or object store), else "jvm" — and the degradation is recorded
-      in the report/run_meta, never silent.
-    * "rowgroup": ZERO-SHUFFLE scan+encode in one ``mapInArrow`` stage;
-      part_id = a footer-planned, byte-balanced bin of row groups
-      (:func:`_rowgroup_plan`).  The 100 TB shape: token bytes go parquet →
-      Arrow → kernels → chunk write, never through a shuffle.
-    * "jvm": Catalyst DataFrame scan + the n_tok-quantile salted
-      repartition (skew.py) — always used for ``df=`` inputs and
-      filesystems pyarrow cannot serve.
+    ``input_path`` or the ``plan=`` units (e.g. a credential-configured
+    ``S3FileSystem``); by default the filesystem is resolved from the path's
+    scheme (pafs.resolve — local, ``file://``, ``s3://``/``s3a://``,
+    ``gs://``, ``hdfs://``).  A resume of a store planned with an explicit
+    filesystem must pass it again: the persisted plan's file paths are
+    fs-native.
     """
-    from pyspark.sql import functions as F
-
     assert out_dir, "out_dir required"
     if selection not in ("size", "speed"):
         raise ValueError(f"unknown selection policy {selection!r}")
-    if scan not in ("auto", "rowgroup", "jvm"):
-        # a typo'd mode must never silently run (and pin) a different path
-        raise ValueError(f"unknown scan mode {scan!r}")
     if df is not None and input_path is not None:
         raise ValueError(
             "pass input_path OR df, not both — a transformed df would be "
             "silently ignored whenever input_path is directly readable"
         )
-    if plan is not None and (df is not None or scan not in ("auto", "rowgroup")):
-        raise ValueError("plan= is a rowgroup-mode hook; incompatible with "
-                         f"df= and scan={scan!r}")
-    explicit_parts = n_partitions is not None
-    user_plan = plan  # caller-supplied plan (vs the persisted one loaded below)
+    if plan is not None and df is not None:
+        raise ValueError("plan= names the files to encode; incompatible "
+                         "with df=")
     if isinstance(sort_by, str):
         sort_by = [sort_by]
     sort_by = list(sort_by) if sort_by else None
 
     t0 = time.time()
-    # resolved even for scan="jvm": the file list feeds the footer row
-    # count (no Spark job) — only the PHYSICAL scan choice ignores it there
-    fs, files, fmt, degraded_reason = _pyarrow_source(input_path, filesystem)
-    if degraded_reason and input_path is not None:
-        # pyarrow never listed the store, so fmt above is just the default —
-        # the JVM (which CAN reach it, or the fallback scan would fail too)
-        # decides parquet vs ORC for the spark.read call
-        fmt = _jvm_fmt_sniff(spark, input_path, fmt)
-    if fs is None and filesystem is not None:
-        fs = filesystem  # plan= with input_path=None: the caller's
-        # credential-configured filesystem must still reach executor reads
-    if df is None and scan == "jvm" and input_path is not None:
-        df = _read_input_df(spark, input_path, fmt)
-    if n_partitions is None:
-        n_partitions = _default_n_partitions(spark, df, input_path, filesystem)
-    scan_files = None if scan == "jvm" else files
-    if degraded_reason and scan == "auto" and plan is None:
-        # at 100 TB this fallback moves every token byte through a full
-        # shuffle — the operator must see it (report + run_meta, below)
-        warnings.warn(
-            "zero-shuffle rowgroup scan unavailable, degrading to the JVM "
-            f"scan + salted repartition: {degraded_reason}"
-        )
-    if scan == "rowgroup" and not scan_files and plan is None:
-        # never silently degrade an explicit mode request — the chosen mode
-        # is persisted in plan.json and would pin every future resume
-        raise ValueError(
-            f"scan={scan!r} needs parquet/ORC files pyarrow can serve under "
-            f"input_path; got input_path={input_path!r}"
-            + (f" ({degraded_reason})" if degraded_reason else "")
-        )
-
-    if plan is not None or (scan_files and scan in ("auto", "rowgroup")):
-        if not explicit_parts:
-            # part == task in this mode: keep every core busy even when the
-            # byte-based default would under-split a small input
-            n_partitions = max(
-                n_partitions, spark.sparkContext.defaultParallelism * 2
-            )
-        plan = _load_or_compute_rowgroup_plan(
-            spark, out_dir, scan_files, n_partitions, explicit_parts, fs,
-            plan, sort_by
-        )
-    else:
-        if df is None:
-            df = _read_input_df(spark, input_path, fmt)
-        plan = _load_or_compute_plan(
-            spark, df, out_dir, n_partitions, files, fs,
-            degraded_from=degraded_reason if scan == "auto" else None,
-            sort_by=sort_by,
-        )
-    mode = plan.get("mode", "jvm")
+    plan = _load_or_compute_rowgroup_plan(
+        spark, out_dir, input_path, df, n_partitions, filesystem, plan,
+        sort_by
+    )
+    # the filesystem of the plan's fs-native paths: the recorded location's,
+    # else the caller's (plans written before "input" was recorded were
+    # resumed with their input_path); with neither, units carry their own
+    # paths and each task resolves them
+    planned = plan.get("input") or (
+        input_path if filesystem is None else None)
+    fs = pafs.resolve(planned)[0] if planned else filesystem
     schema = [tuple(t) for t in plan.get("schema", [])] or list(DEFAULT_SCHEMA)
     # sort_by is part of the persisted layout contract (chunk boundaries and
     # zone maps depend on it): a resume adopts the recorded order, and a
@@ -1846,58 +1683,6 @@ def encode(
                     f"sort_by column {sc!r} must be a scalar store column; "
                     f"schema: {schema}"
                 )
-    if mode == "rowgroup":
-        if df is not None:
-            raise ValueError(
-                "out_dir was encoded with the zero-shuffle rowgroup plan; "
-                "resume it with the same input_path/filesystem, not df="
-            )
-        # units carry their own paths; fs=None → per-task re-resolve
-    else:
-        if user_plan is not None:
-            # a caller-supplied plan= against a store persisted in JVM
-            # mode would fall through to the DataFrame path and crash in
-            # spark.read.parquet(None) — name the mismatch instead
-            raise ValueError(
-                f"out_dir holds a persisted {mode!r}-mode plan; plan= is a "
-                "rowgroup-mode hook.  Resume this store with the original "
-                "input_path/df (same scan mode), or encode the planned input "
-                "into a fresh out_dir"
-            )
-        if plan.get("degraded_from") and scan_files:
-            # the store was planned while the fast scan was unavailable
-            # (e.g. a transient store error) and is pinned on the
-            # full-shuffle path — resumes must keep the assignment, but the
-            # operator should know recovery is possible
-            warnings.warn(
-                "out_dir is pinned on the salted/JVM plan recorded under "
-                f"degradation ({plan['degraded_from']}); the zero-shuffle "
-                "scan IS available now — re-encode into a fresh out_dir to "
-                "regain it"
-            )
-        if plan.get("assign_hash", "xxhash64") != "xxhash64":
-            # stores from releases with the fused pyarrow salted scan
-            # (fnv1a part assignment) cannot be resumed by the JVM scan
-            raise ValueError(
-                f"out_dir was planned with assign_hash="
-                f"{plan['assign_hash']!r}, which this release no longer "
-                "runs; re-encode into a fresh out_dir"
-            )
-        # the JVM scan and its chunk splitter are written against the
-        # fixed token-table columns; general schemas go through the
-        # schema-driven rowgroup scan
-        if df is not None:
-            got = {t for t in df.dtypes if t[0] != "part_id"}
-            want = {("doc_id", "string"), ("tokens", "array<int>"),
-                    ("n_tok", "int"), ("source", "string")}
-            if got != want:
-                raise ValueError(
-                    "the salted/JVM scan encodes exactly the token-table "
-                    f"schema {sorted(want)}; got {sorted(got)}.  General "
-                    "flat schemas (str/int32/int64/array<int>) are supported "
-                    "by the zero-shuffle rowgroup scan — pass input_path= "
-                    "instead of df="
-                )
     n_total = plan["n_total"]
 
     done = completed_part_ids(spark, out_dir) if resume else set()
@@ -1908,23 +1693,9 @@ def encode(
         return {"n_partitions": n_total, "pending": 0, "skipped": len(done),
                 "wall_sec": 0.0}
 
-    if mode == "rowgroup":
-        work = rowgroup_work_df(spark, plan["parts"], pending)
-        encoder = make_rowgroup_encoder(chunk_bytes, fs, selection, schema,
-                                        sort_by=eff_sort)
-    else:
-        if df is None:
-            df = _read_input_df(spark, input_path, fmt)
-        work = apply_plan(df, plan)
-        if done or limit_parts is not None:
-            work = work.where(F.col("part_id").isin(pending))
-        work = work.repartition(len(pending), "part_id")
-        if eff_sort:
-            # part_id leads the sort so each part's rows stay contiguous for
-            # the per-part chunk splitter; zone-map clustering happens on
-            # the trailing keys — still zero extra shuffles
-            work = work.sortWithinPartitions("part_id", *eff_sort)
-        encoder = make_encoder(chunk_bytes, selection)
+    work = rowgroup_work_df(spark, plan["parts"], pending)
+    encoder = make_rowgroup_encoder(chunk_bytes, fs, selection, schema,
+                                    sort_by=eff_sort)
     manifest = work.mapInArrow(write_chunk_files(encoder, out_dir),
                                MANIFEST_DDL)
     _commit_manifest(spark, out_dir, manifest, pending,
@@ -1936,15 +1707,11 @@ def encode(
         "pending": len(pending),
         "skipped": len(done),
         "chunk_bytes": chunk_bytes,
-        "scan": mode if mode == "rowgroup" else "jvm",
+        "scan": "rowgroup",
         "selection": selection,
         **({"sort_by": eff_sort} if eff_sort else {}),
         "wall_sec": wall,
     }
-    if degraded_reason and mode != "rowgroup":
-        # permanent record of the fallback (run_meta below), alongside the
-        # in-flight warning — silent degradation was round-2 finding #3
-        report["degraded_reason"] = degraded_reason
     meta_path = os.path.join(out_dir, "run_meta.json")
     history = []
     if fsio.exists(spark, meta_path):

@@ -81,17 +81,3 @@ def has_parquet(spark, path: str) -> bool:
         if it.next().getPath().getName().endswith(".parquet"):
             return True
     return False
-
-
-def dir_bytes(spark, path: str) -> int:
-    """Total bytes under ``path`` (0 if absent) — Hadoop getContentSummary
-    for scheme-qualified stores, os.walk for bare local paths."""
-    if is_local(path):
-        total = 0
-        for root, _, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-    fs, jpath = _fs(spark, path)
-    if not fs.exists(jpath):
-        return 0
-    return int(fs.getContentSummary(jpath).getLength())

@@ -1,16 +1,16 @@
-"""pyarrow.fs resolution for the zero-shuffle scan paths.
+"""pyarrow.fs resolution for the engine's Python-side I/O.
 
-The rowgroup encode mode plans from parquet footers and reads row groups with
-pyarrow inside ``mapInArrow`` — both need a *Python-side* filesystem, as do
-the encode tasks writing their chunk files, the driver writing the parts
-markers and the decode tasks reading chunk files; the manifest records go
-through Spark's JVM writer and the tiny sidecar files through fsio.py
-(Hadoop FS).  This module maps any input location onto a
-``pyarrow.fs.FileSystem`` so the fast path engages on object stores, not just
-local disk — the reference's headline remote flow is S3A
-(`/root/reference/src/orc/read.clj:27-49`, `README.md:87-107`):
+The encode plans from parquet/ORC footers and reads row groups with pyarrow
+inside ``mapInArrow``; its tasks write their chunk files with pyarrow, the
+driver writes the parts markers and sizes the manifest with pyarrow, and the
+decode tasks read chunk files with it.  The manifest records go through
+Spark's JVM writer and the tiny sidecar files through fsio.py (Hadoop FS).
+This module maps any location onto a ``pyarrow.fs.FileSystem`` so all of
+that works on object stores, not just local disk — the reference's headline
+remote flow is S3A (`src/orc/read.clj:27-49`,
+`README.md:87-107`):
 
-* bare local paths → ``LocalFileSystem`` (unchanged fast path);
+* bare local paths → ``LocalFileSystem``;
 * scheme-qualified URIs (``s3://``, ``gs://``, ``hdfs://``, ``file://``) →
   ``FileSystem.from_uri`` with Hadoop scheme aliases mapped (``s3a``/``s3n``
   → ``s3``);
@@ -19,13 +19,12 @@ local disk — the reference's headline remote flow is S3A
 
 pyarrow filesystems pickle, so the SAME object the planner used travels to
 executor tasks in the ``mapInArrow`` closure — listing, footer reads, and
-row-group reads all go through one filesystem, and a resume with the same
-``input_path``/``filesystem`` reproduces the plan exactly.
+row-group reads all go through one filesystem.
 
-Schemes pyarrow cannot serve raise here; the encode entry point catches
-that, records the degradation in the run report/run_meta, and falls back to
-the JVM scan + salted repartition (never silently — a 100 TB operator must
-see that every token byte is about to cross a shuffle).
+Schemes pyarrow cannot serve raise here (``ArrowInvalid``/``OSError``);
+``encode()`` turns that into a ``ValueError`` that points the caller at
+``df=spark.read.parquet(path)``, whose frame is staged to a location pyarrow
+can read.
 """
 
 from __future__ import annotations
@@ -81,8 +80,7 @@ def normalize_uri(path: str) -> str:
 def resolve(path: str, filesystem=None) -> tuple[_fs.FileSystem, str]:
     """(filesystem, fs-native path) for a possibly scheme-qualified path.
 
-    Raises (ArrowInvalid/OSError) for schemes pyarrow cannot serve — the
-    caller decides whether to fall back to the JVM scan."""
+    Raises (ArrowInvalid/OSError) for schemes pyarrow cannot serve."""
     if filesystem is not None:
         return filesystem, path
     if "://" in path:
@@ -90,20 +88,25 @@ def resolve(path: str, filesystem=None) -> tuple[_fs.FileSystem, str]:
     return _fs.LocalFileSystem(), path
 
 
-def list_files(fs: _fs.FileSystem, path: str, ext: str) -> list[str]:
-    """All ``ext`` files at/under ``path`` (one recursive LIST on object
-    stores, not a per-directory walk), sorted for plan determinism."""
+def file_infos(fs: _fs.FileSystem, path: str) -> list[_fs.FileInfo]:
+    """``FileInfo`` of every file at/under ``path`` (one recursive LIST on
+    object stores, not a per-directory walk), sorted by path for plan
+    determinism; a missing path holds none."""
     info = fs.get_file_info(path)
     if info.type == _fs.FileType.File:
-        return [path] if path.endswith(ext) else []
+        return [info]
     if info.type != _fs.FileType.Directory:
         return []
     sel = _fs.FileSelector(path, recursive=True)
     return sorted(
-        i.path
-        for i in fs.get_file_info(sel)
-        if i.type == _fs.FileType.File and i.path.endswith(ext)
+        (i for i in fs.get_file_info(sel) if i.type == _fs.FileType.File),
+        key=lambda i: i.path,
     )
+
+
+def list_files(fs: _fs.FileSystem, path: str, ext: str) -> list[str]:
+    """All ``ext`` files at/under ``path``, sorted."""
+    return [i.path for i in file_infos(fs, path) if i.path.endswith(ext)]
 
 
 def list_parquet(fs: _fs.FileSystem, path: str) -> list[str]:
@@ -115,17 +118,7 @@ def list_orc(fs: _fs.FileSystem, path: str) -> list[str]:
 
 
 def total_bytes(fs: _fs.FileSystem, path: str) -> int:
-    info = fs.get_file_info(path)
-    if info.type == _fs.FileType.File:
-        return int(info.size or 0)
-    if info.type != _fs.FileType.Directory:
-        return 0
-    sel = _fs.FileSelector(path, recursive=True)
-    return sum(
-        int(i.size or 0)
-        for i in fs.get_file_info(sel)
-        if i.type == _fs.FileType.File
-    )
+    return sum(int(i.size or 0) for i in file_infos(fs, path))
 
 
 def open_parquet(path: str, fs: _fs.FileSystem | None = None):

@@ -15,7 +15,10 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+
+from . import fsio, pafs
 
 
 def verify_digest(source: DataFrame, decoded: DataFrame) -> dict:
@@ -110,16 +113,33 @@ def verify_roundtrip(source: DataFrame, decoded: DataFrame) -> dict:
     return report
 
 
-def encoded_size_bytes(spark, out_dir: str) -> dict:
-    """Engine output accounting: payload bytes + manifest (meta) bytes.
-    Manifest sizing goes through fsio (Hadoop FS on scheme-qualified
-    stores) — a bare os.walk would silently report 0 on an object store
-    and let the size gate pass a store that exceeds the bar."""
-    from . import fsio
+def _visible_bytes(path: str) -> int:
+    """Bytes of the files under ``path`` that readers see, with pyarrow:
+    entries named ``.*`` or ``_*`` (Hadoop ``.crc`` sidecars, ``_SUCCESS``,
+    temp names) are skipped — an object store has none of them, so the
+    size gate must not depend on the filesystem."""
+    if fsio.is_local(path):
+        path = os.path.abspath(path)
+    fs, root = pafs.resolve(path)
+    total = 0
+    for info in pafs.file_infos(fs, root):
+        rel = info.path[len(root):].strip("/")
+        if not any(p.startswith((".", "_")) for p in rel.split("/")):
+            total += int(info.size or 0)
+    return total
 
-    manifest = spark.read.parquet(os.path.join(out_dir, "manifest", "chunks"))
-    payload = manifest.agg(F.sum("enc_bytes")).collect()[0][0] or 0
-    meta_bytes = fsio.dir_bytes(spark, os.path.join(out_dir, "manifest"))
+
+def encoded_size_bytes(spark, out_dir: str) -> dict:
+    """Engine output accounting: payload bytes (the manifest's
+    ``enc_bytes``, read on the driver by decode's manifest reader) +
+    manifest (meta) bytes sized with pyarrow, which reaches object stores
+    too — a bare os.walk would silently report 0 there and let the size
+    gate pass a store that exceeds the bar."""
+    from .decode import _read_manifest
+
+    m = _read_manifest(spark, out_dir, ["enc_bytes"])
+    payload = 0 if m is None else pc.sum(m.column("enc_bytes")).as_py() or 0
+    meta_bytes = _visible_bytes(os.path.join(out_dir, "manifest"))
     return {
         "payload_bytes": int(payload),
         "manifest_bytes": int(meta_bytes),

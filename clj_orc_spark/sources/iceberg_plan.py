@@ -5,9 +5,9 @@ footer read per file — fine for a directory of parquet, wasteful for an
 Iceberg table whose manifests ALREADY record every data file's size, row
 count, and row-group byte offsets (``split_offsets``).  This module builds
 the same ``{"mode": "rowgroup", ...}`` plan dict from those manifest
-entries, so ``encode(df=iceberg)`` no longer has to forfeit the
-zero-shuffle mode: plan from metadata only, then hand the plan to
-``encode(spark, out_dir=..., plan=...)`` whose tasks open each
+entries, so an Iceberg table needs neither footer reads nor the staged
+copy ``encode(df=iceberg)`` would write: plan from metadata only, then hand
+the plan to ``encode(spark, out_dir=..., plan=...)`` whose tasks open each
 ``file_path`` URI directly via pyarrow (pipeline/pafs.py).
 
 The planning logic is pure and connector-free (tested on synthetic entries

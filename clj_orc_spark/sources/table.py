@@ -11,11 +11,10 @@ table from whichever physical source the deployment uses:
 * an Iceberg table identifier (``catalog.db.table``) via
   ``spark.read.format("iceberg")`` when the runtime has the Iceberg Spark
   connector on the classpath (production shape).  Iceberg reads hand
-  ``encode(df=...)`` a DataFrame, which uses the salted-repartition plan —
-  on a real deployment the row-group planner would read Iceberg's own
-  manifest files instead of parquet footers (same metadata-only design; the
-  connector is not in this container, so that planner variant is gated
-  here, not implemented blind).
+  ``encode(df=...)`` a DataFrame, which Spark writes once to the store's
+  ``_staging/`` directory before the row-group planner reads its footers;
+  ``sources/iceberg_plan.py`` plans from Iceberg's own manifest entries
+  instead and skips that copy.
 
 The analog of the reference's reader configuration step
 (`/root/reference/src/orc/read.clj:27-49`: URI + schema in, reader out),

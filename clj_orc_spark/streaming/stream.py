@@ -17,8 +17,9 @@ equivalents:
   a watermark for late data: the standard streaming-analytics surface the
   reference lacks entirely (SURVEY.md §2.3).
 * :func:`stream_encode` — the ingest direction: token-table parquet files
-  land → each micro-batch encodes into the SAME chunks+manifest layout the
-  batch pipeline writes, so batch ``decode``/``verify``/resume all work on a
+  land → each micro-batch is planned from the files its source log names
+  and encoded by the batch encode's zero-shuffle writer into the SAME
+  chunks+manifest layout, so batch ``decode``/``verify`` work on a
   streaming-built store.
 """
 
@@ -30,30 +31,30 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def _source_log_files(spark, checkpoint: str, batch_id: int) -> list[str]:
-    """File paths the FileStreamSource assigned to ``batch_id``, from its
+    """File URIs the FileStreamSource assigned to ``batch_id``, from its
     commit log at ``<checkpoint>/sources/0/<batch_id>`` (header line ``v1``,
-    then one JSON object per file).  Empty list → caller falls back to the
-    shuffle-mode decode (non-file source, or an unrecognized log format)."""
+    then one JSON object per file).  Every ``compactInterval``-th batch
+    (default 10) the source writes ``<batch_id>.compact`` instead, holding
+    ALL entries so far, each tagged with its ``batchId``.  A missing or
+    unreadable entry raises, naming the checkpoint: the log is the only
+    record of what the batch holds, and a guess would drop or repeat
+    rows."""
     import json
 
     from ..pipeline import fsio
 
     base = os.path.join(checkpoint, "sources", "0", str(int(batch_id)))
-    # every compactInterval-th batch (default 10) the source writes
-    # <id>.compact holding ALL entries so far, each tagged with its
-    # batchId — without checking it those batches would silently fall
-    # back to the shuffle decode
     compact = None
-    try:
-        if fsio.exists(spark, base):
-            text = fsio.read_text(spark, base)
-        elif fsio.exists(spark, base + ".compact"):
-            text = fsio.read_text(spark, base + ".compact")
-            compact = int(batch_id)
-        else:
-            return []
-    except Exception:
-        return []
+    if fsio.exists(spark, base):
+        text = fsio.read_text(spark, base)
+    elif fsio.exists(spark, base + ".compact"):
+        text = fsio.read_text(spark, base + ".compact")
+        compact = int(batch_id)
+    else:
+        raise RuntimeError(
+            f"checkpoint {checkpoint!r} has no source-log entry for batch "
+            f"{batch_id} ({base!r})"
+        )
     files = []
     for line in text.splitlines():
         line = line.strip()
@@ -61,11 +62,14 @@ def _source_log_files(spark, checkpoint: str, batch_id: int) -> list[str]:
             continue
         try:
             entry = json.loads(line)
-            if compact is not None and int(entry.get("batchId", -1)) != compact:
+            if compact is not None and int(entry["batchId"]) != compact:
                 continue
             files.append(entry["path"])
-        except (ValueError, KeyError, TypeError):
-            return []  # unknown format: never guess, take the safe path
+        except (ValueError, KeyError, TypeError) as e:
+            raise RuntimeError(
+                f"checkpoint {checkpoint!r}: unreadable source-log entry "
+                f"for batch {batch_id}: {line[:200]!r} ({e})"
+            ) from e
     return sorted(files)
 
 
@@ -79,31 +83,28 @@ def stream_decode(
 ):
     """Continuously decode encoded chunks as they land; returns the query.
 
-    ``foreachBatch`` reuses the exact batch decode kernel path.  Round 5:
-    each micro-batch decodes through the ZERO-SHUFFLE files-mode kernel —
-    the batch's file list comes from the file source's own commit log
+    ``foreachBatch`` reuses the exact batch decode kernel path: each
+    micro-batch decodes through the ZERO-SHUFFLE files-mode kernel.  The
+    batch's file list comes from the file source's own commit log
     (``<checkpoint>/sources/0/<batch_id>``, written by the source when it
     plans the batch — driver-side metadata, no job; ``inputFiles()`` is
     empty inside foreachBatch because the batch DataFrame is an
-    ExistingRDD wrapper).  The file list enters Spark as a driver-local
-    relation and feeds the same files decoder as batch ``decode()``; a
-    ``groupBy(chunk_id).applyInArrow`` would reshuffle every payload byte
-    once per micro-batch.  (Batch ``decode()`` keeps a Python-RDD work list
-    because its result may be joined, and a local relation's tiny size
-    estimate would make Spark broadcast it; a micro-batch's decoded frame
-    is only written to the sink, so its estimate steers no join.)  The
-    encoder writes
-    a chunk's column rows contiguously into one file and the file source
-    assigns whole files to micro-batches, so per-file decode is complete.
-    Output is partitioned by ``_batch_id`` and each batch overwrites its own
-    partition, so foreachBatch's at-least-once replays are idempotent.
+    ExistingRDD wrapper); a missing or unreadable log entry raises.  The
+    file list enters Spark as a driver-local relation and feeds the same
+    files decoder as batch ``decode()``.  (Batch ``decode()`` keeps a
+    Python-RDD work list because its result may be joined, and a local
+    relation's tiny size estimate would make Spark broadcast it; a
+    micro-batch's decoded frame is only written to the sink, so its
+    estimate steers no join.)  The encoder writes a chunk's column rows
+    contiguously into one file and the file source assigns whole files to
+    micro-batches, so per-file decode is complete.  Output is partitioned
+    by ``_batch_id`` and each batch overwrites its own partition, so
+    foreachBatch's at-least-once replays are idempotent.
     """
-    from ..pipeline import pafs
     from ..pipeline.decode import (
         WORK_DDL,
         _physical_map,
         _select_ddl,
-        decode_chunk_table,
         make_files_decoder,
         store_schema,
     )
@@ -133,25 +134,10 @@ def stream_decode(
     checkpoint = os.path.join(sink_dir, "_checkpoint")
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import pyarrow as pa
-
         sess = batch_df.sparkSession
         files = _source_log_files(sess, checkpoint, batch_id)
-        if files:
-            work = local_frame(sess, [(f, None) for f in files], WORK_DDL)
-            decoded = work.mapInArrow(decoder, ddl)
-        else:
-            if not batch_df.take(1):
-                return
-            # file list unavailable (non-file source): shuffle fallback
-
-            def decode_group(tbl: pa.Table) -> pa.Table:
-                pafs.clamp_arrow_threads()
-                return decode_chunk_table(tbl, None, schema)
-
-            decoded = batch_df.groupBy("chunk_id").applyInArrow(
-                decode_group, ddl
-            )
+        work = local_frame(sess, [(f, None) for f in files], WORK_DDL)
+        decoded = work.mapInArrow(decoder, ddl)
         if _plan_log is not None:  # test hook: record the micro-batch plan
             _plan_log.append(
                 decoded._jdf.queryExecution().executedPlan().toString()
@@ -189,30 +175,37 @@ def stream_encode(
 ):
     """Structured-Streaming encode: new token-table files → encoded chunks.
 
-    Each micro-batch salts rows across ``parts_per_batch`` partitions inside
-    a batch-scoped part_id namespace (``batch_id * K + xxhash64(doc_id) % K``)
-    — deterministic given batch content, so a replayed batch (foreachBatch
-    at-least-once) rewrites the SAME partitions instead of duplicating
-    them: its encode tasks replace each part's chunk file and the commit
-    overwrites each part's records, the streaming analog of the batch
-    pipeline's per-partition lineage.  Each micro-batch runs the batch
-    encode's writer and commit (one Spark job), so output layout, manifest,
-    decode and verify are identical to the batch path.
+    Each micro-batch is planned from the files its source log names
+    (:func:`_source_log_files`; the Delta Lake shape — the commit log's
+    files are the unit of work): their footers are LPT-packed into at most
+    ``parts_per_batch`` (K) parts with ids ``batch_id * K + i``
+    (``encode._rowgroup_plan``), then encoded by the batch encode's
+    zero-shuffle writer and committed by its commit, one Spark job per
+    micro-batch.  The plan depends only on the logged files, their footers
+    and the pinned K, so a replayed batch (foreachBatch at-least-once)
+    recomputes the SAME parts: its encode tasks replace each part's chunk
+    file and the commit overwrites each part's records, the streaming
+    analog of the batch pipeline's per-partition lineage.  Output layout,
+    manifest, decode and verify are identical to the batch path.
     """
     import json
 
-    from ..pipeline import fsio
+    from ..pipeline import fsio, pafs
     from ..pipeline.encode import (
         DEFAULT_CHUNK_BYTES,
+        DEFAULT_SCHEMA,
         MANIFEST_DDL,
         _commit_manifest,
-        make_encoder,
+        _rowgroup_plan,
+        _schema_from_files,
+        make_rowgroup_encoder,
+        rowgroup_work_df,
         write_chunk_files,
     )
 
     cb = chunk_bytes or DEFAULT_CHUNK_BYTES
     # replay idempotency REQUIRES the same part_id namespace across
-    # restarts: a replayed batch salted with a different k would write new
+    # restarts: a replayed batch planned with a different k would write new
     # partitions instead of overwriting the committed ones.  Pin k in a
     # sidecar on first start, exactly like batch encode pins plan.json.
     meta_path = os.path.join(out_dir, "stream_meta.json")
@@ -236,27 +229,35 @@ def stream_encode(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
+    checkpoint = os.path.join(out_dir, "_checkpoint")
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
+        sess = batch_df.sparkSession
+        uris = _source_log_files(sess, checkpoint, batch_id)
+        if not uris:
             return
-        work = batch_df.withColumn(
-            "part_id",
-            (
-                F.lit(int(batch_id) * k)
-                + F.pmod(F.xxhash64(F.col("doc_id")), F.lit(k))
-            ).cast("int"),
-        )
+        # one landing location: one filesystem, fs-native unit paths
+        fs, _ = pafs.resolve(uris[0])
+        files = [pafs.resolve(u)[1] for u in uris]
+        got = {tuple(t) for t in _schema_from_files(files, fs)}
+        if not set(DEFAULT_SCHEMA) <= got:
+            raise ValueError(
+                f"stream_encode encodes the token-table schema "
+                f"{list(DEFAULT_SCHEMA)}; {uris[0]!r} has {sorted(got)}"
+            )
+        plan = _rowgroup_plan(files, k, explicit=False, fs=fs)
+        base = int(batch_id) * k
+        parts = {base + i: units for i, units in enumerate(plan["parts"])}
         # a replay draws a new run_id: its files replace the batch's parts
-        manifest = work.repartition(k, "part_id").mapInArrow(
-            write_chunk_files(make_encoder(cb, selection), out_dir),
+        manifest = rowgroup_work_df(sess, parts, list(parts)).mapInArrow(
+            write_chunk_files(make_rowgroup_encoder(cb, fs, selection),
+                              out_dir),
             MANIFEST_DDL,
         )
-        pending = list(range(int(batch_id) * k, int(batch_id) * k + k))
-        _commit_manifest(batch_df.sparkSession, out_dir, manifest, pending)
+        _commit_manifest(sess, out_dir, manifest, list(parts))
 
     writer = stream.writeStream.foreachBatch(handle_batch).option(
-        "checkpointLocation", os.path.join(out_dir, "_checkpoint")
+        "checkpointLocation", checkpoint
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

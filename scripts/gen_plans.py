@@ -62,9 +62,9 @@ def main() -> None:
         "PushedFilters, ReadSchema carries only referenced columns, and the",
         "hot path sits in ≥1 WholeStageCodegen span — counted from the",
         "EXECUTED (AQE-final) plan, since the pre-execution adaptive plan",
-        "shows no `*(n)` markers at all. The default (rowgroup) encode",
-        "pipeline has ZERO shuffles; the jvm fallback has exactly one;",
-        "files-mode decode and digest verify have none.",
+        "shows no `*(n)` markers at all. The encode pipeline (one path for",
+        "input paths, staged `df=` frames and stream micro-batches) has ZERO",
+        "shuffles; files-mode decode and digest verify have none.",
         "",
     ]
     qs = entry_mod.queries()
@@ -92,13 +92,14 @@ def main() -> None:
     # stages are python-exec nodes, not codegen — the invariant there is the
     # shuffle count, asserted by tests/test_encode_decode.py)
     out += [
-        "## encode — default rowgroup mode (round 2): ZERO shuffles",
+        "## encode — rowgroup scan (the only encode path): ZERO shuffles",
         "",
         "```",
-        "range (pending part ids, one per task)",
+        "parquet write of the manifest records (manifest/chunks/part_id=N)",
         " +- mapInArrow: pyarrow row-group read -> zero-copy chunk slices",
         "    -> codec kernels (selection cached per part, guarded per chunk)",
-        "     +- dynamic-partition parquet write (chunks/part_id=N)",
+        "    -> pyarrow chunk-file write (chunks/part_id=N), yields records",
+        "     +- Scan ExistingRDD (pending part ids, one per task)",
         "```",
         "",
         "part_id is planned from parquet footers (byte-balanced LPT bins of",
@@ -106,15 +107,13 @@ def main() -> None:
         "so token bytes NEVER cross a shuffle: on a 1000-executor cluster the",
         "job's only shared resource is the object store.",
         "",
-        "## encode — jvm fallback (`df=` inputs)",
+        "## encode — `df=` inputs and stream micro-batches",
         "",
-        "```",
-        "Catalyst scan (FileScan parquet/orc, or the caller's df)",
-        " +- Project: part_id = n_tok bucket offset + pmod(xxhash64(doc_id))",
-        "     +- Exchange hashpartitioning(part_id)   <- the ONLY shuffle",
-        "         +- mapInArrow: byte-budget chunking + codec kernels",
-        "             +- dynamic-partition parquet write (chunks/part_id=N)",
-        "```",
+        "A `df=` frame costs one extra job, with no Exchange: Spark writes",
+        "it once to `out_dir/_staging/` as parquet, and the rowgroup plan",
+        "above covers those files.  `stream_encode` plans each micro-batch",
+        "from the files the file source's commit log names for it (part ids",
+        "`batch_id*K + i`) and runs the same job.",
         "",
         "- Python stages are Arrow-vectorized; no per-row Python anywhere.",
         "- decode: one task per chunk file, zero shuffles;",

@@ -274,11 +274,12 @@ All runs:
   every payload CRC-checked at decode.
 - **zero-shuffle encode** (round 2): part_id = a footer-planned, byte-balanced
   bin of parquet row groups, so scan + chunk + encode fuse into ONE
-  mapInArrow stage — token bytes never cross a shuffle (the salted
-  n_tok-quantile repartition remains only behind scan="jvm", for df=
-  callers).  Interleaved A/B on the 4M-row table, excluding
-  the first-run-in-process warmup outlier: rowgroup 29.8–40.9 s vs salted
-  59.9–100.3 s at local[8]; 33.6 s vs 79.2–94.0 s at local[32] (~2–2.6×).
+  mapInArrow stage — token bytes never cross a shuffle.  It is the only
+  encode path: df= frames are staged to parquet and planned the same way.
+  Interleaved A/B on the 4M-row table against the salted n_tok-quantile
+  repartition scan it replaced, excluding the first-run-in-process warmup
+  outlier: rowgroup 29.8–40.9 s vs salted 59.9–100.3 s at local[8];
+  33.6 s vs 79.2–94.0 s at local[32] (~2–2.6×).
 - **per-partition selection cache + frexp bit-lengths** (round 2): chunk 0 of
   each partition pays full codec selection and FSST symbol-table build;
   later chunks reuse them (honesty guard still per-chunk).  Single-core

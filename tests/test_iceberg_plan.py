@@ -180,7 +180,7 @@ def test_plan_kwarg_rejects_df_and_jvm_scan(spark, tmp_dir, token_table_dir):
     with pytest.raises(ValueError, match="plan="):
         encode(spark, out_dir=os.path.join(tmp_dir, "a"), plan=plan,
                df=spark.read.parquet(src))
-    with pytest.raises(ValueError, match="plan="):
+    with pytest.raises(TypeError, match="scan"):  # no scan mode to pick
         encode(spark, out_dir=os.path.join(tmp_dir, "b"), plan=plan,
                scan="jvm")
 

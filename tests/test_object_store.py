@@ -8,14 +8,13 @@ non-trivial cases are proven with:
 * an explicit ``SubTreeFileSystem`` (a real non-default pyarrow filesystem
   object that must survive pickling into executor tasks — the same transport
   a configured ``S3FileSystem`` would use);
-* a forced resolution failure (unknown-scheme stand-in), asserting the
-  fallback to the JVM scan is RECORDED (report + run_meta + warning), never
-  silent — round-2 judge finding #3.
+* a forced resolution failure (unknown-scheme stand-in), asserting encode
+  raises with pyarrow's error and the ``df=`` call that stages the input
+  instead, never a silent fallback — round-2 judge finding #3.
 """
 
 import json
 import os
-import warnings
 
 import pytest
 
@@ -124,8 +123,8 @@ def test_degradation_is_recorded_not_silent(
     spark, token_table_dir, tmp_dir, monkeypatch
 ):
     """When pyarrow cannot serve the input (unknown scheme / unreachable
-    store), scan='auto' falls back to the JVM scan — with a warning, a
-    report field, and a run_meta record."""
+    store), encode raises before writing anything, with pyarrow's error and
+    the df= call to use instead — and that call round-trips."""
     import importlib
 
     enc_mod = importlib.import_module("clj_orc_spark.pipeline.encode")
@@ -136,36 +135,27 @@ def test_degradation_is_recorded_not_silent(
 
     def broken_resolve(path, filesystem=None):
         if path == src:  # only the input is unservable, not the store
-            raise OSError("scheme not supported in sandbox")
+            raise OSError("scheme not supported")
         return real_resolve(path, filesystem)
 
     monkeypatch.setattr(enc_mod.pafs, "resolve", broken_resolve)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        rep = encode(spark, src, out, n_partitions=4)
-    assert any("degrading to the JVM scan" in str(x.message) for x in w)
-    assert rep["scan"] == "jvm"
-    assert "pyarrow.fs cannot serve" in rep["degraded_reason"]
-    with open(os.path.join(out, "run_meta.json")) as f:
-        meta = json.load(f)
-    assert any("degraded_reason" in r for r in meta["runs"])
-    # the degraded run is still correct, just slower
+    with pytest.raises(ValueError) as err:
+        encode(spark, src, out, n_partitions=4)
+    msg = str(err.value)
+    assert "scheme not supported" in msg
+    assert f"df=spark.read.parquet({src!r})" in msg
+    assert not os.path.exists(out)
+    rep = encode(spark, out_dir=out, df=spark.read.parquet(src),
+                 n_partitions=4)
+    assert rep["scan"] == "rowgroup"
     v = verify_roundtrip(spark.read.parquet(src), decode(spark, out))
-    assert v["bit_identical"]
+    assert v["bit_identical"] and v["total"] == 5_000
 
 
-def test_explicit_rowgroup_raises_on_unservable_input(
-    spark, tmp_dir, monkeypatch
-):
-    """An explicit scan='rowgroup' request must never degrade."""
-    import importlib
-
-    enc_mod = importlib.import_module("clj_orc_spark.pipeline.encode")
-
-    def broken_resolve(path, filesystem=None):
-        raise OSError("no such scheme")
-
-    monkeypatch.setattr(enc_mod.pafs, "resolve", broken_resolve)
-    with pytest.raises(ValueError, match="rowgroup"):
-        encode(spark, "weird://x/y", os.path.join(tmp_dir, "enc"),
-               scan="rowgroup")
+def test_explicit_rowgroup_raises_on_unservable_input(spark, tmp_dir):
+    """A scheme pyarrow cannot serve (``ArrowInvalid`` from pafs.resolve)
+    raises a ValueError pointing at df=, never a silent fallback."""
+    out = os.path.join(tmp_dir, "enc")
+    with pytest.raises(ValueError, match=r"df=spark\.read\.parquet"):
+        encode(spark, "weird://x/y", out)
+    assert not os.path.exists(out)

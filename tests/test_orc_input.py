@@ -135,11 +135,14 @@ def test_mixed_parquet_orc_dir_prefers_parquet(spark, tmp_dir):
 
 
 def test_orc_salted_scan_raises_jvm_scan_works(spark, orc_dir, tmp_dir):
-    with pytest.raises(ValueError, match="unknown scan mode 'salted'"):
+    """There is no scan mode to pick; a Spark ORC frame is staged and
+    round-trips through the rowgroup scan."""
+    with pytest.raises(TypeError, match="scan"):
         encode(spark, orc_dir, os.path.join(tmp_dir, "enc0"), scan="salted")
     out = os.path.join(tmp_dir, "enc")
-    rep = encode(spark, orc_dir, out, scan="jvm", n_partitions=2)
-    assert rep["scan"] == "jvm"
+    rep = encode(spark, out_dir=out, df=spark.read.orc(orc_dir),
+                 n_partitions=2)
+    assert rep["scan"] == "rowgroup"
     v = verify_roundtrip(spark.read.orc(orc_dir), decode(spark, out))
     assert v["bit_identical"] and v["total"] == 5_000
 

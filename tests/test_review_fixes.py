@@ -1,5 +1,5 @@
 """Regression tests for the round-2 code-review findings: zone-map bound
-typing, explicit-scan-mode degradation, zero-chunk partition completion,
+typing, zero-chunk partition completion,
 streaming k pinning, and empty-landing-dir streaming startup."""
 
 import os
@@ -22,16 +22,6 @@ def test_zone_map_bounds_are_type_checked(spark, token_table_dir, tmp_dir):
         decode(spark, out, ranges={"doc_id": (9, 10)})
     with pytest.raises(TypeError, match="bounds must be int"):
         decode(spark, out, ranges={"n_tok": (1.5, None)})
-
-
-def test_explicit_rowgroup_scan_never_degrades(spark, token_table_dir, tmp_dir):
-    """scan='rowgroup' with no directly readable parquet must raise, not
-    silently fall back to the shuffle path and pin it in plan.json."""
-    src = os.path.join(token_table_dir, "tokens.parquet")
-    df = spark.read.parquet(src)
-    with pytest.raises(ValueError, match="rowgroup"):
-        encode(spark, out_dir=os.path.join(tmp_dir, "enc"), df=df,
-               scan="rowgroup", n_partitions=2)
 
 
 def test_empty_row_group_partition_completes(spark, tmp_dir):
@@ -151,7 +141,8 @@ def test_encode_rejects_ambiguous_inputs_and_bad_mode(spark, token_table_dir,
     with pytest.raises(ValueError, match="not both"):
         encode(spark, input_path=src, df=spark.read.parquet(src),
                out_dir=os.path.join(tmp_dir, "enc"))
-    with pytest.raises(ValueError, match="unknown scan mode"):
+    # there is one scan: a scan mode is an unknown argument, never run
+    with pytest.raises(TypeError, match="scan"):
         encode(spark, src, os.path.join(tmp_dir, "enc"), scan="rowgroups")
 
 

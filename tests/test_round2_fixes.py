@@ -1,5 +1,5 @@
 """Round-2 hardening tests: zip deployment, LSH bucket capping without
-materialization, vectorized SimHash equivalence, bounded plan sampling,
+materialization, vectorized SimHash equivalence,
 idempotent manifest lineage, manifest-driven decode, decode overflow guard.
 """
 
@@ -149,24 +149,6 @@ def test_fnv1a_slices_exact():
 
     got = fnv1a_slices(buf, starts, lens)
     assert got.tolist() == [scalar(w) for w in words]
-
-
-# --- bounded plan sampling --------------------------------------------------
-
-
-def test_compute_plan_never_collects_unbounded(spark, monkeypatch):
-    """compute_plan over a bare DataFrame (no parquet footers, total_rows
-    unknown) must sample, never collect every length to the driver."""
-    from clj_orc_spark.pipeline import skew
-
-    monkeypatch.setattr(skew, "PLAN_SAMPLE_ROWS", 500)
-    df = spark.range(20_000).select(
-        F.col("id").cast("string").alias("doc_id"),
-        (F.col("id") % 997 + 1).cast("int").alias("n_tok"),
-    )
-    plan = skew.compute_plan(df, n_partitions=8, total_rows=None)
-    assert 0 < plan["sample_n"] < 2_000  # ~500*1.25 expected, never 20k
-    assert plan["n_total"] >= 1 and len(plan["allocs"]) >= 1
 
 
 # --- idempotent manifest lineage -------------------------------------------

@@ -234,39 +234,3 @@ def test_speed_selection_policy_roundtrips(spark, token_table_dir, tmp_dir):
     assert v["bit_identical"]
     with pytest.raises(ValueError, match="selection"):
         encode(spark, src, os.path.join(tmp_dir, "x"), selection="fast")
-
-
-def test_degraded_store_resume_warns_when_fast_scan_recovers(
-    spark, token_table_dir, tmp_dir, monkeypatch
-):
-    """A store planned under degradation (salted/JVM pinned) must WARN on
-    resume once the zero-shuffle scan is available again."""
-    import importlib
-    import warnings as w
-
-    enc_mod = importlib.import_module("clj_orc_spark.pipeline.encode")
-    from clj_orc_spark.pipeline import encode
-
-    src = os.path.join(token_table_dir, "tokens.parquet")
-    out = os.path.join(tmp_dir, "enc")
-
-    real_resolve = enc_mod.pafs.resolve
-
-    def down_resolve(path, filesystem=None):
-        if path == src:  # only the input store is down, not out_dir
-            raise OSError("store down")
-        return real_resolve(path, filesystem)
-
-    monkeypatch.setattr(enc_mod.pafs, "resolve", down_resolve)
-    rep = encode(spark, src, out, n_partitions=2, limit_parts=1)
-    assert "degraded_reason" in rep and rep["scan"] == "jvm"
-    monkeypatch.setattr(enc_mod.pafs, "resolve", real_resolve)
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        rep2 = encode(spark, src, out, n_partitions=2)
-    assert any("pinned on the salted/JVM plan" in str(x.message) for x in caught)
-    assert rep2["skipped"] == 1  # lineage still honored
-    from clj_orc_spark.pipeline import decode, verify_roundtrip
-
-    v = verify_roundtrip(spark.read.parquet(src), decode(spark, out))
-    assert v["bit_identical"]

@@ -19,14 +19,21 @@ def _tiny_df(spark, n=40):
 
 
 def test_plan_resume_mode_mismatch_raises(spark, tmp_path):
-    """encode(plan=...) against a store persisted in JVM mode must
-    raise a clear error naming the persisted mode, not crash in
-    spark.read.parquet(None) (round-3 advice)."""
+    """encode(plan=...) against a store persisted in JVM mode (a scan this
+    release no longer has) must raise a clear error naming the persisted
+    mode, not crash or mix assignments (round-3 advice)."""
+    import json
+    import os
+
     out = str(tmp_path / "store")
-    encode(spark, df=_tiny_df(spark), out_dir=out, n_partitions=2)
+    os.makedirs(out)
+    with open(os.path.join(out, "plan.json"), "w") as f:
+        json.dump({"mode": "jvm", "n_total": 2, "bounds": [], "offsets": [0],
+                   "allocs": [2]}, f)
     fake_plan = {"mode": "rowgroup", "n_total": 1, "parts": [[]]}
-    with pytest.raises(ValueError, match="persisted .*-mode plan"):
+    with pytest.raises(ValueError, match="'jvm'-mode plan.*fresh out_dir"):
         encode(spark, out_dir=out, plan=fake_plan)
+    assert not os.path.exists(os.path.join(out, "chunks"))
 
 
 #: the only driver-collect shapes encode() may produce: the resume marker

@@ -1,9 +1,9 @@
-"""Zero-shuffle rowgroup encode mode (round 2): part_id = a footer-planned,
-byte-balanced bin of parquet row groups; scan + encode fuse into ONE
-``mapInArrow`` stage so token bytes never cross a shuffle.  The JVM scan
-feeding the salted n_tok-quantile repartition (skew.py) remains the path for
-``df=`` inputs — both modes must round-trip bit-identically and resume from
-the same lineage contract."""
+"""Zero-shuffle rowgroup encode (round 2), the engine's only encode path:
+part_id = a footer-planned, byte-balanced bin of parquet row groups; scan +
+encode fuse into ONE ``mapInArrow`` stage so token bytes never cross a
+shuffle.  ``df=`` inputs are staged to parquet and planned the same way, so
+every store round-trips bit-identically and resumes from the same lineage
+contract."""
 
 import json
 import os
@@ -109,40 +109,38 @@ def test_rowgroup_plan_balances_skewed_row_groups(tmp_dir):
 
 
 def test_rowgroup_resume_rejects_df_input(spark, token_table_dir, tmp_dir):
+    """A resume never re-stages a df=: the store's plan names its input,
+    so the error points at the out_dir-only resume."""
     src = os.path.join(token_table_dir, "tokens.parquet")
     out = os.path.join(tmp_dir, "enc")
     encode(spark, src, out, n_partitions=4, limit_parts=2)
-    with pytest.raises(ValueError, match="rowgroup"):
+    with pytest.raises(ValueError, match=r"encode\(spark, out_dir=\.\.\.\)"):
         encode(spark, out_dir=out, df=spark.read.parquet(src), n_partitions=4)
-
-
-def test_salted_scan_mode_rejected(spark, token_table_dir, tmp_dir):
-    """scan accepts exactly auto|rowgroup|jvm: the former fused pyarrow
-    salted scan is an unknown mode, rejected before anything is written."""
-    src = os.path.join(token_table_dir, "tokens.parquet")
-    out = os.path.join(tmp_dir, "enc")
-    with pytest.raises(ValueError, match="unknown scan mode 'salted'"):
-        encode(spark, src, out, n_partitions=4, scan="salted")
-    assert not os.path.exists(out)
+    assert not os.path.exists(os.path.join(out, "_staging"))
 
 
 def test_resume_of_fnv1a_plan_asks_for_reencode(spark, token_table_dir,
                                                 tmp_dir):
-    """A plan.json recorded by the former fused salted scan (assign_hash
-    fnv1a) cannot be resumed by the JVM scan's xxhash64 assignment: every
-    scan mode raises the re-encode ValueError instead of mixing part_id
-    assignments in one store."""
+    """A plan.json recorded by a removed scan — the fused salted scan
+    (assign_hash fnv1a) or the JVM scan with its salted repartition —
+    cannot be resumed: every way of calling encode raises the re-encode
+    ValueError instead of mixing part_id assignments in one store."""
     src = os.path.join(token_table_dir, "tokens.parquet")
-    out = os.path.join(tmp_dir, "enc")
-    os.makedirs(out)
-    with open(os.path.join(out, "plan.json"), "w") as f:
-        json.dump({"bounds": [10.0], "offsets": [0, 2], "allocs": [2, 2],
-                   "n_total": 4, "assign_hash": "fnv1a"}, f)
-    for kw in ({"input_path": src}, {"input_path": src, "scan": "jvm"},
-               {"df": spark.read.parquet(src)}):
-        with pytest.raises(ValueError, match="fresh out_dir"):
-            encode(spark, out_dir=out, n_partitions=4, **kw)
-    assert not os.path.exists(os.path.join(out, "chunks"))
+    old_plans = (
+        {"bounds": [10.0], "offsets": [0, 2], "allocs": [2, 2],
+         "n_total": 4, "assign_hash": "fnv1a"},
+        {"mode": "jvm", "bounds": [10.0], "offsets": [0, 2],
+         "allocs": [2, 2], "n_total": 4},
+    )
+    for i, old in enumerate(old_plans):
+        out = os.path.join(tmp_dir, f"enc{i}")
+        os.makedirs(out)
+        with open(os.path.join(out, "plan.json"), "w") as f:
+            json.dump(old, f)
+        for kw in ({"input_path": src}, {"df": spark.read.parquet(src)}, {}):
+            with pytest.raises(ValueError, match="fresh out_dir"):
+                encode(spark, out_dir=out, n_partitions=4, **kw)
+        assert not os.path.exists(os.path.join(out, "chunks"))
 
 
 def test_rowgroup_encode_plan_has_zero_shuffles(spark, token_table_dir):

@@ -98,9 +98,9 @@ def test_sort_by_is_pinned_on_resume(spark, stores, tmp_path):
 
 
 def test_sort_by_jvm_path(spark, stores, tmp_path):
-    """df= callers go through the jvm scan + salted repartition;
-    sortWithinPartitions leads with part_id so the per-part chunk splitter
-    still sees contiguous parts."""
+    """df= callers are staged to parquet and take the rowgroup scan, which
+    sorts each row group before chunk slicing: the store records the
+    order, round-trips every row and prunes on the sort key."""
     src, _, _, tbl = stores
     out = str(tmp_path / "jvm")
     df = spark.read.parquet(src)
