@@ -721,7 +721,7 @@ def _q_roundtrip_token_pruned(spark, sf):
     """Token-VALUE zone-map decode under the oracle (round-3 judge item #5):
     a containment predicate over the flattened token values ("rows holding a
     token ≥ 8") prunes chunks through the recorded token_values min/max
-    stats, then filters exactly with exists() — and must reproduce exactly
+    stats, then filters rows in the decode task — and must reproduce exactly
     what DuckDB's list_filter WHERE sees on the raw text."""
     from clj_orc_spark.pipeline import decode
 

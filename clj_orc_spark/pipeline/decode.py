@@ -500,10 +500,12 @@ def _zone_stats(stats, typ: pa.DataType) -> tuple[pa.Array, pa.Array]:
 
 def _cmp(op: str, a: pa.Array, v) -> pa.Array:
     """``a >= v`` (op "ge") or ``a <= v`` (op "le") under Spark's ordering,
-    which the exact row filter uses: NaN sorts above every value, so
-    ``x <= NaN`` holds where IEEE says false (stats are never NaN — encode
-    records non-finite chunks as stat-less).  An int bound past int64 sorts
-    past every stat the same way."""
+    the one comparator of zone-map pruning and the in-task row filter
+    (:func:`_row_mask`): NaN equals NaN and sorts above every value, so
+    ``x <= NaN`` holds for every x and ``NaN >= x`` holds where IEEE says
+    false (stats are never NaN — encode records non-finite chunks as
+    stat-less — so only row values take the second rule).  An int bound
+    past int64 sorts past every value the same way.  Nulls compare null."""
     typ = a.type
     beyond = 0
     if pa.types.is_floating(typ):
@@ -514,20 +516,60 @@ def _cmp(op: str, a: pa.Array, v) -> pa.Array:
         beyond = (v > np.iinfo(np.int64).max) - (v < np.iinfo(np.int64).min)
     if beyond:
         holds = (op == "le") == (beyond > 0)
-        return pc.is_valid(a) if holds else pa.array(np.zeros(len(a), bool))
-    b = pa.scalar(v, typ)
-    return pc.greater_equal(a, b) if op == "ge" else pc.less_equal(a, b)
+        out = pc.is_valid(a) if holds else pa.array(np.zeros(len(a), bool))
+    else:
+        b = pa.scalar(v, typ)
+        out = pc.greater_equal(a, b) if op == "ge" else pc.less_equal(a, b)
+    if op == "ge" and pa.types.is_floating(typ):
+        out = pc.or_kleene(out, pc.is_nan(a))
+    return out
 
 
 def _overlaps(mn: pa.Array, mx: pa.Array, lo, hi) -> pa.Array:
     """Kleene mask: zone ``[mn, mx]`` meets ``[lo, hi]`` (either bound
-    None)."""
-    cond = pa.array(np.ones(len(mn), dtype=bool))
-    if lo is not None:
-        cond = pc.and_kleene(cond, _cmp("ge", mx, lo))
-    if hi is not None:
-        cond = pc.and_kleene(cond, _cmp("le", mn, hi))
-    return cond
+    None, not both)."""
+    if lo is None:
+        return _cmp("le", mn, hi)
+    cond = _cmp("ge", mx, lo)
+    return cond if hi is None else pc.and_kleene(cond, _cmp("le", mn, hi))
+
+
+def _row_mask(tbl: pa.Table, preds: _Predicates) -> pa.Array | None:
+    """Kleene mask of the decoded rows passing every compiled predicate,
+    tested like the zone maps: each value ``v``
+    is the zone ``[v, v]`` under :func:`_overlaps`, on the storage ints
+    the bounds are given in (days / micros / 0-1), widened to the zone
+    type as Spark widens float to double.  A list predicate keeps a row
+    holding at least one value in range; a null list, struct or value
+    never passes.  None when there is no predicate (keep every row)."""
+    tests = [(k, [w]) for k, w in preds.ranges.items()]
+    tests += [(k, [(v, v) for v in vals]) for k, vals in preds.isin.items()]
+    mask = None
+    for key, windows in tests:
+        kind = preds.kinds[key]
+        if key in tbl.column_names:
+            arr = tbl.column(key).combine_chunks()
+        else:  # col.field: a shredded struct leaf
+            col, *path = key.split(".")
+            arr = pc.struct_field(tbl.column(col).combine_chunks(), path)
+        lists = arr if kind.startswith("list") else None
+        if lists is not None:
+            # the values list_parent_indices numbers: a null list's slot
+            # included, so the row's validity is ANDed in below
+            offs = lists.offsets
+            arr = lists.values.slice(offs[0].as_py(),
+                                     offs[-1].as_py() - offs[0].as_py())
+        elif kind == "date32":
+            arr = arr.cast(pa.int32())
+        v = arr.cast(_zone_type(kind))
+        hit = functools.reduce(pc.or_kleene, (
+            _overlaps(v, v, lo, hi) for lo, hi in windows))
+        if lists is not None:
+            rows = np.zeros(len(lists), dtype=bool)
+            rows[pc.list_parent_indices(lists).filter(hit).to_numpy()] = True
+            hit = pc.and_(pa.array(rows), lists.is_valid())
+        mask = hit if mask is None else pc.and_kleene(mask, hit)
+    return mask
 
 
 def _file_groups(files, cids) -> list[tuple[str, list[int]]]:
@@ -638,9 +680,9 @@ def _compile_predicates(schema, ranges: dict | None, isin: dict | None,
         if pred_kind[colname].startswith("list<"):
             vk = list_value_kind(pred_kind[colname])
             if vk not in ("int32", "int64", "float32", "float64", "str"):
-                # the exact containment filter compares decoded ELEMENTS
-                # against the bounds; temporal/bool elements would need a
-                # per-element storage cast inside exists() — not supported
+                # containment compares decoded ELEMENTS against the
+                # bounds; temporal/bool elements are not cast to their
+                # storage ints (_row_mask casts scalar columns only)
                 raise ValueError(
                     f"range containment on {pred_kind[colname]!r} column "
                     f"{colname!r} is not supported; filter after decode"
@@ -654,7 +696,7 @@ def _compile_predicates(schema, ranges: dict | None, isin: dict | None,
             raise ValueError(f"ranges[{colname!r}] needs at least one bound")
         if pred_kind[colname] == "bool":
             # normalize True/False bounds to the 0/1 storage ints the zone
-            # maps hold and the exact filter compares against
+            # maps hold and the row mask compares against
             ranges[colname] = tuple(
                 None if b is None else int(b) for b in rng
             )
@@ -774,87 +816,20 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     None)}``); ``col.field`` keys reach into shredded struct fields.  Every
     predicate both prunes chunks through the manifest's per-chunk min/max
     stats (zone maps — the ORC column-statistics analog), so chunks that
-    cannot match are never read, and filters the surviving rows exactly.
+    cannot match are never read, and filters the surviving rows exactly
+    inside the decode task.  Both use one comparator in Spark's ordering
+    (:func:`_cmp`: NaN equals NaN and sorts above every value, strings
+    compare bytewise, temporal bounds are storage ints), so they cannot
+    disagree and no Spark filter runs above the decode.
     """
     import json as _json
     import os
 
-    from pyspark.sql import functions as F
-
     schema = store_schema(spark, out_dir)
     order = [name for name, _ in schema]
-    ranges, isin, pred_kind, range_specs, isin_specs, columns = (
-        _compile_predicates(schema, ranges, isin, columns)
-    )
+    preds = _compile_predicates(schema, ranges, isin, columns)
+    columns = preds.columns
     ddl = _select_ddl(columns if columns is not None else order, schema)
-
-    def _containment(lo, hi):
-        # closure factory, NOT default args: Spark reads the lambda's arity
-        # to type the higher-order function, so extra bound params break it
-        def pred(t):
-            if lo is not None and hi is not None:
-                return (t >= F.lit(lo)) & (t <= F.lit(hi))
-            return (t >= F.lit(lo)) if lo is not None else (t <= F.lit(hi))
-
-        return pred
-
-    def _pred_col(colname):
-        # temporal bounds are the STORAGE ints (days / micros) — the same
-        # unit the zone maps hold — so the exact filter compares on the
-        # storage view of the decoded column.  Dotted keys (struct fields)
-        # work as-is: F.col('meta.year') is Spark nested-field access.
-        kind = pred_kind[colname]
-        if kind == "date32":
-            return F.unix_date(F.col(colname))
-        if kind == "ts_us_utc":
-            return F.unix_micros(F.col(colname))
-        if kind == "bool":
-            # bounds are 0/1 storage ints (normalized at plan time)
-            return F.col(colname).cast("int")
-        # ts_us compares the NTZ column directly against a typed
-        # TIMESTAMP_NTZ literal (_pred_bound) — casting the column to
-        # TIMESTAMP would reinterpret the wall clock in the SESSION
-        # timezone while the zone maps compare raw storage micros:
-        # silently wrong pruning on any non-UTC session.
-        return F.col(colname)
-
-    def _pred_bound(colname, v):
-        if pred_kind[colname] == "ts_us":
-            import datetime as _dt
-
-            wall = _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=v)
-            return F.expr(
-                f"TIMESTAMP_NTZ '{wall.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
-            )
-        return F.lit(v)
-
-    def exact_filter(df):
-        for colname, (lo, hi) in ranges.items():
-            if pred_kind[colname].startswith("list"):
-                df = df.where(F.exists(colname, _containment(lo, hi)))
-            else:
-                if lo is not None:
-                    df = df.where(
-                        _pred_col(colname) >= _pred_bound(colname, lo)
-                    )
-                if hi is not None:
-                    df = df.where(
-                        _pred_col(colname) <= _pred_bound(colname, hi)
-                    )
-        for colname, vals in isin.items():
-            if pred_kind[colname] == "ts_us":
-                # NTZ equality against typed TIMESTAMP_NTZ literals (isin
-                # would compare int micros through a session-tz cast)
-                conds = [
-                    F.col(colname) == _pred_bound(colname, v) for v in vals
-                ]
-                cond = conds[0]
-                for extra in conds[1:]:
-                    cond = cond | extra
-                df = df.where(cond)
-            else:
-                df = df.where(_pred_col(colname).isin(list(vals)))
-        return df
 
     chunks_dir = os.path.join(out_dir, "chunks")
     from .encode import _has_parquet, local_frame
@@ -864,7 +839,7 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
         return local_frame(spark, [], ddl)
 
     pruned = _stat_pruned_specs(
-        spark, out_dir, part_ids, range_specs, isin_specs
+        spark, out_dir, part_ids, preds.range_specs, preds.isin_specs
     )
     if pruned is not None:
         work_rows = [(f, _json.dumps(cids)) for f, cids in pruned]
@@ -890,14 +865,15 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     # scheme-qualified (remote I/O latency to hide).
     decode_files = make_files_decoder(columns, schema, needed_cols,
                                       prune_cols,
-                                      prefetch="://" in out_dir)
+                                      prefetch="://" in out_dir,
+                                      preds=preds)
 
     # each task receives its OWN file path as data — a closure over the full
     # file list would ship every task a copy of all paths (millions at 100 TB)
     work = spark.createDataFrame(
         spark.sparkContext.parallelize(work_rows, len(work_rows)), WORK_DDL
     )
-    return exact_filter(work.mapInArrow(decode_files, ddl))
+    return work.mapInArrow(decode_files, ddl)
 
 
 def _rg_keep(md, cids: set | None, needed_cols, prune_cols: bool) -> list[int]:
@@ -950,8 +926,10 @@ def _part_label(path: str) -> str:
 
 
 def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
-                       prefetch: bool = True):
-    """mapInArrow kernel over ``(path, cids_json)`` rows → decoded batches.
+                       prefetch: bool = True, preds=None):
+    """mapInArrow kernel over ``(path, cids_json)`` rows → decoded batches,
+    each chunk's rows filtered by the compiled ``preds`` (a
+    :class:`_Predicates`; None or predicate-free: every row).
 
     Round 5: row groups are read with a ONE-IN-FLIGHT background prefetch —
     while the codec kernels decode the chunks completed by group i, a
@@ -966,6 +944,11 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
     machinery entirely: one whole-file read + per-chunk grouping, the
     cheapest plan when there is nothing to skip and nothing to overlap."""
 
+    def emit(group):
+        t = decode_chunk_table(group, columns, schema)
+        mask = None if preds is None else _row_mask(t, preds)
+        yield from (t if mask is None else t.filter(mask)).to_batches()
+
     def decode_file(path, cids, pool):
         import pyarrow.parquet as pq
 
@@ -975,8 +958,8 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
         if not prefetch and cids is None and not prune_cols:
             tbl = pq.read_table(p, filesystem=fs)
             for cid in np.unique(tbl.column("chunk_id").to_numpy()):
-                group = tbl.filter(pc.equal(tbl.column("chunk_id"), cid))
-                yield from decode_chunk_table(group, columns, schema).to_batches()
+                yield from emit(
+                    tbl.filter(pc.equal(tbl.column("chunk_id"), cid)))
             return
         pf = pq.ParquetFile(p, filesystem=fs)
         keep = _rg_keep(pf.metadata, cids, needed_cols, prune_cols)
@@ -1019,8 +1002,8 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
             else:
                 carry = None
             for cid in np.unique(tbl.column("chunk_id").to_numpy()):
-                group = tbl.filter(pc.equal(tbl.column("chunk_id"), cid))
-                yield from decode_chunk_table(group, columns, schema).to_batches()
+                yield from emit(
+                    tbl.filter(pc.equal(tbl.column("chunk_id"), cid)))
 
     def decode_files(batches):
         from concurrent.futures import ThreadPoolExecutor

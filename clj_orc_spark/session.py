@@ -68,9 +68,10 @@ def get_spark(master: str | None = None, app_name: str = "clj-orc-spark") -> Spa
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # temporal predicates compare NTZ columns through a session-tz cast
-        # (decode._pred_col); pin UTC so days/micros bounds are machine-
-        # independent — also what a multi-executor cluster should run anyway
+        # Spark formats and extracts fields of TIMESTAMP values (decoded
+        # ts_us_utc columns, the parity functions' date/time strings) in
+        # the session tz; pin UTC so results are machine-independent —
+        # also what a multi-executor cluster should run anyway
         .config("spark.sql.session.timeZone", "UTC")
         # write parquet TIMESTAMP_MICROS, not INT96: pyarrow reads INT96 as
         # naive ns (tz-awareness lost), micros keep the isAdjustedToUTC flag

@@ -1,11 +1,13 @@
-"""Zone-map pruning on the driver.
+"""Zone-map pruning on the driver, row filtering in the decode task.
 
 Predicated ``decode()`` and ``decode_plan_report()`` plan from the committed
-manifest with pyarrow on the driver: planning starts no Spark job, prunes
-exactly like the exact row filter orders values (Spark's order: NaN above
-every value, strings bytewise), and falls back to a Spark read of the same
-manifest rows — never to the filesystem walk — when pyarrow cannot serve the
-store or sees an empty view of it.
+manifest with pyarrow on the driver: planning starts no Spark job, and falls
+back to a Spark read of the same manifest rows — never to the filesystem
+walk — when pyarrow cannot serve the store or sees an empty view of it.  The
+rows of kept chunks are filtered inside the decode task with the comparator
+the pruner uses (Spark's order: NaN equals NaN and sorts above every value,
+strings bytewise, ints past int64 beyond every value), so no Spark filter
+runs above the decode.
 """
 
 from __future__ import annotations
@@ -78,6 +80,10 @@ def _le_spark(a: float, b: float) -> bool:
     return a == a and a <= b
 
 
+def _is_nan(a) -> bool:
+    return a is not None and a != a
+
+
 #: (predicate kwargs, reference row filter over one full-decode row)
 CASES = {
     "float_hi_nan": (
@@ -112,6 +118,26 @@ CASES = {
     "zero_chunks": (
         {"ranges": {"id": (10_000, None)}},
         lambda r: False,
+    ),
+    "int_hi_beyond_int64": (
+        {"ranges": {"id": (None, 2**70)}},
+        lambda r: True,
+    ),
+    "int_lo_below_int64": (
+        {"ranges": {"id": (-2**70, 5)}},
+        lambda r: r["id"] <= 5,
+    ),
+    "int_isin_beyond_int64": (
+        {"isin": {"id": [3, 2**70]}},
+        lambda r: r["id"] == 3,
+    ),
+    "float_lo_keeps_nan": (
+        {"ranges": {"x": (100.0, None)}},
+        lambda r: r["x"] is not None and _le_spark(100.0, r["x"]),
+    ),
+    "float_isin_nan": (
+        {"isin": {"x": [float("nan"), 3.0]}},
+        lambda r: _is_nan(r["x"]) or r["x"] == 3.0,
     ),
 }
 
@@ -158,6 +184,19 @@ def test_pruned_decode_matches_filtered_full_decode(spark, store, case):
         assert rep["chunks_kept"] == rep["chunks_total"]
     elif case in ("struct_field", "ts_us_bound", "non_ascii_isin"):
         assert rep["chunks_kept"] < rep["chunks_total"]
+    elif case == "float_lo_keeps_nan":  # NaN sorts above every bound
+        assert len(want) == 200 and {5, 102, 199} <= set(want)
+    elif case == "float_isin_nan":  # NaN equals NaN
+        assert len(want) == 6
+
+
+def test_predicated_plan_has_no_spark_filter(spark, store):
+    """Rows are filtered inside the decode task: the executed plan of a
+    predicated decode has no Filter above its MapInArrow."""
+    df = decode(spark, store, ranges={"x": (100.0, None)})
+    assert df.count() == 200
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Filter" not in plan, plan
 
 
 def _plan_jobs(spark, group: str, plan) -> list[int]:

@@ -47,9 +47,10 @@ def _micros(ts: dt.datetime) -> int:
 
 def test_ts_us_predicate_is_session_tz_independent(spark, ts_store):
     """ts_us (TIMESTAMP_NTZ) range/isin predicates must return identical
-    rows whatever the session timezone: the exact filter compares the NTZ
-    column against typed TIMESTAMP_NTZ literals, never through a
-    session-tz cast (which silently disagreed with zone-map pruning)."""
+    rows whatever the session timezone: the decode task compares the
+    column's storage micros against the bounds, as zone-map pruning does,
+    never through a session-tz cast (which silently disagreed with
+    zone-map pruning)."""
     out, rows = ts_store
     lo, hi = _micros(rows[10]), _micros(rows[20])
     want = [k for k in range(48) if lo <= _micros(rows[k]) <= hi]
