@@ -8,11 +8,11 @@ src = "/tmp/clj-orc-spark-bench-500000/tokens.parquet"
 
 # monkeypatch timers
 t = {}
-# the encode job (scan + encode + chunk-file write + manifest records) runs
-# inside _commit_manifest's write; the parts markers are timed inside it
+# the encode job (scan + encode + chunk-file and manifest-file commits) runs
+# inside _commit_manifest's collect; the parts markers are timed inside it
 _cm, _wm = E._commit_manifest, E._write_parts_markers
-def cm(spark, out_dir, manifest, pending, n_phys):
-    t0=time.time(); _cm(spark, out_dir, manifest, pending, n_phys=n_phys); t["encode_job_and_commit"]=time.time()-t0
+def cm(spark, out_dir, rollup, pending):
+    t0=time.time(); _cm(spark, out_dir, rollup, pending); t["encode_job_and_commit"]=time.time()-t0
 def wm(out_dir, rows):
     t0=time.time(); _wm(out_dir, rows); t["parts_markers"]=time.time()-t0
 E._commit_manifest = cm

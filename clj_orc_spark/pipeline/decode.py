@@ -389,82 +389,54 @@ def _strip_file_scheme(uri: str) -> str:
     return urlparse(uri).path if uri.startswith("file:") else uri
 
 
-def _chunk_files(chunks_dir: str, part_ids: list[int] | None) -> list[str]:
-    import os
-
-    wanted = None if part_ids is None else {int(p) for p in part_ids}
-    files = []
-    for root, _, names in os.walk(chunks_dir):
-        base = os.path.basename(root)
-        if wanted is not None and base.startswith("part_id="):
-            if int(base.split("=", 1)[1]) not in wanted:
-                continue
-        files.extend(
-            os.path.join(root, n) for n in names if n.endswith(".parquet")
-        )
-    return sorted(files)
-
-
 def _read_manifest(spark, out_dir: str, columns: list[str],
                    part_ids=None, cols=None) -> pa.Table | None:
     """THE manifest reader of decode planning (file listing, zone-map
-    pruning, plan report): ``columns`` of the committed chunk records, rows
-    restricted to ``part_id IN part_ids`` and ``col IN cols`` (None = all).
+    pruning, plan report) and of the size gate: ``columns`` of the
+    committed chunk records, rows restricted to ``part_id IN part_ids`` and
+    ``col IN cols`` (None = all).
 
-    The manifest is payload-pruned metadata (KBs-to-MBs), so it is read with
-    pyarrow on the driver — planning starts no Spark job.  ``file`` reads
-    dictionary-encoded: it repeats once per chunk column.  When pyarrow
-    cannot serve the store (e.g. JVM-only credentials), or sees no fragment
-    in a manifest Spark can list, Spark reads the same columns and rows and
-    they come back through ``toArrow()``.  Returns None when there is no
-    manifest or it predates one of ``columns`` (stores written before
-    file/stats recording)."""
+    The manifest is payload-pruned metadata (KBs-to-MBs) written by the
+    encode tasks with pyarrow, so it is read with pyarrow on the driver —
+    planning starts no Spark job.  ``file`` reads dictionary-encoded: it
+    repeats once per chunk column.  Returns None when the store has no
+    manifest yet (no part committed a chunk).  A manifest without one of
+    ``columns`` comes from an earlier release (round-1 stores record no
+    ``file``) and raises, asking for a re-encode; so does any read
+    error."""
     import os
 
     import pyarrow.dataset as ds
 
-    from .encode import _has_parquet
-
     mdir = os.path.join(out_dir, "manifest", "chunks")
-    if not _has_parquet(spark, mdir):
+    dataset = pafs.hive_dataset(mdir, ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(dictionary_columns={"file"})))
+    if dataset is None:
         return None
-    wheres = [(f, v) for f, v in (
-        ("part_id", None if part_ids is None else [int(p) for p in part_ids]),
-        ("col", cols)) if v is not None]
-    try:
-        fs, path = pafs.resolve(mdir)
-        fmt = ds.ParquetFileFormat(
-            read_options=ds.ParquetReadOptions(dictionary_columns={"file"}))
-        dataset = ds.dataset(path, filesystem=fs, format=fmt,
-                             partitioning="hive")
-        if dataset.files:
-            if not set(columns) <= set(dataset.schema.names):
-                return None
-            flt = None
-            for f, v in wheres:
-                e = ds.field(f).isin(v)
-                flt = e if flt is None else flt & e
-            return dataset.to_table(columns=columns, filter=flt)
-    except (pa.ArrowException, OSError):
-        pass
-    from pyspark.sql import functions as F
-
-    m = spark.read.parquet(mdir)
-    if not set(columns) <= set(m.columns):
-        return None
-    for f, v in wheres:
-        m = m.where(F.col(f).isin(v))
-    return m.select(*columns).toArrow()
+    missing = sorted(set(columns) - set(dataset.schema.names))
+    if missing:
+        raise ValueError(
+            f"the manifest under {mdir!r} records no {missing}: a store "
+            "from a release whose layout no longer exists; re-encode into a "
+            "fresh out_dir"
+        )
+    flt = None
+    if part_ids is not None:
+        flt = ds.field("part_id").isin([int(p) for p in part_ids])
+    if cols is not None:
+        e = ds.field("col").isin(cols)
+        flt = e if flt is None else flt & e
+    return dataset.to_table(columns=columns, filter=flt)
 
 
-def _manifest_files(spark, out_dir: str, part_ids: list[int] | None) -> list[str] | None:
+def _manifest_files(spark, out_dir: str, part_ids: list[int] | None) -> list[str]:
     """Chunk file list from the manifest (the scale path: no filesystem walk
     — on an object store, enumeration comes from committed lineage, and
     uncommitted partial files from a crashed wave are never decoded).
-    Returns None when this run predates file recording (walk fallback)."""
+    Empty when the store has no manifest yet."""
     tbl = _read_manifest(spark, out_dir, ["file"], part_ids)
     if tbl is None:
-        return None
+        return []
     uris = {u for u in pc.unique(tbl.column("file")).to_pylist() if u}
     return [_strip_file_scheme(u) for u in sorted(uris)]
 
@@ -823,7 +795,6 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     disagree and no Spark filter runs above the decode.
     """
     import json as _json
-    import os
 
     schema = store_schema(spark, out_dir)
     order = [name for name, _ in schema]
@@ -831,23 +802,17 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     columns = preds.columns
     ddl = _select_ddl(columns if columns is not None else order, schema)
 
-    chunks_dir = os.path.join(out_dir, "chunks")
-    from .encode import _has_parquet, local_frame
-
-    # empty results are zero-partition frames: actions over them start no task
-    if not _has_parquet(spark, chunks_dir):  # empty run wrote no chunks
-        return local_frame(spark, [], ddl)
+    from .encode import local_frame
 
     pruned = _stat_pruned_specs(
         spark, out_dir, part_ids, preds.range_specs, preds.isin_specs
     )
     if pruned is not None:
         work_rows = [(f, _json.dumps(cids)) for f, cids in pruned]
-    else:
-        files = _manifest_files(spark, out_dir, part_ids)
-        if files is None:
-            files = _chunk_files(chunks_dir, part_ids)
-        work_rows = [(f, None) for f in files]
+    else:  # an empty store has no manifest, so no file
+        work_rows = [(f, None)
+                     for f in _manifest_files(spark, out_dir, part_ids)]
+    # empty results are zero-partition frames: actions over them start no task
     if not work_rows:
         return local_frame(spark, [], ddl)
 
@@ -947,7 +912,10 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
     def emit(group):
         t = decode_chunk_table(group, columns, schema)
         mask = None if preds is None else _row_mask(t, preds)
-        yield from (t if mask is None else t.filter(mask)).to_batches()
+        # a mask that keeps every row would only copy the chunk once more
+        if mask is not None and (mask.null_count or not pc.all(mask).as_py()):
+            t = t.filter(mask)
+        yield from t.to_batches()
 
     def decode_file(path, cids, pool):
         import pyarrow.parquet as pq

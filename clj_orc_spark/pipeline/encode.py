@@ -32,21 +32,27 @@ Layout under ``out_dir``::
     chunks/part_id=N/part-NNNNN-<run_id>.parquet
                                   encoded payload rows (one row per
                                   chunk×column), one file per part
-    manifest/chunks/*.parquet     chunk records (everything but the payload)
-    manifest/parts/*.parquet      partition completion markers (resume unit)
+    manifest/chunks/part_id=N/part-NNNNN-<run_id>.parquet
+                                  chunk records (everything but the
+                                  payload), one file per part, beside its
+                                  chunk file's name
+    manifest/parts/part_id=N/*.parquet
+                                  partition completion markers (resume unit)
     plan.json                     the part → row-group plan and schema
     run_meta.json                 run metadata (stream-metadata analog)
     _staging/*.parquet            a ``df=`` input, written once by Spark
 
 Commit protocol (one Spark job per encode, the per-file records of Delta
-Lake's writers): the encode task writes its part's chunk file with pyarrow
-under a ``.``-prefixed temp name, renames it into place, deletes every
-other entry of the part's directory, and only then yields the part's
-manifest records (:func:`write_chunk_files`).  The job writes those records
-to ``manifest/chunks``; the driver rolls them up with pyarrow and writes the
-parts markers with pyarrow, starting no job (:func:`_commit_manifest`).  A
-crash after a rename and before the markers leaves a part without a marker,
-and its resume rewrites the part's file and records.
+Lake's writers, committed by the writer of the data): the encode task
+writes its part's chunk file with pyarrow under a ``.``-prefixed temp name,
+renames it into place and deletes every other entry of the part's
+directory; then it commits the part's manifest file the same way, and only
+then yields the part's rollup row (:func:`write_chunk_files`).  The driver
+collects one rollup row per part and writes the parts markers with
+pyarrow (:func:`_commit_manifest`).  A crash after a task's commit and
+before the markers leaves a part without a marker, and its resume rewrites
+the part's chunk and manifest files.  Every chunk, manifest and marker
+file is read and written with pyarrow, never by Spark.
 """
 
 from __future__ import annotations
@@ -105,22 +111,17 @@ OUT_DDL = (
 #: columns of a chunk file: the encoder's rows minus the hive partition column
 CHUNK_FILE_SCHEMA = OUT_SCHEMA.remove(OUT_SCHEMA.get_field_index("part_id"))
 
-#: one manifest record per chunk column: the chunk row without its payload,
-#: plus the URI of the chunk file holding it
-MANIFEST_SCHEMA = OUT_SCHEMA.remove(
-    OUT_SCHEMA.get_field_index("payload")
+#: columns of a manifest file: one record per chunk column, the chunk-file
+#: row without its payload, plus the URI of the chunk file holding it
+MANIFEST_SCHEMA = CHUNK_FILE_SCHEMA.remove(
+    CHUNK_FILE_SCHEMA.get_field_index("payload")
 ).append(pa.field("file", pa.string()))
-MANIFEST_DDL = OUT_DDL.replace("payload binary, ", "") + ", file string"
 
 #: row-group target of a chunk file: chunk rows are opaque pre-packed
 #: payloads, so a larger group buys nothing, and ~4 payload rows per group
 #: give the pruned decode's chunk_id filters real row-group skipping
 #: (decode ``_rg_keep``)
 CHUNK_BLOCK_BYTES = 16 << 20
-
-#: physical columns of one encoded chunk; ``offsets`` is the int64 index that
-#: flattens ``tokens`` (list layout = `src/orc/col.clj:114-116`)
-CHUNK_COLS = ("doc_id", "source", "n_tok", "token_values", "offsets")
 
 #: the fixed token-table schema (BASELINE input_hint) as a schema descriptor —
 #: ``(name, kind)`` pairs, kind ∈ {str, int32, int64, float32, float64,
@@ -1117,9 +1118,8 @@ def make_rowgroup_encoder(chunk_bytes: int, fs=None, policy: str = "size",
 
 def _temp_path(part_dir: str, name: str) -> str:
     """Attempt-unique temp name for ``name`` in ``part_dir``: ``.``-prefixed
-    and not ending in ``.parquet``, so file sources, ``pyarrow.dataset``,
-    ``fsio.has_parquet`` and decode's directory walk never see a
-    half-written file."""
+    and not ending in ``.parquet``, so file sources and ``pyarrow.dataset``
+    never see a half-written chunk, manifest or marker file."""
     return f"{part_dir}/.{name}.{uuid.uuid4().hex[:12]}.tmp"
 
 
@@ -1142,31 +1142,44 @@ def _publish(fs, temp: str, path: str) -> None:
 #: but the payload, whose multi-MB values would only be hashed and dropped
 _SMALL_COLS = [f.name for f in CHUNK_FILE_SCHEMA if f.name != "payload"]
 
+#: one row per part an encode task committed: the values of its parts marker
+ROLLUP_DDL = ("part_id int, n_chunks long, n_rows long, enc_bytes long,"
+              " raw_bytes long")
+ROLLUP_SCHEMA = pa.schema([
+    ("part_id", pa.int32()), ("n_chunks", pa.int64()), ("n_rows", pa.int64()),
+    ("enc_bytes", pa.int64()), ("raw_bytes", pa.int64()),
+])
+
 
 class _ChunkFile:
-    """One part's chunk file while its encode task writes it.
+    """One part's chunk file and manifest file while its encode task
+    writes them.
 
     Rows buffer into row groups of ~:data:`CHUNK_BLOCK_BYTES`, uncompressed
     (payloads are already kernel-encoded), in a :func:`_temp_path` file.
-    The manifest rows wait until :meth:`commit` has published the file."""
+    The manifest records wait until :meth:`commit` has published the chunk
+    file, so a recorded ``file`` always exists."""
 
-    def __init__(self, fs, chunks_dir: str, chunks_uri: str, pid: int,
+    def __init__(self, fs, root: str, chunks_uri: str, pid: int,
                  run_id: str):
         import pyarrow.parquet as pq
 
-        name = f"part-{pid:05d}-{run_id}.parquet"
+        self.name = f"part-{pid:05d}-{run_id}.parquet"
         self.fs = fs
-        self.dir = f"{chunks_dir}/part_id={pid}"
-        self.path = f"{self.dir}/{name}"
-        self.temp = _temp_path(self.dir, name)
-        self.uri = f"{chunks_uri}/part_id={pid}/{name}"
+        self.pid = pid
+        self.dir = f"{root}/chunks/part_id={pid}"
+        self.manifest_dir = f"{root}/manifest/chunks/part_id={pid}"
+        self.path = f"{self.dir}/{self.name}"
+        self.temps = [_temp_path(self.dir, self.name)]  # chunk, manifest
+        self.uri = f"{chunks_uri}/part_id={pid}/{self.name}"
         self.rows: list[pa.RecordBatch] = []
         self.nbytes = 0
         self.manifest: list[pa.RecordBatch] = []
         fs.create_dir(self.dir, recursive=True)
         self.writer = pq.ParquetWriter(
-            self.temp, CHUNK_FILE_SCHEMA, filesystem=fs, compression="none",
-            use_dictionary=_SMALL_COLS, write_statistics=_SMALL_COLS,
+            self.temps[0], CHUNK_FILE_SCHEMA, filesystem=fs,
+            compression="none", use_dictionary=_SMALL_COLS,
+            write_statistics=_SMALL_COLS,
         )
 
     def add(self, batch: pa.RecordBatch) -> None:
@@ -1189,50 +1202,68 @@ class _ChunkFile:
             self.writer.write_table(pa.Table.from_batches(self.rows))
             self.rows, self.nbytes = [], 0
 
-    def commit(self) -> list[pa.RecordBatch]:
+    def commit(self) -> tuple:
+        """Publish the chunk file, then the part's manifest file (snappy,
+        no Arrow schema blob: it counts towards the store size); return
+        the part's :data:`ROLLUP_SCHEMA` row."""
+        import pyarrow.parquet as pq
+
         self._flush()
         self.writer.close()
-        _publish(self.fs, self.temp, self.path)
-        return self.manifest
+        _publish(self.fs, self.temps[0], self.path)
+        records = pa.Table.from_batches(self.manifest, MANIFEST_SCHEMA)
+        temp = _temp_path(self.manifest_dir, self.name)
+        self.temps.append(temp)
+        self.fs.create_dir(self.manifest_dir, recursive=True)
+        pq.write_table(records, temp, filesystem=self.fs,
+                       compression="snappy", store_schema=False)
+        _publish(self.fs, temp, f"{self.manifest_dir}/{self.name}")
+        # every record of a chunk carries the chunk's row count
+        chunks = records.group_by("chunk_id").aggregate([("n_rows", "max")])
+        return (self.pid, chunks.num_rows,
+                pc.sum(chunks.column("n_rows_max")).as_py(),
+                pc.sum(records.column("enc_bytes")).as_py(),
+                pc.sum(records.column("raw_bytes")).as_py())
 
     def abort(self) -> None:
-        """Best-effort removal of the temp file of a failed attempt (a
-        killed attempt's temp is removed by the next commit instead)."""
+        """Best-effort removal of the temp files of a failed attempt (a
+        killed attempt's temps are removed by the next commit instead)."""
         try:
             self.writer.close()
         except (OSError, pa.ArrowException):
             pass
-        try:
-            self.fs.delete_file(self.temp)
-        except (OSError, pa.ArrowException):
-            pass
+        for temp in self.temps:
+            try:
+                self.fs.delete_file(temp)
+            except (OSError, pa.ArrowException):
+                pass
 
 
 def write_chunk_files(encoder, out_dir: str):
     """Wrap a ``mapInArrow`` encoder (:func:`make_rowgroup_encoder`) so its
-    task writes the chunk files itself and yields manifest rows
-    (:data:`MANIFEST_DDL`) instead of chunk rows.
+    task commits each part's chunk file and manifest file itself and
+    yields one :data:`ROLLUP_DDL` row per part instead of chunk rows.
 
     Each batch an encoder yields is one chunk of one part.  Every part the
-    task sees gets one :class:`_ChunkFile` named
-    ``out_dir/chunks/part_id=P/part-PPPPP-<run_id>.parquet``; ``run_id`` is
-    drawn here, once per encode, so a retried or speculative attempt lands
-    on the same name.  The manifest rows are yielded only after every file
-    of the task is renamed into place: a recorded ``file`` always exists.
+    task sees gets one :class:`_ChunkFile`: the chunk file
+    ``out_dir/chunks/part_id=P/part-PPPPP-<run_id>.parquet`` and, beside
+    it, the manifest file ``out_dir/manifest/chunks/part_id=P/`` of the
+    same name; ``run_id`` is drawn here, once per encode, so a retried or
+    speculative attempt lands on the same names.  The rollup rows are
+    yielded only after every file of the task is renamed into place.
     ``file`` is the URI form Spark's ``input_file_name()`` gives
     (``file:///abs/...`` for a local store, made absolute here because
     tasks need not share the driver's working directory).  The tasks
-    resolve the chunks directory with pyarrow, as decode resolves the
-    recorded URIs."""
-    chunks_dir = os.path.join(out_dir, "chunks")
-    chunks_uri = chunks_dir
-    if fsio.is_local(chunks_dir):
-        chunks_dir = os.path.abspath(chunks_dir)
-        chunks_uri = "file://" + chunks_dir
+    resolve ``out_dir`` with pyarrow, as decode resolves the recorded
+    URIs."""
+    chunks_uri = os.path.join(out_dir, "chunks")
+    if fsio.is_local(out_dir):
+        out_dir = os.path.abspath(out_dir)
+        chunks_uri = "file://" + os.path.join(out_dir, "chunks")
     run_id = uuid.uuid4().hex
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        fs, root = pafs.resolve(chunks_dir)
+        fs, root = pafs.resolve(out_dir)
         files: dict[int, _ChunkFile] = {}
         committed = None
         try:
@@ -1248,8 +1279,12 @@ def write_chunk_files(encoder, out_dir: str):
             if committed is None:
                 for f in files.values():
                     f.abort()
-        for manifest in committed:
-            yield from manifest
+        if committed:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type)
+                 for c, f in zip(zip(*committed), ROLLUP_SCHEMA)],
+                schema=ROLLUP_SCHEMA,
+            )
 
     return run
 
@@ -1370,10 +1405,6 @@ def _load_or_compute_rowgroup_plan(spark, out_dir: str, input_path, df,
     return plan
 
 
-def _has_parquet(spark, path: str) -> bool:
-    return fsio.has_parquet(spark, path)
-
-
 def local_frame(spark, rows: list[tuple], ddl: str):
     """DataFrame over rows the driver already holds, typed by ``ddl``.
 
@@ -1408,39 +1439,22 @@ def local_frame(spark, rows: list[tuple], ddl: str):
 
 
 #: per-part completion markers (the resume unit) under manifest/parts
-PARTS_DDL = ("part_id int, n_chunks long, n_rows long, enc_bytes long,"
-             " raw_bytes long, status string, completed_at double")
+PARTS_DDL = ROLLUP_DDL + ", status string, completed_at double"
 #: the columns of a marker file (``part_id`` is its hive directory)
-PARTS_SCHEMA = pa.schema([
-    ("n_chunks", pa.int64()), ("n_rows", pa.int64()),
-    ("enc_bytes", pa.int64()), ("raw_bytes", pa.int64()),
-    ("status", pa.string()), ("completed_at", pa.float64()),
-])
-
-
-def _write_per_part(df, path: str) -> None:
-    """Write manifest records partitioned by part_id with dynamic overwrite —
-    re-running a partition replaces its records (idempotent lineage) instead
-    of appending duplicates.  The overwrite mode is set on the writer, not
-    the session: a caller-owned session in static mode would otherwise wipe
-    the records of completed partitions on resume."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(path)
-    )
+PARTS_SCHEMA = ROLLUP_SCHEMA.remove(0).append(
+    pa.field("status", pa.string())).append(
+    pa.field("completed_at", pa.float64()))
 
 
 def _write_parts_markers(out_dir: str, rows: list[tuple]) -> None:
     """Write the parts markers (:data:`PARTS_SCHEMA` rows) with pyarrow on
     the driver: a few rows per wave, so a Spark job here is pure scheduling
     overhead.  Each part gets one marker file that replaces its directory's
-    entries (:func:`_publish`), the per-part overwrite of
-    :func:`_write_per_part`; until the rename a part keeps its old marker.
-    The markers count towards the store size, so the one-row files are
-    written lean: no Arrow schema blob (~0.5 KB), no dictionary pages, no
-    compression."""
+    entries (:func:`_publish`), the same per-part overwrite as the encode
+    task's chunk and manifest files; until the rename a part keeps its old
+    marker.  The markers count towards the store size, so the one-row files
+    are written lean: no Arrow schema blob (~0.5 KB), no dictionary pages,
+    no compression."""
     import pyarrow.parquet as pq
 
     parts_dir = os.path.join(out_dir, "manifest", "parts")
@@ -1469,124 +1483,51 @@ def _write_parts_markers(out_dir: str, rows: list[tuple]) -> None:
         list(pool.map(write, rows))
 
 
-def _manifest_rollup(manifest_dir: str, pending: list[int],
-                     n_phys: int) -> dict | None:
-    """Per-part completion rollup computed from the just-written manifest
-    with pyarrow ON THE DRIVER — the manifest is partition-count-bounded
-    metadata (KBs per part), so a whole Spark aggregation job here is pure
-    scheduling overhead.  Returns ``{part_id: {n_chunks, n_rows, enc_bytes,
-    raw_bytes}}`` matching the Spark aggregation exactly (same double-sum
-    then truncate for n_rows), or None when pyarrow cannot serve the store
-    or reads no row of the wave (the caller falls back to the Spark job):
-    an empty view of the manifest just written is not a wave of 0-chunk
-    parts."""
-    try:
-        import pyarrow.dataset as ds
-
-        fs, path = pafs.resolve(manifest_dir)
-        dataset = ds.dataset(path, filesystem=fs, format="parquet",
-                             partitioning="hive")
-        t = dataset.to_table(
-            columns=["part_id", "chunk_id", "n_rows", "enc_bytes",
-                     "raw_bytes"],
-            filter=ds.field("part_id").isin([int(p) for p in pending]),
-        )
-        if t.num_rows == 0:
-            return None
-        gb = t.group_by("part_id").aggregate([
-            ("chunk_id", "count_distinct"), ("n_rows", "sum"),
-            ("enc_bytes", "sum"), ("raw_bytes", "sum"),
-        ])
-        out = {}
-        for i in range(gb.num_rows):
-            pid = gb.column("part_id")[i].as_py()
-            out[int(pid)] = {
-                "n_chunks": int(gb.column("chunk_id_count_distinct")[i].as_py()),
-                "n_rows": int(
-                    float(gb.column("n_rows_sum")[i].as_py() or 0) / n_phys
-                ),
-                "enc_bytes": int(gb.column("enc_bytes_sum")[i].as_py() or 0),
-                "raw_bytes": int(gb.column("raw_bytes_sum")[i].as_py() or 0),
-            }
-        return out
-    except (pa.ArrowException, OSError):
-        return None
-
-
-def _commit_manifest(spark, out_dir: str, manifest, pending: list[int],
-                     n_phys: int = len(CHUNK_COLS)) -> None:
+def _commit_manifest(spark, out_dir: str, rollup, pending: list[int]) -> None:
     """Manifest commit for a wave of partitions.
 
-    ``manifest`` is the encode frame of :func:`write_chunk_files`: its
-    tasks write the chunk files and yield the chunk records (payload
-    dropped, ``file`` = the chunk file's URI, so decode and resume never
-    need a filesystem walk).  Writing those records to ``manifest/chunks``
-    is the encode's one Spark job.  The driver then rolls the wave up from
-    the records just written (KBs, with pyarrow; a Spark aggregation only
-    when pyarrow cannot serve the store) and writes the per-part completion
-    markers with pyarrow.  Records and markers are both written with
-    per-part_id overwrite, never blind append: a crash between the two
-    writes leaves records for a part without a marker, and the resumed run
-    *replaces* them instead of appending duplicates that would
+    ``rollup`` is the encode frame of :func:`write_chunk_files`: running it
+    is the encode's one Spark job, whose tasks commit each part's chunk
+    file and manifest file (``file`` = the chunk file's URI, so decode and
+    resume never need a filesystem walk) and yield one rollup row per part.
+    The driver collects those rows and writes the per-part completion
+    markers with pyarrow.  Every file is written with per-part overwrite,
+    never blind append: a crash after a task's commit and before the
+    markers leaves records for a part without a marker, and the resumed
+    run *replaces* them instead of appending duplicates that would
     double-count size rollups."""
-    from pyspark.sql import functions as F
-
-    manifest_dir = os.path.join(out_dir, "manifest", "chunks")
-    _write_per_part(manifest, manifest_dir)
-    # SCALE GUARD: the rollup is the encode pipeline's only driver-side
-    # collect of job output, and it must stay bounded by the PARTITION
-    # count, never chunk rows (millions at 100 TB) — pinned by
+    # SCALE GUARD: the encode pipeline's only driver-side collect of job
+    # output must stay bounded by the PARTITION count, never chunk rows
+    # (millions at 100 TB) — pinned by
     # tests/test_round4_fixes.py::test_commit_manifest_collects_only_part_ids
-    by_pid = {}
-    if _has_parquet(spark, manifest_dir):
-        by_pid = _manifest_rollup(manifest_dir, pending, n_phys)
-    if by_pid is None:  # pyarrow cannot serve or sees no row: Spark fallback
-        agg_rows = (
-            spark.read.parquet(manifest_dir)
-            .where(F.col("part_id").isin(pending))
-            .groupBy("part_id")
-            .agg(
-                F.countDistinct("chunk_id").alias("n_chunks"),
-                (F.sum("n_rows") / F.lit(n_phys)).cast("long").alias("n_rows"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-            )
-            .collect()
-        )
-        by_pid = {r["part_id"]: r for r in agg_rows}
+    by_pid = {r[0]: tuple(r[1:]) for r in rollup.collect()}
     now = time.time()
     # a pending part that produced ZERO chunks (e.g. an empty row group)
     # still needs its completion marker, or resume re-runs it forever
-    rows = []
-    for p in pending:
-        r = by_pid.get(p)
-        rows.append((
-            int(p),
-            int(r["n_chunks"]) if r else 0,
-            int(r["n_rows"] or 0) if r else 0,
-            int(r["enc_bytes"] or 0) if r else 0,
-            int(r["raw_bytes"] or 0) if r else 0,
-            "complete", now,
-        ))
-    _write_parts_markers(out_dir, rows)
+    _write_parts_markers(out_dir, [
+        (int(p), *by_pid.get(p, (0, 0, 0, 0)), "complete", now)
+        for p in pending
+    ])
 
 
 def completed_part_ids(spark, out_dir: str) -> set[int]:
-    """part_ids with a completion marker under ``manifest/parts``.
+    """part_ids with a completion marker under ``manifest/parts``, read with
+    pyarrow.
 
     A store with no marker yet (missing or marker-less directory) has none
-    complete.  Any other read error raises, naming the parts directory: an
-    empty answer would silently re-encode every part."""
+    complete.  A listing error or an unreadable marker raises, naming the
+    parts directory: an empty answer would silently re-encode every part."""
     parts_dir = os.path.join(out_dir, "manifest", "parts")
     try:
-        if not _has_parquet(spark, parts_dir):
+        markers = pafs.hive_dataset(parts_dir)
+        if markers is None:
             return set()
-        rows = spark.read.parquet(parts_dir).select("part_id").distinct().collect()
-    except Exception as e:
+        pids = markers.to_table(columns=["part_id"]).column("part_id")
+    except (OSError, pa.ArrowException) as e:
         raise RuntimeError(
             f"cannot read the parts markers under {parts_dir!r}: {e}"
         ) from e
-    return {r["part_id"] for r in rows}
+    return set(pc.unique(pids).to_pylist())
 
 
 def encode(
@@ -1696,10 +1637,8 @@ def encode(
     work = rowgroup_work_df(spark, plan["parts"], pending)
     encoder = make_rowgroup_encoder(chunk_bytes, fs, selection, schema,
                                     sort_by=eff_sort)
-    manifest = work.mapInArrow(write_chunk_files(encoder, out_dir),
-                               MANIFEST_DDL)
-    _commit_manifest(spark, out_dir, manifest, pending,
-                     n_phys=len(physical_cols(schema)))
+    rollup = work.mapInArrow(write_chunk_files(encoder, out_dir), ROLLUP_DDL)
+    _commit_manifest(spark, out_dir, rollup, pending)
 
     wall = time.time() - t0
     report = {

@@ -1,14 +1,13 @@
-"""Filesystem-agnostic sidecar I/O via the JVM Hadoop FileSystem.
+"""Filesystem-agnostic sidecar text I/O via the JVM Hadoop FileSystem.
 
-The manifest records go through Spark's writer, which speaks any configured
-filesystem (s3a://, gs://, hdfs://, file://); chunk files and parts markers
-are written with pyarrow (pafs.py).  What used
-to break on an object store was the engine's OWN small-file I/O — plan.json,
-run_meta.json, "does this directory hold parquet yet" probes — all plain
-POSIX calls.  These helpers route scheme-qualified paths through the Hadoop
-FS API (same credentials/config as the Spark job, e.g. the reference's S3A
-flow `src/orc/read.clj:27-49` mapped by sources/orc.py:configure); bare local
-paths keep the fast os.* calls.
+The store's parquet files (chunk files, manifest files, parts markers) are
+written and read with pyarrow (pafs.py).  What used to break on an object
+store was the engine's OWN small text files — plan.json, run_meta.json,
+stream_meta.json, the stream checkpoint's source log — read and written
+with plain POSIX calls.  These helpers route scheme-qualified paths through
+the Hadoop FS API (same credentials/config as the Spark job, e.g. the
+reference's S3A flow `src/orc/read.clj:27-49` mapped by
+sources/orc.py:configure); bare local paths keep the fast os.* calls.
 """
 
 from __future__ import annotations
@@ -55,29 +54,3 @@ def write_text(spark, path: str, text: str) -> None:
     out = fs.create(jpath, True)
     out.write(bytearray(text.encode("utf-8")))
     out.close()
-
-
-def _raise_unless_missing(err: OSError) -> None:
-    if not isinstance(err, FileNotFoundError):
-        raise err
-
-
-def has_parquet(spark, path: str) -> bool:
-    """True when any .parquet file exists under ``path`` (recursive; stops at
-    the first hit — on an object store this is one bounded LIST, not a walk
-    of the whole prefix).  A missing path holds none; any other listing
-    error (permission, network, credentials) raises, since callers read
-    False as "nothing written yet"."""
-    if is_local(path):
-        for _, _, files in os.walk(path, onerror=_raise_unless_missing):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-    fs, jpath = _fs(spark, path)
-    if not fs.exists(jpath):
-        return False
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            return True
-    return False

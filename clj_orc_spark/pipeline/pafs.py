@@ -1,14 +1,15 @@
 """pyarrow.fs resolution for the engine's Python-side I/O.
 
-The encode plans from parquet/ORC footers and reads row groups with pyarrow
-inside ``mapInArrow``; its tasks write their chunk files with pyarrow, the
-driver writes the parts markers and sizes the manifest with pyarrow, and the
-decode tasks read chunk files with it.  The manifest records go through
-Spark's JVM writer and the tiny sidecar files through fsio.py (Hadoop FS).
-This module maps any location onto a ``pyarrow.fs.FileSystem`` so all of
-that works on object stores, not just local disk — the reference's headline
-remote flow is S3A (`src/orc/read.clj:27-49`,
-`README.md:87-107`):
+Every chunk, manifest and marker file is written and read with pyarrow.
+The encode plans from parquet/ORC footers and reads row groups inside
+``mapInArrow``; its tasks write each part's chunk file and manifest file;
+the driver writes the parts markers, reads the manifest to plan decodes and
+size the store, and reads the markers to resume (:func:`hive_dataset`); the
+decode tasks read the chunk files.  Only the tiny text sidecars go through
+fsio.py (Hadoop FS).  This module maps any location onto a
+``pyarrow.fs.FileSystem`` so all of that works on object stores, not just
+local disk — the reference's headline remote flow is S3A
+(`src/orc/read.clj:27-49`, `README.md:87-107`):
 
 * bare local paths → ``LocalFileSystem``;
 * scheme-qualified URIs (``s3://``, ``gs://``, ``hdfs://``, ``file://``) →
@@ -102,6 +103,20 @@ def file_infos(fs: _fs.FileSystem, path: str) -> list[_fs.FileInfo]:
         (i for i in fs.get_file_info(sel) if i.type == _fs.FileType.File),
         key=lambda i: i.path,
     )
+
+
+def hive_dataset(path: str, fmt="parquet"):
+    """``pyarrow.dataset`` over the hive-partitioned (``part_id=P/``) files
+    under ``path`` — ``.``/``_``-prefixed entries (temp files) are skipped —
+    or None when ``path`` does not exist or holds no such file.  Any other
+    error (listing, footer, unservable scheme) raises."""
+    import pyarrow.dataset as ds
+
+    fs, root = resolve(path)
+    if fs.get_file_info(root).type == _fs.FileType.NotFound:
+        return None
+    dataset = ds.dataset(root, filesystem=fs, format=fmt, partitioning="hive")
+    return dataset if dataset.files else None
 
 
 def list_files(fs: _fs.FileSystem, path: str, ext: str) -> list[str]:

@@ -184,7 +184,7 @@ def stream_encode(
     micro-batch.  The plan depends only on the logged files, their footers
     and the pinned K, so a replayed batch (foreachBatch at-least-once)
     recomputes the SAME parts: its encode tasks replace each part's chunk
-    file and the commit overwrites each part's records, the streaming
+    file and manifest file, and the commit each part's marker, the streaming
     analog of the batch pipeline's per-partition lineage.  Output layout,
     manifest, decode and verify are identical to the batch path.
     """
@@ -194,7 +194,7 @@ def stream_encode(
     from ..pipeline.encode import (
         DEFAULT_CHUNK_BYTES,
         DEFAULT_SCHEMA,
-        MANIFEST_DDL,
+        ROLLUP_DDL,
         _commit_manifest,
         _rowgroup_plan,
         _schema_from_files,
@@ -249,12 +249,12 @@ def stream_encode(
         base = int(batch_id) * k
         parts = {base + i: units for i, units in enumerate(plan["parts"])}
         # a replay draws a new run_id: its files replace the batch's parts
-        manifest = rowgroup_work_df(sess, parts, list(parts)).mapInArrow(
+        rollup = rowgroup_work_df(sess, parts, list(parts)).mapInArrow(
             write_chunk_files(make_rowgroup_encoder(cb, fs, selection),
                               out_dir),
-            MANIFEST_DDL,
+            ROLLUP_DDL,
         )
-        _commit_manifest(sess, out_dir, manifest, list(parts))
+        _commit_manifest(sess, out_dir, rollup, list(parts))
 
     writer = stream.writeStream.foreachBatch(handle_batch).option(
         "checkpointLocation", checkpoint

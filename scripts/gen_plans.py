@@ -95,12 +95,16 @@ def main() -> None:
         "## encode — rowgroup scan (the only encode path): ZERO shuffles",
         "",
         "```",
-        "parquet write of the manifest records (manifest/chunks/part_id=N)",
+        "collect of one rollup row per part (no InsertIntoHadoopFsRelation)",
         " +- mapInArrow: pyarrow row-group read -> zero-copy chunk slices",
         "    -> codec kernels (selection cached per part, guarded per chunk)",
-        "    -> pyarrow chunk-file write (chunks/part_id=N), yields records",
+        "    -> pyarrow chunk-file commit (chunks/part_id=N), then",
+        "       pyarrow manifest-file commit (manifest/chunks/part_id=N)",
         "     +- Scan ExistingRDD (pending part ids, one per task)",
         "```",
+        "",
+        "The driver writes the parts markers (manifest/parts/part_id=N)",
+        "with pyarrow from the collected rows: one Spark job per encode.",
         "",
         "part_id is planned from parquet footers (byte-balanced LPT bins of",
         "row groups — the explicit skew control) and persisted in plan.json,",

@@ -1,13 +1,16 @@
-"""The encode task's own chunk-file commit, and faults around it.
+"""The encode task's own chunk-file and manifest-file commit, and faults
+around it.
 
 Each encode task writes its part's chunk file under a temp name, renames it
-into ``chunks/part_id=P/`` and deletes the directory's other entries before
-it yields the part's manifest records.  Pinned here: a resume after a crash
-between the rename and the manifest commit, and after a real task failure,
-leaves one file per part, no duplicate record and a bit-identical store;
-corrupt or truncated chunk files fail naming the file and its part; and a
-``plan=`` unit that cannot be read raises before ``plan.json`` pins a
-schema.
+into ``chunks/part_id=P/`` and deletes the directory's other entries, then
+commits the part's manifest file into ``manifest/chunks/part_id=P/`` the
+same way, before it yields the part's rollup row.  Pinned here: a resume
+after a crash between the rename and the manifest commit, and after a real
+task failure, leaves one chunk file and one manifest file per part, no
+duplicate record and a bit-identical store; corrupt or truncated chunk
+files fail naming the file and its part; a manifest without ``file``
+records asks for a re-encode; and a ``plan=`` unit that cannot be read
+raises before ``plan.json`` pins a schema.
 """
 
 from __future__ import annotations
@@ -26,17 +29,40 @@ from clj_orc_spark.pipeline import decode, encode, verify_roundtrip
 from clj_orc_spark.pipeline.encode import DEFAULT_SCHEMA
 
 
-def _part_dirs(out: str) -> dict[int, list[str]]:
-    chunks = os.path.join(out, "chunks")
-    return {int(d.split("=", 1)[1]): sorted(os.listdir(os.path.join(chunks, d)))
-            for d in os.listdir(chunks) if d.startswith("part_id=")}
+def _part_dirs(out: str, sub: str = "chunks") -> dict[int, list[str]]:
+    top = os.path.join(out, sub)
+    return {int(d.split("=", 1)[1]): sorted(os.listdir(os.path.join(top, d)))
+            for d in os.listdir(top) if d.startswith("part_id=")}
+
+
+def _recorded_files(out: str) -> set[str]:
+    """Local paths of the chunk files the committed manifest files name."""
+    mdir = os.path.join(out, "manifest", "chunks")
+    return {u.removeprefix("file://")
+            for r, _, names in os.walk(mdir) for n in names
+            if n.endswith(".parquet")
+            for u in pq.read_table(os.path.join(r, n), columns=["file"])
+            .column("file").to_pylist()}
 
 
 def _assert_clean_store(spark, out: str, source) -> None:
-    """One file per part directory, no duplicate ``(chunk_id, col)``
-    record, and a bit-identical round trip."""
-    for pid, names in _part_dirs(out).items():
+    """One chunk file per part directory and, beside it, one manifest file
+    and nothing else, whose records all name that part's chunk file; no
+    duplicate ``(chunk_id, col)`` record; and a bit-identical round
+    trip."""
+    chunk_dirs = _part_dirs(out)
+    for pid, names in chunk_dirs.items():
         assert len(names) == 1 and names[0].endswith(".parquet"), (pid, names)
+    manifest_dirs = _part_dirs(out, os.path.join("manifest", "chunks"))
+    assert sorted(manifest_dirs) == sorted(chunk_dirs)
+    for pid, names in manifest_dirs.items():
+        assert len(names) == 1 and names[0].endswith(".parquet"), (pid, names)
+        part_dir = os.path.join(out, "manifest", "chunks", f"part_id={pid}")
+        files = pq.read_table(os.path.join(part_dir, names[0]),
+                              columns=["file"]).column("file").to_pylist()
+        chunk_file = os.path.join(os.path.abspath(out), "chunks",
+                                  f"part_id={pid}", chunk_dirs[pid][0])
+        assert set(files) == {"file://" + chunk_file}, (pid, set(files))
     records = pq.read_table(os.path.join(out, "manifest", "chunks"),
                             columns=["chunk_id", "col"])
     keys = pc.binary_join_element_wise(
@@ -93,6 +119,9 @@ def test_resume_after_failed_task(spark, token_table_dir, tmp_dir):
     out = os.path.join(tmp_dir, "out")
     with pytest.raises(Exception):
         encode(spark, out_dir=out, plan=plan)
+    # whatever the failed run committed names chunk files that exist
+    for path in _recorded_files(out):
+        assert os.path.isfile(path), path
     with open(inputs[1], "wb") as fh:
         fh.write(good)
 
@@ -148,15 +177,30 @@ def test_truncated_chunk_file_names_file_and_part(spark, store):
     _assert_located(err, path, pid)
 
 
+def test_manifest_without_file_records_asks_for_reencode(spark, store):
+    """A manifest that records no chunk file (a round-1 store) raises and
+    asks for a re-encode instead of walking the chunks directory."""
+    out, _, _ = store
+    mdir = os.path.join(out, "manifest", "chunks")
+    for root, _, names in os.walk(mdir):
+        for name in names:
+            path = os.path.join(root, name)
+            pq.write_table(pq.read_table(path).drop_columns(["file"]), path)
+    with pytest.raises(ValueError, match="re-encode into a fresh out_dir"):
+        decode(spark, out)
+
+
 def test_plan_without_units_takes_default_schema(spark, tmp_dir):
     """A ``plan=`` with no unit has no file to derive a schema from: the
-    token-table schema is pinned, and the empty parts are complete."""
+    token-table schema is pinned, and the empty parts are complete.  The
+    store has no manifest, so its decode is empty and starts no task."""
     out = os.path.join(tmp_dir, "out")
     plan = {"mode": "rowgroup", "n_total": 1, "parts": [[]]}
     assert encode(spark, out_dir=out, plan=plan)["pending"] == 1
     with open(os.path.join(out, "plan.json")) as fh:
         assert json.load(fh)["schema"] == [list(t) for t in DEFAULT_SCHEMA]
     assert encode(spark, out_dir=out, plan=plan)["pending"] == 0
+    assert decode(spark, out).rdd.getNumPartitions() == 0
 
 
 def test_unreadable_plan_unit_raises_before_plan_is_pinned(spark, tmp_dir):

@@ -1,10 +1,9 @@
 """Zone-map pruning on the driver, row filtering in the decode task.
 
 Predicated ``decode()`` and ``decode_plan_report()`` plan from the committed
-manifest with pyarrow on the driver: planning starts no Spark job, and falls
-back to a Spark read of the same manifest rows — never to the filesystem
-walk — when pyarrow cannot serve the store or sees an empty view of it.  The
-rows of kept chunks are filtered inside the decode task with the comparator
+manifest with pyarrow on the driver: planning starts no Spark job, and an
+error reading the manifest propagates instead of falling back to a Spark
+read or a filesystem walk.  The rows of kept chunks are filtered inside the decode task with the comparator
 the pruner uses (Spark's order: NaN equals NaN and sorts above every value,
 strings bytewise, ints past int64 beyond every value), so no Spark filter
 runs above the decode.
@@ -13,13 +12,10 @@ runs above the decode.
 from __future__ import annotations
 
 import datetime as dt
-import os
-import shutil
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.fs as pyfs
 import pyarrow.parquet as pq
 import pytest
 
@@ -223,26 +219,25 @@ def test_planning_starts_no_spark_job(spark, store):
                       lambda: holder["df"].count()) != []
 
 
-def test_resolve_oserror_falls_back_to_spark_read(spark, store, monkeypatch):
-    """When pyarrow cannot serve the manifest (OSError from resolve),
-    planning reads the same rows through Spark: same rows, same counts.
-    Anything else raised there is a bug and propagates."""
+def test_resolve_oserror_propagates_and_starts_no_job(spark, store,
+                                                      monkeypatch):
+    """The manifest is read with pyarrow only: an ``OSError`` from
+    ``pafs.resolve`` propagates out of planning and starts no Spark job, and
+    so does anything else raised there."""
     pred = {"ranges": {"name": ("Ä", "ö")}}
-    want = sorted(r["id"] for r in decode(spark, store, **pred)
-                  .select("id").collect())
-    want_rep = decode_plan_report(spark, store, **pred)
 
     def broken(path, filesystem=None):
         raise OSError("store unreachable from pyarrow")
 
     monkeypatch.setattr(pafs, "resolve", broken)
-    holder = {}
-    assert _plan_jobs(spark, "fallback-decode", lambda: holder.setdefault(
-        "df", decode(spark, store, **pred))) != []
-    assert sorted(r["id"] for r in holder["df"].select("id").collect()) == want
-    assert _plan_jobs(spark, "fallback-report", lambda: holder.setdefault(
-        "rep", decode_plan_report(spark, store, **pred))) != []
-    assert holder["rep"] == want_rep
+    tracker = spark.sparkContext.statusTracker()
+    for group, plan in (
+        ("broken-decode", lambda: decode(spark, store, **pred)),
+        ("broken-report", lambda: decode_plan_report(spark, store, **pred)),
+    ):
+        with pytest.raises(OSError, match="store unreachable from pyarrow"):
+            _plan_jobs(spark, group, plan)
+        assert list(tracker.getJobIdsForGroup(group)) == []
 
     def buggy(path, filesystem=None):
         raise RuntimeError("not a filesystem failure")
@@ -250,31 +245,6 @@ def test_resolve_oserror_falls_back_to_spark_read(spark, store, monkeypatch):
     monkeypatch.setattr(pafs, "resolve", buggy)
     with pytest.raises(RuntimeError, match="not a filesystem failure"):
         decode(spark, store, **pred)
-
-
-def test_empty_pyarrow_view_reads_through_spark(spark, store, tmp_path,
-                                                monkeypatch):
-    """An empty pyarrow view of a manifest that exists must fall through to
-    the Spark read, not to the filesystem walk: the walk would decode an
-    uncommitted chunk file left behind by a crashed wave."""
-    # the copy's manifest still names the original's chunk files; what
-    # matters is that the walk would read the copy's chunks dir, stray
-    # file included
-    out = str(tmp_path / "store")
-    shutil.copytree(store, out)
-    committed = _manifest_files(spark, out, None)
-    stray = os.path.join(out, "chunks", "part_id=999")
-    os.makedirs(stray)
-    shutil.copy(committed[0], os.path.join(stray, "uncommitted.parquet"))
-    empty = str(tmp_path / "empty")
-    os.makedirs(empty)
-    monkeypatch.setattr(pafs, "resolve",
-                        lambda path, filesystem=None:
-                        (pyfs.LocalFileSystem(), empty))
-    assert _manifest_files(spark, out, None) == committed
-    assert decode(spark, out).count() == N
-    got = decode(spark, out, ranges={"meta.nw": (5, 9)}).count()
-    assert got == 50
 
 
 def test_zone_stats_parse():

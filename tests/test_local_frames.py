@@ -1,12 +1,14 @@
 """Driver-held rows never cost a Spark job or a Python worker needlessly.
 
-An encode runs one Spark job: the parts markers of its commit are rows the
-driver already holds and only writes, so the driver writes them with
-pyarrow.  The decode work list stays a Python RDD: Spark sizes a local
-relation from its rows, so a decoded frame built on one would be broadcast
-in joins.  Also pinned here: empty decode results start no task, the commit
-rollup never mistakes an empty pyarrow view for zero chunks, and the resume
-reader fails loudly on an unreadable parts marker.
+An encode runs one Spark job: its tasks commit the chunk and manifest files
+and yield one rollup row per part, and the parts markers of its commit are
+rows the driver then only writes, so the driver writes them with pyarrow.
+The decode work list stays a Python RDD: Spark sizes a local relation from
+its rows, so a decoded frame built on one would be broadcast in joins.
+Also pinned here: empty decode results start no task, the markers carry
+the tasks' rollup whatever the driver's view of the manifest, and the
+resume reader fails loudly on an unreadable parts marker or a refused
+listing.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ import pyarrow.fs as pyfs
 import pyarrow.parquet as pq
 import pytest
 
-from clj_orc_spark.pipeline import decode, encode, fsio, pafs
+from clj_orc_spark.pipeline import decode, encode, pafs
 from clj_orc_spark.pipeline.encode import (
     PARTS_DDL,
     completed_part_ids,
@@ -65,9 +67,9 @@ def _chunk_files(out: str) -> list[str]:
 
 def test_one_encode_starts_one_spark_job(spark, source, tmp_path):
     """An encode runs exactly one Spark job: its tasks write the chunk
-    files and yield the manifest records, which the job writes.  The
-    rollup and the parts markers happen on the driver with pyarrow, and the
-    markers read back through Spark with the marker schema unchanged."""
+    and manifest files and yield one rollup row per part, which the job
+    collects.  The parts markers are written on the driver with pyarrow,
+    and they read back through Spark with the marker schema unchanged."""
     sc = spark.sparkContext
     group = "one-job-encode"
     out = str(tmp_path / "store")
@@ -152,10 +154,11 @@ def test_fully_pruned_decode_starts_no_task(spark, store):
 
 def test_empty_pyarrow_view_rollup_reads_through_spark(spark, source, store,
                                                        tmp_path, monkeypatch):
-    """When pyarrow reads an empty view of the manifest just written (a
-    manifest-shaped dataset without a row of the wave), the commit counts
-    chunks through Spark: the parts markers carry the real n_chunks and
-    n_rows, not 0-chunk markers."""
+    """Even when the driver's pyarrow view of the manifest is empty (a
+    manifest-shaped dataset without a row of the wave), the parts markers
+    carry the real n_chunks and n_rows, not 0-chunk markers: the rollup
+    comes from the encode tasks that wrote the records, not from a read of
+    them on the driver."""
     committed = os.path.join(store, "manifest", "chunks", "part_id=0")
     schema = pq.read_schema(os.path.join(
         committed, next(f for f in os.listdir(committed)
@@ -207,18 +210,37 @@ def test_completed_part_ids_remote_listing_error_raises(spark, tmp_path,
     path (permission, network, credentials) raises, naming the parts
     directory, instead of reading as "nothing complete"."""
 
-    class DeniedFS:
-        def exists(self, path):
-            return True
+    class DeniedListing(pyfs.FileSystemHandler):
+        """A store whose paths exist but whose LIST is refused."""
 
-        def listFiles(self, path, recursive):
-            raise OSError("Permission denied")
+        def get_type_name(self):
+            return "denied"
 
-    monkeypatch.setattr(fsio, "_fs", lambda spark, path: (DeniedFS(), path))
+        def normalize_path(self, path):
+            return path
+
+        def get_file_info(self, paths):
+            return [pyfs.FileInfo(p, pyfs.FileType.Directory) for p in paths]
+
+        def get_file_info_selector(self, selector):
+            raise PermissionError("Permission denied")
+
+        def _unused(self, *args):
+            raise NotImplementedError
+
+        copy_file = create_dir = delete_dir = delete_dir_contents = _unused
+        delete_file = delete_root_dir_contents = move = _unused
+        open_append_stream = open_input_file = open_input_stream = _unused
+        open_output_stream = _unused
+
+    denied = pyfs.PyFileSystem(DeniedListing())
+    monkeypatch.setattr(pafs, "resolve",
+                        lambda path, filesystem=None: (denied, path))
     out = "file://" + str(tmp_path / "store")
     with pytest.raises(RuntimeError, match="parts markers under") as err:
         completed_part_ids(spark, out)
     assert os.path.join(out, "manifest", "parts") in str(err.value)
+    assert "Permission denied" in str(err.value)
 
 
 def test_completed_part_ids_corrupt_marker_raises(spark, source, tmp_path):

@@ -110,16 +110,23 @@ def test_size_gate_counts_visible_manifest_files_without_a_job(
 ):
     """``manifest_bytes`` is the sum of the manifest's ``*.parquet`` files
     (no Hadoop ``.crc`` sidecar, no ``_SUCCESS``), ``payload_bytes`` the
-    manifest's ``enc_bytes``, and sizing the store starts no Spark job."""
+    manifest's ``enc_bytes``, and sizing the store starts no Spark job.
+    The engine writes no sidecar, so one of each is planted by hand, as a
+    Hadoop writer would leave them."""
     src = os.path.join(token_table_dir, "tokens.parquet")
     out = os.path.join(tmp_dir, "enc")
     encode(spark, src, out, n_partitions=4)
     mdir = os.path.join(out, "manifest")
-    names = [os.path.join(r, f) for r, _, fs in os.walk(mdir) for f in fs]
-    assert any(not f.endswith(".parquet") for f in names)  # sidecars exist
-    want = sum(os.path.getsize(f) for f in names if f.endswith(".parquet"))
     payload = spark.read.parquet(os.path.join(mdir, "chunks")) \
         .groupBy().sum("enc_bytes").first()[0]
+    part_dir = os.path.join(mdir, "chunks", "part_id=0")
+    (name,) = os.listdir(part_dir)
+    for sidecar in (f".{name}.crc", "_SUCCESS"):
+        with open(os.path.join(part_dir, sidecar), "wb") as fh:
+            fh.write(b"x" * 76)
+    names = [os.path.join(r, f) for r, _, fs in os.walk(mdir) for f in fs]
+    assert sum(not f.endswith(".parquet") for f in names) == 2
+    want = sum(os.path.getsize(f) for f in names if f.endswith(".parquet"))
 
     got = {}
     jobs = _jobs_of(spark, "size-gate",

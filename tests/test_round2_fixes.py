@@ -265,7 +265,6 @@ def test_fsio_text_roundtrip_via_uri(spark, tmp_dir):
     fsio.write_text(spark, uri, '{"a": 1}')
     assert fsio.exists(spark, uri)
     assert fsio.read_text(spark, uri) == '{"a": 1}'
-    assert not fsio.has_parquet(spark, "file://" + tmp_dir)
 
 
 def test_encode_decode_resume_via_file_uri(spark, token_table_dir, tmp_dir):

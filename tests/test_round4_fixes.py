@@ -38,8 +38,9 @@ def test_plan_resume_mode_mismatch_raises(spark, tmp_path):
 
 #: the only driver-collect shapes encode() may produce: the resume marker
 #: part_id list, and the per-part rollup (one row per partition, five
-#: numeric columns) that _commit_manifest writes locally — both bounded by
-#: the PARTITION count, never chunk rows
+#: numeric columns) that the encode tasks yield and _commit_manifest
+#: collects to write the parts markers — both bounded by the PARTITION
+#: count, never chunk rows
 _ALLOWED_COLLECTS = {
     ("part_id",),
     ("part_id", "n_chunks", "n_rows", "enc_bytes", "raw_bytes"),
@@ -69,8 +70,8 @@ def test_commit_manifest_collects_only_part_ids(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ConcreteDF, "collect", spying_collect)
     out = str(tmp_path / "store")
     encode(spark, src, out, n_partitions=2)
-    # zero collects is the ideal (the happy path computes the rollup with
-    # pyarrow on the driver); any collect that does happen must be bounded
+    # the encode collects its tasks' one rollup row per part; any collect
+    # must be bounded
     for cols in collected:
         assert cols in _ALLOWED_COLLECTS, f"unbounded driver collect: {cols}"
     # the store is still fully decodable after the spy run
