@@ -1,7 +1,6 @@
 import sys, hashlib, pickle, json
 sys.path.insert(0, "/root/repo")
-import numpy as np, pyarrow.parquet as pq, importlib
-E = importlib.import_module("clj_orc_spark.pipeline.encode")
+import numpy as np, pyarrow.parquet as pq
 from clj_orc_spark.kernels.bitpack import pack_bits, unpack_bits, PatchedFor, ForBitpack
 from clj_orc_spark.kernels.dict_ import DictInt
 from clj_orc_spark.kernels.rle import Rle
@@ -20,7 +19,7 @@ arrays = {
 }
 pf = pq.ParquetFile("/tmp/clj-orc-spark-bench-500000/tokens.parquet")
 tbl = pf.read_row_group(0, columns=["tokens"])
-arrays["tokens_real"] = E._flatten_list(tbl.column("tokens"), np.int32)
+arrays["tokens_real"] = np.asarray(tbl.column("tokens").combine_chunks().flatten())
 
 ref = {}
 for name, a in arrays.items():

@@ -1,7 +1,6 @@
 import sys, time
 sys.path.insert(0, "/root/repo")
-import numpy as np, pyarrow.parquet as pq, importlib
-E = importlib.import_module("clj_orc_spark.pipeline.encode")
+import numpy as np, pyarrow.parquet as pq
 from clj_orc_spark.kernels.dict_ import DictInt, ranked_value_counts, _encode_codes
 from clj_orc_spark.kernels.bitpack import PatchedFor, ForBitpack, bit_width, bit_lengths, pack_bits
 from clj_orc_spark.kernels.base import narrow_residuals, pack_sections
@@ -9,7 +8,7 @@ from clj_orc_spark.kernels.rle import run_starts
 
 pf = pq.ParquetFile("/tmp/clj-orc-spark-bench-500000/tokens.parquet")
 tbl = pf.read_row_group(0, columns=["tokens"])
-flat = E._flatten_list(tbl.column("tokens"), np.int32)
+flat = np.asarray(tbl.column("tokens").combine_chunks().flatten())
 n = len(flat)
 
 def T(f, *a, **k):

@@ -1,12 +1,11 @@
 import sys, time, cProfile, pstats, io
 sys.path.insert(0, "/root/repo")
-import numpy as np, pyarrow.parquet as pq, importlib
-E = importlib.import_module("clj_orc_spark.pipeline.encode")
+import numpy as np, pyarrow.parquet as pq
 from clj_orc_spark.selector import encode_column, int_stats, select_int
 
 pf = pq.ParquetFile("/tmp/clj-orc-spark-bench-500000/tokens.parquet")
 tbl = pf.read_row_group(0, columns=["tokens"])
-flat = E._flatten_list(tbl.column("tokens"), np.int32)
+flat = np.asarray(tbl.column("tokens").combine_chunks().flatten())
 print("flat values:", len(flat), flat.dtype, f"{flat.nbytes/1e6:.1f} MB")
 # what does selection pick?
 st = int_stats(flat)

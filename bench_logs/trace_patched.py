@@ -1,13 +1,12 @@
 import sys, time, json
 sys.path.insert(0, "/root/repo")
-import numpy as np, pyarrow.parquet as pq, importlib
-E = importlib.import_module("clj_orc_spark.pipeline.encode")
+import numpy as np, pyarrow.parquet as pq
 from clj_orc_spark.kernels import bitpack as BP
 from clj_orc_spark.kernels.dict_ import DictInt
 
 pf = pq.ParquetFile("/tmp/clj-orc-spark-bench-500000/tokens.parquet")
 tbl = pf.read_row_group(0, columns=["tokens"])
-flat = E._flatten_list(tbl.column("tokens"), np.int32)
+flat = np.asarray(tbl.column("tokens").combine_chunks().flatten())
 
 depth = [0]
 orig = BP.PatchedFor.encode.__func__

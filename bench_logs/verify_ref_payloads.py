@@ -29,7 +29,6 @@ from clj_orc_spark.kernels.bitpack import (  # noqa: E402
 )
 from clj_orc_spark.kernels.dict_ import DictInt  # noqa: E402
 from clj_orc_spark.kernels.rle import Rle  # noqa: E402
-from clj_orc_spark.pipeline.encode import _flatten_list  # noqa: E402
 from clj_orc_spark.selector import encode_column  # noqa: E402
 
 N_ROWS = 500_000
@@ -60,7 +59,7 @@ arrays = {
 }
 pf = pq.ParquetFile(token_table())
 tbl = pf.read_row_group(0, columns=["tokens"])
-arrays["tokens_real"] = _flatten_list(tbl.column("tokens"), np.int32)
+arrays["tokens_real"] = np.asarray(tbl.column("tokens").combine_chunks().flatten())
 
 with open(os.path.join(HERE, "ref_payloads.json")) as f:
     ref = json.load(f)

@@ -1,12 +1,16 @@
-"""Decode pipeline: encoded chunks + manifest → the original token table.
+"""Decode pipeline: encoded chunks + manifest → the source table.
 
 The read-side analog of the reference's entry point (`src/orc/read.clj:65-112`):
 where clj-orc pulls ORC batches and pivots them to rows per-cell
-(`src/orc/core.clj:57-66`), this engine groups each chunk's five encoded
-column rows, runs the vectorized decode kernels, and reassembles the
-``tokens`` list column from the flat values + offsets index — the exact
+(`src/orc/core.clj:57-66`), this engine groups each chunk's encoded column
+rows (one per physical payload of the store's schema), runs the vectorized
+decode kernels, and reassembles every logical column from its payloads
+through one scalar-leaf path (``decode_chunk_table``): a scalar column is
+one leaf; a list is its values leaf plus the offsets index — the exact
 offsets/lengths slicing the reference applies to ORC list vectors
-(`src/orc/col.clj:110-121`), done once per chunk instead of once per row.
+(`src/orc/col.clj:110-121`), done once per chunk instead of once per row;
+a map is its keys and values leaves under the same offsets index; a struct
+is its leaves under per-level present columns.
 
 CRC of every payload is checked against the value recorded at encode time.
 """
@@ -29,10 +33,9 @@ from .encode import (
     list_payload_names,
     list_value_kind,
     map_kinds,
-    map_payload_names,
     physical_cols,
+    physical_map,
     struct_fields,
-    struct_payload_names,
 )
 
 TOKEN_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
@@ -42,17 +45,9 @@ WORK_DDL = "path string, cids string"
 
 _DDL_TYPE = {"str": "string", "int32": "int", "int64": "bigint",
              "float32": "float", "float64": "double",
-             "list32": "array<int>", "list64": "array<bigint>",
-             "listf32": "array<float>", "listf64": "array<double>",
              "date32": "date", "ts_us": "timestamp_ntz",
              "ts_us_utc": "timestamp",
              "bool": "boolean", "binary": "binary"}
-_LIST_VALUE_TYPE = {"list32": pa.int32, "list64": pa.int64,
-                    "listf32": pa.float32, "listf64": pa.float64}
-#: float list kind → (unsigned storage dtype, float dtype) — values decode
-#: from the kernels as bit patterns, exactly like scalar float columns
-_LIST_FLOAT_NP = {"listf32": (np.uint32, np.float32),
-                  "listf64": (np.uint64, np.float64)}
 #: int-storage kinds → (numpy storage dtype, arrow type factory).  Temporal
 #: kinds share the int path: same storage bytes, the arrow type restores
 #: date/timestamp semantics exactly (days / micros reinterpret).
@@ -65,21 +60,6 @@ _INT_TYPE = {
 #: float kind → (unsigned bit-pattern dtype, float dtype, arrow type)
 _FLOAT_TYPE = {"float32": (np.uint32, np.float32, pa.float32),
                "float64": (np.uint64, np.float64, pa.float64)}
-
-
-def _physical_map(schema) -> dict[str, tuple[str, ...]]:
-    """Logical output column → physical payload rows it needs."""
-    out = {}
-    for name, kind in schema:
-        if kind.startswith("list"):
-            out[name] = list_payload_names(name)
-        elif kind.startswith("struct"):
-            out[name] = struct_payload_names(name, kind)
-        elif kind.startswith("map"):
-            out[name] = map_payload_names(name)
-        else:
-            out[name] = (name,)
-    return out
 
 
 def _pred_target(key: str, kinds: dict) -> tuple[str, str] | None:
@@ -120,13 +100,13 @@ def _pred_target(key: str, kinds: dict) -> tuple[str, str] | None:
 
 def _bound_types(kind: str) -> tuple[tuple, str]:
     """Accepted Python bound types for predicates on a column kind."""
-    if kind.startswith("list<"):  # containment bounds type like the values
+    if kind.startswith("list"):  # containment bounds type like the values
         kind = list_value_kind(kind)
     if kind == "str":
         return (str,), "str"
     if kind == "binary":
         return (bytes,), "bytes"
-    if kind in ("float32", "float64", "listf32", "listf64"):
+    if kind in ("float32", "float64"):
         return (int, float), "int or float"
     if kind == "bool":
         return (int, bool), "int or bool"
@@ -137,13 +117,13 @@ def _zone_type(kind: str) -> pa.DataType:
     """Arrow type a column kind's zone-map stats parse to (the manifest
     records them as JSON strings) — the compare type of the one predicate
     compiler, :func:`_compile_predicates`."""
-    if kind.startswith("list<"):  # generic list: dispatch on value kind
+    if kind.startswith("list"):  # a list: dispatch on its value kind
         kind = list_value_kind(kind)
     if kind == "str":
         return pa.string()
     if kind == "binary":
         return pa.binary()
-    if kind in ("float32", "float64", "listf32", "listf64"):
+    if kind in ("float32", "float64"):
         return pa.float64()
     return pa.int64()
 
@@ -157,9 +137,9 @@ def _ddl_type(kind: str) -> str:
     if kind.startswith("map"):
         kk, vk = map_kinds(kind)
         return f"map<{_DDL_TYPE[kk]}, {_DDL_TYPE[vk]}>"
-    if kind.startswith("list<"):  # generic list kinds; legacy short
-        return f"array<{_DDL_TYPE[list_value_kind(kind)]}>"  # names are
-    return _DDL_TYPE[kind]  # in _DDL_TYPE directly
+    if kind.startswith("list"):
+        return f"array<{_DDL_TYPE[list_value_kind(kind)]}>"
+    return _DDL_TYPE[kind]
 
 
 def _select_ddl(columns: list[str], schema) -> str:
@@ -189,10 +169,13 @@ def decode_chunk_table(tbl: pa.Table, columns: list[str] | None = None,
     columns (doc_id/n_tok/source) skips the token_values kernel entirely,
     which is ~97% of the decode work.  ``schema`` is the store's descriptor
     (schema-driven kernel binding, the decode half of the reference's
-    user-declared plan, `src/orc/col.clj:184-204`)."""
+    user-declared plan, `src/orc/col.clj:184-204`).  Every value decodes
+    through ``_scalar_arr``; lists (any spelling) and maps add only their
+    offsets index (``_offsets``, the one int32-overflow guard), structs
+    their present columns."""
     kinds = dict(schema)
     order = [name for name, _ in schema]
-    phys = _physical_map(schema)
+    phys = physical_map(schema)
     wanted = list(columns) if columns is not None else order
     needed = {p for c in wanted for p in phys[c]}
     cols = {}
@@ -224,14 +207,16 @@ def decode_chunk_table(tbl: pa.Table, columns: list[str] | None = None,
         return pa.py_buffer(vb) if vb is not None else None
 
     def _scalar_arr(p: str, fk: str) -> pa.Array:
-        """Reassemble one flat scalar payload (struct field / map child)
-        with its validity bitmap; temporal kinds restore their arrow type
-        over the same storage bytes."""
+        """Reassemble one flat scalar payload — a scalar column, a list's
+        values, a map's keys or values, a struct leaf — with its validity
+        bitmap, wrapping the kernel's numpy output without a copy;
+        temporal kinds restore their arrow type over the same storage
+        bytes."""
         if fk in _INT_TYPE:
             np_t, pa_t = _INT_TYPE[fk]
             a = np.ascontiguousarray(cols[p].astype(np_t, copy=False))
             return pa.Array.from_buffers(
-                pa_t(), len(a), [_vbuf(p), pa.py_buffer(a.tobytes())]
+                pa_t(), len(a), [_vbuf(p), pa.py_buffer(a)]
             )
         if fk in _FLOAT_TYPE:
             u_t, f_t, pa_t = _FLOAT_TYPE[fk]
@@ -239,7 +224,7 @@ def decode_chunk_table(tbl: pa.Table, columns: list[str] | None = None,
                 cols[p].astype(u_t, copy=False)
             ).view(f_t)
             return pa.Array.from_buffers(
-                pa_t(), len(a), [_vbuf(p), pa.py_buffer(a.tobytes())]
+                pa_t(), len(a), [_vbuf(p), pa.py_buffer(a)]
             )
         if fk == "bool":
             # int32 0/1 storage → arrow bool (bit-packed data buffer)
@@ -247,7 +232,7 @@ def decode_chunk_table(tbl: pa.Table, columns: list[str] | None = None,
             return pa.Array.from_buffers(
                 pa.bool_(), len(a),
                 [_vbuf(p),
-                 pa.py_buffer(np.packbits(a, bitorder="little").tobytes())],
+                 pa.py_buffer(np.packbits(a, bitorder="little"))],
             )
         arr = cols[p].to_arrow()  # str / binary (same offsets+bytes layout)
         if p in valid_bufs:
@@ -279,89 +264,46 @@ def decode_chunk_table(tbl: pa.Table, columns: list[str] | None = None,
             children.append(child)
             fields.append(pa.field(fname, child.type))
         pbuf = (
-            None if bool(pres.all()) else pa.py_buffer(
-                np.packbits(pres, bitorder="little").tobytes()
-            )
+            None if bool(pres.all())
+            else pa.py_buffer(np.packbits(pres, bitorder="little"))
         )
         return pa.Array.from_buffers(
             pa.struct(fields), n_s, [pbuf], children=children
         )
 
+    def _offsets(typ: pa.DataType, o_name: str,
+                 child: pa.Array) -> pa.Array:
+        """A list or map array of ``typ`` over ``child``, indexed by the
+        offsets payload ``o_name`` (entry validity rides on its bitmap).
+        The one guard against a chunk whose values overflow the int32
+        offsets Arrow takes: they are int64 on disk, and a wrap would be
+        silent."""
+        offsets = cols[o_name].astype(np.int64, copy=False)
+        if len(offsets) > 1 and int(offsets[-1]) > np.iinfo(np.int32).max:
+            raise IOError(
+                f"offsets payload {o_name!r} indexes {int(offsets[-1])} "
+                "values, beyond int32 list offsets; re-encode with "
+                "smaller chunk_bytes"
+            )
+        return pa.Array.from_buffers(
+            typ, len(offsets) - 1,
+            [_vbuf(o_name), pa.py_buffer(offsets.astype(np.int32))],
+            children=[child],
+        )
+
     out = {}
     for c in wanted:
         kind = kinds[c]
-        if kind.startswith("list") and kind not in _LIST_VALUE_TYPE:
-            # generic list<vk> (round 5): values reassemble through the
-            # same scalar machinery as struct fields / map children, the
-            # offsets index + list-level validity ride the list machinery
+        if kind.startswith("list"):
             v_name, o_name = phys[c]
-            offsets = cols[o_name].astype(np.int64, copy=False)
-            n_l = len(offsets) - 1
-            if n_l and int(offsets[-1]) > np.iinfo(np.int32).max:
-                raise IOError(
-                    f"chunk holds {int(offsets[-1])} list values, beyond "
-                    "int32 list offsets; re-encode with smaller chunk_bytes"
-                )
-            values_arr = _scalar_arr(v_name, list_value_kind(kind))
-            out[c] = pa.Array.from_buffers(
-                pa.list_(values_arr.type), n_l,
-                [_vbuf(o_name),
-                 pa.py_buffer(offsets.astype(np.int32).tobytes())],
-                children=[values_arr],
-            )
-        elif kind.startswith("list"):
-            v_name, o_name = phys[c]
-            if kind in _LIST_FLOAT_NP:
-                u_t, f_t = _LIST_FLOAT_NP[kind]
-                # bit-pattern view back to float — NaN payload bits exact
-                flat = np.ascontiguousarray(
-                    cols[v_name].astype(u_t, copy=False)
-                ).view(f_t)
-            else:
-                val_np = np.int32 if kind == "list32" else np.int64
-                flat = cols[v_name].astype(val_np, copy=False)
-            offsets = cols[o_name].astype(np.int64, copy=False)
-            n = len(offsets) - 1
-            if n and int(offsets[-1]) > np.iinfo(np.int32).max:
-                # Arrow list<int32> offsets are int32; a chunk encoded with a
-                # huge chunk_bytes setting would wrap silently — refuse loudly
-                raise IOError(
-                    f"chunk holds {int(offsets[-1])} list values, beyond "
-                    "int32 list offsets; re-encode with chunk_bytes <= 8 GiB"
-                )
-            if v_name in valid_bufs or o_name in valid_bufs:
-                # nullable reassembly: values validity from the values
-                # payload, list-entry validity from the offsets payload
-                values_arr = pa.Array.from_buffers(
-                    _LIST_VALUE_TYPE[kind](), len(flat),
-                    [_vbuf(v_name),
-                     pa.py_buffer(np.ascontiguousarray(flat).tobytes())],
-                )
-                out[c] = pa.Array.from_buffers(
-                    pa.list_(_LIST_VALUE_TYPE[kind]()), n,
-                    [_vbuf(o_name),
-                     pa.py_buffer(offsets.astype(np.int32).tobytes())],
-                    children=[values_arr],
-                )
-            else:
-                out[c] = pa.ListArray.from_arrays(
-                    pa.array(offsets.astype(np.int32)),
-                    pa.array(flat, type=_LIST_VALUE_TYPE[kind]()),
-                )
+            values = _scalar_arr(v_name, list_value_kind(kind))
+            out[c] = _offsets(pa.list_(values.type), o_name, values)
         elif kind.startswith("struct"):
             out[c] = _struct_arr(c, kind)
         elif kind.startswith("map"):
-            # shredded map reassembly: keys/values children + offsets
-            # index; map-level validity from the offsets payload bitmap
+            # shredded map: keys/values children under the offsets index
+            k_name, v_name, o_name = phys[c]
             kk, vk = map_kinds(kind)
-            k_name, v_name, o_name = map_payload_names(c)
-            offsets = cols[o_name].astype(np.int64, copy=False)
-            n_m = len(offsets) - 1
-            if n_m and int(offsets[-1]) > np.iinfo(np.int32).max:
-                raise IOError(
-                    f"chunk holds {int(offsets[-1])} map entries, beyond "
-                    "int32 offsets; re-encode with smaller chunk_bytes"
-                )
             keys_arr = _scalar_arr(k_name, kk)
             vals_arr = _scalar_arr(v_name, vk)
             ef = [pa.field("key", keys_arr.type, nullable=False),
@@ -369,12 +311,7 @@ def decode_chunk_table(tbl: pa.Table, columns: list[str] | None = None,
             entries = pa.StructArray.from_arrays(
                 [keys_arr, vals_arr], fields=ef
             )
-            out[c] = pa.Array.from_buffers(
-                pa.map_(ef[0], ef[1]), n_m,
-                [_vbuf(o_name),
-                 pa.py_buffer(offsets.astype(np.int32).tobytes())],
-                children=[entries],
-            )
+            out[c] = _offsets(pa.map_(ef[0], ef[1]), o_name, entries)
         else:
             # every scalar kind — int/temporal/float/bool/str/binary —
             # reassembles through the one scalar path (validity bitmaps,
@@ -649,7 +586,7 @@ def _compile_predicates(schema, ranges: dict | None, isin: dict | None,
                 f"ranges column {colname!r} not in store schema {order}"
             )
         pred_kind[colname], pred_phys[colname] = tgt
-        if pred_kind[colname].startswith("list<"):
+        if pred_kind[colname].startswith("list"):
             vk = list_value_kind(pred_kind[colname])
             if vk not in ("int32", "int64", "float32", "float64", "str"):
                 # containment compares decoded ELEMENTS against the
@@ -816,7 +753,7 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     if not work_rows:
         return local_frame(spark, [], ddl)
 
-    phys = _physical_map(schema)
+    phys = physical_map(schema)
     needed_cols = sorted({p for c in (columns or order) for p in phys[c]})
     prune_cols = (
         columns is not None

@@ -124,37 +124,34 @@ MANIFEST_SCHEMA = CHUNK_FILE_SCHEMA.remove(
 CHUNK_BLOCK_BYTES = 16 << 20
 
 #: the fixed token-table schema (BASELINE input_hint) as a schema descriptor —
-#: ``(name, kind)`` pairs, kind ∈ {str, int32, int64, float32, float64,
-#: list32, list64}.  Since round 4 the engine encodes ANY flat schema of
-#: these kinds (the analog of the reference's user-declared decode plan,
-#: `src/orc/col.clj:184-204`: schema-driven kernel binding instead of a
-#: hardcoded column list); round 5 adds the float kinds the reference's
-#: dispatch table covers (`src/orc/col.clj:70-75,164-165`) — encoded over
-#: their exact bit patterns, so the reference's NaN→nil normalization is
-#: deliberately NOT replicated (bit-identity contract).
+#: ``(name, kind)`` pairs (its ``tokens`` kind is the legacy spelling of
+#: ``list<int32>``).  Since round 4 the engine encodes ANY schema of the
+#: kinds :func:`derive_schema` names (the analog of the reference's
+#: user-declared decode plan, `src/orc/col.clj:184-204`: schema-driven
+#: kernel binding instead of a hardcoded column list); round 5 adds the
+#: float kinds the reference's dispatch table covers
+#: (`src/orc/col.clj:70-75,164-165`) — encoded over their exact bit
+#: patterns, so the reference's NaN→nil normalization is deliberately NOT
+#: replicated (bit-identity contract).
 DEFAULT_SCHEMA = (
     ("doc_id", "str"), ("tokens", "list32"), ("n_tok", "int32"),
     ("source", "str"),
 )
 
+#: numeric kind → the numpy dtype its payload and its row weight take
+#: (temporal/bool kinds at their int storage width)
 _KIND_NP = {"int32": np.int32, "int64": np.int64,
             "float32": np.float32, "float64": np.float64,
-            "list32": np.int32, "list64": np.int64,
-            "listf32": np.float32, "listf64": np.float64,
             "date32": np.int32, "ts_us": np.int64, "ts_us_utc": np.int64,
             "bool": np.int32}
 
 #: float kind → the same-width unsigned view its bit patterns encode as
-#: (scalar float columns AND the flattened values of float lists — the
-#: embeddings shape, array<float>)
-_FLOAT_U = {"float32": np.uint32, "float64": np.uint64,
-            "listf32": np.uint32, "listf64": np.uint64}
+_FLOAT_U = {"float32": np.uint32, "float64": np.uint64}
 
 #: scalar value kind → the legacy short list-kind name (kept so every store
 #: encoded in rounds 1–5 stays decodable under its recorded descriptor);
-#: every OTHER scalar kind spells its list as ``list<vk>`` (round 5:
-#: lists of ANY scalar kind — str/bool/binary/temporal values flatten
-#: through the same machinery as map values)
+#: it is only a spelling of ``list<vk>``, which every OTHER scalar kind
+#: uses — :func:`list_value_kind` is the one place that resolves it
 _LIST_LEGACY = {"int32": "list32", "int64": "list64",
                 "float32": "listf32", "float64": "listf64"}
 _LIST_VK = {v: k for k, v in _LIST_LEGACY.items()}
@@ -260,18 +257,26 @@ def map_payload_names(name: str) -> tuple[str, str, str]:
     return f"{name}__keys", f"{name}__mapvalues", f"{name}__offsets"
 
 
-def physical_cols(schema) -> tuple[str, ...]:
-    out: list[str] = []
+def physical_map(schema) -> dict[str, tuple[str, ...]]:
+    """Logical column → the physical payload columns backing it."""
+    out = {}
     for name, kind in schema:
         if kind.startswith("list"):
-            out.extend(list_payload_names(name))
+            out[name] = list_payload_names(name)
         elif kind.startswith("struct"):
-            out.extend(struct_payload_names(name, kind))
+            out[name] = struct_payload_names(name, kind)
         elif kind.startswith("map"):
-            out.extend(map_payload_names(name))
+            out[name] = map_payload_names(name)
         else:
-            out.append(name)
-    return tuple(out)
+            out[name] = (name,)
+    return out
+
+
+def physical_cols(schema) -> tuple[str, ...]:
+    """Every physical payload column of ``schema``, in schema order (a
+    repeated logical name repeats its payloads, so collisions show)."""
+    phys = physical_map(schema)
+    return tuple(p for name, _ in schema for p in phys[name])
 
 
 def _struct_kind(t, path: str, scalar_kind) -> str:
@@ -375,9 +380,11 @@ def derive_schema(arrow_schema) -> list[tuple[str, str]]:
             out.append((field.name, _LIST_LEGACY.get(vk, f"list<{vk}>")))
         else:
             raise ValueError(
-                f"unsupported column type {t} for {field.name!r}: engine "
-                "schemas are flat str/int32/int64/float/double/"
-                "array<int>/array<bigint>/struct<scalar fields>"
+                f"unsupported column type {t} for {field.name!r}: the "
+                "engine takes scalar columns (str, binary, int8/16/32/64, "
+                "float, double, bool, date, timestamp), lists of any "
+                "scalar, maps of non-float scalar keys to scalar values, "
+                "and structs of scalars, nested to any depth"
             )
     if not out:
         raise ValueError("cannot encode an empty schema")
@@ -390,22 +397,20 @@ def derive_schema(arrow_schema) -> list[tuple[str, str]]:
     return out
 
 
-def _flatten_list(col, dtype) -> np.ndarray:
-    """Flatten per chunk, NOT combine_chunks().flatten(): combining copies
-    the whole list column (~2x the chunk's token bytes in memory traffic),
-    while per-chunk flatten() is an offset-aware zero-copy view — one
-    concatenate only when the table actually holds multiple chunks."""
-    parts = [np.asarray(c.flatten(), dtype=dtype) for c in col.chunks]
-    if len(parts) == 1:
-        return parts[0]
-    return np.concatenate(parts) if parts else np.empty(0, dtype=dtype)
+def _scalar_payload(arr: pa.Array, kind: str) -> tuple:
+    """``(col_obj, kindtag, raw_bytes, valid, stats)`` of one flat scalar
+    payload — THE leaf every column kind shreds to: a scalar column, a
+    list's flattened values, a map's keys or values, a struct leaf.
 
-
-def _scalar_payload(arr: pa.Array, kind: str):
-    """(col_obj, kindtag, raw_bytes, valid, mm) for one flat scalar payload
-    column (map keys / map values).  Caller casts temporal kinds to their
-    storage ints first; nulls get the standard validity-bitmap treatment
-    (zero/empty fill so payload bytes are deterministic)."""
+    Temporal/bool kinds encode as their storage ints.  Nulls get the
+    standard validity-bitmap treatment (``valid`` is bool[n], None = all
+    valid) over a zero/empty fill, so payload bytes are deterministic:
+    ``np.asarray`` of a nulled Arrow array would otherwise yield silent
+    INT_MIN sentinels.  ``stats`` is the chunk's zone map ``{min, max}``
+    over the valid values."""
+    if kind in TEMPORAL_STORAGE:
+        arr = _temporal_to_storage(arr, kind)
+        kind = TEMPORAL_STORAGE[kind]
     nulls = arr.null_count
     valid = np.asarray(arr.is_valid()) if nulls else None
     if kind in ("str", "binary"):
@@ -426,6 +431,10 @@ def _scalar_payload(arr: pa.Array, kind: str):
     a = np.asarray(
         pc.fill_null(arr, 0.0) if nulls else arr, dtype=_KIND_NP[kind]
     )
+    # kernels see the exact bit pattern (uint view): NaN payload bits
+    # round-trip untouched; the reference's NaN→nil normalization
+    # (`src/orc/col.clj:73-74`) is NOT replicated.  NaN/Inf aren't strict
+    # JSON and NaN breaks ordered zone maps, so such chunks are stat-less
     fin = a[valid] if valid is not None else a
     mmv = (
         {"min": float(fin.min()), "max": float(fin.max())}
@@ -435,9 +444,24 @@ def _scalar_payload(arr: pa.Array, kind: str):
     return a.view(_FLOAT_U[kind]), "float", a.nbytes, valid, mmv
 
 
+def _offsets_payload(lists: pa.Array) -> tuple:
+    """The offsets payload of a list-layout column (a list, or a map viewed
+    as a list of entries): int64 offsets over the null-skipping flatten (a
+    null entry has length 0), the list-level validity, and ``{min: 0,
+    max: total values}`` — in :func:`_scalar_payload`'s tuple shape."""
+    lens = np.asarray(
+        pc.fill_null(pc.list_value_length(lists), 0), dtype=np.int64
+    )
+    offsets = np.zeros(len(lists) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    valid = np.asarray(lists.is_valid()) if lists.null_count else None
+    return (offsets, "int", offsets.nbytes, valid,
+            {"min": 0, "max": int(offsets[-1])})
+
+
 def _shred_struct(name: str, kind: str, col_s: pa.Array,
                   pvalid: "np.ndarray | None", n: int,
-                  columns: dict, valids: dict, mm: dict) -> None:
+                  columns: dict) -> None:
     """Shred one (possibly nested) struct column into flat scalar payloads.
 
     Emits ``name__present`` (0/1 struct-level validity, RLE-friendly) plus
@@ -450,13 +474,10 @@ def _shred_struct(name: str, kind: str, col_s: pa.Array,
     pres = (
         pvalid if pvalid is not None else np.ones(n, dtype=bool)
     ).astype(np.int32)
-    pres_name = f"{name}__present"
-    columns[pres_name] = (pres, "int", pres.nbytes)
-    valids[pres_name] = None
-    mm[pres_name] = {
+    columns[f"{name}__present"] = (pres, "int", pres.nbytes, None, {
         "min": int(pres.min()) if n else None,
         "max": int(pres.max()) if n else None,
-    }
+    })
     for fi, (fname, fkind) in enumerate(struct_fields(kind)):
         child = pc.struct_field(col_s, fi)
         p_name = f"{name}__{fname}"
@@ -469,21 +490,12 @@ def _shred_struct(name: str, kind: str, col_s: pa.Array,
             # same conjunct validity, so materializing a masked copy of the
             # whole subtree per level would only burn memory bandwidth
             _shred_struct(p_name, fkind, child,
-                          None if all_valid else v, n, columns, valids, mm)
+                          None if all_valid else v, n, columns)
             continue
-        # scalar leaves only: computing the masked copy above the struct
-        # branch materialized (and discarded) a masked copy of every nested
-        # subtree (round-5 advice)
         masked = child if all_valid else pc.if_else(
             pa.array(v), child, pa.scalar(None, child.type)
         )
-        if fkind in TEMPORAL_STORAGE:  # same reinterpret as top-level
-            masked = _temporal_to_storage(masked, fkind)
-            fkind = TEMPORAL_STORAGE[fkind]
-        obj, ktag, raw, v_, mmv = _scalar_payload(masked, fkind)
-        columns[p_name] = (obj, ktag, raw)
-        valids[p_name] = v_
-        mm[p_name] = mmv
+        columns[p_name] = _scalar_payload(masked, fkind)
 
 
 def _map_as_list(col_m: pa.Array) -> pa.Array:
@@ -504,229 +516,65 @@ def _encode_chunk_rows(tbl: pa.Table, part_id: int, seq: int,
     """Encode one chunk's physical columns → manifest/payload rows.
 
     ``schema`` drives kernel binding (the reference's user-declared decode
-    plan, inverted): each str column becomes one StringCol payload, each int
-    column one int payload, each list column a flat values payload + an
-    int64 offsets payload (list layout = `src/orc/col.clj:114-116`).
+    plan, inverted).  Each column is combined once (the leaves need
+    offset-0 arrays) and shredded to flat scalar payloads, every one
+    encoded by :func:`_scalar_payload`: a scalar column is one payload; a
+    list (any spelling) is its flattened values plus an offsets payload
+    that also carries list-level validity (list layout =
+    `src/orc/col.clj:114-116`); a map is its keys, its values and the same
+    offsets payload (Arrow's own map layout, `src/orc/col.clj:94-108`,
+    chunk-vectorized); a struct is one payload per scalar leaf plus a
+    0/1 present column per level (:func:`_shred_struct`).
+
+    A nullable payload is prefixed with its packed little-endian validity
+    bitmap (the ORC/Arrow PRESENT-stream model); payloads without nulls
+    carry no bitmap and stay byte-identical to stores written before
+    round 5.  Each payload's ``stats`` is its per-chunk zone map (the ORC
+    column-statistics analog), recorded in the manifest so decode can
+    prune chunks against predicates without touching payloads.
 
     ``cache`` is the per-partition selection cache (selector.encode_column):
     chunk 0 of a partition pays full selection + FSST table construction,
     later chunks reuse it — selection was ~half the string encode time."""
     n = tbl.num_rows
-    # per-chunk per-column min/max — the ORC column-statistics analog
-    # (zone maps): recorded in the manifest so decode can prune chunks
-    # against predicates without touching payloads
-    columns: dict[str, tuple[object, str, int]] = {}
-    #: per-payload validity (bool[n], None = all valid).  NULLs are encoded
-    #: as a packed little-endian validity bitmap prefixed to the payload
-    #: (the ORC/Arrow PRESENT-stream model) + a zero/empty fill value the
-    #: kernels see; non-null chunks carry no bitmap and stay BYTE-IDENTICAL
-    #: to stores written before round 5.  np.asarray of a nulled Arrow
-    #: array would otherwise yield silent INT_MIN sentinels — fill first.
-    valids: dict[str, np.ndarray | None] = {}
-    mm: dict[str, dict] = {}
+    #: physical column → _scalar_payload's (obj, kindtag, raw, valid, stats)
+    columns: dict[str, tuple] = {}
     for name, kind in schema:
-        col_raw = tbl.column(name)
-        if kind in TEMPORAL_STORAGE:
-            # exact reinterpret (days / micros) → the plain int path; the
-            # descriptor keeps the temporal kind so decode restores the
-            # Arrow type over the SAME storage values
-            col_raw = _temporal_to_storage(col_raw, kind)
-            kind = TEMPORAL_STORAGE[kind]
-        col_c = col_raw.combine_chunks() if (
-            col_raw.null_count or kind.startswith("list")
-        ) else None
-        nulls = col_raw.null_count
-        valid = np.asarray(col_c.is_valid()) if nulls else None
-        if kind in ("str", "binary"):
-            arr_c = col_c if col_c is not None else col_raw.combine_chunks()
-            col = StringCol.from_arrow(
-                pc.fill_null(arr_c, "" if kind == "str" else b"")
-                if nulls else arr_c
-            )
-            columns[name] = (col, "str", 0)
-            valids[name] = valid
-            if kind == "binary":
-                # bytes aren't JSON-safe manifest stats — stat-less chunk
-                # (conservatively kept by the zone-map pruner)
-                mm[name] = {"min": None, "max": None}
-            else:
-                lohi = pc.min_max(col_raw)  # skips nulls
-                mm[name] = {
-                    "min": lohi["min"].as_py(), "max": lohi["max"].as_py()}
-        elif kind in ("int32", "int64"):
-            if nulls:
-                arr = np.asarray(pc.fill_null(col_c, 0), dtype=_KIND_NP[kind])
-                lohi = pc.min_max(col_c)
-                mn, mx = lohi["min"].as_py(), lohi["max"].as_py()
-            else:
-                arr = np.asarray(
-                    col_raw.combine_chunks(), dtype=_KIND_NP[kind]
-                )
-                mn = int(arr.min()) if n else None
-                mx = int(arr.max()) if n else None
-            columns[name] = (arr, "int", arr.nbytes)
-            valids[name] = valid
-            mm[name] = {"min": mn, "max": mx}
-        elif kind in ("float32", "float64"):
-            if nulls:
-                arr = np.asarray(
-                    pc.fill_null(col_c, 0.0), dtype=_KIND_NP[kind]
-                )
-                fin = arr[valid]
-            else:
-                arr = np.asarray(
-                    col_raw.combine_chunks(), dtype=_KIND_NP[kind]
-                )
-                fin = arr
-            # kernels see the exact bit pattern (uint view) — NaN payload
-            # bits round-trip untouched; the reference's NaN→nil
-            # normalization (`src/orc/col.clj:73-74`) is NOT replicated
-            columns[name] = (arr.view(_FLOAT_U[kind]), "float", arr.nbytes)
-            valids[name] = valid
-            if len(fin) and bool(np.isfinite(fin).all()):
-                mm[name] = {"min": float(fin.min()), "max": float(fin.max())}
-            else:
-                # NaN/Inf aren't strict JSON and NaN breaks ordered zone
-                # maps (Spark sorts NaN greatest) — stat-less chunks are
-                # conservatively kept by the pruner
-                mm[name] = {"min": None, "max": None}
-        elif kind.startswith("struct"):
-            # STRUCT SHREDDING (round 5, recursive): one payload column per
-            # scalar leaf + a 0/1 present column per struct LEVEL.  Leaf
-            # validity stored per child = child-valid AND every-ancestor-
-            # valid (a value under a null ancestor is not observable data —
-            # and its Arrow buffer bytes are unspecified, so null-mask it
-            # for deterministic payloads).
-            col_s = tbl.column(name).combine_chunks()
-            pvalid = np.asarray(col_s.is_valid()) if nulls else None
-            _shred_struct(name, kind, col_s, pvalid, n, columns, valids, mm)
-        elif kind.startswith("map"):
-            # MAP SHREDDING (round 5): flat keys + flat values + offsets —
-            # Arrow's own map layout, chunk-vectorized (the reference walks
-            # map cells per row, `src/orc/col.clj:94-108`).  Null entries →
-            # length 0 (ghost values dropped by the list-view flatten);
-            # map-level validity rides on the offsets payload like lists.
-            kk, vk = map_kinds(kind)
-            k_name, v_name, o_name = map_payload_names(name)
-            col_l = _map_as_list(col_raw.combine_chunks())
-            entries = col_l.flatten()
-            lens = np.asarray(
-                pc.fill_null(pc.list_value_length(col_l), 0), dtype=np.int64
-            )
-            offsets = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(lens, out=offsets[1:])
+        col = tbl.column(name).combine_chunks()
+        if kind.startswith("struct"):
+            pvalid = np.asarray(col.is_valid()) if col.null_count else None
+            _shred_struct(name, kind, col, pvalid, n, columns)
+            continue
+        if kind.startswith("map"):
+            lists = _map_as_list(col)
+            entries = lists.flatten()
             keys = pc.struct_field(entries, 0)
-            vals = pc.struct_field(entries, 1)
             if keys.null_count:
                 raise ValueError(
                     f"map column {name!r} holds null keys (Arrow forbids)"
                 )
-            for p_name, child, ck in (
-                (k_name, keys, kk), (v_name, vals, vk)
-            ):
-                if ck in TEMPORAL_STORAGE:
-                    child = _temporal_to_storage(child, ck)
-                    ck = TEMPORAL_STORAGE[ck]
-                obj, ktag, raw, v_, mmv = _scalar_payload(child, ck)
-                columns[p_name] = (obj, ktag, raw)
-                valids[p_name] = v_
-                mm[p_name] = mmv
-            columns[o_name] = (offsets, "int", offsets.nbytes)
-            valids[o_name] = valid
-            mm[o_name] = {"min": 0, "max": int(offsets[-1])}
-        elif kind not in _KIND_NP:  # generic list<vk>: str/bool/binary/
-            # temporal values flatten through the same scalar-payload
-            # machinery as map values; offsets carry list-level validity
+            *leaf_names, o_name = map_payload_names(name)
+            leaves = zip(leaf_names, (keys, pc.struct_field(entries, 1)),
+                         map_kinds(kind))
+        elif kind.startswith("list"):
+            lists = col
             v_name, o_name = list_payload_names(name)
-            vk = list_value_kind(kind)
-            col_l = (
-                col_c if col_c is not None
-                else tbl.column(name).combine_chunks()
-            )
-            values = col_l.flatten()
-            lens = np.asarray(
-                pc.fill_null(pc.list_value_length(col_l), 0), dtype=np.int64
-            )
-            if vk in TEMPORAL_STORAGE:
-                values = _temporal_to_storage(values, vk)
-                vk = TEMPORAL_STORAGE[vk]
-            obj, ktag, raw, v_valid, mmv = _scalar_payload(values, vk)
-            offsets = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(lens, out=offsets[1:])
-            columns[v_name] = (obj, ktag, raw)
-            columns[o_name] = (offsets, "int", offsets.nbytes)
-            valids[v_name] = v_valid
-            valids[o_name] = valid
-            mm[v_name] = mmv
-            mm[o_name] = {"min": 0, "max": int(offsets[-1])}
-        else:  # list32 / list64 / listf32 / listf64 (numeric fast path)
-            v_name, o_name = list_payload_names(name)
-            is_float = kind in _FLOAT_U
-            vals_nulls = (
-                col_c.flatten().null_count if col_c is not None else 0
-            )
-            if nulls or vals_nulls:
-                # null list entries → length 0 (their ghost values are not
-                # logical data; flatten() already skips them); null VALUES
-                # inside lists get their own validity bitmap + zero fill
-                values = col_c.flatten()
-                lens = np.asarray(
-                    pc.fill_null(pc.list_value_length(col_c), 0),
-                    dtype=np.int64,
-                )
-                v_valid = (
-                    np.asarray(values.is_valid()) if vals_nulls else None
-                )
-                flat = np.asarray(
-                    pc.fill_null(values, 0) if vals_nulls else values,
-                    dtype=_KIND_NP[kind],
-                )
-            else:
-                flat = _flatten_list(tbl.column(name), _KIND_NP[kind])
-                lens = np.asarray(
-                    pc.list_value_length(tbl.column(name)).combine_chunks(),
-                    dtype=np.int64,
-                )
-                v_valid = None
-            if is_float:
-                # same contract as scalar floats: kernels see the exact bit
-                # pattern (NaN payloads round-trip); NaN/Inf values make the
-                # chunk stat-less (NaN breaks ordered zone maps and isn't
-                # strict JSON) — conservatively kept by the pruner
-                fin = flat[v_valid] if v_valid is not None else flat
-                if len(fin) and bool(np.isfinite(fin).all()):
-                    v_mn, v_mx = float(fin.min()), float(fin.max())
-                else:
-                    v_mn = v_mx = None
-            elif v_valid is not None:
-                vals = flat[v_valid]
-                v_mn = int(vals.min()) if len(vals) else None
-                v_mx = int(vals.max()) if len(vals) else None
-            else:
-                v_mn = int(flat.min()) if len(flat) else None
-                v_mx = int(flat.max()) if len(flat) else None
-            offsets = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(lens, out=offsets[1:])
-            columns[v_name] = (
-                (flat.view(_FLOAT_U[kind]), "float", flat.nbytes)
-                if is_float else (flat, "int", flat.nbytes)
-            )
-            columns[o_name] = (offsets, "int", offsets.nbytes)
-            # list-level validity rides on the offsets payload
-            valids[v_name] = v_valid
-            valids[o_name] = valid
-            mm[v_name] = {"min": v_mn, "max": v_mx}
-            mm[o_name] = {"min": 0, "max": int(offsets[-1])}
+            leaves = [(v_name, col.flatten(), list_value_kind(kind))]
+        else:
+            columns[name] = _scalar_payload(col, kind)
+            continue
+        for p_name, leaf, leaf_kind in leaves:
+            columns[p_name] = _scalar_payload(leaf, leaf_kind)
+        columns[o_name] = _offsets_payload(lists)
     chunk_id = (part_id << 20) | seq
 
     rows: dict[str, list] = {k.name: [] for k in OUT_SCHEMA}
-    for col_name, (col, kind, raw) in columns.items():
+    for col_name, (col, kind, raw, v, stats) in columns.items():
         if kind == "str":
             raw = len(col.data) + col.offsets.nbytes
         payload, meta, selection = encode_column(
             col, kind, cache, col_name, policy
         )
-        v = valids.get(col_name)
         if v is not None:
             # packed little-endian = Arrow validity-buffer bit order, so
             # decode can hand the bytes straight to Array.from_buffers
@@ -745,7 +593,7 @@ def _encode_chunk_rows(tbl: pa.Table, part_id: int, seq: int,
         rows["enc_bytes"].append(len(payload))
         rows["crc"].append(crc32(payload))
         rows["selection"].append(json.dumps(selection, separators=(",", ":")))
-        rows["stats"].append(json.dumps(mm[col_name], separators=(",", ":")))
+        rows["stats"].append(json.dumps(stats, separators=(",", ":")))
         rows["part_id"].append(part_id)
     return rows
 
@@ -936,37 +784,24 @@ def _row_weight_csum(tbl: pa.Table, schema) -> np.ndarray:
     (+8 offsets index) plus the fixed scalar footprint — a fixed 8 B/str
     would degenerate the byte budget into a row-count budget on
     string-heavy schemas (round-4 advice)."""
+    def width(k: str) -> int:  # str/binary values priced at 16 B
+        return 16 if k in ("str", "binary") else _KIND_NP[k]().itemsize
+
     w = None
     for name, kind in schema:
         if kind.startswith("list"):
-            if kind in _KIND_NP:
-                width = _KIND_NP[kind]().itemsize
-            else:  # generic list<vk>: str/binary values priced at 16 B
-                vk = list_value_kind(kind)
-                width = (
-                    16 if vk in ("str", "binary")
-                    else _KIND_NP[TEMPORAL_STORAGE.get(vk, vk)]().itemsize
-                )
-            # fill_null: a NULL list entry otherwise casts to INT_MIN and
-            # corrupts the cumulative budget (negative weights)
-            lens = np.asarray(
-                pc.fill_null(
-                    pc.list_value_length(tbl.column(name)), 0
-                ).combine_chunks(),
-                dtype=np.int64,
-            ) * width
-            w = lens if w is None else w + lens
+            lists, wd = tbl.column(name), width(list_value_kind(kind))
         elif kind.startswith("map"):
-            kk, vk = map_kinds(kind)
-            width = sum(  # byte entries priced at 16 B (key/value average)
-                16 if k in ("str", "binary")
-                else _KIND_NP[TEMPORAL_STORAGE.get(k, k)]().itemsize
-                for k in (kk, vk)
-            )
-            lens = np.asarray(pc.fill_null(pc.list_value_length(
-                _map_as_list(tbl.column(name).combine_chunks())
-            ), 0), dtype=np.int64) * width
-            w = lens if w is None else w + lens
+            lists = _map_as_list(tbl.column(name).combine_chunks())
+            wd = sum(width(k) for k in map_kinds(kind))
+        else:
+            continue
+        # fill_null: a NULL entry otherwise casts to INT_MIN and corrupts
+        # the cumulative budget (negative weights)
+        lens = np.asarray(
+            pc.fill_null(pc.list_value_length(lists), 0), dtype=np.int64
+        ) * wd
+        w = lens if w is None else w + lens
     if w is not None:
         return np.cumsum(w)
     scalar_bytes = 0

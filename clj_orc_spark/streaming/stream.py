@@ -103,12 +103,11 @@ def stream_decode(
     """
     from ..pipeline.decode import (
         WORK_DDL,
-        _physical_map,
         _select_ddl,
         make_files_decoder,
         store_schema,
     )
-    from ..pipeline.encode import local_frame
+    from ..pipeline.encode import local_frame, physical_map
 
     chunks_dir = os.path.join(out_dir, "chunks")
     static_schema = spark.read.parquet(chunks_dir).schema
@@ -118,7 +117,7 @@ def stream_decode(
     ddl = _select_ddl([name for name, _ in schema], schema)
     needed = sorted({
         p for c in (name for name, _ in schema)
-        for p in _physical_map(schema)[c]
+        for p in physical_map(schema)[c]
     })
     # overlap reads only for remote stores (see decode(): local saturated
     # cores lose to the extra reader thread, object stores win)

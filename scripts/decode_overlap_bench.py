@@ -53,8 +53,9 @@ def main() -> None:
 
         from clj_orc_spark.pipeline import encode
         from clj_orc_spark.pipeline.decode import (
-            _physical_map, _select_ddl, make_files_decoder, store_schema,
+            _select_ddl, make_files_decoder, store_schema,
         )
+        from clj_orc_spark.pipeline.encode import physical_map
 
         encode(spark, src, out, n_partitions=1, resume=False)
 
@@ -79,7 +80,7 @@ def main() -> None:
         schema = store_schema(spark, out)
         ddl = _select_ddl([name for name, _ in schema], schema)
         needed = sorted({p for c in (name for name, _ in schema)
-                         for p in _physical_map(schema)[c]})
+                         for p in physical_map(schema)[c]})
 
         def run(prefetch: bool) -> float:
             dec = make_files_decoder(None, schema, needed, False,

@@ -7,8 +7,9 @@ index + list-level validity ride the existing list machinery, and decode
 reassembles through the struct-field scalar path (`_scalar_arr`).  The
 reference's recursive column walk covers arrays of any element type
 (`src/orc/col.clj:83-92,110-121`); the engine's legacy short kinds
-(list32/list64/listf32/listf64) keep their numeric fast path and on-disk
-naming, so existing stores decode byte-identically.
+(list32/list64/listf32/listf64) are spellings of ``list<vk>`` that keep
+their on-disk naming and bytes, so existing stores decode byte-identically
+(pinned by ``tests/test_payload_golden.py``).
 """
 
 from __future__ import annotations

@@ -223,6 +223,9 @@ def test_decode_reads_file_list_from_manifest(spark, token_table_dir, tmp_dir):
 
 
 def test_decode_rejects_offsets_beyond_int32():
+    """Every offsets payload — the token list, a ``list<str>`` and a map —
+    refuses a chunk whose values overflow Arrow's int32 offsets, naming
+    the payload and the remedy."""
     import pyarrow as pa
 
     from clj_orc_spark.kernels import StringCol, crc32
@@ -234,24 +237,41 @@ def test_decode_rejects_offsets_beyond_int32():
         return payload, json.dumps(meta)
 
     one_str = StringCol(b"x", np.array([0, 1], dtype=np.int64))
-    cols = {
-        "doc_id": enc(one_str, "str"),
-        "source": enc(one_str, "str"),
-        "n_tok": enc(np.array([4], dtype=np.int32), "int"),
-        "token_values": enc(np.array([1, 2, 3, 4], dtype=np.int32), "int"),
-        "offsets": enc(np.array([0, 2**31 + 10], dtype=np.int64), "int"),
-    }
-    tbl = pa.table(
-        {
-            "chunk_id": pa.array([1] * 5, pa.int64()),
-            "col": pa.array(list(cols)),
-            "payload": pa.array([cols[c][0] for c in cols], pa.binary()),
-            "meta": pa.array([cols[c][1] for c in cols]),
-            "crc": pa.array([crc32(cols[c][0]) for c in cols], pa.int64()),
-        }
-    )
-    with pytest.raises(IOError, match="int32"):
-        decode_chunk_table(tbl)
+    huge = enc(np.array([0, 2**31 + 10], dtype=np.int64), "int")
+    cases = [
+        (None, "offsets", {
+            "doc_id": enc(one_str, "str"),
+            "source": enc(one_str, "str"),
+            "n_tok": enc(np.array([4], dtype=np.int32), "int"),
+            "token_values": enc(np.array([1, 2, 3, 4], dtype=np.int32),
+                                "int"),
+            "offsets": huge,
+        }),
+        ([("w", "list<str>")], "w__offsets", {
+            "w__values": enc(one_str, "str"),
+            "w__offsets": huge,
+        }),
+        ([("m", "map<str,int64>")], "m__offsets", {
+            "m__keys": enc(one_str, "str"),
+            "m__mapvalues": enc(np.array([7], dtype=np.int64), "int"),
+            "m__offsets": huge,
+        }),
+    ]
+    for schema, o_name, cols in cases:
+        tbl = pa.table(
+            {
+                "chunk_id": pa.array([1] * len(cols), pa.int64()),
+                "col": pa.array(list(cols)),
+                "payload": pa.array([cols[c][0] for c in cols], pa.binary()),
+                "meta": pa.array([cols[c][1] for c in cols]),
+                "crc": pa.array([crc32(cols[c][0]) for c in cols],
+                                pa.int64()),
+            }
+        )
+        kw = {} if schema is None else {"schema": schema}
+        with pytest.raises(IOError, match=rf"'{o_name}'.*int32.*"
+                                          r"smaller chunk_bytes"):
+            decode_chunk_table(tbl, **kw)
 
 
 # --- filesystem-agnostic sidecar I/O -----------------------------------------

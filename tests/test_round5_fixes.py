@@ -122,13 +122,14 @@ def test_files_decoder_serial_matches_prefetch(spark, token_table_dir,
     encode(spark, src, out, n_partitions=2)
 
     from clj_orc_spark.pipeline.decode import (
-        _physical_map, _select_ddl, make_files_decoder, store_schema,
+        _select_ddl, make_files_decoder, store_schema,
     )
+    from clj_orc_spark.pipeline.encode import physical_map
 
     schema = store_schema(spark, out)
     ddl = _select_ddl([name for name, _ in schema], schema)
     needed = sorted({p for c in (name for name, _ in schema)
-                     for p in _physical_map(schema)[c]})
+                     for p in physical_map(schema)[c]})
     chunk_files = [
         os.path.join(root, f)
         for root, _, fs_ in os.walk(os.path.join(out, "chunks"))
