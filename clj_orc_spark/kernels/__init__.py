@@ -17,14 +17,6 @@ from .rle import Rle  # noqa: F401
 from .split import ByteSplit  # noqa: F401
 
 
-def encode_int(arr, codec_name: str):
-    return INT_CODECS[codec_name].encode(arr)
-
-
-def encode_str(col: StringCol, codec_name: str):
-    return STR_CODECS[codec_name].encode(col)
-
-
 def decode_any(payload: bytes, meta: dict):
     """Decode by the codec name recorded in the meta (manifest) record."""
     return get_codec(meta["codec"]).decode(payload, meta)

@@ -160,6 +160,21 @@ def store_schema(spark, out_dir: str) -> list[tuple[str, str]]:
     return list(DEFAULT_SCHEMA)
 
 
+def _require_store(spark, out_dir: str) -> None:
+    """Raise ``ValueError`` when ``out_dir`` holds neither plan.json nor a
+    manifest: a mistyped location is no store, not an empty token table
+    (an encoded empty store has plan.json and no manifest)."""
+    import os
+
+    if (not fsio.exists(spark, os.path.join(out_dir, "plan.json"))
+            and pafs.hive_dataset(
+                os.path.join(out_dir, "manifest", "chunks")) is None):
+        raise ValueError(
+            f"no store at {out_dir!r}: it holds neither plan.json nor a "
+            "manifest"
+        )
+
+
 def decode_chunk_table(tbl: pa.Table, columns: list[str] | None = None,
                        schema=DEFAULT_SCHEMA) -> pa.Table:
     """Decode one chunk's column rows back to source-table rows.
@@ -739,7 +754,7 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     columns = preds.columns
     ddl = _select_ddl(columns if columns is not None else order, schema)
 
-    from .encode import local_frame
+    from .encode import local_frame, work_frame
 
     pruned = _stat_pruned_specs(
         spark, out_dir, part_ids, preds.range_specs, preds.isin_specs
@@ -751,6 +766,7 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
                      for f in _manifest_files(spark, out_dir, part_ids)]
     # empty results are zero-partition frames: actions over them start no task
     if not work_rows:
+        _require_store(spark, out_dir)
         return local_frame(spark, [], ddl)
 
     phys = physical_map(schema)
@@ -772,10 +788,7 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
 
     # each task receives its OWN file path as data — a closure over the full
     # file list would ship every task a copy of all paths (millions at 100 TB)
-    work = spark.createDataFrame(
-        spark.sparkContext.parallelize(work_rows, len(work_rows)), WORK_DDL
-    )
-    return work.mapInArrow(decode_files, ddl)
+    return work_frame(spark, work_rows, WORK_DDL).mapInArrow(decode_files, ddl)
 
 
 def _rg_keep(md, cids: set | None, needed_cols, prune_cols: bool) -> list[int]:
@@ -913,7 +926,7 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
     def decode_files(batches):
         from concurrent.futures import ThreadPoolExecutor
 
-        pafs.clamp_arrow_threads()
+        pafs.worker_setup()
         pool = ThreadPoolExecutor(max_workers=1) if prefetch else _Inline()
         try:
             for batch in batches:

@@ -72,6 +72,7 @@ from pyarrow.fs import FileSelector, FileType
 
 from ..kernels import StringCol, crc32
 from ..selector import encode_column
+from ..worker import set_up_rows
 from . import fsio, pafs
 
 #: raw token bytes per chunk (the reference's byte-limit analog).  Round 4:
@@ -768,10 +769,23 @@ def rowgroup_work_df(spark, parts, pending: list[int]):
     share one write task, and the move measured only ~0.1 s on a 4-vCPU
     store build."""
     rows = [(int(p), json.dumps(parts[p])) for p in pending]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, len(rows)),
-        "pid int, units string",
-    )
+    return work_frame(spark, rows, "pid int, units string")
+
+
+def work_rdd(sc, rows: list[tuple]):
+    """Python RDD of ``rows``, one row per partition, whose worker runs
+    :func:`~clj_orc_spark.worker.worker_setup` before it yields them: that
+    worker feeds each ``mapInArrow`` task on the engine's path, so its
+    per-task set-up is on the critical path too."""
+    return sc.parallelize(rows, len(rows)).mapPartitions(set_up_rows)
+
+
+def work_frame(spark, rows: list[tuple], ddl: str):
+    """The encode and decode work lists: :func:`work_rdd` typed by ``ddl``,
+    one task per row.  A Python RDD, not a :func:`local_frame`, so Spark
+    does not size the frame from its rows (see :func:`rowgroup_work_df`
+    and :func:`~clj_orc_spark.pipeline.decode.decode`)."""
+    return spark.createDataFrame(work_rdd(spark.sparkContext, rows), ddl)
 
 
 def _row_weight_csum(tbl: pa.Table, schema) -> np.ndarray:
@@ -857,7 +871,7 @@ def make_rowgroup_encoder(chunk_bytes: int, fs=None, policy: str = "size",
     their own scheme.  A unit's ``hi=-1`` means "the whole row group"
     (manifest-planned units don't know footer row counts)."""
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pafs.clamp_arrow_threads()
+        pafs.worker_setup()
         for batch in batches:
             for pid, units_json in zip(
                 batch.column(0).to_pylist(), batch.column(1).to_pylist()

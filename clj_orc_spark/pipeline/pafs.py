@@ -26,46 +26,19 @@ Schemes pyarrow cannot serve raise here (``ArrowInvalid``/``OSError``);
 ``encode()`` turns that into a ``ValueError`` that points the caller at
 ``df=spark.read.parquet(path)``, whose frame is staged to a location pyarrow
 can read.
+
+The engine's encode and decode tasks call :func:`worker_setup` (defined in
+:mod:`clj_orc_spark.worker`) first: it clamps pyarrow's thread pools and
+stops PySpark's per-task ``importlib.invalidate_caches()`` from re-reading
+every unchanged zip archive on ``sys.path``.
 """
 
 from __future__ import annotations
 
 import pyarrow.fs as _fs
 
+from ..worker import worker_setup  # noqa: F401  (the engine tasks' entry)
 
-def clamp_arrow_threads() -> None:
-    """Bound pyarrow's per-process thread pools inside executor tasks.
-
-    Spark already supplies inter-task parallelism — every local[N] slot (or
-    real executor core) runs its own Python worker — but EACH worker's
-    pyarrow pools default to ``os.cpu_count()`` threads.  Two failure modes
-    on a 32-thread box: at local[32] that is ~32x32 CPU threads contending
-    for 32 hardware threads (oversubscription tax on every parquet
-    decompress and ``pc.*`` call), and at local[8] the 8 workers' 32-thread
-    pools silently use the WHOLE machine, so an N-vs-4N scaling comparison
-    is polluted — the N-level job secretly runs on all cores (the
-    north-rule measurement artifact this fixes).  One CPU thread per worker
-    keeps the parallelism where the scheduler can see and account for it;
-    two IO threads keep object-store reads overlapped.  Opt out (or widen)
-    with ``SPARK_GRAFT_ARROW_CPU`` (``0`` = leave pyarrow defaults) — e.g.
-    a real cluster running one fat executor with many cores per Python
-    worker wants the default pools back."""
-    import os
-
-    import pyarrow as pa
-
-    want = os.environ.get("SPARK_GRAFT_ARROW_CPU", "1")
-    try:
-        n = int(want)
-    except ValueError:
-        return
-    if n <= 0:
-        return
-    if pa.cpu_count() != n:
-        pa.set_cpu_count(n)
-    io_n = max(2, n)
-    if pa.io_thread_count() != io_n:
-        pa.set_io_thread_count(io_n)
 
 #: Hadoop filesystem scheme names → the pyarrow implementations that serve them
 SCHEME_ALIASES = {"s3a": "s3", "s3n": "s3", "gs": "gcs"}

@@ -1,5 +1,6 @@
 """One scaling-bench encode measurement in a fresh process — the A/B unit
-for the executor-side Arrow thread clamp (pafs.clamp_arrow_threads).
+for the executor-side Arrow thread clamp (the first half of
+pafs.worker_setup, which every engine task calls).
 
 Each invocation runs run_encode(cores) once and prints its JSON; the driver
 shell interleaves invocations with SPARK_GRAFT_ARROW_CPU=0 (pyarrow default

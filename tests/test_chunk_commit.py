@@ -9,8 +9,10 @@ after a crash between the rename and the manifest commit, and after a real
 task failure, leaves one chunk file and one manifest file per part, no
 duplicate record and a bit-identical store; corrupt or truncated chunk
 files fail naming the file and its part; a manifest without ``file``
-records asks for a re-encode; and a ``plan=`` unit that cannot be read
-raises before ``plan.json`` pins a schema.
+records asks for a re-encode; a location with neither ``plan.json`` nor a
+manifest is no store and raises, while an empty store decodes to nothing;
+and a ``plan=`` unit that cannot be read raises before ``plan.json`` pins a
+schema.
 """
 
 from __future__ import annotations
@@ -201,6 +203,46 @@ def test_plan_without_units_takes_default_schema(spark, tmp_dir):
         assert json.load(fh)["schema"] == [list(t) for t in DEFAULT_SCHEMA]
     assert encode(spark, out_dir=out, plan=plan)["pending"] == 0
     assert decode(spark, out).rdd.getNumPartitions() == 0
+
+
+def test_missing_store_raises_naming_out_dir(spark, tmp_dir):
+    """A location with neither ``plan.json`` nor a manifest holds no store:
+    ``decode`` (with or without a predicate) and the plan report raise
+    naming it instead of returning an empty token table.  An existing
+    empty directory is no store either."""
+    from clj_orc_spark.pipeline.decode import decode_plan_report
+
+    missing = os.path.join(tmp_dir, "no", "such", "store")
+    for out in (missing, tmp_dir):
+        for kw in ({}, {"ranges": {"n_tok": (1, None)}}):
+            with pytest.raises(ValueError,
+                               match=re.escape(f"no store at {out!r}")):
+                decode(spark, out, **kw)
+        with pytest.raises(ValueError, match=re.escape(repr(out))):
+            decode_plan_report(spark, out)
+
+
+def test_empty_store_decodes_to_zero_partitions(spark, tmp_dir):
+    """An encoded store that is empty — ``plan.json`` but no manifest —
+    decodes, with or without a predicate, to a zero-partition frame of the
+    pinned schema."""
+    out = os.path.join(tmp_dir, "out")
+    encode(spark, out_dir=out,
+           plan={"mode": "rowgroup", "n_total": 1, "parts": [[]]})
+    assert not os.path.exists(os.path.join(out, "manifest", "chunks"))
+    for frame in (decode(spark, out),
+                  decode(spark, out, ranges={"n_tok": (1, None)})):
+        assert frame.rdd.getNumPartitions() == 0
+        assert frame.columns == [name for name, _ in DEFAULT_SCHEMA]
+
+
+def test_store_without_plan_reads_as_token_table(spark, store):
+    """A store whose manifest has no ``plan.json`` beside it (written
+    before schema recording) still decodes, as the token table."""
+    out, _, _ = store
+    n = decode(spark, out).count()
+    os.remove(os.path.join(out, "plan.json"))
+    assert decode(spark, out).count() == n > 0
 
 
 def test_unreadable_plan_unit_raises_before_plan_is_pinned(spark, tmp_dir):

@@ -153,18 +153,19 @@ def test_files_decoder_serial_matches_prefetch(spark, token_table_dir,
 
 
 def test_arrow_thread_clamp_reaches_workers(spark):
-    """pafs.clamp_arrow_threads must take effect inside executor-side Arrow
-    tasks: every Python worker's pyarrow CPU pool defaults to
-    os.cpu_count(), so at local[N] the N workers would otherwise contend
-    with N*cpu_count Arrow threads (and a local[8] run would silently use
-    the whole 32-thread box, polluting the N-vs-4N scaling comparison)."""
+    """pafs.worker_setup's Arrow thread clamp must take effect inside
+    executor-side Arrow tasks: every Python worker's pyarrow CPU pool
+    defaults to os.cpu_count(), so at local[N] the N workers would
+    otherwise contend with N*cpu_count Arrow threads (and a local[8] run
+    would silently use the whole 32-thread box, polluting the N-vs-4N
+    scaling comparison)."""
 
     def probe(batches):
         import pyarrow as pa
 
         from clj_orc_spark.pipeline import pafs
 
-        pafs.clamp_arrow_threads()
+        pafs.worker_setup()
         for batch in batches:
             n = batch.num_rows
             yield pa.RecordBatch.from_arrays(
@@ -190,11 +191,11 @@ def test_arrow_thread_clamp_opt_out(monkeypatch):
     before_io = pa.io_thread_count()
     try:
         monkeypatch.setenv("SPARK_GRAFT_ARROW_CPU", "0")
-        pafs.clamp_arrow_threads()
+        pafs.worker_setup()
         assert pa.cpu_count() == before_cpu
         assert pa.io_thread_count() == before_io
         monkeypatch.setenv("SPARK_GRAFT_ARROW_CPU", "3")
-        pafs.clamp_arrow_threads()
+        pafs.worker_setup()
         assert pa.cpu_count() == 3
         assert pa.io_thread_count() == 3
     finally:

@@ -1,0 +1,158 @@
+"""The per-task worker set-up, ``clj_orc_spark.worker.worker_setup`` (the
+engine tasks call it as ``pafs.worker_setup``).
+
+PySpark calls ``importlib.invalidate_caches()`` at the start of every task,
+and a plain ``zipimport.zipimporter`` answers it by re-reading its whole
+archive directory.  The set-up swaps each such importer for one that
+re-reads an archive only when the archive changed.  Pinned here: after the
+set-up an invalidation reads no unchanged archive, a rewritten archive is
+still re-read and its new module imports, the set-up's module imports only
+the standard library, and inside Spark both the ``mapInArrow`` workers and
+the work-list RDD workers are left with no plain ``zipimporter``.
+"""
+
+from __future__ import annotations
+
+import importlib
+import subprocess
+import sys
+import zipfile
+import zipimport
+
+import pyarrow as pa
+import pytest
+
+from clj_orc_spark.pipeline import pafs
+from clj_orc_spark.pipeline.encode import work_rdd
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, text in modules.items():
+            zf.writestr(name, text)
+
+
+@pytest.fixture()
+def import_state():
+    """Restore ``sys.path``, ``sys.path_importer_cache`` and the modules
+    the test imports, so no replaced importer leaks into other tests."""
+    path = list(sys.path)
+    cache = dict(sys.path_importer_cache)
+    modules = set(sys.modules)
+    yield
+    sys.path[:] = path
+    sys.path_importer_cache.clear()
+    sys.path_importer_cache.update(cache)
+    for name in set(sys.modules) - modules:
+        del sys.modules[name]
+
+
+def test_setup_rereads_only_a_changed_archive(tmp_path, monkeypatch,
+                                              import_state):
+    archive = str(tmp_path / "steady.zip")
+    _write_zip(archive, {
+        "steady_a.py": "VALUE = 1\n",
+        "steady_pkg/__init__.py": "",
+        "steady_pkg/sub.py": "VALUE = 2\n",
+    })
+    sys.path.insert(0, archive)
+    import steady_a  # noqa: F401
+    import steady_pkg.sub  # noqa: F401
+
+    keys = [archive, f"{archive}/steady_pkg"]
+    for key in keys:  # one importer for the archive, one for its package
+        assert type(sys.path_importer_cache[key]) is zipimport.zipimporter
+
+    reads: list[str] = []
+    real_read = zipimport._read_directory
+
+    def counting_read(path):
+        reads.append(path)
+        return real_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 2  # the plain importers re-read it
+
+    reads.clear()
+    pafs.worker_setup()
+    assert reads == []  # built from zipimport's directory cache
+    for key in keys:
+        finder = sys.path_importer_cache[key]
+        assert isinstance(finder, zipimport.zipimporter)
+        assert type(finder) is not zipimport.zipimporter
+    importlib.invalidate_caches()
+    assert reads == []
+
+    # a rewritten archive (a different size) is re-read, and its new
+    # module imports
+    _write_zip(archive, {
+        "steady_a.py": "VALUE = 1\n",
+        "steady_b.py": "VALUE = 3  # added after the first read\n",
+        "steady_pkg/__init__.py": "",
+        "steady_pkg/sub.py": "VALUE = 2\n",
+    })
+    importlib.invalidate_caches()
+    assert reads == [archive, archive]
+    import steady_b
+
+    assert steady_b.VALUE == 3
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads == []
+    zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_setup_module_imports_only_the_standard_library():
+    """A work list's Python worker runs no engine code, so the set-up's
+    module must not pull the engine's imports (numpy, pyarrow) into it."""
+    code = ("import sys, clj_orc_spark.worker; "
+            "print(sorted({'numpy', 'pyarrow', 'pyspark'} & set(sys.modules)))")
+    out = subprocess.run([sys.executable, "-c", code], check=True,
+                         capture_output=True, text=True).stdout
+    assert out.strip() == "[]"
+
+
+def test_setup_leaves_no_plain_zipimporter_in_workers(spark):
+    """Modelled on ``test_arrow_thread_clamp_reaches_workers``: a
+    ``mapInArrow`` probe and a probe chained onto the work-list RDD each
+    find, after the set-up, no plain ``zipimporter`` — and some replaced
+    one (``pyspark.zip`` and the engine zip are imported from archives)."""
+
+    def counts():  # (plain zipimporters, all zip importers) in the worker
+        import sys
+        import zipimport
+
+        finders = list(sys.path_importer_cache.values())
+        plain = sum(type(f) is zipimport.zipimporter for f in finders)
+        zips = sum(isinstance(f, zipimport.zipimporter) for f in finders)
+        return plain, zips
+
+    def arrow_probe(batches):
+        from clj_orc_spark.pipeline import pafs
+
+        pafs.worker_setup()
+        plain, zips = counts()
+        for batch in batches:
+            n = batch.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([plain] * n, pa.int32()),
+                 pa.array([zips] * n, pa.int32())],
+                names=["plain", "zips"],
+            )
+
+    got = (
+        spark.range(8).repartition(4)
+        .mapInArrow(arrow_probe, "plain int, zips int").collect()
+    )
+    assert got and all(r.plain == 0 and r.zips > 0 for r in got), got
+
+    def rdd_probe(rows):
+        plain, zips = counts()
+        for _ in rows:
+            yield plain, zips
+
+    rows = [(i,) for i in range(4)]
+    got = work_rdd(spark.sparkContext, rows).mapPartitions(rdd_probe).collect()
+    assert len(got) == 4 and all(p == 0 and z > 0 for p, z in got), got
+
