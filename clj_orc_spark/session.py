@@ -2,17 +2,28 @@
 
 Single place for the knobs that matter at 100 TB: AQE on, bounded Arrow
 batches (the analog of the reference's ``bat-size``/``buf-size`` memory
-governor, `src/orc/read.clj:14,16`), and shuffle partitions sized to the
-local[] stand-in (a real deployment overrides via spark-submit --conf).
+governor, `src/orc/read.clj:14,16`), shuffle partitions sized to the
+local[] stand-in (a real deployment overrides via spark-submit --conf),
+and JVM↔Python-worker traffic over Unix domain sockets.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import socketserver
+import tempfile
 
 from pyspark.sql import SparkSession
 
 ARROW_BATCH_ROWS = 4096  # rows per Arrow batch crossing the JVM↔Python boundary
+
+# PySpark and the JVM name each socket ``<dir>/.<uuid4>.sock`` (43 bytes
+# after ``<dir>``); Linux allows at most 107 bytes in an AF_UNIX path
+_SOCKET_NAME_BYTES = len("/.00000000-0000-0000-0000-000000000000.sock")
+_SOCKET_PATH_MAX = 107
 
 
 def _local_dir() -> str:
@@ -28,6 +39,40 @@ def _local_dir() -> str:
         os.makedirs(d, exist_ok=True)
         return d
     return "/tmp"
+
+
+@functools.cache
+def _private_socket_dir() -> str | None:
+    """A socket directory under ``/tmp`` for this process, removed at exit."""
+    try:
+        d = tempfile.mkdtemp(prefix="clj-orc-spark-", dir="/tmp")
+    except OSError:
+        return None
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
+def _socket_dir() -> str | None:
+    """Directory for the Python workers' Unix domain sockets, or ``None``
+    to stay on loopback TCP.
+
+    Over TCP every task waits ~40 ms on the worker's socket (the delayed-ACK
+    timer), on every engine call's critical path.  ``tempfile.gettempdir()``
+    is used when its socket paths fit in an AF_UNIX address; otherwise a
+    private directory under ``/tmp``.  ``None`` where Python has no
+    ``UnixStreamServer`` (PySpark's accumulator server needs it) or no
+    directory fits."""
+    if not hasattr(socketserver, "UnixStreamServer"):
+        return None
+
+    def fits(d: str | None) -> bool:
+        return (d is not None
+                and len(os.fsencode(d)) + _SOCKET_NAME_BYTES <= _SOCKET_PATH_MAX)
+
+    d = tempfile.gettempdir()
+    if not fits(d):
+        d = _private_socket_dir()
+    return d if fits(d) else None
 
 
 def package_zip() -> str:
@@ -88,6 +133,11 @@ def get_spark(master: str | None = None, app_name: str = "clj-orc-spark") -> Spa
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
     )
+    sock_dir = _socket_dir()
+    builder = builder.config("spark.python.unix.domain.socket.enabled",
+                             "false" if sock_dir is None else "true")
+    if sock_dir is not None:
+        builder = builder.config("spark.python.unix.domain.socket.dir", sock_dir)
     spark = builder.getOrCreate()
     spark.sparkContext.addPyFile(package_zip())
     return spark

@@ -3,13 +3,19 @@
 Usage (the --py-files artifact is the package zip):
 
     spark-submit --master local[32] --driver-memory 4g \
+      --conf spark.python.unix.domain.socket.enabled=true \
       --py-files $(python -c "from clj_orc_spark.session import package_zip; print(package_zip())") \
       scripts/submit_encode.py --input /path/tokens.parquet --out /path/out \
       [--decode-verify]
 
 On a cluster, swap --master for your resource manager; everything else is
 identical — the job only talks to SparkSession, storage paths, and the
-manifest.
+manifest.  The session is spark-submit's, so it gets none of
+``get_spark``'s defaults: the Unix-socket flag runs the JVM↔Python-worker
+traffic over Unix domain sockets instead of loopback TCP (~40 ms less per
+task; Spark puts the sockets in ``java.io.tmpdir``, whose socket paths
+must fit in 107 bytes, or in ``spark.python.unix.domain.socket.dir``).
+The engine tasks widen their socket buffers themselves.
 """
 
 from __future__ import annotations

@@ -9,21 +9,33 @@ set-up an invalidation reads no unchanged archive, a rewritten archive is
 still re-read and its new module imports, the set-up's module imports only
 the standard library, and inside Spark both the ``mapInArrow`` workers and
 the work-list RDD workers are left with no plain ``zipimporter``.
+
+The engine session runs the workers' traffic over a Unix domain socket,
+and the set-up widens that socket's buffers: a worker's JVM connection is
+AF_UNIX with a 4 MiB send buffer, and a temp directory too long for a
+socket path moves the sockets to a short private directory.
 """
 
 from __future__ import annotations
 
 import importlib
+import json
+import os
+import socket
 import subprocess
 import sys
+import tempfile
 import zipfile
 import zipimport
 
 import pyarrow as pa
 import pytest
 
+from clj_orc_spark import session
 from clj_orc_spark.pipeline import pafs
 from clj_orc_spark.pipeline.encode import work_rdd
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _write_zip(path, modules: dict[str, str]) -> None:
@@ -156,3 +168,120 @@ def test_setup_leaves_no_plain_zipimporter_in_workers(spark):
     got = work_rdd(spark.sparkContext, rows).mapPartitions(rdd_probe).collect()
     assert len(got) == 4 and all(p == 0 and z > 0 for p, z in got), got
 
+
+def test_worker_connection_is_a_unix_socket_with_a_wide_send_buffer(spark):
+    """Inside a ``mapInArrow`` task of the engine session every socket the
+    worker holds (its JVM connection, under several descriptors) is an
+    AF_UNIX stream, and after the set-up its send buffer is at least
+    ``min(4 MiB, wmem_max)`` (Linux reports the value doubled)."""
+    if not os.path.isdir("/proc/self/fd"):
+        pytest.skip("no /proc: the set-up leaves the buffers alone")
+    with open("/proc/sys/net/core/wmem_max") as f:
+        want = min(4 << 20, int(f.read()))
+
+    def probe(batches):
+        import os
+        import socket
+
+        from clj_orc_spark.pipeline import pafs
+
+        pafs.worker_setup()
+        found = []
+        for name in os.listdir("/proc/self/fd"):
+            try:
+                if not os.readlink(f"/proc/self/fd/{name}").startswith("socket:"):
+                    continue
+                sock = socket.socket(fileno=os.dup(int(name)))
+            except OSError:
+                continue
+            with sock:
+                found.append([int(sock.family), int(sock.type),
+                              sock.getsockopt(socket.SOL_SOCKET,
+                                              socket.SO_SNDBUF)])
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([json.dumps(found)] * batch.num_rows)],
+                names=["socks"])
+
+    got = {r.socks for r in spark.range(8).repartition(4)
+           .mapInArrow(probe, "socks string").collect()}
+    assert got
+    for socks in map(json.loads, got):
+        assert socks, "the worker holds no socket"
+        for family, kind, sndbuf in socks:
+            assert (family, kind) == (socket.AF_UNIX, socket.SOCK_STREAM)
+            assert sndbuf >= want, (sndbuf, want)
+
+
+def test_socket_dir_fits_an_af_unix_path(monkeypatch):
+    """A short temp directory holds the sockets itself; a long one is
+    replaced by one private directory under ``/tmp``, made once."""
+    session._private_socket_dir.cache_clear()
+    monkeypatch.setattr(tempfile, "tempdir", "/tmp")
+    assert session._socket_dir() == "/tmp"
+    assert session._private_socket_dir.cache_info().currsize == 0
+
+    monkeypatch.setattr(tempfile, "tempdir", "/" + "d" * 70)
+    d = session._socket_dir()
+    try:
+        assert os.path.dirname(d) == "/tmp" and os.path.isdir(d)
+        assert len(d) + len("/.%s.sock" % ("0" * 36)) <= 107
+        assert session._socket_dir() == d
+    finally:
+        os.rmdir(d)
+        session._private_socket_dir.cache_clear()
+
+
+_LONG_TMP_JOB = """
+import json
+import pyarrow as pa
+import pyarrow.compute as pc
+from clj_orc_spark.session import get_spark
+
+def double(batches):
+    for b in batches:
+        yield pa.RecordBatch.from_arrays([pc.multiply(b.column(0), 2)],
+                                         names=["id"])
+
+spark = get_spark(master="local[2]")
+conf = spark.sparkContext.getConf()
+total = (spark.range(100).repartition(2).mapInArrow(double, "id long")
+         .groupBy().sum("id").collect()[0][0])
+print(json.dumps({
+    "uds": conf.get("spark.python.unix.domain.socket.enabled"),
+    "dir": conf.get("spark.python.unix.domain.socket.dir"),
+    "total": total}))
+spark.stop()
+"""
+
+
+def test_session_starts_under_a_temp_dir_too_long_for_a_socket(tmp_path):
+    """With ``TMPDIR`` and the JVM's ``java.io.tmpdir`` 120 characters
+    long, PySpark's default socket paths would not fit in an AF_UNIX
+    address (the accumulator server raised ``AF_UNIX path too long``):
+    a fresh interpreter and JVM still start and run a ``mapInArrow`` job
+    over Unix sockets in a private directory, removed at exit."""
+    long_dir = str(tmp_path / "t")
+    long_dir += "x" * (120 - len(long_dir))
+    os.makedirs(long_dir)
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(
+            [REPO] + [p for p in [os.environ.get("PYTHONPATH")] if p]),
+        "TMPDIR": long_dir,
+        "SPARK_DRIVER_MEM": "1g",
+        "SPARK_LOCAL_DIRS": long_dir,
+        "PYSPARK_PYTHON": sys.executable,
+        "PYSPARK_SUBMIT_ARGS": (
+            f"--conf spark.driver.extraJavaOptions=-Djava.io.tmpdir={long_dir}"
+            " --conf spark.ui.showConsoleProgress=false pyspark-shell"),
+    }
+    run = subprocess.run([sys.executable, "-c", _LONG_TMP_JOB], env=env,
+                         cwd=long_dir, capture_output=True, text=True,
+                         timeout=300)
+    assert run.returncode == 0, run.stderr[-2000:]
+    got = json.loads(run.stdout.strip().splitlines()[-1])
+    assert got["total"] == 2 * sum(range(100))
+    assert got["uds"] == "true"
+    assert os.path.dirname(got["dir"]) == "/tmp", got
+    assert not os.path.exists(got["dir"])
