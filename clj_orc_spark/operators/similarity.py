@@ -87,9 +87,10 @@ def train_ivf(df: DataFrame, n_centroids: int = 16, vec_col: str = "embedding",
     if n_rows is not None:
         n = int(n_rows)
     else:
-        n = int(
-            df.select(F.lit(1)).rdd.countApprox(timeout=2000, confidence=0.9)
-        )
+        # the JVM RDD's countApprox: ``.rdd`` would add a Python RDD, whose
+        # tasks start a Python worker (and a second daemon) just to count
+        n = int(df.select(F.lit(1))._jdf.rdd().countApprox(2000, 0.9)
+                .initialValue().mean())
         if n <= 0:
             n = int(df.count())  # timeout returned nothing: exact fallback
     if n == 0:

@@ -720,7 +720,9 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     on these payload-heavy rows.)  A decode that reads no file returns a
     zero-partition frame.
 
-    The work list stays a Python RDD, not a driver-local relation: Spark
+    The work list is a JVM RDD with one row, so one task, per file
+    (:func:`~clj_orc_spark.pipeline.encode.work_frame`): scanning it
+    starts no Python worker.  It is not a driver-local relation: Spark
     sizes a ``LocalRelation`` from its rows (~50 B per path) and
     ``mapInArrow`` inherits that estimate, so a join would broadcast the
     whole decoded frame.  An RDD scan has Spark's default "unknown, huge"

@@ -72,7 +72,6 @@ from pyarrow.fs import FileSelector, FileType
 
 from ..kernels import StringCol, crc32
 from ..selector import encode_column
-from ..worker import set_up_rows
 from . import fsio, pafs
 
 #: raw token bytes per chunk (the reference's byte-limit analog).  Round 4:
@@ -763,29 +762,39 @@ def rowgroup_work_df(spark, parts, pending: list[int]):
     each slice, keeping task→partition 1:1.  (Past ~10^6 parts the plan
     belongs in a parquet sidecar rather than plan.json.)
 
-    Unlike the engine's other driver-held frames this one stays a Python
-    RDD, not a :func:`local_frame`: a ``LocalTableScan`` packs consecutive
-    rows into at most ``defaultParallelism`` tasks, so several parts would
-    share one write task, and the move measured only ~0.1 s on a 4-vCPU
-    store build."""
+    Like the decode work list, this one is a JVM RDD of unknown size
+    (:func:`work_frame`), not a :func:`local_frame`: a ``LocalTableScan``
+    packs consecutive rows into at most ``defaultParallelism`` tasks, so
+    several parts would share one write task."""
     rows = [(int(p), json.dumps(parts[p])) for p in pending]
     return work_frame(spark, rows, "pid int, units string")
 
 
-def work_rdd(sc, rows: list[tuple]):
-    """Python RDD of ``rows``, one row per partition, whose worker runs
-    :func:`~clj_orc_spark.worker.worker_setup` before it yields them: that
-    worker feeds each ``mapInArrow`` task on the engine's path, so its
-    per-task set-up is on the critical path too."""
-    return sc.parallelize(rows, len(rows)).mapPartitions(set_up_rows)
-
-
 def work_frame(spark, rows: list[tuple], ddl: str):
-    """The encode and decode work lists: :func:`work_rdd` typed by ``ddl``,
-    one task per row.  A Python RDD, not a :func:`local_frame`, so Spark
-    does not size the frame from its rows (see :func:`rowgroup_work_df`
-    and :func:`~clj_orc_spark.pipeline.decode.decode`)."""
-    return spark.createDataFrame(work_rdd(spark.sparkContext, rows), ddl)
+    """The encode and decode work lists: ``rows`` typed by ``ddl``, one
+    partition (so one task) per row.
+
+    The rows are pickled once on the driver and unpickled and typed in the
+    JVM: the calls ``createDataFrame`` makes for a Python RDD, minus the
+    identity ``map`` it inserts to re-batch the rows, which would make the
+    scan a ``PythonRDD``.  Scanning this frame starts no Python worker.  A
+    ``PythonRDD`` scan would: plain RDD workers come from a different
+    worker factory than the ``mapInArrow`` tasks', so it would fork a
+    second ``pyspark.daemon`` in every Spark context.  The frame is a
+    ``LogicalRDD``, which Spark does not size from its rows, so unlike a
+    :func:`local_frame` it is never broadcast in a join (see
+    :func:`~clj_orc_spark.pipeline.decode.decode`)."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql.types import DataType
+
+    serde = spark.sparkContext._jvm.SerDeUtil
+    pickled = spark.sparkContext.parallelize(rows, len(rows))._jrdd
+    # parallelize pickles its rows in batches (lists): batched=True
+    objects = serde.toJavaArray(serde.pythonToJava(pickled, True))
+    struct = DataType.fromDDL(ddl)
+    jdf = spark._jsparkSession.applySchemaToPythonRDD(objects.rdd(),
+                                                      struct.json())
+    return DataFrame(jdf, spark)
 
 
 def _row_weight_csum(tbl: pa.Table, schema) -> np.ndarray:
@@ -1417,6 +1426,11 @@ def encode(
     ``limit_parts`` encodes only the first K pending partitions — used by the
     resume tests to simulate a killed run (SURVEY.md §5 engine-test 5).
 
+    ``out_dir`` must be a location pyarrow serves (pafs.resolve): the
+    encode tasks write their chunk and manifest files there with pyarrow.
+    Any other raises a ``ValueError`` before anything is planned or
+    written.
+
     ``filesystem``: an explicit ``pyarrow.fs.FileSystem`` serving
     ``input_path`` or the ``plan=`` units (e.g. a credential-configured
     ``S3FileSystem``); by default the filesystem is resolved from the path's
@@ -1439,6 +1453,13 @@ def encode(
     if isinstance(sort_by, str):
         sort_by = [sort_by]
     sort_by = list(sort_by) if sort_by else None
+
+    # the tasks write, and the driver resumes from, out_dir with pyarrow:
+    # fail here, before plan.json is written, not once per encode task
+    try:
+        pafs.resolve(out_dir)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"pyarrow cannot serve out_dir {out_dir!r}: {e}") from e
 
     t0 = time.time()
     plan = _load_or_compute_rowgroup_plan(

@@ -1,14 +1,14 @@
 """Per-task set-up of the engine's Python workers.
 
-Every Python worker on an engine call's path runs :func:`worker_setup` at
-the start of each task: the encode task
-(``make_rowgroup_encoder.run``), the decode task
-(``make_files_decoder.decode_files``) and the work lists that feed them
-(:func:`~clj_orc_spark.pipeline.encode.work_rdd`).  A work list runs in
-its own Python RDD worker, which never runs engine code, so this module
-imports nothing but the standard library: importing the engine there
-(numpy, pyarrow, the kernels; ~0.2 s) would cost each new worker more than
-the set-up saves it.
+Every Python task on an engine call's path runs :func:`worker_setup` at
+its start: the encode task (``make_rowgroup_encoder.run``) and the decode
+task (``make_files_decoder.decode_files``).  The work lists that feed them
+are JVM RDDs (:func:`~clj_orc_spark.pipeline.encode.work_frame`) and start
+no Python worker.  This module imports nothing but the standard library:
+the set-up only adjusts what the worker has already loaded (it clamps
+pyarrow's pools only when the task imported pyarrow), so importing it
+costs a worker nothing.  The engine tasks reach it as
+``pafs.worker_setup``.
 
 The set-up also widens the buffers of the worker's socket to the executor
 JVM, once per process.  :func:`~clj_orc_spark.session.get_spark` runs that
@@ -52,8 +52,8 @@ def worker_setup() -> None:
       overlapped.  Opt out (or widen) with ``SPARK_GRAFT_ARROW_CPU``
       (``0`` = leave pyarrow defaults) — e.g. a real cluster running one
       fat executor with many cores per Python worker wants the default
-      pools back.  A worker that has not imported pyarrow (a work list's)
-      has no pools to clamp; every engine task imports it before it runs.
+      pools back.  A worker that has not imported pyarrow has no pools to
+      clamp; every engine task imports it before it runs.
     * **Zip importers that re-read only a changed archive.**  PySpark 4.1
       calls ``importlib.invalidate_caches()`` at the start of every task
       (``pyspark.worker_util.setup_spark_files``), and on CPython 3.11 that
@@ -76,13 +76,6 @@ def worker_setup() -> None:
         _clamp_arrow_threads(pa)
     _replace_zip_importers()
     _widen_unix_socket_buffers()
-
-
-def set_up_rows(rows):
-    """``mapPartitions`` pass-through that runs :func:`worker_setup` in the
-    Python worker of a work-list RDD."""
-    worker_setup()
-    return rows
 
 
 def _clamp_arrow_threads(pa) -> None:

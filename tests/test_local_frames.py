@@ -3,8 +3,10 @@
 An encode runs one Spark job: its tasks commit the chunk and manifest files
 and yield one rollup row per part, and the parts markers of its commit are
 rows the driver then only writes, so the driver writes them with pyarrow.
-The decode work list stays a Python RDD: Spark sizes a local relation from
-its rows, so a decoded frame built on one would be broadcast in joins.
+The encode and decode work lists are JVM RDDs of unknown size, one task
+per row: scanning them starts no Python worker, and unlike a local
+relation, which Spark sizes from its rows, a decoded frame built on one is
+never broadcast in joins.
 Also pinned here: empty decode results start no task, the markers carry
 the tasks' rollup whatever the driver's view of the manifest, and the
 resume reader fails loudly on an unreadable parts marker or a refused
@@ -15,6 +17,7 @@ from __future__ import annotations
 
 import importlib
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -141,6 +144,41 @@ def test_decoded_frame_is_never_broadcast(spark, source, store):
                            src.column("vals").to_pylist()))
     assert sorted(r["id"] for r in pruned.select("id").collect()) == list(
         range(50))
+
+
+def _python_rdd_nodes(df) -> list[str]:
+    """Lines of the executed RDD lineage that are ``PythonRDD`` nodes.  The
+    ``ParallelCollectionRDD`` that holds the driver's pickled rows names its
+    call site ``PythonRDD.scala``, so the node, not the substring, counts."""
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    return [line for line in lineage.splitlines()
+            if re.search(r"\bPythonRDD\[\d+\]", line)]
+
+
+def test_work_lists_are_jvm_rdds(spark, source, store):
+    """Both work lists scan a JVM RDD: neither the encode work list nor a
+    decode() frame holds a ``PythonRDD``, so no work list starts a Python
+    worker.  A work frame keeps one partition per row and round-trips its
+    rows exactly: a non-ASCII path, a ``None`` cids and an int pid."""
+    work = encode_mod.rowgroup_work_df(spark, [[["a", 0, 0, 1]], [], [1]],
+                                       [0, 2])
+    assert _python_rdd_nodes(work) == []
+    assert _python_rdd_nodes(decode(spark, store)) == []
+    assert _python_rdd_nodes(decode(spark, store, columns=["id"],
+                                    ranges={"id": (0, 49)})) == []
+    # control: a plain Python RDD scan does show the node
+    assert _python_rdd_nodes(spark.createDataFrame(
+        spark.sparkContext.parallelize([(1,)]).map(lambda r: r), "x int"))
+
+    rows = [("/données/日本/ü.parquet", None, 0),
+            ("s3://b/p=1/f.parquet", "[0, 3]", 2**31 - 1),
+            ("", "[]", -7)]
+    frame = encode_mod.work_frame(spark, rows,
+                                  "path string, cids string, pid int")
+    assert frame.rdd.getNumPartitions() == len(rows)
+    assert [tuple(r) for r in frame.collect()] == rows
+    assert [tuple(r) for r in work.collect()] == [
+        (0, '[["a", 0, 0, 1]]'), (2, "[1]")]
 
 
 def test_fully_pruned_decode_starts_no_task(spark, store):

@@ -159,3 +159,20 @@ def test_explicit_rowgroup_raises_on_unservable_input(spark, tmp_dir):
     with pytest.raises(ValueError, match=r"df=spark\.read\.parquet"):
         encode(spark, "weird://x/y", out)
     assert not os.path.exists(out)
+
+
+def test_unservable_out_dir_raises_before_planning(spark, token_table_dir):
+    """An ``out_dir`` pyarrow cannot serve fails once, on the driver, with a
+    ValueError naming it: before the plan is written and before any job,
+    not inside every encode task."""
+    src = os.path.join(token_table_dir, "tokens.parquet")
+    out = "nosuchfs://b/store"
+    sc = spark.sparkContext
+    group = "unservable-out-dir"
+    sc.setJobGroup(group, "encode into an unservable out_dir")
+    try:
+        with pytest.raises(ValueError, match=f"out_dir {out!r}"):
+            encode(spark, src, out, n_partitions=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -7,8 +7,8 @@ archive directory.  The set-up swaps each such importer for one that
 re-reads an archive only when the archive changed.  Pinned here: after the
 set-up an invalidation reads no unchanged archive, a rewritten archive is
 still re-read and its new module imports, the set-up's module imports only
-the standard library, and inside Spark both the ``mapInArrow`` workers and
-the work-list RDD workers are left with no plain ``zipimporter``.
+the standard library, and inside Spark the ``mapInArrow`` workers are left
+with no plain ``zipimporter``.
 
 The engine session runs the workers' traffic over a Unix domain socket,
 and the set-up widens that socket's buffers: a worker's JVM connection is
@@ -33,7 +33,6 @@ import pytest
 
 from clj_orc_spark import session
 from clj_orc_spark.pipeline import pafs
-from clj_orc_spark.pipeline.encode import work_rdd
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -116,8 +115,8 @@ def test_setup_rereads_only_a_changed_archive(tmp_path, monkeypatch,
 
 
 def test_setup_module_imports_only_the_standard_library():
-    """A work list's Python worker runs no engine code, so the set-up's
-    module must not pull the engine's imports (numpy, pyarrow) into it."""
+    """The set-up only adjusts what a worker already loaded, so its module
+    must not pull the engine's imports (numpy, pyarrow) into a worker."""
     code = ("import sys, clj_orc_spark.worker; "
             "print(sorted({'numpy', 'pyarrow', 'pyspark'} & set(sys.modules)))")
     out = subprocess.run([sys.executable, "-c", code], check=True,
@@ -127,9 +126,9 @@ def test_setup_module_imports_only_the_standard_library():
 
 def test_setup_leaves_no_plain_zipimporter_in_workers(spark):
     """Modelled on ``test_arrow_thread_clamp_reaches_workers``: a
-    ``mapInArrow`` probe and a probe chained onto the work-list RDD each
-    find, after the set-up, no plain ``zipimporter`` — and some replaced
-    one (``pyspark.zip`` and the engine zip are imported from archives)."""
+    ``mapInArrow`` probe finds, after the set-up, no plain
+    ``zipimporter`` — and some replaced one (``pyspark.zip`` and the engine
+    zip are imported from archives)."""
 
     def counts():  # (plain zipimporters, all zip importers) in the worker
         import sys
@@ -158,15 +157,6 @@ def test_setup_leaves_no_plain_zipimporter_in_workers(spark):
         .mapInArrow(arrow_probe, "plain int, zips int").collect()
     )
     assert got and all(r.plain == 0 and r.zips > 0 for r in got), got
-
-    def rdd_probe(rows):
-        plain, zips = counts()
-        for _ in rows:
-            yield plain, zips
-
-    rows = [(i,) for i in range(4)]
-    got = work_rdd(spark.sparkContext, rows).mapPartitions(rdd_probe).collect()
-    assert len(got) == 4 and all(p == 0 and z > 0 for p, z in got), got
 
 
 def test_worker_connection_is_a_unix_socket_with_a_wide_send_buffer(spark):
@@ -234,8 +224,11 @@ def test_socket_dir_fits_an_af_unix_path(monkeypatch):
 
 _LONG_TMP_JOB = """
 import json
+import os
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from clj_orc_spark.pipeline import decode, encode
 from clj_orc_spark.session import get_spark
 
 def double(batches):
@@ -243,14 +236,36 @@ def double(batches):
         yield pa.RecordBatch.from_arrays([pc.multiply(b.column(0), 2)],
                                          names=["id"])
 
+def daemons(jvm_pid):
+    # pyspark.daemon processes forked by the JVM itself; their workers are
+    # forked by a daemon, so they do not count
+    n = 0
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                if b"pyspark.daemon" not in f.read():
+                    continue
+            with open(f"/proc/{pid}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        n += ppid == jvm_pid
+    return n
+
 spark = get_spark(master="local[2]")
 conf = spark.sparkContext.getConf()
 total = (spark.range(100).repartition(2).mapInArrow(double, "id long")
          .groupBy().sum("id").collect()[0][0])
+pq.write_table(pa.table({"id": pa.array(range(50), pa.int64())}),
+               "src.parquet")
+encode(spark, "src.parquet", os.path.abspath("store"), n_partitions=2)
+rows = decode(spark, os.path.abspath("store")).count()
+jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
 print(json.dumps({
     "uds": conf.get("spark.python.unix.domain.socket.enabled"),
     "dir": conf.get("spark.python.unix.domain.socket.dir"),
-    "total": total}))
+    "total": total, "rows": rows,
+    "daemons": daemons(jvm_pid) if os.path.isdir("/proc") else None}))
 spark.stop()
 """
 
@@ -260,7 +275,12 @@ def test_session_starts_under_a_temp_dir_too_long_for_a_socket(tmp_path):
     long, PySpark's default socket paths would not fit in an AF_UNIX
     address (the accumulator server raised ``AF_UNIX path too long``):
     a fresh interpreter and JVM still start and run a ``mapInArrow`` job
-    over Unix sockets in a private directory, removed at exit."""
+    over Unix sockets in a private directory, removed at exit.
+
+    The same fresh context then runs an ``encode()`` and a
+    ``decode().count()``, and the JVM has forked one ``pyspark.daemon``
+    only: the work lists are JVM RDDs, so no plain Python RDD asks Spark's
+    second worker factory for a daemon of its own."""
     long_dir = str(tmp_path / "t")
     long_dir += "x" * (120 - len(long_dir))
     os.makedirs(long_dir)
@@ -282,6 +302,9 @@ def test_session_starts_under_a_temp_dir_too_long_for_a_socket(tmp_path):
     assert run.returncode == 0, run.stderr[-2000:]
     got = json.loads(run.stdout.strip().splitlines()[-1])
     assert got["total"] == 2 * sum(range(100))
+    assert got["rows"] == 50
+    if got["daemons"] is not None:
+        assert got["daemons"] == 1, got
     assert got["uds"] == "true"
     assert os.path.dirname(got["dir"]) == "/tmp", got
     assert not os.path.exists(got["dir"])
