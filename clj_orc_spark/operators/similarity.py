@@ -177,9 +177,8 @@ def build_ivf_index(
     import json
     import os
 
-    from ..pipeline import fsio
+    from ..pipeline import pafs
 
-    spark = df.sparkSession
     if centroids is None:
         centroids = train_ivf(df, n_centroids, vec_col, seed=seed, n_rows=n_rows)
     assigned = assign_centroids(df, centroids, vec_col)
@@ -189,8 +188,7 @@ def build_ivf_index(
         .partitionBy("centroid")
         .parquet(os.path.join(index_path, "vectors"))
     )
-    fsio.write_text(
-        spark,
+    pafs.write_text(
         os.path.join(index_path, "centroids.json"),
         json.dumps({
             "seed": seed, "vec_col": vec_col, "id_col": id_col,
@@ -204,11 +202,14 @@ def load_ivf_index(spark, index_path: str) -> tuple[np.ndarray, dict]:
     import json
     import os
 
-    from ..pipeline import fsio
+    from ..pipeline import pafs
 
-    meta = json.loads(
-        fsio.read_text(spark, os.path.join(index_path, "centroids.json"))
-    )
+    path = os.path.join(index_path, "centroids.json")
+    text = pafs.read_text(path)
+    if text is None:
+        raise FileNotFoundError(f"no IVF index at {index_path!r}: {path} "
+                                "is missing")
+    meta = json.loads(text)
     return np.asarray(meta["centroids"], dtype=np.float64), meta
 
 

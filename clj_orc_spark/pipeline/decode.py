@@ -27,7 +27,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from ..kernels import crc32, decode_any
-from . import fsio, pafs
+from . import pafs
 from .encode import (
     DEFAULT_SCHEMA,
     list_payload_names,
@@ -152,11 +152,10 @@ def store_schema(spark, out_dir: str) -> list[tuple[str, str]]:
     stores written before schema recording are the fixed token table."""
     import os
 
-    p = os.path.join(out_dir, "plan.json")
-    if fsio.exists(spark, p):
-        sch = json.loads(fsio.read_text(spark, p)).get("schema")
-        if sch:
-            return [tuple(t) for t in sch]
+    text = pafs.read_text(os.path.join(out_dir, "plan.json"))
+    sch = None if text is None else json.loads(text).get("schema")
+    if sch:
+        return [tuple(t) for t in sch]
     return list(DEFAULT_SCHEMA)
 
 
@@ -166,7 +165,7 @@ def _require_store(spark, out_dir: str) -> None:
     (an encoded empty store has plan.json and no manifest)."""
     import os
 
-    if (not fsio.exists(spark, os.path.join(out_dir, "plan.json"))
+    if (pafs.read_text(os.path.join(out_dir, "plan.json")) is None
             and pafs.hive_dataset(
                 os.path.join(out_dir, "manifest", "chunks")) is None):
         raise ValueError(
@@ -817,24 +816,6 @@ def _rg_keep(md, cids: set | None, needed_cols, prune_cols: bool) -> list[int]:
     return keep
 
 
-class _Inline:
-    """ThreadPoolExecutor stand-in that runs submit() on the caller thread —
-    the serial baseline for the decode read-overlap A/B."""
-
-    class _Done:
-        def __init__(self, value):
-            self._value = value
-
-        def result(self):
-            return self._value
-
-    def submit(self, fn, *args):
-        return self._Done(fn(*args))
-
-    def shutdown(self, wait=False):
-        pass
-
-
 def _part_label(path: str) -> str:
     """``part_id=P`` of a chunk file path (``part_id=?`` when the path
     carries no hive part directory)."""
@@ -848,18 +829,17 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
     each chunk's rows filtered by the compiled ``preds`` (a
     :class:`_Predicates`; None or predicate-free: every row).
 
-    Round 5: row groups are read with a ONE-IN-FLIGHT background prefetch —
-    while the codec kernels decode the chunks completed by group i, a
-    single reader thread pulls group i+1 (pyarrow's parquet reader releases
-    the GIL), the same read/compute overlap that bought encode +19%
-    (encode.py make_rowgroup_encoder).  Chunks may span row groups: rows
-    for a chunk are written contiguously, so everything except the
-    last-seen chunk_id is complete once a group arrives; the tail carries
-    over to the next group.  ``prefetch=False`` reads serially on the task
-    thread — the A/B baseline for scripts/decode_overlap_bench.py.  The
-    unpruned serial case (local store, full scan) skips the row-group
-    machinery entirely: one whole-file read + per-chunk grouping, the
-    cheapest plan when there is nothing to skip and nothing to overlap."""
+    One reader: each file's row groups that can hold wanted rows
+    (:func:`_rg_keep`) are read in order.  A chunk's rows are contiguous,
+    so a group splits into chunks at the ``chunk_id`` run boundaries, each
+    a zero-copy slice.  A chunk may span row groups (chunk files written
+    before the encoder ended row groups on chunk boundaries do), so the
+    last run of a group carries over into the next.  With ``prefetch`` a
+    single reader thread pulls group i+1 while the codec kernels decode
+    group i (pyarrow's parquet reader releases the GIL), the same
+    read/compute overlap as the encoder's (``make_rowgroup_encoder``);
+    ``prefetch=False`` reads on the task thread — the A/B baseline for
+    scripts/decode_overlap_bench.py."""
 
     def emit(group):
         t = decode_chunk_table(group, columns, schema)
@@ -869,24 +849,17 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
             t = t.filter(mask)
         yield from t.to_batches()
 
-    def decode_file(path, cids, pool):
+    def row_groups(path, cids, pool):
+        """The wanted rows of each kept row group, in file order."""
         import pyarrow.parquet as pq
 
         # manifest-recorded URIs may be scheme-qualified (object store) —
         # resolve per path; plain local paths hit LocalFileSystem
         fs, p = pafs.resolve(path)
-        if not prefetch and cids is None and not prune_cols:
-            tbl = pq.read_table(p, filesystem=fs)
-            for cid in np.unique(tbl.column("chunk_id").to_numpy()):
-                yield from emit(
-                    tbl.filter(pc.equal(tbl.column("chunk_id"), cid)))
-            return
         pf = pq.ParquetFile(p, filesystem=fs)
         keep = _rg_keep(pf.metadata, cids, needed_cols, prune_cols)
-        if not keep:
-            return
 
-        def _filtered(g):
+        def read(g):
             t = pf.read_row_group(g)
             if cids is not None:
                 t = t.filter(pc.is_in(
@@ -900,36 +873,35 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
                 ))
             return t
 
-        fut = pool.submit(_filtered, keep[0])
-        carry = None
-        for j in range(len(keep)):
+        if pool is None:
+            yield from map(read, keep)
+            return
+        fut = pool.submit(read, keep[0]) if keep else None
+        for g in keep[1:]:
             tbl = fut.result()
-            fut = (
-                pool.submit(_filtered, keep[j + 1])
-                if j + 1 < len(keep) else None
-            )
+            fut = pool.submit(read, g)
+            yield tbl
+        if fut is not None:
+            yield fut.result()
+
+    def decode_file(path, cids, pool):
+        carry = None
+        for tbl in row_groups(path, cids, pool):
             if carry is not None:
                 tbl = pa.concat_tables([carry, tbl])
-            if tbl.num_rows == 0:
-                carry = None
-                continue
             ids = tbl.column("chunk_id").to_numpy()
-            last = ids[-1]
-            if fut is not None:
-                done_mask = ids != last
-                carry = tbl.filter(pc.equal(tbl.column("chunk_id"), last))
-                tbl = tbl.filter(pa.array(done_mask))
-            else:
-                carry = None
-            for cid in np.unique(tbl.column("chunk_id").to_numpy()):
-                yield from emit(
-                    tbl.filter(pc.equal(tbl.column("chunk_id"), cid)))
+            starts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1).tolist()]
+            carry = tbl.slice(starts[-1])
+            for a, b in zip(starts, starts[1:]):
+                yield from emit(tbl.slice(a, b - a))
+        if carry is not None and carry.num_rows:
+            yield from emit(carry)
 
     def decode_files(batches):
         from concurrent.futures import ThreadPoolExecutor
 
         pafs.worker_setup()
-        pool = ThreadPoolExecutor(max_workers=1) if prefetch else _Inline()
+        pool = ThreadPoolExecutor(max_workers=1) if prefetch else None
         try:
             for batch in batches:
                 for path, cids_json in zip(
@@ -948,6 +920,7 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
                             f"chunk file {path} ({_part_label(path)}): {e}"
                         ) from e
         finally:
-            pool.shutdown(wait=False)
+            if pool is not None:
+                pool.shutdown(wait=False)
 
     return decode_files

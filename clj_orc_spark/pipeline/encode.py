@@ -72,7 +72,7 @@ from pyarrow.fs import FileSelector, FileType
 
 from ..kernels import StringCol, crc32
 from ..selector import encode_column
-from . import fsio, pafs
+from . import pafs
 
 #: raw token bytes per chunk (the reference's byte-limit analog).  Round 4:
 #: 8 MB → 32 MB after a sweep (8/16/32/64/128 MB at sf0.1): each 2× fewer
@@ -974,13 +974,6 @@ def make_rowgroup_encoder(chunk_bytes: int, fs=None, policy: str = "size",
     return run
 
 
-def _temp_path(part_dir: str, name: str) -> str:
-    """Attempt-unique temp name for ``name`` in ``part_dir``: ``.``-prefixed
-    and not ending in ``.parquet``, so file sources and ``pyarrow.dataset``
-    never see a half-written chunk, manifest or marker file."""
-    return f"{part_dir}/.{name}.{uuid.uuid4().hex[:12]}.tmp"
-
-
 def _publish(fs, temp: str, path: str) -> None:
     """Rename ``temp`` to ``path``, then delete every other entry of its
     directory: older files and the temps of killed attempts.  One writer
@@ -1014,7 +1007,7 @@ class _ChunkFile:
     writes them.
 
     Rows buffer into row groups of ~:data:`CHUNK_BLOCK_BYTES`, uncompressed
-    (payloads are already kernel-encoded), in a :func:`_temp_path` file.
+    (payloads are already kernel-encoded), in a :func:`~.pafs.temp_path` file.
     The manifest records wait until :meth:`commit` has published the chunk
     file, so a recorded ``file`` always exists."""
 
@@ -1028,7 +1021,7 @@ class _ChunkFile:
         self.dir = f"{root}/chunks/part_id={pid}"
         self.manifest_dir = f"{root}/manifest/chunks/part_id={pid}"
         self.path = f"{self.dir}/{self.name}"
-        self.temps = [_temp_path(self.dir, self.name)]  # chunk, manifest
+        self.temps = [pafs.temp_path(self.dir, self.name)]  # chunk, manifest
         self.uri = f"{chunks_uri}/part_id={pid}/{self.name}"
         self.rows: list[pa.RecordBatch] = []
         self.nbytes = 0
@@ -1070,7 +1063,7 @@ class _ChunkFile:
         self.writer.close()
         _publish(self.fs, self.temps[0], self.path)
         records = pa.Table.from_batches(self.manifest, MANIFEST_SCHEMA)
-        temp = _temp_path(self.manifest_dir, self.name)
+        temp = pafs.temp_path(self.manifest_dir, self.name)
         self.temps.append(temp)
         self.fs.create_dir(self.manifest_dir, recursive=True)
         pq.write_table(records, temp, filesystem=self.fs,
@@ -1114,10 +1107,10 @@ def write_chunk_files(encoder, out_dir: str):
     tasks need not share the driver's working directory).  The tasks
     resolve ``out_dir`` with pyarrow, as decode resolves the recorded
     URIs."""
+    out_dir = pafs.absolute(out_dir)
     chunks_uri = os.path.join(out_dir, "chunks")
-    if fsio.is_local(out_dir):
-        out_dir = os.path.abspath(out_dir)
-        chunks_uri = "file://" + os.path.join(out_dir, "chunks")
+    if "://" not in chunks_uri:
+        chunks_uri = "file://" + chunks_uri
     run_id = uuid.uuid4().hex
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -1178,9 +1171,7 @@ def _stage(df, out_dir: str) -> str:
     return that location: the rowgroup planner reads footers, and Spark's
     writer reaches every location Spark can read.  The staged files stay
     for the store's life, so a resume re-reads them without ``df``."""
-    path = os.path.join(out_dir, "_staging")
-    if fsio.is_local(path):
-        path = os.path.abspath(path)  # tasks need not share the cwd
+    path = pafs.absolute(os.path.join(out_dir, "_staging"))
     df.write.mode("overwrite").parquet(path)
     return path
 
@@ -1203,8 +1194,9 @@ def _load_or_compute_rowgroup_plan(spark, out_dir: str, input_path, df,
     ``input`` (unless an explicit ``filesystem`` served it) so a resume
     re-resolves the filesystem its fs-native paths belong to."""
     plan_path = os.path.join(out_dir, "plan.json")
-    if fsio.exists(spark, plan_path):
-        persisted = json.loads(fsio.read_text(spark, plan_path))
+    text = pafs.read_text(plan_path)
+    if text is not None:
+        persisted = json.loads(text)
         if persisted.get("mode") != "rowgroup":
             raise ValueError(
                 f"{plan_path!r} holds a "
@@ -1259,7 +1251,7 @@ def _load_or_compute_rowgroup_plan(spark, out_dir: str, input_path, df,
         plan["schema"] = [list(t) for t in schema]
     if sort_by:
         plan["sort_by"] = list(sort_by)
-    fsio.write_text(spark, plan_path, json.dumps(plan))
+    pafs.write_text(plan_path, json.dumps(plan))
     return plan
 
 
@@ -1315,10 +1307,8 @@ def _write_parts_markers(out_dir: str, rows: list[tuple]) -> None:
     no compression."""
     import pyarrow.parquet as pq
 
-    parts_dir = os.path.join(out_dir, "manifest", "parts")
-    if fsio.is_local(parts_dir):
-        parts_dir = os.path.abspath(parts_dir)
-    fs, root = pafs.resolve(parts_dir)
+    fs, root = pafs.resolve(
+        pafs.absolute(os.path.join(out_dir, "manifest", "parts")))
     name = f"part-{uuid.uuid4().hex}.parquet"
 
     def write(row: tuple) -> None:
@@ -1328,7 +1318,7 @@ def _write_parts_markers(out_dir: str, rows: list[tuple]) -> None:
         )
         part_dir = f"{root}/part_id={int(row[0])}"
         fs.create_dir(part_dir, recursive=True)
-        temp = _temp_path(part_dir, name)
+        temp = pafs.temp_path(part_dir, name)
         pq.write_table(table, temp, filesystem=fs, compression="none",
                        use_dictionary=False, store_schema=False)
         _publish(fs, temp, f"{part_dir}/{name}")
@@ -1522,11 +1512,9 @@ def encode(
         "wall_sec": wall,
     }
     meta_path = os.path.join(out_dir, "run_meta.json")
-    history = []
-    if fsio.exists(spark, meta_path):
-        history = json.loads(fsio.read_text(spark, meta_path)).get("runs", [])
-    fsio.write_text(
-        spark,
+    text = pafs.read_text(meta_path)
+    history = [] if text is None else json.loads(text).get("runs", [])
+    pafs.write_text(
         meta_path,
         json.dumps(
             {

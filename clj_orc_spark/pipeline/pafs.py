@@ -5,10 +5,14 @@ The encode plans from parquet/ORC footers and reads row groups inside
 ``mapInArrow``; its tasks write each part's chunk file and manifest file;
 the driver writes the parts markers, reads the manifest to plan decodes and
 size the store, and reads the markers to resume (:func:`hive_dataset`); the
-decode tasks read the chunk files.  Only the tiny text sidecars go through
-fsio.py (Hadoop FS).  This module maps any location onto a
-``pyarrow.fs.FileSystem`` so all of that works on object stores, not just
-local disk — the reference's headline remote flow is S3A
+decode tasks read the chunk files.  The engine's text sidecars
+(``plan.json``, ``run_meta.json``, ``stream_meta.json``, ``centroids.json``)
+are read and written here too (:func:`read_text`, :func:`write_text`), and
+a stream's checkpoint source log is read here.  Every file the engine writes
+lands under a ``.``-prefixed temp name and is renamed into place, so a reader
+sees the old file or the new one, never a part of one.  This module maps any
+location onto a ``pyarrow.fs.FileSystem`` so all of that works on object
+stores, not just local disk — the reference's headline remote flow is S3A
 (`src/orc/read.clj:27-49`, `README.md:87-107`):
 
 * bare local paths → ``LocalFileSystem``;
@@ -35,6 +39,10 @@ every unchanged zip archive on ``sys.path``.
 
 from __future__ import annotations
 
+import os
+import uuid
+
+import pyarrow as pa
 import pyarrow.fs as _fs
 
 from ..worker import worker_setup  # noqa: F401  (the engine tasks' entry)
@@ -60,6 +68,50 @@ def resolve(path: str, filesystem=None) -> tuple[_fs.FileSystem, str]:
     if "://" in path:
         return _fs.FileSystem.from_uri(normalize_uri(path))
     return _fs.LocalFileSystem(), path
+
+
+def absolute(path: str) -> str:
+    """``path`` made absolute when it is a bare local path (tasks need not
+    share the driver's working directory); a URI is returned as is."""
+    return path if "://" in path else os.path.abspath(path)
+
+
+def temp_path(directory: str, name: str) -> str:
+    """Attempt-unique temp name for ``name`` in ``directory``:
+    ``.``-prefixed and not ending in ``.parquet``, so file sources and
+    ``pyarrow.dataset`` never see a half-written file."""
+    return f"{directory}/.{name}.{uuid.uuid4().hex[:12]}.tmp"
+
+
+def read_text(path: str) -> str | None:
+    """The UTF-8 text of the file at ``path``, or None when it is missing
+    (one request: no separate existence probe)."""
+    fs, p = resolve(absolute(path))
+    try:
+        with fs.open_input_stream(p) as f:
+            return f.read().decode("utf-8")
+    except FileNotFoundError:
+        return None
+
+
+def write_text(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` through a :func:`temp_path` file renamed
+    onto ``path``, so a crash mid-write leaves the previous file intact.
+    The directory's other entries are left alone."""
+    fs, p = resolve(absolute(path))
+    directory, name = p.rsplit("/", 1)
+    fs.create_dir(directory, recursive=True)
+    temp = temp_path(directory, name)
+    try:
+        with fs.open_output_stream(temp) as f:
+            f.write(text.encode("utf-8"))
+        fs.move(temp, p)
+    except BaseException:
+        try:
+            fs.delete_file(temp)
+        except (OSError, pa.ArrowException):
+            pass
+        raise
 
 
 def file_infos(fs: _fs.FileSystem, path: str) -> list[_fs.FileInfo]:
@@ -92,23 +144,6 @@ def hive_dataset(path: str, fmt="parquet"):
     return dataset if dataset.files else None
 
 
-def list_files(fs: _fs.FileSystem, path: str, ext: str) -> list[str]:
-    """All ``ext`` files at/under ``path``, sorted."""
-    return [i.path for i in file_infos(fs, path) if i.path.endswith(ext)]
-
-
-def list_parquet(fs: _fs.FileSystem, path: str) -> list[str]:
-    return list_files(fs, path, ".parquet")
-
-
-def list_orc(fs: _fs.FileSystem, path: str) -> list[str]:
-    return list_files(fs, path, ".orc")
-
-
-def total_bytes(fs: _fs.FileSystem, path: str) -> int:
-    return sum(int(i.size or 0) for i in file_infos(fs, path))
-
-
 def open_parquet(path: str, fs: _fs.FileSystem | None = None):
     """ParquetFile handle through the resolved filesystem — executor-side
     helper (``fs=None`` re-resolves from the path, e.g. for manifest-recorded
@@ -138,8 +173,6 @@ class OrcInput:
         self.schema = self._of.schema
 
     def read_row_group(self, i: int, columns=None):
-        import pyarrow as pa
-
         return pa.Table.from_batches(
             [self._of.read_stripe(i, columns=columns)]
         )

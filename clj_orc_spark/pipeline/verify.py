@@ -18,7 +18,7 @@ import os
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
-from . import fsio, pafs
+from . import pafs
 
 
 def verify_digest(source: DataFrame, decoded: DataFrame) -> dict:
@@ -118,9 +118,7 @@ def _visible_bytes(path: str) -> int:
     entries named ``.*`` or ``_*`` (Hadoop ``.crc`` sidecars, ``_SUCCESS``,
     temp names) are skipped — an object store has none of them, so the
     size gate must not depend on the filesystem."""
-    if fsio.is_local(path):
-        path = os.path.abspath(path)
-    fs, root = pafs.resolve(path)
+    fs, root = pafs.resolve(pafs.absolute(path))
     total = 0
     for info in pafs.file_infos(fs, root):
         rel = info.path[len(root):].strip("/")

@@ -41,16 +41,15 @@ def _source_log_files(spark, checkpoint: str, batch_id: int) -> list[str]:
     rows."""
     import json
 
-    from ..pipeline import fsio
+    from ..pipeline import pafs
 
     base = os.path.join(checkpoint, "sources", "0", str(int(batch_id)))
     compact = None
-    if fsio.exists(spark, base):
-        text = fsio.read_text(spark, base)
-    elif fsio.exists(spark, base + ".compact"):
-        text = fsio.read_text(spark, base + ".compact")
+    text = pafs.read_text(base)
+    if text is None:
+        text = pafs.read_text(base + ".compact")
         compact = int(batch_id)
-    else:
+    if text is None:
         raise RuntimeError(
             f"checkpoint {checkpoint!r} has no source-log entry for batch "
             f"{batch_id} ({base!r})"
@@ -189,7 +188,7 @@ def stream_encode(
     """
     import json
 
-    from ..pipeline import fsio, pafs
+    from ..pipeline import pafs
     from ..pipeline.encode import (
         DEFAULT_CHUNK_BYTES,
         DEFAULT_SCHEMA,
@@ -208,8 +207,9 @@ def stream_encode(
     # partitions instead of overwriting the committed ones.  Pin k in a
     # sidecar on first start, exactly like batch encode pins plan.json.
     meta_path = os.path.join(out_dir, "stream_meta.json")
-    if fsio.exists(spark, meta_path):
-        pinned = json.loads(fsio.read_text(spark, meta_path))["parts_per_batch"]
+    text = pafs.read_text(meta_path)
+    if text is not None:
+        pinned = json.loads(text)["parts_per_batch"]
         if parts_per_batch is not None and parts_per_batch != pinned:
             raise ValueError(
                 f"out_dir was started with parts_per_batch={pinned}; a "
@@ -218,7 +218,7 @@ def stream_encode(
         k = pinned
     else:
         k = parts_per_batch or spark.sparkContext.defaultParallelism
-        fsio.write_text(spark, meta_path, json.dumps({"parts_per_batch": k}))
+        pafs.write_text(meta_path, json.dumps({"parts_per_batch": k}))
     # the landing dir's schema is the token-table contract — never inferred
     # (inference crashes on the EMPTY landing dir a fresh ingest starts with)
     stream = (

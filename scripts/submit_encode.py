@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 
 
 def main() -> None:
@@ -53,8 +54,9 @@ def main() -> None:
     if args.decode_verify:
         from clj_orc_spark.pipeline import pafs
 
-        fs, path = pafs.resolve(args.input)
-        if pafs.list_orc(fs, path) and not pafs.list_parquet(fs, path):
+        exts = {os.path.splitext(i.path)[1]
+                for i in pafs.file_infos(*pafs.resolve(args.input))}
+        if ".orc" in exts and ".parquet" not in exts:
             src = spark.read.orc(args.input)  # ORC-ingested store (round 5)
         else:
             # pathGlobFilter: fixture dirs may hold the ORC reference copy

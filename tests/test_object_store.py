@@ -34,15 +34,16 @@ def test_scheme_aliases_normalize_hadoop_names():
     assert pafs.normalize_uri("hdfs://nn/p") == "hdfs://nn/p"
 
 
-def test_list_parquet_file_dir_and_missing(token_table_dir, tmp_dir):
+def test_file_infos_file_dir_and_missing(token_table_dir, tmp_dir):
     import pyarrow.fs as pfs
 
     fs = pfs.LocalFileSystem()
     src = os.path.join(token_table_dir, "tokens.parquet")
-    assert pafs.list_parquet(fs, src) == [src]
-    assert src in pafs.list_parquet(fs, token_table_dir)
-    assert pafs.list_parquet(fs, os.path.join(tmp_dir, "nope")) == []
-    assert pafs.total_bytes(fs, src) == os.path.getsize(src)
+    infos = pafs.file_infos(fs, src)
+    assert [i.path for i in infos] == [src]
+    assert infos[0].size == os.path.getsize(src)
+    assert src in [i.path for i in pafs.file_infos(fs, token_table_dir)]
+    assert pafs.file_infos(fs, os.path.join(tmp_dir, "nope")) == []
 
 
 def test_file_uri_engages_rowgroup_mode(spark, token_table_dir, tmp_dir):

@@ -216,21 +216,22 @@ def test_stream_decode_raises_on_corrupt_source_log(
 ):
     """An unreadable source-log entry fails the micro-batch, naming the
     checkpoint, instead of decoding a guessed file list."""
-    from clj_orc_spark.pipeline import fsio
+    from clj_orc_spark.pipeline import pafs
     from clj_orc_spark.streaming import stream_decode
 
     src = os.path.join(token_table_dir, "tokens.parquet")
     out = os.path.join(tmp_dir, "enc")
     encode(spark, src, out, n_partitions=2)
-    real_read = fsio.read_text
+    real_read = pafs.read_text
 
-    def corrupt(sess, path):
-        text = real_read(sess, path)
-        if os.sep + os.path.join("sources", "0") + os.sep in path:
+    def corrupt(path):
+        text = real_read(path)
+        if (text is not None
+                and os.sep + os.path.join("sources", "0") + os.sep in path):
             text += '{"path": "file:///x.parquet", "timestamp": \n'
         return text
 
-    monkeypatch.setattr(fsio, "read_text", corrupt)
+    monkeypatch.setattr(pafs, "read_text", corrupt)
     sink = os.path.join(tmp_dir, "decoded")
     q = stream_decode(spark, out, sink, max_files_per_trigger=8)
     try:

@@ -277,14 +277,147 @@ def test_decode_rejects_offsets_beyond_int32():
 # --- filesystem-agnostic sidecar I/O -----------------------------------------
 
 
-def test_fsio_text_roundtrip_via_uri(spark, tmp_dir):
-    from clj_orc_spark.pipeline import fsio
+def test_pafs_text_roundtrip_local_and_file_uri(tmp_dir):
+    """Sidecar text goes through pyarrow for a bare path and a URI alike:
+    a missing file reads as None, an overwrite replaces the content, and
+    the temp name of the rename is gone afterwards."""
+    from clj_orc_spark.pipeline import pafs
 
-    uri = "file://" + os.path.join(tmp_dir, "sub", "x.json")
-    assert not fsio.exists(spark, uri)
-    fsio.write_text(spark, uri, '{"a": 1}')
-    assert fsio.exists(spark, uri)
-    assert fsio.read_text(spark, uri) == '{"a": 1}'
+    local = os.path.join(tmp_dir, "sub", "x.json")
+    uri = "file://" + os.path.join(tmp_dir, "uri", "y.json")
+    for path, on_disk in ((local, local), (uri, uri[len("file://"):])):
+        assert pafs.read_text(path) is None
+        pafs.write_text(path, '{"a": 1}')
+        assert pafs.read_text(path) == '{"a": 1}'
+        pafs.write_text(path, '{"b": "ü"}')
+        assert pafs.read_text(path) == '{"b": "ü"}'
+        with open(on_disk, encoding="utf-8") as f:
+            assert f.read() == '{"b": "ü"}'
+        assert os.listdir(os.path.dirname(on_disk)) == [
+            os.path.basename(on_disk)
+        ]
+
+
+class _FailingStream:
+    """Writable file object that takes its first bytes, then raises."""
+
+    def __init__(self, inner):
+        self.inner, self.closed = inner, False
+
+    def write(self, data):
+        self.inner.write(bytes(data[:4]))
+        raise OSError("simulated crash mid-write")
+
+    def flush(self):
+        pass
+
+    def close(self):
+        self.inner.close()
+        self.closed = True
+
+
+def _failing_fs():
+    """A ``pyarrow.fs.PyFileSystem`` over local disk whose output streams
+    fail after their first bytes."""
+    import pyarrow as pa
+    import pyarrow.fs as pfs
+
+    local = pfs.LocalFileSystem()
+
+    class Handler(pfs.FileSystemHandler):
+        def __eq__(self, other):
+            return isinstance(other, Handler)
+
+        def __ne__(self, other):
+            return not self == other
+
+        def get_type_name(self):
+            return "failing-writes"
+
+        def normalize_path(self, path):
+            return path
+
+        def get_file_info(self, paths):
+            return local.get_file_info(paths)
+
+        def get_file_info_selector(self, selector):
+            return local.get_file_info(selector)
+
+        def create_dir(self, path, recursive):
+            local.create_dir(path, recursive=recursive)
+
+        def delete_dir(self, path):
+            local.delete_dir(path)
+
+        def delete_dir_contents(self, path, missing_dir_ok=False):
+            local.delete_dir_contents(path, missing_dir_ok=missing_dir_ok)
+
+        def delete_root_dir_contents(self):
+            raise NotImplementedError
+
+        def delete_file(self, path):
+            local.delete_file(path)
+
+        def move(self, src, dest):
+            local.move(src, dest)
+
+        def copy_file(self, src, dest):
+            local.copy_file(src, dest)
+
+        def open_input_stream(self, path):
+            return local.open_input_stream(path)
+
+        def open_input_file(self, path):
+            return local.open_input_file(path)
+
+        def open_output_stream(self, path, metadata):
+            return pa.PythonFile(
+                _FailingStream(local.open_output_stream(path)), mode="w")
+
+        def open_append_stream(self, path, metadata):
+            raise NotImplementedError
+
+    return pfs.PyFileSystem(Handler())
+
+
+def test_failed_sidecar_write_keeps_the_old_plan(tmp_dir, monkeypatch):
+    """A write that dies after its first bytes leaves the previous
+    plan.json whole and parseable, and no temp file behind."""
+    from clj_orc_spark.pipeline import pafs
+
+    plan_path = os.path.join(tmp_dir, "plan.json")
+    old = json.dumps({"mode": "rowgroup", "parts": [[["a.parquet", 0]]]})
+    pafs.write_text(plan_path, old)
+
+    fs = _failing_fs()
+    monkeypatch.setattr(pafs, "resolve", lambda path, filesystem=None:
+                        (fs, path))
+    with pytest.raises(OSError, match="simulated crash"):
+        pafs.write_text(plan_path, json.dumps({"mode": "rowgroup",
+                                               "parts": []}))
+    monkeypatch.undo()
+    assert json.loads(pafs.read_text(plan_path)) == json.loads(old)
+    assert os.listdir(tmp_dir) == ["plan.json"]
+
+
+def test_resume_ignores_a_truncated_temp_plan(spark, token_table_dir,
+                                              tmp_dir):
+    """A crash mid-write leaves a truncated ``.plan.json.<hex>.tmp`` beside
+    the committed plan.json; the resume reads plan.json and decodes
+    bit-identically."""
+    from clj_orc_spark.pipeline import decode, encode, verify_roundtrip
+
+    src = os.path.join(token_table_dir, "tokens.parquet")
+    out = os.path.join(tmp_dir, "enc")
+    rep = encode(spark, src, out, n_partitions=2)
+    with open(os.path.join(out, "plan.json")) as f:
+        text = f.read()
+    with open(os.path.join(out, ".plan.json.0123456789ab.tmp"), "w") as f:
+        f.write(text[: len(text) // 2])
+    rep2 = encode(spark, out_dir=out)
+    assert rep2["pending"] == 0 and rep2["skipped"] == rep["pending"]
+    v = verify_roundtrip(spark.read.parquet(src), decode(spark, out))
+    assert v["bit_identical"] and v["total"] == 5_000, v
 
 
 def test_encode_decode_resume_via_file_uri(spark, token_table_dir, tmp_dir):

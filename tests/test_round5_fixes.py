@@ -152,6 +152,62 @@ def test_files_decoder_serial_matches_prefetch(spark, token_table_dir,
     assert a.count() == spark.read.parquet(src).count()
 
 
+def test_decode_chunks_spanning_row_groups(spark, tmp_dir):
+    """A chunk file whose row groups cut through chunks (written with
+    ``row_group_size=3``, as a writer that does not end row groups on
+    chunk boundaries would) decodes exactly like the unsplit file: full,
+    chunk-pruned and column-pruned reads, each serial (local path) and
+    overlapped (``file://`` URI)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 2_000
+    src = os.path.join(tmp_dir, "src.parquet")
+    pq.write_table(pa.table({
+        "id": pa.array(range(n), type=pa.int32()),
+        "vals": pa.array([[i, i * 7 % 13] for i in range(n)],
+                         type=pa.list_(pa.int32())),
+        "name": pa.array([f"n{i % 97:03d}" for i in range(n)]),
+    }), src)
+    out = os.path.join(tmp_dir, "enc")
+    encode(spark, src, out, n_partitions=1, chunk_bytes=2 << 10)
+
+    reads = {
+        "full": {},
+        "cids": {"ranges": {"id": (500, 700)}},
+        "cols": {"columns": ["id", "name"]},
+    }
+
+    def decode_all():
+        return {
+            (name, store): decode(spark, store, **kw).collect()
+            for name, kw in reads.items()
+            for store in (out, "file://" + out)
+        }
+
+    want = decode_all()
+    chunk_files = [
+        os.path.join(root, f)
+        for root, _, fs_ in os.walk(os.path.join(out, "chunks"))
+        for f in fs_ if f.endswith(".parquet")
+    ]
+    assert len(chunk_files) == 1
+    tbl = pq.read_table(chunk_files[0])
+    n_chunks = len(set(tbl.column("chunk_id").to_pylist()))
+    assert n_chunks > 3
+    pq.write_table(tbl, chunk_files[0], row_group_size=3)
+    md = pq.ParquetFile(chunk_files[0]).metadata
+    # 4 payload rows per chunk: every chunk crosses a row-group boundary
+    assert md.num_row_groups == -(-tbl.num_rows // 3)
+
+    got = decode_all()
+    for key, rows in want.items():
+        assert got[key] == rows, key
+    assert len(want[("full", out)]) == n
+    assert sorted(r["id"] for r in want[("cids", out)]) == list(
+        range(500, 701))
+
+
 def test_arrow_thread_clamp_reaches_workers(spark):
     """pafs.worker_setup's Arrow thread clamp must take effect inside
     executor-side Arrow tasks: every Python worker's pyarrow CPU pool
