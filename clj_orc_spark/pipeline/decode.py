@@ -17,6 +17,7 @@ CRC of every payload is checked against the value recorded at encode time.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import re
@@ -159,7 +160,7 @@ def store_schema(spark, out_dir: str) -> list[tuple[str, str]]:
     return list(DEFAULT_SCHEMA)
 
 
-def _require_store(spark, out_dir: str) -> None:
+def _require_store(out_dir: str) -> None:
     """Raise ``ValueError`` when ``out_dir`` holds neither plan.json nor a
     manifest: a mistyped location is no store, not an empty token table
     (an encoded empty store has plan.json and no manifest)."""
@@ -340,7 +341,7 @@ def _strip_file_scheme(uri: str) -> str:
     return urlparse(uri).path if uri.startswith("file:") else uri
 
 
-def _read_manifest(spark, out_dir: str, columns: list[str],
+def _read_manifest(out_dir: str, columns: list[str],
                    part_ids=None, cols=None) -> pa.Table | None:
     """THE manifest reader of decode planning (file listing, zone-map
     pruning, plan report) and of the size gate: ``columns`` of the
@@ -380,12 +381,12 @@ def _read_manifest(spark, out_dir: str, columns: list[str],
     return dataset.to_table(columns=columns, filter=flt)
 
 
-def _manifest_files(spark, out_dir: str, part_ids: list[int] | None) -> list[str]:
+def _manifest_files(out_dir: str, part_ids: list[int] | None) -> list[str]:
     """Chunk file list from the manifest (the scale path: no filesystem walk
     — on an object store, enumeration comes from committed lineage, and
     uncommitted partial files from a crashed wave are never decoded).
     Empty when the store has no manifest yet."""
-    tbl = _read_manifest(spark, out_dir, ["file"], part_ids)
+    tbl = _read_manifest(out_dir, ["file"], part_ids)
     if tbl is None:
         return []
     uris = {u for u in pc.unique(tbl.column("file")).to_pylist() if u}
@@ -519,8 +520,7 @@ def _file_groups(files, cids) -> list[tuple[str, list[int]]]:
     )
 
 
-def _stat_pruned_specs(spark, out_dir: str, part_ids, range_specs,
-                       isin_specs):
+def _stat_pruned_specs(out_dir: str, part_ids, range_specs, isin_specs):
     """Zone-map pruning: (file, [chunk_ids]) for chunks whose recorded
     per-column min/max intersects the predicates — the ORC column-statistics
     analog, answered on the driver from the payload-pruned manifest (no
@@ -536,7 +536,7 @@ def _stat_pruned_specs(spark, out_dir: str, part_ids, range_specs,
     if not range_specs and not isin_specs:
         return None
     phys = sorted({s[0] for s in range_specs} | {s[0] for s in isin_specs})
-    m = _read_manifest(spark, out_dir, ["chunk_id", "col", "stats", "file"],
+    m = _read_manifest(out_dir, ["chunk_id", "col", "stats", "file"],
                        part_ids, phys)
     if m is None:
         return None
@@ -689,12 +689,12 @@ def decode_plan_report(spark, out_dir: str,
     Returns ``{"chunks_total", "chunks_kept", "files_total", "files_kept"}``.
     """
     preds = _compile_predicates(store_schema(spark, out_dir), ranges, isin)
-    m = _read_manifest(spark, out_dir, ["chunk_id", "file"])
+    m = _read_manifest(out_dir, ["chunk_id", "file"])
     if m is None:
         raise ValueError(f"no manifest with file records under {out_dir!r}")
     chunks = len(pc.unique(m.column("chunk_id")).drop_null())
     files = len(pc.unique(m.column("file")).drop_null())
-    pruned = _stat_pruned_specs(spark, out_dir, None, preds.range_specs,
+    pruned = _stat_pruned_specs(out_dir, None, preds.range_specs,
                                 preds.isin_specs)
     if pruned is None:  # no predicates or stat-less store: everything kept
         kept_c, kept_f = chunks, files
@@ -755,20 +755,19 @@ def decode(spark, out_dir: str, part_ids: list[int] | None = None,
     columns = preds.columns
     ddl = _select_ddl(columns if columns is not None else order, schema)
 
-    from .encode import local_frame, work_frame
+    from .encode import work_frame
 
     pruned = _stat_pruned_specs(
-        spark, out_dir, part_ids, preds.range_specs, preds.isin_specs
+        out_dir, part_ids, preds.range_specs, preds.isin_specs
     )
     if pruned is not None:
         work_rows = [(f, _json.dumps(cids)) for f, cids in pruned]
     else:  # an empty store has no manifest, so no file
-        work_rows = [(f, None)
-                     for f in _manifest_files(spark, out_dir, part_ids)]
+        work_rows = [(f, None) for f in _manifest_files(out_dir, part_ids)]
     # empty results are zero-partition frames: actions over them start no task
     if not work_rows:
-        _require_store(spark, out_dir)
-        return local_frame(spark, [], ddl)
+        _require_store(out_dir)
+        return work_frame(spark, [], ddl)
 
     phys = physical_map(schema)
     needed_cols = sorted({p for c in (columns or order) for p in phys[c]})
@@ -817,10 +816,10 @@ def _rg_keep(md, cids: set | None, needed_cols, prune_cols: bool) -> list[int]:
 
 
 def _part_label(path: str) -> str:
-    """``part_id=P`` of a chunk file path (``part_id=?`` when the path
-    carries no hive part directory)."""
-    m = re.search(r"part_id=(\d+)", path)
-    return m.group(0) if m else "part_id=?"
+    """``part_id=P`` of a chunk, manifest or parts-marker file path, from its
+    innermost hive part directory (``part_id=?`` when it has none)."""
+    m = re.findall(r"part_id=\d+", path)
+    return m[-1] if m else "part_id=?"
 
 
 def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
@@ -849,14 +848,8 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
             t = t.filter(mask)
         yield from t.to_batches()
 
-    def row_groups(path, cids, pool):
-        """The wanted rows of each kept row group, in file order."""
-        import pyarrow.parquet as pq
-
-        # manifest-recorded URIs may be scheme-qualified (object store) —
-        # resolve per path; plain local paths hit LocalFileSystem
-        fs, p = pafs.resolve(path)
-        pf = pq.ParquetFile(p, filesystem=fs)
+    def row_groups(pf, cids, pool):
+        """The wanted rows of each kept row group of ``pf``, in file order."""
         keep = _rg_keep(pf.metadata, cids, needed_cols, prune_cols)
 
         def read(g):
@@ -877,25 +870,39 @@ def make_files_decoder(columns, schema, needed_cols, prune_cols: bool,
             yield from map(read, keep)
             return
         fut = pool.submit(read, keep[0]) if keep else None
-        for g in keep[1:]:
-            tbl = fut.result()
-            fut = pool.submit(read, g)
-            yield tbl
-        if fut is not None:
-            yield fut.result()
+        try:
+            for g in keep[1:]:
+                tbl = fut.result()
+                fut = pool.submit(read, g)
+                yield tbl
+            if fut is not None:
+                yield fut.result()
+        finally:
+            # a decode that stops early (a failed chunk, a closed task)
+            # leaves one read in flight: finish it before pf closes
+            if fut is not None and not fut.cancel():
+                fut.exception()
 
     def decode_file(path, cids, pool):
-        carry = None
-        for tbl in row_groups(path, cids, pool):
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl])
-            ids = tbl.column("chunk_id").to_numpy()
-            starts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1).tolist()]
-            carry = tbl.slice(starts[-1])
-            for a, b in zip(starts, starts[1:]):
-                yield from emit(tbl.slice(a, b - a))
-        if carry is not None and carry.num_rows:
-            yield from emit(carry)
+        import pyarrow.parquet as pq
+
+        # manifest-recorded URIs may be scheme-qualified (object store) —
+        # resolve per path; plain local paths hit LocalFileSystem
+        fs, p = pafs.resolve(path)
+        with pq.ParquetFile(p, filesystem=fs) as pf, \
+                contextlib.closing(row_groups(pf, cids, pool)) as groups:
+            carry = None
+            for tbl in groups:
+                if carry is not None:
+                    tbl = pa.concat_tables([carry, tbl])
+                ids = tbl.column("chunk_id").to_numpy()
+                starts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1)
+                          .tolist()]
+                carry = tbl.slice(starts[-1])
+                for a, b in zip(starts, starts[1:]):
+                    yield from emit(tbl.slice(a, b - a))
+            if carry is not None and carry.num_rows:
+                yield from emit(carry)
 
     def decode_files(batches):
         from concurrent.futures import ThreadPoolExecutor

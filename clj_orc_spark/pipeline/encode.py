@@ -763,16 +763,18 @@ def rowgroup_work_df(spark, parts, pending: list[int]):
     belongs in a parquet sidecar rather than plan.json.)
 
     Like the decode work list, this one is a JVM RDD of unknown size
-    (:func:`work_frame`), not a :func:`local_frame`: a ``LocalTableScan``
-    packs consecutive rows into at most ``defaultParallelism`` tasks, so
-    several parts would share one write task."""
+    (:func:`work_frame`), not a driver-local relation: a
+    ``LocalTableScan`` packs consecutive rows into at most
+    ``defaultParallelism`` tasks, so several parts would share one write
+    task."""
     rows = [(int(p), json.dumps(parts[p])) for p in pending]
     return work_frame(spark, rows, "pid int, units string")
 
 
 def work_frame(spark, rows: list[tuple], ddl: str):
     """The encode and decode work lists: ``rows`` typed by ``ddl``, one
-    partition (so one task) per row.
+    partition (so one task) per row; no row, no partition, so actions over
+    an empty frame start no task.
 
     The rows are pickled once on the driver and unpickled and typed in the
     JVM: the calls ``createDataFrame`` makes for a Python RDD, minus the
@@ -782,13 +784,15 @@ def work_frame(spark, rows: list[tuple], ddl: str):
     worker factory than the ``mapInArrow`` tasks', so it would fork a
     second ``pyspark.daemon`` in every Spark context.  The frame is a
     ``LogicalRDD``, which Spark does not size from its rows, so unlike a
-    :func:`local_frame` it is never broadcast in a join (see
+    driver-local relation it is never broadcast in a join (see
     :func:`~clj_orc_spark.pipeline.decode.decode`)."""
     from pyspark.sql import DataFrame
     from pyspark.sql.types import DataType
 
-    serde = spark.sparkContext._jvm.SerDeUtil
-    pickled = spark.sparkContext.parallelize(rows, len(rows))._jrdd
+    sc = spark.sparkContext
+    serde = sc._jvm.SerDeUtil
+    # parallelize([], 0) divides by zero; an empty RDD has no partition
+    pickled = (sc.parallelize(rows, len(rows)) if rows else sc.emptyRDD())._jrdd
     # parallelize pickles its rows in batches (lists): batched=True
     objects = serde.toJavaArray(serde.pythonToJava(pickled, True))
     struct = DataType.fromDDL(ddl)
@@ -1253,39 +1257,6 @@ def _load_or_compute_rowgroup_plan(spark, out_dir: str, input_path, df,
         plan["sort_by"] = list(sort_by)
     pafs.write_text(plan_path, json.dumps(plan))
     return plan
-
-
-def local_frame(spark, rows: list[tuple], ddl: str):
-    """DataFrame over rows the driver already holds, typed by ``ddl``.
-
-    The rows enter Spark as an Arrow table, which the JVM decodes, so
-    scanning the frame starts no Python worker (a ``createDataFrame(list)``
-    frame is a Python RDD whose every task starts one).  Up to
-    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB of Arrow
-    data by default) the frame is a ``LocalRelation``: its
-    ``LocalTableScan`` splits the rows into at most ``defaultParallelism``
-    tasks of consecutive rows, and an empty frame has zero partitions, so
-    actions over it start no task.  Above the threshold Spark builds a
-    JVM RDD with one partition per Arrow batch instead.
-
-    Spark sizes a ``LocalRelation`` from its rows, and plans above it
-    inherit that estimate: use this only for frames that are written, or
-    are as small as their rows, never for a frame a caller may join.  It
-    builds the stream decode work list and the empty decode results; rows
-    that only need to land in a file, such as the parts markers, are
-    written with pyarrow instead (:func:`_write_parts_markers`), which
-    starts no job at all."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
-
-    struct = DataType.fromDDL(ddl)
-    schema = to_arrow_schema(struct)
-    cols = list(zip(*rows)) if rows else [()] * len(schema)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-        schema=schema,
-    )
-    return spark.createDataFrame(table, struct)
 
 
 #: per-part completion markers (the resume unit) under manifest/parts

@@ -135,7 +135,7 @@ def encoded_size_bytes(spark, out_dir: str) -> dict:
     gate pass a store that exceeds the bar."""
     from .decode import _read_manifest
 
-    m = _read_manifest(spark, out_dir, ["enc_bytes"])
+    m = _read_manifest(out_dir, ["enc_bytes"])
     payload = 0 if m is None else pc.sum(m.column("enc_bytes")).as_py() or 0
     meta_bytes = _visible_bytes(os.path.join(out_dir, "manifest"))
     return {

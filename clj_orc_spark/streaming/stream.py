@@ -5,14 +5,15 @@ backpressure (`src/orc/read.clj:75,101-103`, `src/orc/json.clj:48-101`) — a
 producer thread pushing numbered chunks to one consumer.  The Spark-native
 equivalents:
 
-* :func:`stream_decode` — Structured Streaming over the encoded ``chunks/``
-  directory: chunk files land → micro-batch decodes them → token rows flow to
-  the sink.  Backpressure = ``maxFilesPerTrigger`` (the ``buf-size`` analog,
-  `src/orc/read.clj:16`); ordering = ``chunk_id`` (the ``{:i n}`` payload
-  index analog, `src/orc/read.clj:94`).  Chunk atomicity: a chunk's five
-  column rows are always written inside one parquet file by the encoder task,
-  the file appears by a rename from a ``.``-prefixed temp name the file
-  source ignores, and the file-source assigns whole files to micro-batches.
+* :func:`stream_decode` — Structured Streaming over the store's commit
+  records: parts markers land under ``manifest/parts`` → each micro-batch
+  decodes their parts through batch ``decode()`` → token rows flow to the
+  sink, partitioned by ``_part_id``.  Backpressure = ``maxFilesPerTrigger``
+  (the ``buf-size`` analog, `src/orc/read.clj:16`); each committed part is
+  taken once, as the reference's consumer takes each numbered batch
+  (`src/orc/read.clj:75,94`).  A marker is written after its part's chunk
+  and manifest files, so a part is decoded only once it has committed, and
+  a rewritten part (a new marker name) replaces its rows in the sink.
 * :func:`windowed_event_counts` — event-time tumbling-window aggregation with
   a watermark for late data: the standard streaming-analytics surface the
   reference lacks entirely (SURVEY.md §2.3).
@@ -25,12 +26,13 @@ equivalents:
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, functions as F
 
 
-def _source_log_files(spark, checkpoint: str, batch_id: int) -> list[str]:
+def _source_log_files(checkpoint: str, batch_id: int) -> list[str]:
     """File URIs the FileStreamSource assigned to ``batch_id``, from its
     commit log at ``<checkpoint>/sources/0/<batch_id>`` (header line ``v1``,
     then one JSON object per file).  Every ``compactInterval``-th batch
@@ -78,83 +80,52 @@ def stream_decode(
     sink_dir: str,
     max_files_per_trigger: int = 8,
     available_now: bool = True,
-    _plan_log: list | None = None,
 ):
-    """Continuously decode encoded chunks as they land; returns the query.
+    """Continuously decode the parts a store commits; returns the query.
 
-    ``foreachBatch`` reuses the exact batch decode kernel path: each
-    micro-batch decodes through the ZERO-SHUFFLE files-mode kernel.  The
-    batch's file list comes from the file source's own commit log
-    (``<checkpoint>/sources/0/<batch_id>``, written by the source when it
-    plans the batch — driver-side metadata, no job; ``inputFiles()`` is
-    empty inside foreachBatch because the batch DataFrame is an
-    ExistingRDD wrapper); a missing or unreadable log entry raises.  The
-    file list enters Spark as a driver-local relation and feeds the same
-    files decoder as batch ``decode()``.  (Batch ``decode()`` keeps a
-    Python-RDD work list because its result may be joined, and a local
-    relation's tiny size estimate would make Spark broadcast it; a
-    micro-batch's decoded frame is only written to the sink, so its
-    estimate steers no join.)  The encoder writes a chunk's column rows
-    contiguously into one file and the file source assigns whole files to
-    micro-batches, so per-file decode is complete.  Output is partitioned
-    by ``_batch_id`` and each batch overwrites its own partition, so
-    foreachBatch's at-least-once replays are idempotent.
+    The stream tails the parts markers (``out_dir/manifest/parts``), the
+    store's commit records: a part's marker is written after its chunk and
+    manifest files, and a rewritten part gets a marker under a new name, so
+    a part without a marker is never decoded and a rewritten one is decoded
+    again.  Each micro-batch takes its marker files from the file source's
+    own commit log (:func:`_source_log_files`; ``inputFiles()`` is empty
+    inside foreachBatch), maps them to ``part_id``s and decodes each part
+    with batch :func:`~clj_orc_spark.pipeline.decode.decode`.  The sink is
+    partitioned by ``_part_id`` and each batch overwrites its parts'
+    partitions, so a rewritten part replaces its rows and foreachBatch's
+    at-least-once replays are idempotent.
     """
-    from ..pipeline.decode import (
-        WORK_DDL,
-        _select_ddl,
-        make_files_decoder,
-        store_schema,
-    )
-    from ..pipeline.encode import local_frame, physical_map
-
-    chunks_dir = os.path.join(out_dir, "chunks")
-    static_schema = spark.read.parquet(chunks_dir).schema
-    # honor the store's pinned schema descriptor (round 4: stores may hold
-    # ANY flat schema, not just the token table)
-    schema = store_schema(spark, out_dir)
-    ddl = _select_ddl([name for name, _ in schema], schema)
-    needed = sorted({
-        p for c in (name for name, _ in schema)
-        for p in physical_map(schema)[c]
-    })
-    # overlap reads only for remote stores (see decode(): local saturated
-    # cores lose to the extra reader thread, object stores win)
-    decoder = make_files_decoder(None, schema, needed, False,
-                                 prefetch="://" in out_dir)
+    from ..pipeline.decode import _part_label, decode
+    from ..pipeline.encode import PARTS_DDL
 
     stream = (
-        spark.readStream.schema(static_schema)
+        spark.readStream.schema(PARTS_DDL)
         .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(chunks_dir)
+        .parquet(os.path.join(out_dir, "manifest", "parts"))
     )
-
     checkpoint = os.path.join(sink_dir, "_checkpoint")
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
+        pids = sorted({int(_part_label(f).split("=")[1])
+                       for f in _source_log_files(checkpoint, batch_id)})
+        if not pids:
+            return
         sess = batch_df.sparkSession
-        files = _source_log_files(sess, checkpoint, batch_id)
-        work = local_frame(sess, [(f, None) for f in files], WORK_DDL)
-        decoded = work.mapInArrow(decoder, ddl)
-        if _plan_log is not None:  # test hook: record the micro-batch plan
-            _plan_log.append(
-                decoded._jdf.queryExecution().executedPlan().toString()
-            )
-        # idempotent under foreachBatch's at-least-once replays: each batch
-        # owns the _batch_id=N partition and a replay OVERWRITES it instead
-        # of appending duplicate rows (the decode-side mirror of
-        # stream_encode's batch-scoped part_id namespace)
+        parts = [
+            decode(sess, out_dir, part_ids=[p]).withColumn("_part_id",
+                                                           F.lit(p))
+            for p in pids
+        ]
         (
-            decoded.withColumn("_batch_id", F.lit(int(batch_id)))
+            functools.reduce(DataFrame.union, parts)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
+            .partitionBy("_part_id")
             .parquet(sink_dir)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", os.path.join(sink_dir, "_checkpoint"))
+    writer = stream.writeStream.foreachBatch(handle_batch).option(
+        "checkpointLocation", checkpoint
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -232,7 +203,7 @@ def stream_encode(
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        uris = _source_log_files(sess, checkpoint, batch_id)
+        uris = _source_log_files(checkpoint, batch_id)
         if not uris:
             return
         # one landing location: one filesystem, fs-native unit paths

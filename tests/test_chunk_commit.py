@@ -24,10 +24,12 @@ import shutil
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.fs as pyfs
 import pyarrow.parquet as pq
 import pytest
 
 from clj_orc_spark.pipeline import decode, encode, verify_roundtrip
+from clj_orc_spark.pipeline.decode import _part_label
 from clj_orc_spark.pipeline.encode import DEFAULT_SCHEMA
 
 
@@ -257,3 +259,119 @@ def test_unreadable_plan_unit_raises_before_plan_is_pinned(spark, tmp_dir):
                plan={"mode": "rowgroup", "n_total": 1,
                      "parts": [[[bad, 0, 0, 10]]]})
     assert not os.path.exists(os.path.join(out, "plan.json"))
+
+
+class _RecordingFS(pyfs.FileSystemHandler):
+    """The local filesystem, keeping every file it opens for reading."""
+
+    def __init__(self):
+        self.local = pyfs.LocalFileSystem()
+        self.opened = []
+
+    def __eq__(self, other):
+        return other is self
+
+    def __ne__(self, other):
+        return other is not self
+
+    def get_type_name(self):
+        return "recording"
+
+    def normalize_path(self, path):
+        return path
+
+    def get_file_info(self, paths):
+        return self.local.get_file_info(paths)
+
+    def get_file_info_selector(self, selector):
+        return self.local.get_file_info(selector)
+
+    def create_dir(self, path, recursive):
+        raise NotImplementedError
+
+    def delete_dir(self, path):
+        raise NotImplementedError
+
+    def delete_dir_contents(self, path, missing_dir_ok=False):
+        raise NotImplementedError
+
+    def delete_root_dir_contents(self):
+        raise NotImplementedError
+
+    def delete_file(self, path):
+        raise NotImplementedError
+
+    def move(self, src, dest):
+        raise NotImplementedError
+
+    def copy_file(self, src, dest):
+        raise NotImplementedError
+
+    def open_input_stream(self, path):
+        return self.local.open_input_stream(path)
+
+    def open_input_file(self, path):
+        f = self.local.open_input_file(path)
+        self.opened.append(f)
+        return f
+
+    def open_output_stream(self, path, metadata):
+        raise NotImplementedError
+
+    def open_append_stream(self, path, metadata):
+        raise NotImplementedError
+
+
+def test_decode_reader_closes_every_file(spark, token_table_dir, tmp_dir,
+                                         monkeypatch):
+    """The decode task closes every chunk file it opens: after a full
+    decode, serial and overlapped, and after a chunk fails its CRC while
+    the overlapped reader has the next row group in flight.  The failure
+    still names the chunk file and its part."""
+    from clj_orc_spark.pipeline import pafs
+    from clj_orc_spark.pipeline.decode import make_files_decoder, store_schema
+    from clj_orc_spark.pipeline.encode import physical_cols
+
+    out = os.path.join(tmp_dir, "store")
+    encode(spark, os.path.join(token_table_dir, "tokens.parquet"), out,
+           n_partitions=2, chunk_bytes=1 << 20)
+    files = sorted(_recorded_files(out))
+    handler = _RecordingFS()
+    fs = pyfs.PyFileSystem(handler)
+    monkeypatch.setattr(pafs, "resolve", lambda path, filesystem=None:
+                        (fs, path))
+    monkeypatch.setattr(pafs, "worker_setup", lambda: None)
+    schema = store_schema(spark, out)
+    work = pa.RecordBatch.from_pydict({"path": files,
+                                       "cids": [None] * len(files)})
+
+    def run(prefetch: bool) -> int:
+        decoder = make_files_decoder(None, schema, list(physical_cols(schema)),
+                                     False, prefetch=prefetch)
+        return sum(b.num_rows for b in decoder(iter([work])))
+
+    for prefetch in (False, True):
+        handler.opened.clear()
+        assert run(prefetch) == 5_000
+        assert len(handler.opened) == len(files)
+        assert all(f.closed for f in handler.opened)
+
+    # one payload byte flipped in the file's first chunk, rewritten with
+    # one row group per chunk, so the next group's read is in flight when
+    # the first chunk fails
+    path = files[-1]
+    tbl = pq.read_table(path)
+    payloads = tbl.column("payload").to_pylist()
+    bad = bytearray(payloads[0])
+    bad[len(bad) // 2] ^= 0xFF
+    payloads[0] = bytes(bad)
+    i = tbl.schema.get_field_index("payload")
+    tbl = tbl.set_column(i, tbl.schema.field(i), pa.array(payloads,
+                                                          pa.binary()))
+    pq.write_table(tbl, path, row_group_size=len(physical_cols(schema)))
+    assert pq.ParquetFile(path).metadata.num_row_groups > 2
+    handler.opened.clear()
+    with pytest.raises(IOError, match="CRC mismatch") as err:
+        run(True)
+    _assert_located(err, path, int(_part_label(path).split("=")[1]))
+    assert handler.opened and all(f.closed for f in handler.opened)

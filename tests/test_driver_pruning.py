@@ -142,7 +142,7 @@ def _chunks_by_id(spark, out: str) -> dict[int, int]:
     """id → chunk_id, from decoding every committed chunk on its own."""
     schema = store_schema(spark, out)
     owner = {}
-    for path in _manifest_files(spark, out, None):
+    for path in _manifest_files(out, None):
         t = pq.read_table(path)
         for cid in np.unique(t.column("chunk_id").to_numpy()):
             g = t.filter(pc.equal(t.column("chunk_id"), cid))
@@ -165,7 +165,7 @@ def test_pruned_decode_matches_filtered_full_decode(spark, store, case):
 
     preds = _compile_predicates(store_schema(spark, store),
                                 pred.get("ranges"), pred.get("isin"))
-    pruned = _stat_pruned_specs(spark, store, None, preds.range_specs,
+    pruned = _stat_pruned_specs(store, None, preds.range_specs,
                                 preds.isin_specs)
     kept = {c for _, cids in pruned for c in cids}
     owner = _chunks_by_id(spark, store)

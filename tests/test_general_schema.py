@@ -305,10 +305,10 @@ def test_stream_decode_general_schema(spark, store, tmp_path):
     q = stream_decode(spark, out, sink)
     q.awaitTermination(120)
     got = spark.read.parquet(sink)
-    # _batch_id = the replay-idempotency partition column (round 5)
+    # _part_id = the sink's partition column (one per committed part)
     assert sorted(f.name for f in got.schema.fields) == sorted(
         ["doc_id", "tokens", "n_tok", "source", "lang", "year", "uid",
-         "spans", "_batch_id"]
+         "spans", "_part_id"]
     )
     assert got.count() == N
     row = got.where(got.doc_id == "doc-00007").first()

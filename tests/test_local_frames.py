@@ -26,11 +26,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from clj_orc_spark.pipeline import decode, encode, pafs
-from clj_orc_spark.pipeline.encode import (
-    PARTS_DDL,
-    completed_part_ids,
-    local_frame,
-)
+from clj_orc_spark.pipeline.encode import PARTS_DDL, completed_part_ids
 
 # the package re-exports the encode() function under the module's name
 encode_mod = importlib.import_module("clj_orc_spark.pipeline.encode")
@@ -124,8 +120,9 @@ def test_decoded_frame_is_never_broadcast(spark, source, store):
     other = spark.range(10 * N)  # well below the broadcast threshold
 
     # control: a mapInArrow over a local relation IS sized from its rows
-    small = local_frame(spark, [(i,) for i in range(10)], "id long") \
-        .mapInArrow(lambda batches: batches, "id long")
+    ids = pa.table({"id": pa.array(range(10), pa.int64())})
+    small = spark.createDataFrame(ids).mapInArrow(lambda batches: batches,
+                                                  "id long")
     assert _size_in_bytes(small) < threshold
     assert _broadcasts_map_in_arrow(other.join(small, "id", "left"))
 

@@ -136,7 +136,7 @@ def test_source_log_reads_compact_batches(spark, tmp_path):
         f.write("v1\n")
         for e in entries:
             f.write(json.dumps(e) + "\n")
-    got = _source_log_files(spark, ckpt, 1)
+    got = _source_log_files(ckpt, 1)
     assert got == ["file:///a/three.parquet", "file:///a/two.parquet"]
     # plain per-batch file still wins when present
     with open(os.path.join(d, "2"), "w") as f:
@@ -144,7 +144,7 @@ def test_source_log_reads_compact_batches(spark, tmp_path):
         f.write(json.dumps(
             {"path": "file:///a/four.parquet", "timestamp": 4, "batchId": 2}
         ) + "\n")
-    assert _source_log_files(spark, ckpt, 2) == ["file:///a/four.parquet"]
+    assert _source_log_files(ckpt, 2) == ["file:///a/four.parquet"]
 
 
 def test_ivf_sample_is_driver_bounded(spark):

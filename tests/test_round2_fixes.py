@@ -423,7 +423,8 @@ def test_resume_ignores_a_truncated_temp_plan(spark, token_table_dir,
 def test_encode_decode_resume_via_file_uri(spark, token_table_dir, tmp_dir):
     """Scheme-qualified URIs end-to-end: the sidecars (plan.json,
     run_meta.json, existence probes, manifest file list) must work through
-    the Hadoop FS API — the object-store deployment shape — not POSIX."""
+    pyarrow's URI-resolved filesystems — the object-store deployment
+    shape — not POSIX."""
     from clj_orc_spark.pipeline import decode, encode, verify_roundtrip
 
     src = "file://" + os.path.join(token_table_dir, "tokens.parquet")

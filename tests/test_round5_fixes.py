@@ -13,29 +13,41 @@ from pyspark.sql import functions as F
 from clj_orc_spark.pipeline import decode, encode, verify_roundtrip
 
 
-def test_stream_decode_plan_has_no_exchange(spark, token_table_dir, tmp_dir):
+def test_stream_decode_plan_has_no_exchange(spark, token_table_dir, tmp_dir,
+                                            monkeypatch):
     """VERDICT r4 item 8: each micro-batch must decode through the
     zero-shuffle files-mode kernel — no Exchange anywhere in the executed
     plan (the old groupBy(chunk_id).applyInArrow reshuffled every payload
-    byte once per micro-batch) — and its file list must be a JVM-local
-    relation (LocalTableScan), not a Python RDD whose tasks each start a
-    Python worker."""
+    byte once per micro-batch) — and its work list must be a JVM RDD, not
+    a Python RDD whose tasks each start a Python worker."""
+    import importlib
+
+    from test_local_frames import _python_rdd_nodes
+
     from clj_orc_spark.streaming import stream_decode
 
+    decode_mod = importlib.import_module("clj_orc_spark.pipeline.decode")
+    frames = []
+    real_decode = decode_mod.decode
+
+    def spy(*args, **kwargs):
+        frames.append(real_decode(*args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(decode_mod, "decode", spy)
     src = os.path.join(token_table_dir, "tokens.parquet")
     out = os.path.join(tmp_dir, "enc")
     encode(spark, src, out, n_partitions=4)
 
     sink = os.path.join(tmp_dir, "decoded")
-    plans: list[str] = []
-    q = stream_decode(spark, out, sink, max_files_per_trigger=2,
-                      _plan_log=plans)
+    q = stream_decode(spark, out, sink, max_files_per_trigger=2)
     q.awaitTermination(120)
 
-    assert plans, "no micro-batch plans captured"
-    for p in plans:
+    assert frames, "no micro-batch decode captured"
+    for df in frames:
+        p = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in p, p
-        assert "LocalTableScan" in p and "ExistingRDD" not in p, p
+        assert _python_rdd_nodes(df) == [], p
     # and the zero-shuffle path still produces bit-identical output
     v = verify_roundtrip(spark.read.parquet(src), spark.read.parquet(sink))
     assert v["bit_identical"] and v["total"] == 5_000, v
